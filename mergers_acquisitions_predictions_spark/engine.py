@@ -14,15 +14,20 @@ capabilities behind one object:
     eng.run("q01_pricing_summary")           # named query registry
     eng.query_names()                        # what's available
 
-Session caching contract: index-shaped intermediates (LSH buckets,
-IVF assignments, SQ/PQ codes, the unigram LM) are memoized per
-session in `operators/util.py`, keyed by corpus identity = **source
-path + content fingerprint** (file count/bytes/mtimes). Overwriting
-a corpus directory mid-session therefore invalidates its cached
-index frames automatically — the engine never serves results from a
-path's previous contents (tests/test_cache_hygiene.py). The caches
-are bounded, applicationId-scoped, thread-safe, and releasable with
+Session caching contract: index-shaped intermediates over a corpus
+(LSH buckets, IVF assignments, SQ/PQ codes, the unigram LM) are
+memoized per session in `operators/util.py`, keyed by corpus
+identity = **source path + content fingerprint** (file
+count/bytes/mtimes, walked on every access). Overwriting a corpus
+directory mid-session — by this engine or any other process —
+therefore invalidates its cached frames at the next access; the
+engine never serves results from a path's previous contents
+(tests/test_cache_hygiene.py). The caches are bounded,
+applicationId-scoped, thread-safe, and releasable with
 `operators.util.release_memoized_frames()` for a zero-cache baseline.
+Persisted index artifacts hold no session state: every serve, append
+and compact resolves the index's ``CURRENT`` pointer and its live
+generation's ``_meta`` geometry from disk (`operators/ann_index.py`).
 """
 
 from __future__ import annotations

@@ -37,11 +37,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.trim(c))
 
 
-def token_count(tokens: Column) -> Column:
-    """Token count of a tokenized column (BPE-ish proxy: alnum runs)."""
-    return F.size(tokens).cast("long")
-
-
 def marker_hits(tokens: Column, lang: str) -> Column:
     """How many tokens are marker stop-words of ``lang``."""
     markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])

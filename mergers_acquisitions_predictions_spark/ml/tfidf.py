@@ -8,8 +8,7 @@ Re-expressed as a single `pyspark.ml.Pipeline` so fit/save/load (S9,
 
 Lemmatization (U4) is the one genuinely UDF-shaped op; the container
 has no NLP model libs, so we ship the reference's OWN fallback — plain
-tokenization, which `tgt_etl_code.scala:37-38` uses — and gate a spaCy
-pandas_udf behind an import-try for environments that have it.
+tokenization, which `tgt_etl_code.scala:37-38` uses.
 """
 
 from __future__ import annotations
@@ -23,18 +22,6 @@ from pyspark.ml.feature import (
     SQLTransformer,
     StopWordsRemover,
 )
-
-
-def lemma_or_tokenize_available() -> bool:
-    """True when a real lemmatizer (spaCy) is importable; the engine
-    falls back to tokenization otherwise, mirroring
-    `tgt_etl_code.scala:37-38`."""
-    try:  # pragma: no cover - environment-dependent
-        import spacy  # noqa: F401
-
-        return True
-    except Exception:
-        return False
 
 
 def build_tfidf_pipeline(

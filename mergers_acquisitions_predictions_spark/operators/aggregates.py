@@ -12,11 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def distinct_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """A2 (`acq_etl_code.scala:96-100`)."""
-    return df.dropDuplicates(subset) if subset else df.distinct()
-
-
 def grouped_stats(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     """count/sum/avg/min/max/count-distinct/approx-distinct in one
     shuffle. `approx_count_distinct` (HLL) is the scale path for

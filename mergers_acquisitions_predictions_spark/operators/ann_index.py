@@ -8,28 +8,27 @@ Layout on disk (any Hadoop-compatible filesystem):
     <path>/codes/       parquet, partitionBy(cell_id):
                         (candidate_id, sq: array<int>) for the
                         IVF-SQ8 kind, (candidate_id, pq: array<int>)
-                        for IVF-PQ (round 10 — same layout and commit
-                        protocol, geometry JSON differs by "kind" and
-                        each reader kind-guards it) — a FRESH build's
+                        for IVF-PQ (same layout and commit protocol;
+                        the geometry JSON differs by "kind" and each
+                        reader kind-guards it) — a FRESH build's
                         generation-0 codes directory
-    <path>/meta         one-line JSON: quantizer stats, centroid
-                        table, config (the driver-sized artifacts the
-                        operators otherwise collect per invocation) —
-                        generation-0's geometry sidecar
     <path>/codes_gN/    later generations, written by compaction and
-                        by REBUILDS at a live path; each carries its
-                        OWN geometry as ``codes_gN/_meta`` (the
-                        leading underscore hides it from the parquet
-                        scan), so a generation name resolves codes
-                        AND geometry together — one consistent unit
+                        by REBUILDS at a live path
+    <gen>/_meta         EVERY generation (``codes`` included) carries
+                        its own one-line JSON geometry: quantizer
+                        stats, centroid table, config (the
+                        driver-sized artifacts the operators otherwise
+                        collect per invocation). The leading underscore
+                        hides it from the parquet scan, so a generation
+                        name resolves codes AND geometry together — one
+                        consistent unit
     <path>/CURRENT      one-line pointer file naming the LIVE codes
                         directory ("codes" or "codes_gN")
 
-POINTER-FILE COMMIT (round 8, VERDICT r7 #4; generation-scoped
-geometry since round 9, ADVICE r8): readers resolve ``CURRENT`` and
-scan the directory it names; maintenance writes a complete NEW
-directory first — codes AND the ``_meta`` geometry staged together,
-published by ONE directory rename — and swaps the pointer LAST
+POINTER-FILE COMMIT: readers resolve ``CURRENT`` and scan the
+directory it names; maintenance writes a complete NEW directory
+first — codes AND the ``_meta`` geometry staged together, published
+by ONE directory rename — and swaps the pointer LAST
 (`sources/fs.fs_replace_file`, a small-file replace that is atomic
 on HDFS and, where a filesystem implements it as delete-then-rename
 — the local FS — leaves at worst a transient missing-pointer window
@@ -38,20 +37,22 @@ reader therefore NEVER sees a missing or partial codes directory,
 and because a generation carries its own geometry, a reader that
 resolved a PRE-swap name keeps scoring those codes with THEIR stats
 — a rebuild can change the quantizer without any stale-codes/
-new-geometry mix (the cross-file race ADVICE r8 flagged). The
-REPLACED generation is retained for one maintenance cycle
-(retention = 1, ≤2 generations on disk) by compaction AND by
-rebuild, so even a reader that resolved the pointer just before a
-swap finishes its scan against intact files; only a reader idling
-across TWO maintenance commits can lose its directory — the
-standard snapshot-expiry contract. An index written by an earlier
-layout still serves: a missing ``CURRENT`` falls back to the newest
-promoted generation, then the legacy ``codes/``; a generation
-without ``_meta`` (pre-round-9 compactions) falls back to the
-sibling ``meta`` sidecar — correct for those generations by the
-frozen-geometry append/compact contract — which may itself be the
-round-4..8 one-row Spark TEXT DATASET directory rather than a plain
-file; all three forms parse to the same dict.
+new-geometry mix. The REPLACED generation is retained for one
+maintenance cycle (retention = 1, ≤2 generations on disk) by
+compaction AND by rebuild, so even a reader that resolved the
+pointer just before a swap finishes its scan against intact files;
+only a reader idling across TWO maintenance commits can lose its
+directory — the standard snapshot-expiry contract. A missing
+``CURRENT`` falls back to the newest promoted generation, then
+``codes/``.
+
+NO SESSION STATE: serve, append and compact resolve ``CURRENT`` and
+read the live generation's ``_meta`` from disk on every call, so a
+write by any process is seen by the very next call. The only cache
+is `_meta_text`, an LRU of the geometry TEXT keyed by (path,
+generation, ``_meta`` length, ``_meta`` mtime) from one
+getFileStatus — a rewritten ``_meta`` changes the key, so it needs
+no invalidation.
 
 Why partitionBy(cell_id) is the point at 100 TB: a query batch
 probes n_probe cells each; the probe cell set is collected from the
@@ -69,6 +70,7 @@ orders; only the storage changes.
 
 from __future__ import annotations
 
+import functools
 import json
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,7 +83,7 @@ _META_FILE = "_meta"
 
 
 def _with_extra_meta(geometry: dict, extra_meta: dict | None) -> dict:
-    """Merge caller-owned ``extra_meta`` into the geometry sidecar
+    """Merge caller-owned ``extra_meta`` into the ``_meta`` geometry
     dict, ENFORCING the no-collision contract (ADVICE r12): a caller
     key shadowing frozen geometry ('dim', 'centroids', 'kind',
     'residual', ...) would silently corrupt every later resolution,
@@ -94,6 +96,14 @@ def _with_extra_meta(geometry: dict, extra_meta: dict | None) -> dict:
             f"extra_meta keys collide with frozen index geometry: {clash}"
         )
     return {**geometry, **extra_meta}
+
+
+def _memo(corpus_cache_key: tuple | None, key: tuple, build):
+    """``build()``, memoized under ``key`` (`util.memoized_literal`)
+    only when the caller opted in with a ``corpus_cache_key``."""
+    from .util import memoized_literal
+
+    return build() if corpus_cache_key is None else memoized_literal(key, build)
 
 
 def _gen_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -118,25 +128,16 @@ def _gen_dirs(spark: SparkSession, path: str) -> list[str]:
 
 
 def _resolve_codes_name(spark: SparkSession, path: str) -> str:
-    """Name of the LIVE codes directory under ``path``: the session-
-    primed value if the index was built/appended/compacted this
-    session (`util.peek_memoized_literal` — content-fingerprinted, so
-    a foreign writer invalidates it), else the ``CURRENT`` pointer
-    file, else — for robustness while a non-atomic pointer swap is in
-    flight, and for pre-pointer-layout indexes — the newest promoted
-    generation, else the legacy ``codes``. Every candidate this
-    returns is a COMPLETE index directory by the commit protocol
-    (generations are staged and renamed into place before the pointer
-    moves), and — since round 9 — resolves its OWN geometry
-    (`_read_meta_text`), so old-vs-new generation is a freshness
-    difference, never a correctness one: even across a REBUILD that
-    changed the quantizer, a stale resolution scores its codes with
-    the stats they were encoded under."""
-    from .util import peek_memoized_literal
-
-    primed = peek_memoized_literal(("ivfsq_codes_dir", path))
-    if primed is not None:
-        return primed
+    """Name of the LIVE codes directory under ``path``, read from disk:
+    the ``CURRENT`` pointer file, else — while a non-atomic pointer
+    swap is in flight — the newest promoted generation, else
+    ``codes``. Every candidate this returns is a COMPLETE index
+    directory by the commit protocol (generations are staged and
+    renamed into place before the pointer moves) and resolves its OWN
+    geometry (`_read_meta_text`), so old-vs-new generation is a
+    freshness difference, never a correctness one: even across a
+    REBUILD that changed the quantizer, a stale resolution scores its
+    codes with the stats they were encoded under."""
     from ..sources.fs import fs_read_text
 
     cur = fs_read_text(spark, f"{path}/{_CURRENT}")
@@ -168,7 +169,7 @@ def _codes_path(spark: SparkSession, path: str) -> str:
 def _has_live_index(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` already holds an index a reader could be
     serving from — a ``CURRENT`` pointer, any promoted generation, or
-    a legacy ``codes/`` directory. Decides whether a build is a FRESH
+    a generation-0 ``codes/`` directory. Decides whether a build is a FRESH
     write (nothing resolvable, so nothing to protect) or a REBUILD
     that must commit through a staged generation (ADVICE r8: an
     in-place overwrite of the live directory pulls files out from
@@ -182,41 +183,35 @@ def _has_live_index(spark: SparkSession, path: str) -> bool:
     )
 
 
+@functools.lru_cache(maxsize=64)
+def _meta_text(path: str, name: str, length: int, mtime: int) -> str:
+    """The geometry text of generation ``name`` at ``path``, cached on
+    the file's (length, mtime): a rewritten ``_meta`` is a new key
+    (only a same-length rewrite inside the store's mtime resolution
+    could alias, far below the time any index build takes)."""
+    from ..sources.fs import fs_read_text
+
+    txt = fs_read_text(SparkSession.active(), f"{path}/{name}/{_META_FILE}")
+    if txt is None or not txt.strip():
+        raise ValueError(f"empty index geometry at {path}/{name}/{_META_FILE}")
+    return txt
+
+
 def _read_meta_text(spark: SparkSession, path: str, name: str) -> str:
     """Raw one-line JSON geometry for the generation ``name`` at
-    ``path``. Resolution order: the generation's own co-located
-    ``<name>/_meta`` (round 9+ — the leading underscore keeps it out
-    of the parquet scan's file listing), then the sibling ``meta``
-    sidecar as a plain file (round-9 fresh builds), then the legacy
-    one-row Spark text-dataset DIRECTORY (rounds 4–8) — all three
-    driver-side Hadoop reads, no Spark job (the sidecar read used to
-    be a `spark.read.json` job, ~1 s of scheduler latency per cold
-    serve at bench scale — PERF.md round 9)."""
-    from ..sources.fs import fs_is_dir, fs_list_files, fs_read_text
+    ``path``: its co-located ``<name>/_meta``. One getFileStatus per
+    call; the text itself is read once per (length, mtime) — a
+    driver-side Hadoop read, no Spark job. A generation without
+    ``_meta`` is an error naming the fix."""
+    from ..sources.fs import fs_file_status
 
-    if name != "codes":
-        txt = fs_read_text(spark, f"{path}/{name}/{_META_FILE}")
-        if txt is not None and txt.strip():
-            return txt
-    sidecar = f"{path}/meta"
-    if fs_is_dir(spark, sidecar):  # legacy one-row text dataset
-        parts = sorted(
-            p for p, _sz in fs_list_files(spark, sidecar, ".txt")
-        )
-        if not parts:
-            raise ValueError(f"no geometry sidecar text under {sidecar}")
-        txt = fs_read_text(spark, parts[0])
-        if txt is None or not txt.strip():
-            raise ValueError(f"empty geometry sidecar at {parts[0]}")
-        return txt
-    txt = fs_read_text(spark, sidecar)
-    if txt is None or not txt.strip():
+    st = fs_file_status(spark, f"{path}/{name}/{_META_FILE}")
+    if st is None:
         raise ValueError(
             f"index at {path} has no geometry for generation {name!r}: "
-            f"expected {path}/{name}/{_META_FILE} or a {sidecar} sidecar "
-            "— rebuild the index"
+            f"expected {path}/{name}/{_META_FILE} — rebuild the index"
         )
-    return txt
+    return _meta_text(path, name, *st)
 
 
 def build_ivfsq_index(
@@ -233,8 +228,8 @@ def build_ivfsq_index(
     """Build + persist an IVF-SQ8 index: learn per-dimension stats
     and centroids from the corpus (one pass + driver-sized collects),
     encode every vector (map-side), write codes partitioned by cell.
-    At a FRESH path the index lands as generation-0 (``codes/`` + the
-    ``meta`` sidecar); at a path already serving an index the build is
+    At a FRESH path the index lands as generation-0 (``codes/`` with
+    its ``_meta``); at a path already serving an index the build is
     a REBUILD and commits like a compaction — a staged generation
     carrying its own geometry, one pointer flip, the previous
     generation retained one cycle (ADVICE r8: never overwrite what a
@@ -249,7 +244,7 @@ def build_ivfsq_index(
     `similarity.kmeans_centroids(fit_sample_per_cell=50)` once and
     builds the PERSISTED index from the learned cells (previously the
     learned fit was only consumable by the in-memory `ivf_topk`).
-    The table is materialized into the meta sidecar like the default
+    The table is materialized into the ``_meta`` geometry like the default
     anchors, so search/append/compact need no change — frozen
     geometry flows from whatever the build persisted. Default None
     keeps the deterministic lowest-id anchors (oracle-replayable; all
@@ -258,54 +253,37 @@ def build_ivfsq_index(
     ``corpus_cache_key``: opt-in session memoization of the learned
     quantizer stats / centroid rows / corpus count (the usual
     index-artifact contract — the key must identify corpus content).
-    Independently, the build always PRIMES the in-session meta cache
-    for ``path`` (`util.prime_memoized_literal` — overwrite, so a
-    rebuild never leaves the old sidecar cached): a same-session
-    search/append skips one disk-read job; other sessions read the
-    sidecar from disk as before.
 
     ``extra_meta``: optional caller-owned JSON-safe fields merged into
-    the geometry sidecar (ADVICE r11: `maxsim.build_token_index`
+    the ``_meta`` geometry (ADVICE r11: `maxsim.build_token_index`
     records the ``n_tokens`` the composite frame was built with, so a
     serve with a mismatched T fails fast instead of decoding candidate
     ids with the wrong divisor). Keys colliding with the geometry's
-    own raise ValueError (enforced — ADVICE r12); ``None`` leaves the
-    sidecar byte-identical to the pre-round-12 form."""
+    own raise ValueError (enforced — ADVICE r12); ``None`` adds
+    nothing."""
     from .similarity import auto_cells, collect_centroid_rows, ivf_centroids
     from .sq import _unit, sq_encode, sq_stats
-    from .util import memoized_literal, prime_memoized_literal, repartition_for_compute
+    from .util import repartition_for_compute
 
+    ck = corpus_cache_key
     if n_cells is None:
-        n = (
-            memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-            if corpus_cache_key is not None
-            else corpus.count()
-        )
-        n_cells = auto_cells(n)
-    if corpus_cache_key is not None:
-        mns, rngs = memoized_literal(
-            ("sq_stats", corpus_cache_key, vec_col), lambda: sq_stats(corpus, vec_col)
-        )
-    else:
-        mns, rngs = sq_stats(corpus, vec_col)
+        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
+    mns, rngs = _memo(
+        ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col)
+    )
     if centroids is not None:
         # caller-fitted table: driver-sized collect, no memo (the key
         # cannot see the table's provenance; the collect is n_cells
         # rows either way). The table defines the cell count.
         cent_rows = collect_centroid_rows(centroids)
         n_cells = len(cent_rows)
-    elif corpus_cache_key is not None:
-        cent_rows = memoized_literal(
-            ("ivf_cent_rows", corpus_cache_key, n_cells, id_col, vec_col),
+    else:
+        cent_rows = _memo(
+            ck,
+            ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
             lambda: collect_centroid_rows(
                 ivf_centroids(corpus, n_cells, id_col, vec_col)
             ),
-        )
-    else:
-        cent_rows = collect_centroid_rows(
-            ivf_centroids(corpus, n_cells, id_col, vec_col)
         )
 
     from .similarity import ivf_assign_blas, ivf_assign_literal
@@ -369,12 +347,7 @@ def build_ivfsq_index(
             extra_meta,
         )
     )
-    live_name = _publish_codes(spark, path, coded, meta_text)
-    prime_memoized_literal(("ivfsq_codes_dir", path), live_name)
-    prime_memoized_literal(
-        ("ivfsq_meta", path, live_name),
-        (mns, rngs, cent_rows, len(mns), n_cells),
-    )
+    _publish_codes(spark, path, coded, meta_text)
 
 
 def _publish_codes(
@@ -382,24 +355,19 @@ def _publish_codes(
     path: str,
     coded: DataFrame,
     meta_text: str,
-) -> str:
+) -> None:
     """FRESH-vs-REBUILD publish decision shared by every index KIND
     (IVF-SQ8 and IVF-PQ builds — round 10: the commit protocol is
     quantizer-agnostic, only the coded columns and the geometry JSON
     differ). ``coded`` must already be clustered by cell (both builds
-    shuffle upstream of the encode). Returns the live codes name.
+    shuffle upstream of the encode).
 
     FRESH path: nothing resolvable exists, so no reader can be
     mid-scan — write generation-0 in place, no staging rename; the
     partitioned sink writes contiguous row groups with files-per-cell
-    bounded by the shuffle width. The geometry sidecar is ONE
-    driver-side Hadoop write (plain file, same filesystem as the
-    codes). This replaced the round-4..8 one-row Spark text job
-    (range(1).coalesce(1).write.text): correct, but a whole job +
-    refresh (~0.3 s at bench scale) to move one line — part of the
-    s13-family build-leg cost VERDICT r8 flagged. `spark.read.json`
-    accepts the plain file, and `_read_meta_text` still parses the
-    legacy dataset-directory form for indexes older sessions wrote.
+    bounded by the shuffle width. The geometry is ONE driver-side
+    Hadoop write of ``codes/_meta``, the same co-located form every
+    later generation carries, and the pointer is written last.
 
     REBUILD at a live path (ADVICE r8 — the in-place overwrite raced
     concurrent readers, and reap-everything retention contradicted
@@ -415,13 +383,12 @@ def _publish_codes(
             f"{path}/codes"
         )
         spark.catalog.refreshByPath(f"{path}/codes")
-        from ..sources.fs import fs_delete, fs_replace_file, fs_write_text
+        from ..sources.fs import fs_replace_file, fs_write_text
 
-        fs_delete(spark, f"{path}/meta")  # a legacy DIR would block create
-        fs_write_text(spark, f"{path}/meta", meta_text)
+        fs_write_text(spark, f"{path}/codes/{_META_FILE}", meta_text)
         fs_replace_file(spark, f"{path}/{_CURRENT}", "codes")
-        return "codes"
-    return _commit_generation(
+        return
+    _commit_generation(
         spark, path, coded, meta_text, _resolve_codes_name(spark, path)
     )
 
@@ -482,55 +449,43 @@ def _commit_generation(
     spark.catalog.refreshByPath(f"{path}/{new_name}")
     # Retention = 1: keep the generation just replaced (live_name) for
     # readers that resolved the pointer before the swap; reap anything
-    # older (including the legacy codes/ once a generation supersedes
-    # it). The sibling `meta` sidecar is deliberately NOT reaped with
-    # codes/: a retained pre-round-9 generation without co-located
-    # _meta still resolves its geometry through it, and once every
-    # generation carries _meta the sidecar is one dead line a future
-    # fresh build overwrites — never resolved ahead of a generation's
-    # own _meta.
+    # older (including generation-0 codes/ once a generation
+    # supersedes it).
     for d in {*_gen_dirs(spark, path), "codes"} - {new_name, live_name}:
         fs_delete(spark, f"{path}/{d}")
     return new_name
 
 
-def _read_index_meta(spark: SparkSession, path: str, name: str):
-    """(mns, rngs, cent_rows, dim, n_cells) for generation ``name`` of
-    the index at ``path``: the value primed by a SAME-SESSION
-    build/append/compact if there is one (it IS what that commit just
-    wrote, and the primed codes name matches by the same prime), else
-    parsed from the generation's geometry on disk — never cached
-    here, the disk stays the source of truth for artifacts this
-    session didn't write. Taking the RESOLVED name (round 9) pins
-    geometry and codes to one resolution: callers resolve once and
-    read both from it, so a pointer flip between two reads can no
-    longer pair old codes with new stats (ADVICE r8). The primed memo
-    is keyed by ``name`` too (ADVICE r9): a caller holding a STALE
-    generation name after a same-session rebuild must fall through to
-    that generation's on-disk ``_meta``, never silently receive the
-    rebuild's new geometry."""
-    from .util import peek_memoized_literal
-
-    primed = peek_memoized_literal(("ivfsq_meta", path, name))
-    if primed is not None:
-        return primed
+def _read_meta(spark: SparkSession, path: str, name: str, kind: str):
+    """(parsed ``_meta``, centroid rows) of generation ``name``,
+    KIND-GUARDED: serving one kind's artifact through the other kind's
+    reader would KeyError deep in a stats parse at best — fail with
+    the actual mistake instead. Metas without "kind" are SQ8."""
     meta = json.loads(_read_meta_text(spark, path, name))
-    # kind guard (round 10, with the PQ kind's arrival): serving an
-    # IVF-PQ artifact through the SQ8 reader would KeyError on "mns"
-    # at best — fail with the actual mistake instead. Legacy metas
-    # predate the field; they are all SQ8.
-    kind = meta.get("kind", "ivfsq")
-    if kind != "ivfsq":
+    found = meta.get("kind", "ivfsq")
+    if found != kind:
         raise ValueError(
-            f"index at {path} ({name}) is kind={kind!r}, not ivfsq — "
+            f"index at {path} ({name}) is kind={found!r}, not {kind} — "
             "serve it with the matching search function"
         )
-    mns = json.loads(meta["mns"])
-    rngs = json.loads(meta["rngs"])
     cent_rows = [
         (int(c), [float(x) for x in v], float(n))
         for c, v, n in json.loads(meta["centroids"])
     ]
+    return meta, cent_rows
+
+
+def _read_index_meta(spark: SparkSession, path: str, name: str):
+    """(mns, rngs, cent_rows, dim, n_cells) for generation ``name`` of
+    the index at ``path``, parsed from that generation's ``_meta``.
+    Taking the RESOLVED name pins geometry and codes to one
+    resolution: callers resolve once and read both from it, so a
+    pointer flip between two reads can never pair old codes with new
+    stats, and a caller holding a STALE generation name reads that
+    generation's own geometry."""
+    meta, cent_rows = _read_meta(spark, path, name, "ivfsq")
+    mns = json.loads(meta["mns"])
+    rngs = json.loads(meta["rngs"])
     dim = int(meta["dim"]) if "dim" in meta else len(mns)
     return mns, rngs, cent_rows, dim, int(meta["n_cells"])
 
@@ -653,7 +608,7 @@ def search_ivfsq_index(
 ) -> DataFrame:
     """Serve top-k from a persisted IVF-SQ8 index. The live codes
     directory is resolved through the ``CURRENT`` pointer (see the
-    module docstring — one small read, primed away within a session),
+    module docstring — one small read per serve),
     the query batch is assigned to its ``n_probe`` cells with the
     PERSISTED centroids, and the probed cell ids are collected
     (query-batch-sized — tiny by the ANN contract) and pushed into
@@ -885,29 +840,15 @@ def append_to_ivfsq_index(
     # already searched this path must not serve a cached listing
     # missing the new shard's files.
     spark.catalog.refreshByPath(f"{path}/{live_name}")
-    # RE-prime the meta sidecar cache: the append changed the path's
-    # content fingerprint (new code files), which correctly makes the
-    # old primed entry unreachable (util.peek_memoized_literal) — but
-    # the META is frozen by the append contract (geometry never
-    # changes between rebuilds), so priming the same value under the
-    # POST-append fingerprint is exact, and the next search skips the
-    # sidecar re-read job (measured ~1 s of spark.read.json per serve
-    # otherwise — PERF.md round 6). The live codes-dir name is equally
-    # unchanged by an append — re-primed on the same grounds.
-    from .util import prime_memoized_literal
-
-    prime_memoized_literal(("ivfsq_codes_dir", path), live_name)
-    prime_memoized_literal(
-        ("ivfsq_meta", path, live_name), (mns, rngs, cent_rows, dim, _nc)
-    )
 
 
 def compact_ivfsq_index(
     spark: SparkSession, path: str, files_before: int | None = None
 ) -> tuple[int, int]:
     """Compact a persisted index's codes (BOTH kinds since round 10 —
-    compaction never interprets geometry, see the kind branch below;
-    the name keeps the original SQ8 spelling for its callers) — the maintenance
+    compaction never interprets geometry, it carries the ``_meta``
+    text forward; the name keeps the original SQ8 spelling for its
+    callers) — the maintenance
     pass the append path (`append_to_ivfsq_index`) makes necessary:
     every nightly shard adds one file per touched cell partition, and
     after enough appends the probed-cell scan cost is dominated by
@@ -935,11 +876,8 @@ def compact_ivfsq_index(
     mid-scan keep their files); older generations are reaped.
     Layout-only by construction: search results are bit-identical
     before/after (asserted in test_ann_index), and the geometry is
-    untouched — so the primed meta is re-primed under the
-    post-compaction fingerprint exactly as the append does. Returns
-    (files_before, files_after)."""
+    untouched. Returns (files_before, files_after)."""
     from ..sources.fs import fs_list_files
-    from .util import prime_memoized_literal
 
     def _count_files(p: str) -> int:
         return len(fs_list_files(spark, p, ".parquet"))
@@ -955,26 +893,13 @@ def compact_ivfsq_index(
     before = files_before if files_before is not None else _count_files(live)
     if before == 0:
         raise ValueError(f"no codes parquet under {live}")
+    # KIND-AGNOSTIC: compaction never interprets the geometry — it
+    # carries the meta TEXT forward byte-identically.
     meta_text = _read_meta_text(spark, path, live_name)
-    # KIND-AGNOSTIC (round 10, with the PQ kind's arrival): compaction
-    # never interprets the geometry — it carries the meta TEXT forward
-    # byte-identically — so one implementation serves both kinds; only
-    # the re-prime below parses it, through the kind's own reader.
-    kind = json.loads(meta_text).get("kind", "ivfsq")
-    if kind == "ivfpq":
-        meta_key, meta = "ivfpq_meta", _read_ivfpq_meta(spark, path, live_name)
-    else:
-        meta_key, meta = "ivfsq_meta", _read_index_meta(spark, path, live_name)
     # Read through the partitioned layout so cell_id survives as a
     # column, cluster by cell, rewrite partitioned.
     codes = spark.read.parquet(live).repartition("cell_id")
     new_name = _commit_generation(spark, path, codes, meta_text, live_name)
-    # Frozen geometry: compaction moved bytes, not meaning. Re-prime
-    # the unchanged meta under the new content fingerprint so the
-    # next serve skips the sidecar re-read (append's lesson, PERF.md
-    # round 6).
-    prime_memoized_literal(("ivfsq_codes_dir", path), new_name)
-    prime_memoized_literal((meta_key, path, new_name), meta)
     return before, _count_files(f"{path}/{new_name}")
 
 
@@ -989,26 +914,12 @@ def append_index(
     vec_col: str = "embedding",
 ) -> None:
     """KIND-AGNOSTIC append (round 12, for the streaming ingest sink):
-    sniff the index's kind from its own meta — the `compact_index` /
-    `maxsim_search_tokens_persisted` discipline: never interpret
-    geometry here — and dispatch to the matching append. Same-session
-    primes answer without a disk read; cold readers pay one sidecar
-    read the dispatched append would have paid anyway. Frozen-geometry
-    semantics are the kind's own (including the PQ residual flag,
-    which `append_to_ivfpq_index` reads from the same meta)."""
-    from .util import peek_memoized_literal
-
-    spark = new_vectors.sparkSession
-    live = _resolve_codes_name(spark, path)
-    if peek_memoized_literal(("ivfpq_meta", path, live)) is not None:
-        kind = "ivfpq"
-    elif peek_memoized_literal(("ivfsq_meta", path, live)) is not None:
-        kind = "ivfsq"
-    else:
-        kind = json.loads(_read_meta_text(spark, path, live)).get(
-            "kind", "ivfsq"
-        )
-    if kind == "ivfpq":
+    sniff the index's kind from its own meta (`_sniff_kind` — never
+    interpret geometry here) and dispatch to the matching append.
+    Frozen-geometry semantics are the kind's own (including the PQ
+    residual flag, which `append_to_ivfpq_index` reads from the same
+    meta)."""
+    if _sniff_kind(new_vectors.sparkSession, path) == "ivfpq":
         append_to_ivfpq_index(new_vectors, path, id_col=id_col, vec_col=vec_col)
     else:
         append_to_ivfsq_index(new_vectors, path, id_col=id_col, vec_col=vec_col)
@@ -1030,7 +941,6 @@ def append_to_ivfpq_index(
     cell and keeps `pq_encode` reading a concrete unit attribute."""
     from .pq import _unit, pq_encode, residual_cent_df, residual_expr
     from .similarity import ivf_assign_literal
-    from .util import prime_memoized_literal
 
     spark = new_vectors.sparkSession
     live_name = _resolve_codes_name(spark, path)
@@ -1075,12 +985,6 @@ def append_to_ivfpq_index(
         f"{path}/{live_name}"
     )
     spark.catalog.refreshByPath(f"{path}/{live_name}")
-    # Frozen geometry + unchanged live name: re-prime both under the
-    # post-append content fingerprint (append_to_ivfsq_index's lesson).
-    prime_memoized_literal(("ivfsq_codes_dir", path), live_name)
-    prime_memoized_literal(
-        ("ivfpq_meta", path, live_name), (cbs, cent_rows, dim, _nc, residual)
-    )
 
 
 def build_ivfpq_index(
@@ -1122,7 +1026,7 @@ def build_ivfpq_index(
     assignment as one numpy matmul per Arrow batch; codes are
     bit-identical off tie boundaries (see `ivf_assign_blas`).
     ``extra_meta``: `build_ivfsq_index`'s contract — caller-owned
-    JSON-safe fields merged into the geometry sidecar.
+    JSON-safe fields merged into the ``_meta`` geometry.
 
     ``residual=True`` (round 12 — SCALE.md §7s, measured first): the
     fine stage encodes x_unit − c_unit(cell(x)) instead of x_unit —
@@ -1150,30 +1054,19 @@ def build_ivfpq_index(
         ivf_assign_literal,
         ivf_centroids,
     )
-    from .util import memoized_literal, prime_memoized_literal, repartition_for_compute
+    from .util import repartition_for_compute
 
     spark = corpus.sparkSession
-    memoize = corpus_cache_key is not None
+    ck = corpus_cache_key
     if n_cells is None:
-        n = (
-            memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-            if memoize
-            else corpus.count()
-        )
-        n_cells = auto_cells(n)
-    if memoize:
-        cent_rows = memoized_literal(
-            ("ivf_cent_rows", corpus_cache_key, n_cells, id_col, vec_col),
-            lambda: collect_centroid_rows(
-                ivf_centroids(corpus, n_cells, id_col, vec_col)
-            ),
-        )
-    else:
-        cent_rows = collect_centroid_rows(
+        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
+    cent_rows = _memo(
+        ck,
+        ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
+        lambda: collect_centroid_rows(
             ivf_centroids(corpus, n_cells, id_col, vec_col)
-        )
+        ),
+    )
 
     assign = ivf_assign_blas if assign_blas else ivf_assign_literal
     cent_df = residual_cent_df(spark, cent_rows) if residual else None
@@ -1195,25 +1088,19 @@ def build_ivfpq_index(
     if codebooks is not None:
         cbs = codebooks
     elif residual:
-        if memoize:
-            cbs = memoized_literal(
-                ("pq_resid_cbs", corpus_cache_key, n_cells, n_subspaces,
-                 n_codes, id_col, vec_col),
-                lambda: pq_residual_anchor_codebooks(
-                    assigned_resids(), n_subspaces, n_codes
-                ),
-            )
-        else:
-            cbs = pq_residual_anchor_codebooks(
+        cbs = _memo(
+            ck,
+            ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
+            lambda: pq_residual_anchor_codebooks(
                 assigned_resids(), n_subspaces, n_codes
-            )
-    elif memoize:
-        cbs = memoized_literal(
-            ("pq_anchor_cbs", corpus_cache_key, n_subspaces, n_codes, id_col, vec_col),
-            lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
+            ),
         )
     else:
-        cbs = pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col)
+        cbs = _memo(
+            ck,
+            ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
+            lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
+        )
     dim = len(cbs) * len(cbs[0][0])
     if codebooks is not None:
         # Caller-supplied books define the geometry; the corpus width
@@ -1272,42 +1159,21 @@ def build_ivfpq_index(
             extra_meta,
         )
     )
-    live_name = _publish_codes(spark, path, coded, meta_text)
-    prime_memoized_literal(("ivfsq_codes_dir", path), live_name)
-    prime_memoized_literal(
-        ("ivfpq_meta", path, live_name),
-        (cbs, cent_rows, dim, n_cells, bool(residual)),
-    )
+    _publish_codes(spark, path, coded, meta_text)
 
 
 def _read_ivfpq_meta(spark: SparkSession, path: str, name: str):
     """(codebooks, cent_rows, dim, n_cells, residual) for generation
     ``name`` of the IVF-PQ index at ``path`` — `_read_index_meta`'s
-    contract (same-session primed value keyed by generation, else the
-    generation's on-disk geometry; kind-guarded both ways). The
-    5th element (round 12) is the residual-encoding flag: serving
+    contract (the generation's own ``_meta``; kind-guarded both
+    ways). The 5th element is the residual-encoding flag: serving
     residual codes with raw ADC tables — or vice versa — would be
     silently wrong, so the geometry carries it and the serve
-    dispatches on it; legacy metas predate the field and are raw."""
-    from .util import peek_memoized_literal
-
-    primed = peek_memoized_literal(("ivfpq_meta", path, name))
-    if primed is not None:
-        return primed
-    meta = json.loads(_read_meta_text(spark, path, name))
-    kind = meta.get("kind", "ivfsq")
-    if kind != "ivfpq":
-        raise ValueError(
-            f"index at {path} ({name}) is kind={kind!r}, not ivfpq — "
-            "serve it with the matching search function"
-        )
+    dispatches on it; metas without the field are raw."""
+    meta, cent_rows = _read_meta(spark, path, name, "ivfpq")
     cbs = [
         [[float(x) for x in code] for code in book]
         for book in json.loads(meta["codebooks"])
-    ]
-    cent_rows = [
-        (int(c), [float(x) for x in v], float(n))
-        for c, v, n in json.loads(meta["centroids"])
     ]
     return (
         cbs,
@@ -1589,16 +1455,9 @@ def compact_if_accreted(
 
 
 def _sniff_kind(spark: SparkSession, path: str) -> str:
-    """The index's own kind, primes first, sidecar cold — the
-    `append_index` / `compact_index` discipline (never interpret
-    geometry at the dispatch layer)."""
-    from .util import peek_memoized_literal
-
+    """The index's own kind from the live generation's ``_meta`` — the
+    dispatch layer never interprets geometry."""
     live = _resolve_codes_name(spark, path)
-    if peek_memoized_literal(("ivfpq_meta", path, live)) is not None:
-        return "ivfpq"
-    if peek_memoized_literal(("ivfsq_meta", path, live)) is not None:
-        return "ivfsq"
     return json.loads(_read_meta_text(spark, path, live)).get("kind", "ivfsq")
 
 

@@ -42,6 +42,13 @@ K1_PLUS_1 = 2.2
 B = 0.75
 ONE_MINUS_B = 0.25
 
+#: Driver-collect bound on a serve's (query_id, term) batch. Serving
+#: batches are a few dozen rows (the registered rows send ~9, the
+#: benchmark 48); a batch past this is a caller mistake — a corpus-
+#: sized frame passed as the query side — and fails loudly instead of
+#: pulling it onto the driver.
+MAX_QUERY_BATCH_ROWS = 100_000
+
 
 def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, __toks) projection — tokenize ONCE, derive everything
@@ -102,9 +109,16 @@ def _materialize_query_batch(q: DataFrame):
     (schema preserved — duplicates and types survive, so results are
     bit-identical) and the sorted non-null distinct terms for the
     postings-side In-prune. One partition is the point
-    (`util.local_rows_df`'s py4j lesson)."""
+    (`util.local_rows_df`'s py4j lesson). Raises ValueError past
+    ``MAX_QUERY_BATCH_ROWS`` rows."""
     spark = q.sparkSession
-    rows = q.collect()
+    rows = q.limit(MAX_QUERY_BATCH_ROWS + 1).collect()
+    if len(rows) > MAX_QUERY_BATCH_ROWS:
+        raise ValueError(
+            f"BM25 query batch exceeds {MAX_QUERY_BATCH_ROWS} (query_id, "
+            "term) rows — the batch is collected to the driver; split it "
+            "into serving-sized batches"
+        )
     terms = sorted({r["term"] for r in rows if r["term"] is not None})
     qloc = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), q.schema

@@ -15,14 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def equi_join(
-    left: DataFrame, right: DataFrame, on: str | Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """J1/J3: equi-join on one or a composite key (`acq_etl_code.scala:92,102`).
-    USING-style `on` so the key appears once in the output."""
-    return left.join(right, on, how)
-
-
 def dim_lookup(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """J4 dimension lookup (`predictions.scala:27-28` ticker join) with
     an explicit broadcast hint — at 100 TB the dim table must never be

@@ -433,7 +433,7 @@ def build_token_index(
     on). Extra ``build_kw`` (n_subspaces/n_codes/codebooks) flow to
     the PQ build.
 
-    The build RECORDS ``n_tokens`` in the index geometry sidecar
+    The build RECORDS ``n_tokens`` in the index geometry ``_meta``
     (ADVICE r11): composite ids are only decodable with the T they
     were encoded with, so `maxsim_search_tokens_persisted` fails fast
     on a mismatched serve-time T (and can default T from the meta)
@@ -458,17 +458,6 @@ def build_token_index(
         )
     else:
         raise ValueError(f"unknown token index kind {kind!r}")
-    # same-session serve needs (kind, n_tokens) without a disk read:
-    # prime them under the resolved generation, exactly like the
-    # builds prime their geometry.
-    from .ann_index import _resolve_codes_name
-    from .util import prime_memoized_literal
-
-    spark = cand_tokens.sparkSession
-    live = _resolve_codes_name(spark, path)
-    prime_memoized_literal(
-        ("token_meta", path, live), {"kind": kind, "n_tokens": int(n_tokens)}
-    )
 
 
 def maxsim_search_tokens_persisted(
@@ -504,7 +493,7 @@ def maxsim_search_tokens_persisted(
 
     ``n_tokens`` is CROSS-CHECKED against the T the index records
     (ADVICE r11 — `build_token_index` writes it into the geometry
-    sidecar): composite candidate ids decode with the build-time
+    ``_meta``): composite candidate ids decode with the build-time
     divisor only, so a mismatched serve-time T would silently map
     hits to wrong parent documents; here it raises. Pass
     ``n_tokens=None`` to take T from the index itself (indexes built
@@ -527,29 +516,14 @@ def maxsim_search_tokens_persisted(
     import json as _json
 
     from .ann_index import _read_meta_text, _resolve_codes_name
-    from .util import peek_memoized_literal, prime_memoized_literal
 
+    # kind + recorded-T sniff from the live generation's `_meta`, read
+    # on EVERY serve (a driver-side one-file read, no Spark job), so
+    # the fail-fast T cross-check below can never be skipped.
     live = _resolve_codes_name(spark, index_path)
-    # kind + recorded-T sniff: a same-session `build_token_index`
-    # primed both under ("token_meta", path, generation). On a miss
-    # (cold session, or a same-session compact/append promoted a NEW
-    # generation the build never primed) the sidecar is read
-    # UNCONDITIONALLY — a driver-side one-file read, no Spark job —
-    # and re-primed: ADVICE r12 closed the warm hole where a kind
-    # prime plus an explicit ``n_tokens`` skipped the read and a
-    # mismatched T served without the fail-fast cross-check.
-    tmeta = peek_memoized_literal(("token_meta", index_path, live))
-    if tmeta is not None:
-        kind = tmeta["kind"]
-        meta_T = tmeta.get("n_tokens")
-    else:
-        side = _json.loads(_read_meta_text(spark, index_path, live))
-        kind = side.get("kind", "ivfsq")
-        meta_T = side.get("n_tokens")
-        prime_memoized_literal(
-            ("token_meta", index_path, live),
-            {"kind": kind, "n_tokens": meta_T},
-        )
+    side = _json.loads(_read_meta_text(spark, index_path, live))
+    kind = side.get("kind", "ivfsq")
+    meta_T = side.get("n_tokens")
     if n_tokens is None:
         if meta_T is None:
             raise ValueError(

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 import threading
-import time
 import weakref
 
 from pyspark.sql import DataFrame
@@ -242,27 +241,34 @@ def double_matrix_literal(rows):
 def run_overlapped(*thunks):
     """Run independent job-submitting thunks from a driver thread pool
     so one job's straggler tail back-fills with the next job's tasks
-    (guide §2.6 — the s35/s45/s47 build-overlap pattern, round 13).
+    (guide §2.6 — the s35/s45/s47 build-overlap pattern).
     ONLY for thunks whose Spark actions are pairwise independent AND
     write disjoint artifacts: concurrent writes into one directory
     share the FileOutputCommitter staging dir (the s18 hazard — a
     correctness bug, not a tuning choice). Each thunk is wrapped with
-    `pyspark.util.inheritable_thread_target` so JVM thread-local job
-    properties (job group/description, scheduler pool) propagate to
-    the worker threads under pinned-thread mode (ADVICE r13) — job
-    attribution and group cancellation keep working. Returns results
-    in thunk order; the first exception propagates after every thunk
+    `pyspark.util.inheritable_thread_target(session)` for the active
+    session, so JVM thread-local job properties (job group/description,
+    scheduler pool) AND the session's job tags propagate to the worker
+    threads under pinned-thread mode — job attribution and group
+    cancellation keep working. Returns results in thunk order (``[]``
+    for no thunks); the first exception propagates after every thunk
     has finished (no artifact is left mid-write by a sibling's
     failure)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import SparkSession
     from pyspark.util import inheritable_thread_target
 
+    if not thunks:
+        return []
+    session = SparkSession.getActiveSession()
+    wrap = inheritable_thread_target if session is None else inheritable_thread_target(session)
+    if wrap is session:  # pinned-thread mode off: nothing to inherit
+        wrap = lambda t: t  # noqa: E731
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(inheritable_thread_target(t)) for t in thunks]
-        done = [(f, None) for f in futs]
+        futs = [pool.submit(wrap(t)) for t in thunks]
         results, first_err = [], None
-        for f, _ in done:
+        for f in futs:
             try:
                 results.append(f.result())
             except BaseException as e:  # keep draining: siblings finish
@@ -297,73 +303,25 @@ def local_rows_df(spark, rows: list, schema: str) -> DataFrame:
 _MEMO_LOCK = threading.Lock()
 
 
-#: Per-path fingerprint cache with a short TTL (ADVICE r6): the
-#: recursive walk used to run on EVERY memo access, including hits —
-#: on an append-accreted index codes dir (one file per touched cell
-#: per nightly shard) that is hundreds of driver stat calls per
-#: serve, the very per-invocation cost the memo exists to remove.
-#: Entries: path → (monotonic_at, fp). The engine's OWN write paths
-#: (publish_parquet_atomic, compact_parquet, compact_ivfsq_index,
-#: and every prime_memoized_literal) invalidate eagerly, so
-#: engine-made overwrites are seen immediately; a FOREIGN writer
-#: (another process regenerating testdata) is seen after at most
-#: ``_FP_TTL_S``. Bounded; cleared wholesale past the cap (a perf
-#: knob, never correctness — a dropped entry just re-walks).
-#: The TTL is tunable via $SPARK_GRAFT_FP_TTL_S (ADVICE r7): a
-#: deployment whose corpus directories are overwritten by a FOREIGN
-#: process mid-session (bench alongside a testdata regenerator) can
-#: shrink the staleness window toward 0 (every memo access re-walks),
-#: or raise it when sources are immutable. Read once at import — the
-#: window is a process-wide contract, not a per-call knob.
-_FP_CACHE: dict = {}
-_FP_LOCK = threading.Lock()
-_FP_TTL_S = float(os.environ.get("SPARK_GRAFT_FP_TTL_S", "2.0"))
-_FP_CACHE_MAX = 512
-
-
-def invalidate_path_fingerprints(prefix: str | None = None) -> None:
-    """Drop cached path fingerprints — every path when ``prefix`` is
-    None, else exactly the cached paths equal to or under ``prefix``.
-    The engine's write paths call this right after mutating a
-    directory so their own overwrites bypass the TTL window."""
-    with _FP_LOCK:
-        if prefix is None:
-            _FP_CACHE.clear()
-            return
-        for p in [p for p in _FP_CACHE if p == prefix or p.startswith(prefix.rstrip("/") + "/")]:
-            del _FP_CACHE[p]
-
-
 def _fp_of_path(p: str):
     """(file count, total bytes, max mtime_ns) for ``p`` from a
-    recursive walk, served from ``_FP_CACHE`` within ``_FP_TTL_S``."""
-    now = time.monotonic()
-    with _FP_LOCK:
-        ent = _FP_CACHE.get(p)
-        if ent is not None and now - ent[0] < _FP_TTL_S:
-            return ent[1]
+    recursive walk; ``("absent",)`` when missing."""
     if not os.path.exists(p):
-        fp = ("absent",)
-    elif os.path.isfile(p):
+        return ("absent",)
+    if os.path.isfile(p):
         st = os.stat(p)
-        fp = (1, st.st_size, st.st_mtime_ns)
-    else:
-        n = size = mt = 0
-        for dp, _, fs in os.walk(p):
-            for f in fs:
-                try:
-                    st = os.stat(os.path.join(dp, f))
-                except OSError:  # racing a writer's rename
-                    continue
-                n += 1
-                size += st.st_size
-                mt = max(mt, st.st_mtime_ns)
-        fp = (n, size, mt)
-    with _FP_LOCK:
-        if len(_FP_CACHE) >= _FP_CACHE_MAX:
-            _FP_CACHE.clear()
-        _FP_CACHE[p] = (now, fp)
-    return fp
+        return (1, st.st_size, st.st_mtime_ns)
+    n = size = mt = 0
+    for dp, _, fs in os.walk(p):
+        for f in fs:
+            try:
+                st = os.stat(os.path.join(dp, f))
+            except OSError:  # racing a writer's rename
+                continue
+            n += 1
+            size += st.st_size
+            mt = max(mt, st.st_mtime_ns)
+    return (n, size, mt)
 
 
 def _abs_path_elements(key: tuple) -> list:
@@ -381,23 +339,21 @@ def _abs_path_elements(key: tuple) -> list:
     return out
 
 
-def _source_fingerprint(key: tuple):
+def source_fingerprint(key: tuple):
     """Cheap content identity for every ABSOLUTE path element of a
     memo ``key``: per path, (file count, total bytes, max mtime_ns)
-    from a recursive walk (missing path → a "absent" marker, so a
-    path that appears later invalidates too), cached per path for
-    ``_FP_TTL_S`` (see ``_FP_CACHE``). Folded into every memo
-    hit/insert so an in-session overwrite of a corpus or index
-    directory is SEEN — the memo serves stale frames on path identity
-    alone otherwise (VERDICT r5 #5 / ADVICE r5). Driver-side stat
-    calls only; on an object store swap the walk for one listing call
-    — the contract (identity = path + content fingerprint) is
-    unchanged. GRANULARITY CAVEAT (ADVICE r6): this is a freshness
-    heuristic, not a checksum — a foreign overwrite that preserves
-    file count and total bytes within the filesystem's mtime
-    resolution (or lands inside the TTL window) can alias. The
-    engine's own writers invalidate eagerly, so the caveat applies
-    only to out-of-band writers racing a live session."""
+    from a recursive walk taken on every access (missing path → an
+    "absent" marker, so a path that appears later invalidates too).
+    Folded into every memo hit/insert so an in-session overwrite of a
+    corpus directory — by the engine or by any other process — is
+    seen at the next access; the memo serves stale frames on path
+    identity alone otherwise. Driver-side stat calls only; the keyed
+    paths are corpus directories of a handful of files. On an object
+    store swap the walk for one listing call — the contract (identity
+    = path + content fingerprint) is unchanged. GRANULARITY CAVEAT:
+    this is a freshness heuristic, not a checksum — an overwrite that
+    preserves file count and total bytes within the filesystem's
+    mtime resolution can alias."""
     return tuple(_fp_of_path(p) for p in _abs_path_elements(key))
 
 
@@ -409,7 +365,7 @@ def _source_fingerprint(key: tuple):
 #: DataFrame construction (PERF.md, s03 breakdown). Keyed by
 #: applicationId so a Column from a stopped session is never reused;
 #: values stored as (source_fingerprint, value) so a mutated source
-#: path invalidates (see _source_fingerprint).
+#: path invalidates (see source_fingerprint).
 _LITERAL_MEMO: dict = {}
 
 
@@ -439,7 +395,7 @@ def memoized_literal(key: tuple, build):
     sc = SparkContext._active_spark_context
     app = sc.applicationId if sc is not None else None
     k = (app, key)
-    fp = _source_fingerprint(key)
+    fp = source_fingerprint(key)
     with _MEMO_LOCK:
         ent = _LITERAL_MEMO.get(k)
         if ent is not None and ent[0] == fp:
@@ -503,7 +459,7 @@ def memoized_frame(key: tuple, build) -> DataFrame:
     frame's CONTENT — include the corpus identity (source path +
     filter fingerprint) and every config folded into the plan; any
     ABSOLUTE path element additionally contributes a content
-    fingerprint (`_source_fingerprint`), so overwriting a corpus
+    fingerprint (`source_fingerprint`), so overwriting a corpus
     parquet mid-session is SEEN: the stale frame is unpersisted and
     rebuilt from the new files (VERDICT r5 #5). An external
     ``spark.catalog.clearCache()`` (the bench harness does this
@@ -522,7 +478,7 @@ def memoized_frame(key: tuple, build) -> DataFrame:
     sc = SparkContext._active_spark_context
     app = sc.applicationId if sc is not None else None
     k = (app, key)
-    fp = _source_fingerprint(key)
+    fp = source_fingerprint(key)
     while True:
         with _MEMO_LOCK:
             ent = _FRAME_MEMO.get(k)
@@ -563,46 +519,6 @@ def memoized_frame(key: tuple, build) -> DataFrame:
         with _MEMO_LOCK:
             _KEY_BUILDING.pop(k, None)
         ev.set()
-
-
-def prime_memoized_literal(key: tuple, value) -> None:
-    """OVERWRITE the (live session, ``key``) memo entry with a value
-    the caller just computed/wrote — unlike `memoized_literal`'s
-    miss-populate, priming replaces any stale entry (an index REBUILD
-    at the same path must not leave the old sidecar cached). The
-    source fingerprint is taken NOW (the caller just finished
-    writing), so a later foreign overwrite of the same path makes
-    `peek_memoized_literal` miss and the reader falls back to disk."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app = sc.applicationId if sc is not None else None
-    # The caller JUST wrote these paths: the fingerprint stored with
-    # the primed value must be post-write, not a TTL-cached pre-write
-    # one (a stale stored fp would make every later peek miss — the
-    # append-path regression shape, PERF.md round 6).
-    for p in _abs_path_elements(key):
-        invalidate_path_fingerprints(p)
-    fp = _source_fingerprint(key)
-    with _MEMO_LOCK:
-        _LITERAL_MEMO[(app, key)] = (fp, value)
-
-
-def peek_memoized_literal(key: tuple):
-    """The (live session, ``key``) memo entry, or None — no build, no
-    populate. For read paths that may consult a primed artifact but
-    must NOT cache a disk read themselves (the disk is the source of
-    truth when nothing primed it this session, or when the path's
-    content changed since priming)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app = sc.applicationId if sc is not None else None
-    with _MEMO_LOCK:
-        ent = _LITERAL_MEMO.get((app, key))
-    if ent is None or ent[0] != _source_fingerprint(key):
-        return None
-    return ent[1]
 
 
 def release_memoized_frames() -> None:

@@ -688,6 +688,12 @@ from .handshake import handshake_path as _handshake_path  # noqa: E402
 
 _S12_SHORT_PATH = _handshake_path("s12_shortlist")
 
+#: s12's publish-skip record: (config, sf_dir, artifact) → the
+#: `util.source_fingerprint` of sf_dir AND the artifact taken right
+#: after this process's last publish. A mismatch on either path
+#: republishes.
+_S12_PUBLISHED: dict = {}
+
 #: Greedy MMR as a RECURSIVE CTE: one selection step per recursion
 #: level — per level, score every free candidate against the chosen
 #: set (λ·rel − (1−λ)·max dot) and keep the per-query argmax
@@ -785,23 +791,20 @@ def s12_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ARTIFACT-HOP SKIP (VERDICT r6 #3): the shortlist is a
     deterministic function of (sf_dir contents, config), so the
-    publish is skipped when a session marker certifies the existing
-    artifact was produced from the CURRENT sf_dir content — the
-    marker key fingerprints BOTH sf_dir and the artifact path
-    (peek/prime's content contract), so a testdata regen, a foreign
-    overwrite (another SF's sweep), or a config change all republish.
+    publish is skipped when `_S12_PUBLISHED` certifies the existing
+    artifact was produced from the CURRENT sf_dir content — it holds
+    the content fingerprint of BOTH sf_dir and the artifact path taken
+    right after this process's last publish, so a testdata regen, a
+    foreign overwrite (another SF's sweep), or a config change all
+    republish.
     A skipped publish changes nothing the oracle sees: the query
     still reads the same artifact bits the oracle replays."""
     from ..operators.similarity import auto_planes, mmr_rerank
-    from ..operators.util import (
-        memoized_literal,
-        peek_memoized_literal,
-        prime_memoized_literal,
-    )
+    from ..operators.util import memoized_literal, source_fingerprint
     from ..sources.writers import publish_parquet_atomic
 
-    marker = ("s12_shortlist", "lshk15_kmax12_probe", sf_dir, _S12_SHORT_PATH)
-    if peek_memoized_literal(marker) is None:
+    marker = ("lshk15_kmax12_probe", sf_dir, _S12_SHORT_PATH)
+    if _S12_PUBLISHED.get(marker) != source_fingerprint(marker):
         e = load_table(spark, sf_dir, "embeddings")
         q = e.filter(F.col("vec_id") < 5)
         short = lsh_topk(
@@ -832,7 +835,7 @@ def s12_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             short.select("query_id", "candidate_id", "cos_sim", "c_vec").coalesce(1),
             _S12_SHORT_PATH,
         )
-        prime_memoized_literal(marker, True)
+        _S12_PUBLISHED[marker] = source_fingerprint(marker)
     return mmr_rerank(
         spark.read.parquet(_S12_SHORT_PATH), k=5, lam=0.7
     )

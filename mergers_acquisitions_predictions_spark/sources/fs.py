@@ -48,14 +48,19 @@ def fs_exists(spark, path: str) -> bool:
     return _fs_for(spark, path).exists(_jpath(spark, path))
 
 
-def fs_is_dir(spark, path: str) -> bool:
-    """True iff ``path`` exists and is a directory — one status RPC.
-    Lets layout-compat readers (`operators/ann_index._read_meta_text`)
-    tell a plain-file sidecar from a legacy one-row dataset
-    directory without provoking Py4J FileNotFound noise."""
-    fs = _fs_for(spark, path)
-    p = _jpath(spark, path)
-    return bool(fs.exists(p)) and bool(fs.getFileStatus(p).isDirectory())
+def fs_file_status(spark, path: str) -> tuple[int, int] | None:
+    """(length, modification time ms) of the file at ``path``, or None
+    when missing — one getFileStatus RPC. Lets small-file readers key
+    a content cache on what the store says changed."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        st = _fs_for(spark, path).getFileStatus(_jpath(spark, path))
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return None
+        raise
+    return int(st.getLen()), int(st.getModificationTime())
 
 
 def fs_rename(spark, src: str, dst: str) -> None:

@@ -98,9 +98,6 @@ def publish_parquet_atomic(df: DataFrame, path: str) -> None:
     if moved_aside:
         fs_delete(spark, old)
     spark.catalog.refreshByPath(path)
-    from ..operators.util import invalidate_path_fingerprints
-
-    invalidate_path_fingerprints(path)  # memo layer sees this write NOW
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
@@ -259,7 +256,4 @@ def compact_parquet(
         raise
     fs_delete(spark, old)
     spark.catalog.refreshByPath(path)
-    from ..operators.util import invalidate_path_fingerprints
-
-    invalidate_path_fingerprints(path)  # memo layer sees this write NOW
     return len(files), n_out

@@ -10,6 +10,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running end-to-end test (deselect with -m 'not slow')"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     # Modest parallelism for tiny test frames: 8 threads is faster than

@@ -36,6 +36,10 @@ def assert_query_matches_oracle(spark, name: str, sf_dir: str) -> None:
     from mergers_acquisitions_predictions_spark.plans import ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, sf_dir)
+    # schema contract of every registered query (`__spark_entry__.
+    # queries()` is `dict(QUERIES)`): non-empty, unique column names
+    assert sdf.columns, name
+    assert len(set(sdf.columns)) == len(sdf.columns), f"{name}: duplicate col names"
     got = normalize(sdf.toPandas())
     want = normalize(run_oracle(ORACLES[name], sf_dir))
     assert list(got.columns) == list(want.columns), (

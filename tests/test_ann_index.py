@@ -59,9 +59,11 @@ def test_build_overwrites_and_roundtrips_meta(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=16)
     build_ivfsq_index(e, path, n_cells=16)  # idempotent overwrite
-    meta = spark.read.json(f"{path}/meta").first()
-    assert meta["kind"] == "ivfsq" and int(meta["n_cells"]) == 16
     import json
+
+    with open(f"{path}/codes_g000001/_meta") as f:  # the rebuild's generation
+        meta = json.load(f)
+    assert meta["kind"] == "ivfsq" and int(meta["n_cells"]) == 16
 
     assert len(json.loads(meta["mns"])) == 64
     assert len(json.loads(meta["centroids"])) == 16
@@ -254,9 +256,7 @@ def test_filtered_search_keeps_partition_pruning(spark, tmp_path):
 def test_compaction_is_layout_only_and_merges_files(spark, tmp_path):
     """compact_ivfsq_index: after two append shards the codes carry
     extra per-cell files; compaction must reduce the file count,
-    keep search results BIT-identical, keep partition pruning, and
-    keep the same-session primed meta serving (no sidecar re-read
-    regression — the append lesson)."""
+    keep search results BIT-identical, and keep partition pruning."""
     import os
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
@@ -337,7 +337,6 @@ def test_reader_never_sees_missing_codes_dir_mid_compaction(spark, tmp_path):
         append_to_ivfsq_index,
         compact_ivfsq_index,
     )
-    from mergers_acquisitions_predictions_spark.operators import util as U
     from mergers_acquisitions_predictions_spark.sources import fs as FS
 
     e = load_table(spark, SF, "embeddings")
@@ -349,9 +348,6 @@ def test_reader_never_sees_missing_codes_dir_mid_compaction(spark, tmp_path):
     probes: list[int] = []
 
     def probe() -> None:
-        # a CONCURRENT reader has no primed session state — drop the
-        # primes so resolution exercises the on-disk pointer/fallback
-        U._LITERAL_MEMO.clear()
         live = _codes_path(spark, path)
         spark.catalog.refreshByPath(live)
         probes.append(spark.read.parquet(live).count())
@@ -436,6 +432,116 @@ def test_compaction_pointer_swap_failure_leaves_old_index_serving(
     assert pre == post2
 
 
+def _foreign_write(path: str, text: str) -> None:
+    """Rewrite a small artifact file the way another process would: a
+    plain write, then drop Hadoop's checksum twin (LocalFileSystem
+    would otherwise fail the next READ on the stale ``.crc``)."""
+    import os
+
+    with open(path, "w") as f:
+        f.write(text)
+    d, name = os.path.split(path)
+    try:
+        os.remove(os.path.join(d, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+
+
+def test_foreign_rewrite_seen_by_next_serve(spark, tmp_path):
+    """Serve, append and compact resolve ``CURRENT`` and read the live
+    generation's ``_meta`` from disk on every call, so a rewrite by
+    another process — of the pointer or of a generation's geometry —
+    is seen by the very next serve, even one issued right after this
+    session's own build."""
+    import json
+    import os
+
+    import pytest
+
+    from mergers_acquisitions_predictions_spark.operators.ann_index import (
+        _resolve_codes_name,
+    )
+
+    e = load_table(spark, SF, "embeddings")
+    q = e.filter(F.col("vec_id") < 3)
+    path = str(tmp_path / "idx")
+
+    def serve():
+        return sorted(
+            map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        )
+
+    build_ivfsq_index(e, path, n_cells=8)
+    want8 = serve()
+    build_ivfsq_index(e, path, n_cells=4)  # rebuild: live = codes_g000001
+    _foreign_write(f"{path}/CURRENT", "codes")  # roll the pointer back
+    assert _resolve_codes_name(spark, path) == "codes"
+    assert serve() == want8
+
+    meta_path = f"{path}/codes/_meta"
+    with open(meta_path) as f:
+        original = f.read()
+    bad = json.loads(original)
+    bad.update(kind="ivfpq", note="foreign")
+    _foreign_write(meta_path, json.dumps(bad))
+    with pytest.raises(ValueError, match="kind='ivfpq', not ivfsq"):
+        serve()
+    _foreign_write(meta_path, original)
+    assert serve() == want8
+    os.remove(meta_path)
+    with pytest.raises(ValueError, match="no geometry for generation 'codes'"):
+        serve()
+
+
+def test_second_session_reads_each_generation_meta_once(spark, tmp_path, monkeypatch):
+    """A session serving an index it did not build reads each live
+    generation's ``_meta`` text ONCE across repeated serves (the text
+    cache keys on the file's length and mtime, not on the session),
+    and its results are bit-identical to the building session's."""
+    from mergers_acquisitions_predictions_spark.operators.ann_index import (
+        append_to_ivfsq_index,
+        compact_ivfsq_index,
+    )
+    from mergers_acquisitions_predictions_spark.sources import fs as FS
+
+    path = str(tmp_path / "idx")
+    e = load_table(spark, SF, "embeddings")
+    build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=8)
+
+    reads: list[str] = []
+    real_read = FS.fs_read_text
+
+    def counting_read(spark_, p):
+        if p.endswith("/_meta"):
+            reads.append(p[len(path) + 1:])
+        return real_read(spark_, p)
+
+    monkeypatch.setattr(FS, "fs_read_text", counting_read)
+    other = spark.newSession()
+    e2 = load_table(other, SF, "embeddings")
+    q2 = e2.filter(F.col("vec_id") < 5)
+
+    def serve(session, queries):
+        return sorted(
+            map(
+                tuple,
+                search_ivfsq_index(session, path, queries, k=5, n_probe=2).collect(),
+            )
+        )
+
+    first = [serve(other, q2) for _ in range(3)]
+    assert reads == ["codes/_meta"]
+    q = e.filter(F.col("vec_id") < 5)
+    assert first == [serve(spark, q)] * 3
+
+    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    compact_ivfsq_index(spark, path)  # live = codes_g000001
+    reads.clear()
+    again = [serve(other, q2) for _ in range(3)]
+    assert reads == ["codes_g000001/_meta"]
+    assert again == [serve(spark, q)] * 3
+
+
 def test_legacy_layout_without_pointer_still_serves(spark, tmp_path):
     """A pre-pointer index (no CURRENT file) resolves to the legacy
     codes/ dir; after a compaction created generations, a lost
@@ -447,7 +553,6 @@ def test_legacy_layout_without_pointer_still_serves(spark, tmp_path):
         _resolve_codes_name,
         compact_ivfsq_index,
     )
-    from mergers_acquisitions_predictions_spark.operators import util as U
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
@@ -456,14 +561,12 @@ def test_legacy_layout_without_pointer_still_serves(spark, tmp_path):
     want = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
 
     os.remove(f"{path}/CURRENT")  # simulate the pre-pointer layout
-    U._LITERAL_MEMO.clear()  # and a session with no primed state
     assert _resolve_codes_name(spark, path) == "codes"
     got = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
     assert got == want
 
     compact_ivfsq_index(spark, path)
     os.remove(f"{path}/CURRENT")
-    U._LITERAL_MEMO.clear()
     assert _resolve_codes_name(spark, path) == "codes_g000001"
     got2 = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
     assert got2 == want
@@ -516,7 +619,6 @@ def test_rebuild_keeps_stale_reader_consistent(spark, tmp_path):
         _resolve_codes_name,
         compact_ivfsq_index,
     )
-    from mergers_acquisitions_predictions_spark.operators import util as U
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
@@ -525,7 +627,6 @@ def test_rebuild_keeps_stale_reader_consistent(spark, tmp_path):
     stale_name = _resolve_codes_name(spark, path)
     assert stale_name == "codes_g000001"
     build_ivfsq_index(e, path, n_cells=4)  # rebuild with NEW geometry
-    U._LITERAL_MEMO.clear()  # the stale reader is another session
     # the stale generation still exists and resolves ITS OWN geometry
     old_meta = _json.loads(_read_meta_text(spark, path, stale_name))
     assert int(old_meta["n_cells"]) == 8
@@ -566,7 +667,7 @@ def test_generation_sort_is_numeric(spark, tmp_path):
 def test_build_with_learned_centroids_roundtrips(spark, tmp_path):
     """Round 8: the persisted index accepts a caller-fitted centroid
     table (the sampled-fit large-corpus default, SCALE.md §7o) — the
-    learned cells are materialized into the meta sidecar, and
+    learned cells are materialized into the ``_meta`` geometry, and
     search/append/compact consume the frozen geometry unchanged. The
     persisted serve must be bit-identical to the in-memory ivf+SQ8
     path run over the same learned centroids."""
@@ -588,9 +689,11 @@ def test_build_with_learned_centroids_roundtrips(spark, tmp_path):
     rows = got.collect()
     assert len(rows) == 25
     # persisted meta carries the LEARNED cells (count follows table)
-    meta = spark.read.json(f"{path}/meta").first()
-    assert int(meta["n_cells"]) == 8
     import json as _json
+
+    with open(f"{path}/codes/_meta") as f:
+        meta = _json.load(f)
+    assert int(meta["n_cells"]) == 8
 
     persisted = {
         int(c): v for c, v, _n in _json.loads(meta["centroids"])
@@ -669,7 +772,6 @@ def test_corrupt_pointer_manifest_is_loud(spark, tmp_path):
     falls back to generation resolution."""
     import pytest
 
-    from mergers_acquisitions_predictions_spark.operators import util as U
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         _resolve_codes_name,
     )
@@ -691,7 +793,6 @@ def test_corrupt_pointer_manifest_is_loud(spark, tmp_path):
             os.remove(f"{path}/.CURRENT.crc")
         except FileNotFoundError:
             pass
-        U._LITERAL_MEMO.clear()
 
     for bad in ("../../etc", "codes_gX", "/abs/path", "codes_g1; rm"):
         scribble(bad)
@@ -907,8 +1008,8 @@ def test_streaming_ingest_pq_residual_kind(spark, tmp_path):
     """`ingest_batch` dispatches on the index's OWN kind (round 12):
     a stream appending into a RESIDUAL IVF-PQ index must encode the
     arriving shard with the persisted books under the residual flag —
-    equal to the batch PQ append — and cold (no session primes) the
-    dispatch must come from the sidecar."""
+    equal to the batch PQ append — with the dispatch read from the
+    live generation's ``_meta``."""
     import json as _json
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
@@ -944,10 +1045,6 @@ def test_streaming_ingest_pq_residual_kind(spark, tmp_path):
                 )
                 + "\n"
             )
-    import mergers_acquisitions_predictions_spark.operators.util as U
-
-    with U._MEMO_LOCK:  # cold: kind must come from the sidecar
-        U._LITERAL_MEMO.clear()
     stream = (
         ingest_vector_stream(
             stream_path,
@@ -1441,6 +1538,33 @@ def test_run_overlapped_order_and_error_propagation(spark):
     with _pytest.raises(RuntimeError, match="boom"):
         run_overlapped(fast_fail, slow_ok)
     assert finished == ["ok"]  # the sibling ran to completion first
+
+
+def test_run_overlapped_empty_and_session_tags_propagate(spark, monkeypatch):
+    """No thunks is an empty result, not an error; with an active
+    session every worker thread inherits the session's job tags (so
+    overlapped jobs stay attributable and cancellable by tag) and no
+    "Tags will not be inherited" warning is raised per thunk. The tags
+    go on a throwaway session: in Spark 4.1 a tagged session can no
+    longer be Java-serialized, which breaks later MLlib closures that
+    capture it (see test_bm25_build_does_not_poison_mllib_closures)."""
+    import warnings
+
+    from pyspark.sql import SparkSession
+
+    from mergers_acquisitions_predictions_spark.operators.util import (
+        run_overlapped,
+    )
+
+    assert run_overlapped() == []
+    tagged = spark.newSession()
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: tagged)
+    tagged.addTag("overlap-tag")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        tags = run_overlapped(tagged.getTags, tagged.getTags)
+    assert all("overlap-tag" in t for t in tags), tags
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
 
 
 def test_staged_reconcile_is_kind_agnostic_pq_residual(spark, tmp_path):

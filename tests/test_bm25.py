@@ -82,6 +82,29 @@ def test_bm25_rank_density_and_order(spark):
     assert {d for _, _, d in per_q[200]} == {2, 4}
 
 
+def test_bm25_query_batch_over_bound_raises(spark, monkeypatch):
+    """The serve collects its (query_id, term) batch to the driver;
+    a batch past MAX_QUERY_BATCH_ROWS fails loudly, naming the bound,
+    instead of pulling a corpus-sized frame onto the driver. At the
+    bound it still serves."""
+    import pytest
+
+    from mergers_acquisitions_predictions_spark.operators import bm25 as B25
+
+    monkeypatch.setattr(B25, "MAX_QUERY_BATCH_ROWS", 3)
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    ok = spark.createDataFrame(
+        [(100, "spark"), (100, "query"), (200, "pond")], "query_id long, term string"
+    )
+    assert bm25_topk(docs, ok, k=2).count() > 0
+    over = spark.createDataFrame(
+        [(100, "spark"), (100, "query"), (200, "pond"), (200, "plan")],
+        "query_id long, term string",
+    )
+    with pytest.raises(ValueError, match="exceeds 3"):
+        bm25_topk(docs, over, k=2)
+
+
 def test_bm25_exclude_self_and_absent_terms(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     q = spark.createDataFrame(

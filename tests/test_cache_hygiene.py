@@ -244,20 +244,17 @@ def test_memoized_frame_eviction_bound(spark):
     release_memoized_frames()
 
 
-def test_memoized_frame_sees_source_mutation(spark, tmp_path, monkeypatch):
+def test_memoized_frame_sees_source_mutation(spark, tmp_path):
     """VERDICT r5 #5 / ADVICE r5: overwriting a corpus parquet
     mid-session must invalidate the memo — the key's absolute-path
     elements contribute a content fingerprint, so the stale persisted
     frame is unpersisted and the next call rebuilds from the NEW
     files. (Engine contract: corpus identity = path + content, not
     path alone.) The overwrite here is FOREIGN (raw spark.write, not
-    an engine sink), so it is contractually seen after the
-    fingerprint TTL (ADVICE r6); TTL=0 simulates expiry."""
+    an engine sink) and is seen at the very next access."""
     from pyspark.sql import functions as F
 
     from mergers_acquisitions_predictions_spark.operators import util as U
-
-    monkeypatch.setattr(U, "_FP_TTL_S", 0.0)
 
     release_memoized_frames()
     before = _quiescent_cached_rdds(spark)
@@ -346,38 +343,10 @@ def test_memoized_frame_concurrent_misses_no_leak(spark):
     ]
 
 
-def test_primed_literal_peek_misses_on_foreign_overwrite(spark, tmp_path, monkeypatch):
-    """prime/peek honor the same content contract: a foreign process
-    overwriting the primed path makes peek return None (reader falls
-    back to the on-disk source of truth) instead of serving the stale
-    sidecar — after the fingerprint TTL for out-of-band writers
-    (ADVICE r6; TTL=0 simulates expiry)."""
-    from mergers_acquisitions_predictions_spark.operators import util as U
-
-    monkeypatch.setattr(U, "_FP_TTL_S", 0.0)
-
-    p = str(tmp_path / "meta")
-    import os
-
-    os.makedirs(p)
-    with open(os.path.join(p, "meta.json"), "w") as f:
-        f.write("{}")
-    U.prime_memoized_literal(("peek-test", p), {"v": 1})
-    assert U.peek_memoized_literal(("peek-test", p)) == {"v": 1}
-    # foreign overwrite: content fingerprint changes
-    import time
-
-    time.sleep(0.01)
-    with open(os.path.join(p, "meta.json"), "w") as f:
-        f.write('{"other": 1}')
-    assert U.peek_memoized_literal(("peek-test", p)) is None
-
-
-def test_fingerprint_cache_skips_rewalk_within_ttl(tmp_path, monkeypatch):
-    """ADVICE r6: the per-access recursive walk is memoized per path
-    with a short TTL — a second access inside the TTL must not walk
-    again (on an append-accreted codes dir that walk is hundreds of
-    driver stat calls per serve)."""
+def test_fingerprint_sees_foreign_overwrite_at_next_access(tmp_path, monkeypatch):
+    """The fingerprint is a plain walk on every access: no cache, so
+    an overwrite by any writer is seen by the very next access, with
+    no invalidation call. No Spark needed."""
     import os as _os
 
     from mergers_acquisitions_predictions_spark.operators import util as U
@@ -386,7 +355,6 @@ def test_fingerprint_cache_skips_rewalk_within_ttl(tmp_path, monkeypatch):
     _os.makedirs(p)
     with open(_os.path.join(p, "part-0.parquet"), "wb") as f:
         f.write(b"x" * 64)
-    U.invalidate_path_fingerprints(p)
     walks = []
     real_walk = _os.walk
 
@@ -395,23 +363,21 @@ def test_fingerprint_cache_skips_rewalk_within_ttl(tmp_path, monkeypatch):
         return real_walk(top, *a, **kw)
 
     monkeypatch.setattr(U.os, "walk", counting_walk)
-    fp1 = U._source_fingerprint(("k", p))
-    fp2 = U._source_fingerprint(("k", p))
-    assert fp1 == fp2
-    assert walks.count(p) == 1  # second access served from cache
-    # engine-write invalidation bypasses the TTL: next access re-walks
-    U.invalidate_path_fingerprints(p)
-    U._source_fingerprint(("k", p))
+    fp1 = U.source_fingerprint(("k", p))
+    assert fp1 == U.source_fingerprint(("k", p))
     assert walks.count(p) == 2
+    with open(_os.path.join(p, "part-0.parquet"), "wb") as f:
+        f.write(b"y" * 65)
+    fp2 = U.source_fingerprint(("k", p))
+    assert fp2 != fp1 and fp2[0][:2] == (1, 65)
+    assert U.source_fingerprint(("k", str(tmp_path / "gone"))) == (("absent",),)
 
 
-def test_engine_publish_invalidates_fingerprints_despite_ttl(
-    spark, tmp_path, monkeypatch
-):
-    """The engine's own sinks are seen IMMEDIATELY, TTL or not: a
+def test_engine_publish_invalidates_fingerprints_despite_ttl(spark, tmp_path):
+    """The engine's own sinks are seen IMMEDIATELY: a
     publish_parquet_atomic over a memoized frame's source must make
-    the very next memo access rebuild (the TTL only governs FOREIGN
-    writers)."""
+    the very next memo access rebuild, with no writer-side hook into
+    the memo layer."""
     from pyspark.sql import functions as F
 
     from mergers_acquisitions_predictions_spark.operators import util as U
@@ -419,7 +385,6 @@ def test_engine_publish_invalidates_fingerprints_despite_ttl(
         publish_parquet_atomic,
     )
 
-    monkeypatch.setattr(U, "_FP_TTL_S", 3600.0)  # TTL can't save us here
     release_memoized_frames()
     src = str(tmp_path / "corpus.parquet")
     publish_parquet_atomic(spark.range(10).withColumn("v", F.col("id") * 2), src)
@@ -435,52 +400,6 @@ def test_engine_publish_invalidates_fingerprints_despite_ttl(
     assert second is not first
     assert second.collect()[0]["t"] == 450
     release_memoized_frames()
-
-
-def test_fingerprint_real_ttl_window_and_expiry(tmp_path, monkeypatch):
-    """ADVICE r7 (low): exercise the REAL nonzero-TTL semantics (other
-    tests pin TTL=0): inside the window a foreign overwrite is served
-    the cached fingerprint (the documented staleness trade); past the
-    window the new content is seen. No Spark needed — _fp_of_path is
-    the unit under test."""
-    import time as _time
-
-    from mergers_acquisitions_predictions_spark.operators import util as U
-
-    p = str(tmp_path / "corpus.bin")
-    with open(p, "wb") as f:
-        f.write(b"a")
-
-    # 1) inside a generous window: the cached fp is served even after
-    #    a foreign overwrite (documents the trade, can't flake)
-    monkeypatch.setattr(U, "_FP_TTL_S", 30.0)
-    U.invalidate_path_fingerprints()
-    fp1 = U._fp_of_path(p)
-    assert fp1[1] == 1
-    with open(p, "wb") as f:
-        f.write(b"bbbb")
-    assert U._fp_of_path(p) == fp1  # within TTL: stale by contract
-
-    # 2) past a short REAL window: the overwrite is seen without any
-    #    explicit invalidation
-    monkeypatch.setattr(U, "_FP_TTL_S", 0.05)
-    U.invalidate_path_fingerprints()
-    fp2 = U._fp_of_path(p)
-    assert fp2[1] == 4
-    with open(p, "wb") as f:
-        f.write(b"cccccccc")
-    _time.sleep(0.08)
-    fp3 = U._fp_of_path(p)
-    assert fp3 != fp2 and fp3[1] == 8
-
-    # 3) engine-write eager invalidation bypasses even a long window
-    monkeypatch.setattr(U, "_FP_TTL_S", 30.0)
-    U.invalidate_path_fingerprints()
-    fp4 = U._fp_of_path(p)
-    with open(p, "wb") as f:
-        f.write(b"d")
-    U.invalidate_path_fingerprints(p)
-    assert U._fp_of_path(p)[1] == 1 and U._fp_of_path(p) != fp4
 
 
 def test_double_literal_helpers_bit_equal_and_fallback(spark):

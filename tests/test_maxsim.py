@@ -249,9 +249,7 @@ def test_token_index_pq_kind(spark, tmp_path):
     token frame (token indexes carry T× the corpus rows, so the
     M-bytes/token codes matter more there). The persisted serve
     sniffs the kind from the index's own meta (no kind= needed at
-    serve), works cold (no session primes) and warm, and an unknown
-    kind fails loud."""
-    import mergers_acquisitions_predictions_spark.operators.util as U
+    serve), and an unknown kind fails loud."""
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         build_token_index,
         maxsim_search_tokens_persisted,
@@ -279,17 +277,6 @@ def test_token_index_pq_kind(spark, tmp_path):
         )
     )
     assert warm and len({r[0] for r in warm}) == 3
-    with U._MEMO_LOCK:  # cold reader: kind must come from the sidecar
-        U._LITERAL_MEMO.clear()
-    cold = sorted(
-        map(
-            tuple,
-            maxsim_search_tokens_persisted(
-                spark, path, q, toks, k=5, k0=10
-            ).collect(),
-        )
-    )
-    assert cold == warm
     with pytest.raises(ValueError, match="unknown token index kind"):
         build_token_index(toks, str(tmp_path / "x"), n_tokens=4, kind="hnsw")
 
@@ -520,9 +507,9 @@ def test_token_index_records_n_tokens_and_rejects_mismatch(spark, tmp_path):
     """ADVICE r11: `build_token_index` records n_tokens in the index
     meta; serving with a different T would decode composite candidate
     ids with the wrong divisor and map hits to WRONG parent documents
-    — it must raise instead, warm (primed token_meta) and cold (the
-    sidecar), and ``n_tokens=None`` must take T from the index."""
-    import mergers_acquisitions_predictions_spark.operators.util as U
+    — it must raise instead (the check reads the live generation's
+    ``_meta`` on every serve), and ``n_tokens=None`` must take T from
+    the index."""
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         build_token_index,
         maxsim_search_tokens_persisted,
@@ -539,12 +526,6 @@ def test_token_index_records_n_tokens_and_rejects_mismatch(spark, tmp_path):
     path = str(tmp_path / "tok_meta")
     build_token_index(toks, path, n_tokens=4)
     q = toks.filter(F.col("vec_id") < 2)
-    with pytest.raises(ValueError, match="built with n_tokens=4"):
-        maxsim_search_tokens_persisted(
-            spark, path, q, toks, k=3, k0=6, n_tokens=2
-        )
-    with U._MEMO_LOCK:  # cold reader: the check must ride the sidecar
-        U._LITERAL_MEMO.clear()
     with pytest.raises(ValueError, match="built with n_tokens=4"):
         maxsim_search_tokens_persisted(
             spark, path, q, toks, k=3, k0=6, n_tokens=2
@@ -659,14 +640,10 @@ def test_one_call_token_table_route_matches_in_memory(spark, tmp_path):
 
 
 def test_n_tokens_check_survives_same_session_compact(spark, tmp_path):
-    """ADVICE r12: the warm-session hole. A same-session
-    `compact_index` promotes a NEW generation and primes the kind
-    meta under it, but never primed ("token_meta", path, new_gen) —
-    pre-fix, a serve with an explicit (wrong) n_tokens then skipped
-    the sidecar read and decoded composite ids with the wrong
-    divisor. The cross-check must now hold through the compact, and
-    ``n_tokens=None`` must still resolve T from the carried-forward
-    sidecar."""
+    """A same-session `compact_index` promotes a NEW generation; the
+    n_tokens cross-check must hold through it (the serve reads the
+    carried-forward ``_meta`` of whatever generation is live), and
+    ``n_tokens=None`` must still resolve T from it."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         compact_index,
     )
@@ -685,7 +662,7 @@ def test_n_tokens_check_survives_same_session_compact(spark, tmp_path):
     )
     path = str(tmp_path / "tok_compact_meta")
     build_token_index(toks, path, n_tokens=4)
-    compact_index(spark, path)  # primes kind meta under the NEW gen only
+    compact_index(spark, path)  # live is now codes_g000001
     q = toks.filter(F.col("vec_id") < 2)
     with pytest.raises(ValueError, match="built with n_tokens=4"):
         maxsim_search_tokens_persisted(

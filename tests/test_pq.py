@@ -175,7 +175,7 @@ def test_pq_kmeans_codebooks_lazy_count(spark):
         pq_kmeans_codebooks,
     )
     from mergers_acquisitions_predictions_spark.operators.util import (
-        peek_memoized_literal,
+        memoized_literal,
     )
 
     e = load_table(spark, SF, "embeddings")
@@ -184,9 +184,13 @@ def test_pq_kmeans_codebooks_lazy_count(spark):
         e, n_subspaces=8, n_codes=16, corpus_cache_key=(SF, "emb", "t")
     )
     assert plain == keyed
-    # the count landed under the index builds' shared memo key
-    assert peek_memoized_literal(
-        ("count", (SF, "emb", "t"), "vec_id")
+    # the count landed under the index builds' shared memo key: a
+    # lookup through that key is a hit and never calls its build
+    def _unexpected_build():
+        raise AssertionError("count memo missed")
+
+    assert memoized_literal(
+        ("count", (SF, "emb", "t"), "vec_id"), _unexpected_build
     ) == e.count()
     # forced sampled branch still works through the lazy probe
     sampled = pq_kmeans_codebooks(

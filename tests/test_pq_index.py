@@ -109,8 +109,7 @@ def test_pq_rebuild_commits_generation(spark, tmp_path):
 def test_kind_guards_cross_serving(spark, tmp_path):
     """Serving an IVF-PQ artifact with the SQ8 reader (or vice versa)
     must fail LOUD on the geometry's kind field, not KeyError deep in
-    a stats parse. The primed meta memos are kind-namespaced, so the
-    wrong-kind reader always falls through to the on-disk guard."""
+    a stats parse."""
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 2)
     pq_path = str(tmp_path / "pq")
@@ -245,10 +244,4 @@ def test_residual_flag_survives_append_and_compact(spark, tmp_path):
     assert served and len({r[0] for r in served}) == 5
     before, after = compact_index(spark, split)
     assert after <= before
-    assert _rows(search_ivfpq_index(spark, split, q, k=5, n_probe=2)) == served
-    # cold read (no session primes): flag must come from the sidecar
-    import mergers_acquisitions_predictions_spark.operators.util as U
-
-    with U._MEMO_LOCK:
-        U._LITERAL_MEMO.clear()
     assert _rows(search_ivfpq_index(spark, split, q, k=5, n_probe=2)) == served

@@ -115,13 +115,11 @@ def test_s12_artifact_hop_skipped_when_current(spark, monkeypatch):
     foreign overwrite of the artifact must force a republish."""
     import pandas as pd
 
-    from mergers_acquisitions_predictions_spark.operators import util as U
     from mergers_acquisitions_predictions_spark.plans import similarity_queries as SQ
     from mergers_acquisitions_predictions_spark.sources import writers as W
 
-    monkeypatch.setattr(U, "_FP_TTL_S", 0.0)  # foreign writes seen at once
     # An earlier test in the same session may have run s12 at this SF
-    # and legitimately primed the marker (the feature under test!) —
+    # and legitimately recorded the publish (the feature under test!) —
     # remove the artifact so THIS test starts from a guaranteed miss.
     import shutil
 
