@@ -186,13 +186,11 @@ def main() -> None:
         setattr(mod, fname, wrapper)
 
     _staged(AI, "build_ivfsq_index", "build")
-    _staged(AI, "append_to_ivfsq_index", "append")  # s18: 2 appends, summed
-    _staged(AI, "compact_ivfsq_index", "compact")
-    # `compact_if_accreted` (s42) calls the module-level ALIAS
-    # `compact_index`, bound at import time to the original function —
-    # wrapping only `compact_ivfsq_index` above left s42's compact
-    # stage in "rest" (round 14 measurement fix; each call path goes
-    # through exactly one wrapper, so nothing double-counts).
+    # one append and one compact serve both index kinds: s18's two
+    # appends sum, and s42's `compact_if_accreted` reaches the same
+    # wrapped `compact_index` (one wrapper per call path, so nothing
+    # double-counts)
+    _staged(AI, "append_index", "append")
     _staged(AI, "compact_index", "compact")
     _staged(SIM, "kmeans_centroids", "fit")
     _staged(WR, "publish_parquet_atomic", "publish")

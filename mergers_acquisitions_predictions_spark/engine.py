@@ -372,32 +372,25 @@ class Engine:
         flow through ``**kw``: ``residual=True`` (round 12, §7s —
         opt-in, structured corpora only) and ``codebooks=`` (learned
         books, e.g. `pq_kmeans_residual_codebooks`)."""
-        from .operators.ann_index import build_ivfpq_index, build_ivfsq_index
+        from .operators.ann_index import index_builder
 
-        if kind == "ivfpq":
-            build_ivfpq_index(corpus, path, **kw)
-        elif kind == "ivfsq":
-            build_ivfsq_index(corpus, path, **kw)
-        else:
-            raise ValueError(f"unknown index kind {kind!r}")
+        index_builder(kind)(corpus, path, **kw)
 
     def search_ann_index(
-        self, path: str, queries: DataFrame, k: int = 5, kind: str = "ivfsq", **kw
+        self, path: str, queries: DataFrame, k: int = 5, **kw
     ) -> DataFrame:
-        """Top-k from a persisted ANN index (``kind`` must match the
-        build — the geometry is kind-guarded); reads only the probed
-        cells' partitions. Bit-identical to the matching in-memory
-        path. Pass ``allowed=`` (a frame of permitted candidate ids)
-        for filtered search — the vector-DB metadata predicate,
-        applied pre-ranking as a semi join on the pruned scan — and
-        ``rerank=``/``vectors=`` for the exact-rescore serve."""
-        from .operators.ann_index import search_ivfpq_index, search_ivfsq_index
+        """Top-k from a persisted ANN index of either kind — the kind
+        its ``_meta`` records picks the codec, so the caller never
+        names it (SQ8 rows carry ``sq_sim``, PQ rows ``adc_dist``);
+        reads only the probed cells' partitions. Bit-identical to the
+        matching in-memory path. Pass ``allowed=`` (a frame of
+        permitted candidate ids) for filtered search — the vector-DB
+        metadata predicate, applied pre-ranking as a semi join on the
+        pruned scan — and ``rerank=``/``vectors=`` for the
+        exact-rescore serve (`operators/ann_index.search_index`)."""
+        from .operators.ann_index import search_index
 
-        if kind == "ivfpq":
-            return search_ivfpq_index(self.spark, path, queries, k, **kw)
-        if kind == "ivfsq":
-            return search_ivfsq_index(self.spark, path, queries, k, **kw)
-        raise ValueError(f"unknown index kind {kind!r}")
+        return search_index(self.spark, path, queries, k, **kw)
 
     def maxsim_rerank(
         self, shortlist: DataFrame, queries: DataFrame, vectors: DataFrame, **kw
@@ -636,9 +629,9 @@ class Engine:
         codes (per-cell clustered rewrite, staged + rename-swapped);
         layout-only — search results are bit-identical. Returns
         (files_before, files_after)."""
-        from .operators.ann_index import compact_ivfsq_index
+        from .operators.ann_index import compact_index
 
-        return compact_ivfsq_index(self.spark, path)
+        return compact_index(self.spark, path)
 
     def index_recall_probe(
         self, path: str, queries: DataFrame, vectors: DataFrame, **kw

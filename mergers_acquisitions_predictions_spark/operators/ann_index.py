@@ -1,22 +1,43 @@
-"""Persisted ANN index artifacts — the deployment shape the SCALE.md
+"""Persisted IVF index artifacts — the deployment shape the SCALE.md
 §7i measurement argues for: build ONCE (assignment + quantization are
 the n·cells cost), persist the coded corpus PARTITIONED BY CELL, and
 serve every later query batch as a partition-pruned scan + equi-join.
 
+ONE LIFECYCLE, TWO CODECS. Build, append, serve and compact are each
+written once; everything that differs by index kind lives in a small
+`_Codec` record:
+
+    SQ8  "ivfsq"   one byte per DIMENSION against per-dimension
+                   (min, range) stats; codes column ``sq``; the
+                   query side carries its unit vector ``qu``; pairs
+                   score as the dequantized dot ``sq_sim`` (desc);
+                   exact rerank = unit-dot cosine
+    PQ   "ivfpq"   one byte per SUBSPACE against per-subspace
+                   codebooks, over the unit vector or (``residual``)
+                   its offset from the cell's unit centroid; codes
+                   column ``pq``; the query side carries its ADC
+                   table ``dtab``; pairs score as the quantized
+                   squared L2 ``adc_dist`` (asc); exact rerank = raw
+                   dot over the product of norms
+
+Every generation's ``_meta`` records its ``"kind"``, so
+`search_index`, `append_index` and `compact_index` take the codec
+from the index itself — no caller names the kind after the build. The
+two builds keep their own entry points (`build_ivfsq_index`,
+`build_ivfpq_index`: their fit arguments differ) and share one
+assign → pre-encode → cell shuffle → encode → publish tail;
+`index_builder` maps a kind to its build.
+
 Layout on disk (any Hadoop-compatible filesystem):
 
     <path>/codes/       parquet, partitionBy(cell_id):
-                        (candidate_id, sq: array<int>) for the
-                        IVF-SQ8 kind, (candidate_id, pq: array<int>)
-                        for IVF-PQ (same layout and commit protocol;
-                        the geometry JSON differs by "kind" and each
-                        reader kind-guards it) — a FRESH build's
-                        generation-0 codes directory
+                        (candidate_id, <codes column>) — a FRESH
+                        build's generation-0 codes directory
     <path>/codes_gN/    later generations, written by compaction and
                         by REBUILDS at a live path
     <gen>/_meta         EVERY generation (``codes`` included) carries
-                        its own one-line JSON geometry: quantizer
-                        stats, centroid table, config (the
+                        its own one-line JSON geometry: kind,
+                        quantizer, centroid table, config (the
                         driver-sized artifacts the operators otherwise
                         collect per invocation). The leading underscore
                         hides it from the parquet scan, so a generation
@@ -61,25 +82,52 @@ PartitionFilter — so the scan reads ONLY the probed cells' files,
 never the full index. That turns search cost from O(index) to
 O(probed cells), which is the entire reason an IVF index exists.
 The pruning is test-asserted from the physical plan
-(tests/test_ann_index.py).
+(tests/test_ann_index.py, tests/test_pq_index.py).
 
-Search results are BIT-IDENTICAL to the in-memory
-`sq.ivfsq_topk` path (asserted) — same stats, same codes, same fold
-orders; only the storage changes.
+Search results are BIT-IDENTICAL to the in-memory `sq.ivfsq_topk` /
+`pq.ivfpq_topk` paths (asserted) — same geometry, same codes, same
+fold orders; only the storage changes.
 """
 
 from __future__ import annotations
 
 import functools
 import json
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from ..functions.vectors import dot, l2_norm
+from .pq import (
+    adc_sum,
+    pq_adc_table,
+    pq_anchor_codebooks,
+    pq_encode,
+    pq_residual_anchor_codebooks,
+    residual_cent_df,
+    residual_expr,
+)
+from .similarity import (
+    auto_cells,
+    brute_force_topk,
+    collect_centroid_rows,
+    ivf_assign_blas,
+    ivf_assign_literal,
+    ivf_centroids,
+    topk_recall,
+)
+from .sq import _unit, sq_encode, sq_score, sq_stats
+from .util import hof_bind, repartition_for_compute
 
 _CURRENT = "CURRENT"
 _GEN_PREFIX = "codes_g"
 _META_FILE = "_meta"
+
+#: bound on the ``score_blas`` serve's driver collect of (query,
+#: probed cell) rows — queries × n_probe
+MAX_BLAS_PROBE_ROWS = 100_000
 
 
 def _with_extra_meta(geometry: dict, extra_meta: dict | None) -> dict:
@@ -214,6 +262,246 @@ def _read_meta_text(spark: SparkSession, path: str, name: str) -> str:
     return _meta_text(path, name, *st)
 
 
+class _Codec(NamedTuple):
+    """What differs between the index kinds — nothing else does.
+
+    ``geometry`` parses the kind's quantizer from a ``_meta`` dict
+    (SQ8: ``(mns, rngs)``; PQ: ``(codebooks, residual)``); the other
+    callables take that tuple as ``g``. ``pre_encode(assigned, g,
+    cent_rows)`` maps an `ivf_assign_literal`-shaped frame to
+    ``(frame, column)``: the vector both the corpus and the query side
+    derive from (the unit vector, or the PQ residual to the persisted
+    unit centroid, whose broadcast join the frame then carries).
+    ``encode`` turns it into the ``codes_col`` array, ``query`` into
+    the ``query_col`` the probe join ships; ``score`` is the per-pair
+    expression over a joined (codes, query) row, ranked as
+    ``score_col`` in ``descending`` order. ``exact(q, queries, id_col,
+    vec_col)`` gives the rerank's query frame and its exact cosine
+    against the candidate vector ``__cvec`` — each kind keeps the
+    spelling its oracle replays."""
+
+    kind: str
+    geometry: Callable[[dict], tuple]
+    pre_encode: Callable[[DataFrame, tuple, list], tuple]
+    encode: Callable[[Column, tuple], Column]
+    codes_col: str
+    query: Callable[[Column, tuple], Column]
+    query_col: str
+    score: Callable[[tuple], Column]
+    score_col: str
+    descending: bool
+    exact: Callable[[DataFrame, DataFrame, str, str], tuple]
+
+
+def _unit_pre(assigned: DataFrame, g: tuple, cent_rows: list) -> tuple:
+    return assigned, _unit(F.col("__vec"), F.col("__norm"))
+
+
+def _pq_pre(assigned: DataFrame, residual: bool, cent_rows: list) -> tuple:
+    if not residual:
+        return _unit_pre(assigned, (), cent_rows)
+    # residual geometry (SCALE.md §7s): x_unit − c_unit(cell(x)) against
+    # the PERSISTED centroids; on the query side the cell equi-join then
+    # pairs each candidate with its own cell's table (IVF-ADC)
+    cents = F.broadcast(residual_cent_df(assigned.sparkSession, cent_rows))
+    return (
+        assigned.join(cents, "cell_id"),
+        residual_expr(F.col("__vec"), F.col("__norm"), F.col("__cu")),
+    )
+
+
+def _sq_exact(q: DataFrame, queries: DataFrame, id_col: str, vec_col: str) -> tuple:
+    # q carries one row per probed cell — the rerank needs one unit
+    # vector per query. The candidate norm is hof_bind-bound so it
+    # evaluates once per survivor.
+    qv = q.select("query_id", "qu").dropDuplicates(["query_id"])
+    return qv, hof_bind(
+        l2_norm(F.col("__cvec")),
+        lambda n: dot(F.col("qu"), _unit(F.col("__cvec"), n)),
+    )
+
+
+def _pq_exact(q: DataFrame, queries: DataFrame, id_col: str, vec_col: str) -> tuple:
+    # dot over the norm product on RAW vectors — `pq.ivfpq_topk`'s
+    # rescore, which the PQ oracle's rescore block replays
+    qv = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        l2_norm(F.col(vec_col)).alias("q_norm"),
+    )
+    return qv, dot(F.col("q_vec"), F.col("__cvec")) / (
+        F.col("q_norm") * l2_norm(F.col("__cvec"))
+    )
+
+
+SQ8 = _Codec(
+    kind="ivfsq",
+    geometry=lambda meta: (json.loads(meta["mns"]), json.loads(meta["rngs"])),
+    pre_encode=_unit_pre,
+    encode=lambda u, g: sq_encode(u, *g),
+    codes_col="sq",
+    query=lambda u, g: u,
+    query_col="qu",
+    score=lambda g: sq_score(F.col("qu"), F.col("sq"), *g),
+    score_col="sq_sim",
+    descending=True,
+    exact=_sq_exact,
+)
+
+PQ = _Codec(
+    kind="ivfpq",
+    geometry=lambda meta: (
+        [
+            [[float(x) for x in code] for code in book]
+            for book in json.loads(meta["codebooks"])
+        ],
+        bool(meta.get("residual", 0)),
+    ),
+    pre_encode=lambda assigned, g, cent_rows: _pq_pre(assigned, g[1], cent_rows),
+    encode=lambda u, g: pq_encode(u, g[0]),
+    codes_col="pq",
+    query=lambda u, g: hof_bind(u, lambda v: pq_adc_table(v, g[0])),
+    query_col="dtab",
+    score=lambda g: adc_sum(len(g[0])),
+    score_col="adc_dist",
+    descending=False,
+    exact=_pq_exact,
+)
+
+
+def _by_kind(table: dict, kind, where: str = ""):
+    """``table[kind]``, or a ValueError naming the unknown kind."""
+    if kind not in table:
+        raise ValueError(
+            f"unknown index kind {kind!r}{where} — expected one of "
+            f"{sorted(table)}"
+        )
+    return table[kind]
+
+
+class _Live(NamedTuple):
+    """One resolution of an index: the live generation and the codec,
+    geometry, centroid rows and dimension its ``_meta`` records."""
+
+    name: str
+    codec: _Codec
+    geo: tuple
+    cent_rows: list
+    dim: int
+
+
+def _live(spark: SparkSession, path: str) -> _Live:
+    """Resolve ``CURRENT`` ONCE and parse that generation's ``_meta``:
+    the caller reads codes from ``name`` and scores or encodes with
+    the geometry of the same generation, so a pointer flip between two
+    reads can never pair one generation's codes with another's
+    quantizer, and a STALE name reads its own geometry."""
+    name = _resolve_codes_name(spark, path)
+    meta = json.loads(_read_meta_text(spark, path, name))
+    codec = _by_kind(
+        {c.kind: c for c in (SQ8, PQ)}, meta.get("kind"), f" at {path} ({name})"
+    )
+    cent_rows = [
+        (int(c), [float(x) for x in v], float(n))
+        for c, v, n in json.loads(meta["centroids"])
+    ]
+    return _Live(name, codec, codec.geometry(meta), cent_rows, int(meta["dim"]))
+
+
+def _encoded(codec: _Codec, g: tuple, cent_rows: list, assigned: DataFrame) -> DataFrame:
+    """(candidate_id, cell_id, <codes column>) for an assigned frame —
+    the encode build and append share.
+
+    TWO-STEP ENCODE AROUND THE CELL SHUFFLE (round 9, found by
+    thread-dumping a wedged 1M build): higher-order functions run on
+    the INTERPRETED expression path (no whole-stage codegen), where a
+    collapsed projection re-evaluates its inputs per lambda element —
+    `sq_encode(_unit(vec, norm))` re-derives the full unit TRANSFORM
+    for every one of the d code dimensions (d² work), and when the
+    norm's fold expression is also inlined (nothing between the
+    projections to stop CollapseProject — the BLAS assignment path,
+    which lacks the fold path's explode/Generate barrier) the l2 fold
+    re-evaluates per divide: d³ per row, a >100× blowup at 1M×64d.
+    Computing the pre-encode vector BEFORE the cell shuffle and
+    encoding AFTER it makes the shuffle the materialization barrier:
+    post-shuffle, ``__unit`` is a concrete attribute and encode is d
+    array reads per row (M·d for PQ's bound slices). Values and codes
+    are bit-identical — only evaluation count changes. The shuffle
+    also clusters by cell: files-per-cell bounded by the repartition
+    width (one file per touched cell for an append shard) and
+    contiguous row groups for probed-cell reads."""
+    frame, pre = codec.pre_encode(assigned, g, cent_rows)
+    return (
+        frame.select("candidate_id", "cell_id", pre.alias("__unit"))
+        .repartition("cell_id")
+        .select(
+            "candidate_id",
+            "cell_id",
+            codec.encode(F.col("__unit"), g).alias(codec.codes_col),
+        )
+    )
+
+
+def _fit_centroids(
+    corpus: DataFrame, n_cells: int | None, ck: tuple | None, id_col: str, vec_col: str
+) -> tuple[int, list]:
+    """(n_cells, centroid rows) of the deterministic lowest-id anchors;
+    ``n_cells=None`` sizes √n (`similarity.auto_cells`)."""
+    if n_cells is None:
+        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
+    return n_cells, _memo(
+        ck,
+        ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
+        lambda: collect_centroid_rows(ivf_centroids(corpus, n_cells, id_col, vec_col)),
+    )
+
+
+def _assigned(
+    corpus: DataFrame, cent_rows: list, assign_blas: bool, id_col: str, vec_col: str
+) -> DataFrame:
+    """The corpus assigned to its cell. ``assign_blas`` routes the
+    n×cells assignment — THE dominant build term at deployment scale
+    (SCALE.md §7o-r9 addendum) — through one numpy matmul per Arrow
+    batch instead of codegen'd folds. Opt-in: codes and scoring stay
+    bit-identical (the BLAS path only picks the cell; __vec passes
+    through and __norm is re-derived JVM-side), but a boundary-tie
+    cell choice is not bit-guaranteed, which the registered oracle
+    rows require — see ivf_assign_blas' parity-scope docstring."""
+    assign = ivf_assign_blas if assign_blas else ivf_assign_literal
+    return assign(
+        repartition_for_compute(corpus), cent_rows, "candidate_id", 1, id_col, vec_col
+    )
+
+
+def _publish_build(
+    codec: _Codec,
+    g: tuple,
+    assigned: DataFrame,
+    path: str,
+    n_cells: int,
+    cent_rows: list,
+    fields: dict,
+    extra_meta: dict | None,
+) -> None:
+    """The builds' shared tail: encode the assigned corpus, write the
+    geometry JSON (kind, cell count, the kind's ``fields``, centroid
+    table, caller ``extra_meta``) and publish (`_publish_codes`)."""
+    meta = {
+        "kind": codec.kind,
+        "n_cells": n_cells,
+        **fields,
+        "centroids": json.dumps(
+            [[int(c), list(map(float, v)), float(n)] for c, v, n in cent_rows]
+        ),
+    }
+    _publish_codes(
+        assigned.sparkSession,
+        path,
+        _encoded(codec, g, cent_rows, assigned),
+        json.dumps(_with_extra_meta(meta, extra_meta)),
+    )
+
+
 def build_ivfsq_index(
     corpus: DataFrame,
     path: str,
@@ -239,20 +527,19 @@ def build_ivfsq_index(
     measures the 5.7× scan win it buys at 4k queries.
 
     ``centroids``: optional caller-supplied centroid table
-    (cell_id, cent_vec, cent_norm) — the round-8 completion of the
-    sampled-fit adoption (SCALE.md §7o): a deployment fits
-    `similarity.kmeans_centroids(fit_sample_per_cell=50)` once and
-    builds the PERSISTED index from the learned cells (previously the
-    learned fit was only consumable by the in-memory `ivf_topk`).
-    The table is materialized into the ``_meta`` geometry like the default
-    anchors, so search/append/compact need no change — frozen
-    geometry flows from whatever the build persisted. Default None
+    (cell_id, cent_vec, cent_norm) — e.g. a
+    `similarity.kmeans_centroids(fit_sample_per_cell=50)` fit
+    (SCALE.md §7o). The table defines the cell count and is
+    materialized into the ``_meta`` geometry like the default
+    anchors, so search/append/compact need no change. Default None
     keeps the deterministic lowest-id anchors (oracle-replayable; all
     registered queries).
 
     ``corpus_cache_key``: opt-in session memoization of the learned
     quantizer stats / centroid rows / corpus count (the usual
     index-artifact contract — the key must identify corpus content).
+
+    ``assign_blas``: see `_assigned`.
 
     ``extra_meta``: optional caller-owned JSON-safe fields merged into
     the ``_meta`` geometry (ADVICE r11: `maxsim.build_token_index`
@@ -261,93 +548,130 @@ def build_ivfsq_index(
     ids with the wrong divisor). Keys colliding with the geometry's
     own raise ValueError (enforced — ADVICE r12); ``None`` adds
     nothing."""
-    from .similarity import auto_cells, collect_centroid_rows, ivf_centroids
-    from .sq import _unit, sq_encode, sq_stats
-    from .util import repartition_for_compute
-
     ck = corpus_cache_key
-    if n_cells is None:
-        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
     mns, rngs = _memo(
         ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col)
     )
     if centroids is not None:
         # caller-fitted table: driver-sized collect, no memo (the key
-        # cannot see the table's provenance; the collect is n_cells
-        # rows either way). The table defines the cell count.
+        # cannot see the table's provenance)
         cent_rows = collect_centroid_rows(centroids)
         n_cells = len(cent_rows)
     else:
-        cent_rows = _memo(
+        n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
+    _publish_build(
+        SQ8,
+        (mns, rngs),
+        _assigned(corpus, cent_rows, assign_blas, id_col, vec_col),
+        path,
+        n_cells,
+        cent_rows,
+        {"dim": len(mns), "mns": json.dumps(mns), "rngs": json.dumps(rngs)},
+        extra_meta,
+    )
+
+
+def build_ivfpq_index(
+    corpus: DataFrame,
+    path: str,
+    n_cells: int | None = 16,
+    n_subspaces: int = 8,
+    n_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    corpus_cache_key: tuple | None = None,
+    codebooks: list[list[list[float]]] | None = None,
+    assign_blas: bool = False,
+    extra_meta: dict | None = None,
+    residual: bool = False,
+) -> None:
+    """Build + persist an IVF-PQ index — the COMPRESSED persisted kind:
+    the SQ8 codes are ``dim`` bytes/vector, the PQ codes
+    ``n_subspaces`` bytes (8 here vs 64 — at 10⁹ vectors the
+    difference is whether the hot index is 64 GB or 8 GB, i.e.
+    whether one executor's page cache holds a shard of it). Same
+    layout, commit and FRESH-vs-REBUILD decision as the SQ8 build
+    (the shared `_publish_build` tail).
+
+    Geometry = IVF centroids + PQ codebooks. ``codebooks=None`` keeps
+    the deterministic lowest-id anchor books (`pq_anchor_codebooks` —
+    oracle-replayable, the registered-row configuration); a deployment
+    passes `pq_kmeans_codebooks`' learned books exactly like the SQ8
+    build's ``centroids`` hook. ``assign_blas``, ``corpus_cache_key``
+    and ``extra_meta``: `build_ivfsq_index`'s contracts.
+
+    ``residual=True`` (SCALE.md §7s, measured first): the fine stage
+    encodes x_unit − c_unit(cell(x)) instead of x_unit — the classic
+    IVF-ADC refinement. The flag is RECORDED in the geometry (serving
+    a residual index with raw ADC tables would be silently wrong), so
+    the serve and appends follow it and compaction carries it
+    forward. Opt-in by measurement: +0.16 recall@5 at equal bytes on
+    the structured corpus, a LOSS on the unstructured one (§7s —
+    decide per corpus, e.g. via a held-out recall probe). Anchor
+    books under the flag come from the lowest-id RESIDUALS; caller
+    ``codebooks`` must be residual-fitted."""
+    ck = corpus_cache_key
+    n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
+    assigned = _assigned(corpus, cent_rows, assign_blas, id_col, vec_col)
+    if codebooks is not None:
+        cbs = codebooks
+    elif residual:
+
+        def resid_books():
+            frame, resid = _pq_pre(assigned, True, cent_rows)
+            return pq_residual_anchor_codebooks(
+                frame.select("candidate_id", resid.alias("__resid")),
+                n_subspaces,
+                n_codes,
+            )
+
+        cbs = _memo(
             ck,
-            ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
-            lambda: collect_centroid_rows(
-                ivf_centroids(corpus, n_cells, id_col, vec_col)
+            ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
+            resid_books,
+        )
+    else:
+        cbs = _memo(
+            ck,
+            ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
+            lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
+        )
+    dim = len(cbs) * len(cbs[0][0])
+    if codebooks is not None:
+        # caller books define the geometry; a mismatched corpus width
+        # would mis-encode silently through F.slice
+        bad = corpus.filter(F.size(F.col(vec_col)) != dim).limit(1).count()
+        if bad:
+            raise ValueError(
+                f"build_ivfpq_index: corpus vectors must have dim={dim} "
+                f"(= n_subspaces × sub_dim of the supplied codebooks)"
+            )
+    _publish_build(
+        PQ,
+        (cbs, residual),
+        assigned,
+        path,
+        n_cells,
+        cent_rows,
+        {
+            "dim": dim,
+            "n_subspaces": len(cbs),
+            "n_codes": len(cbs[0]),
+            "codebooks": json.dumps(
+                [[[float(x) for x in code] for code in book] for book in cbs]
             ),
-        )
-
-    from .similarity import ivf_assign_blas, ivf_assign_literal
-
-    # ``assign_blas``: route the n×cells assignment — THE dominant
-    # build term at deployment scale (SCALE.md §7o-r9 addendum) —
-    # through one numpy matmul per Arrow batch instead of codegen'd
-    # folds. Opt-in: codes and scoring stay bit-identical (the BLAS
-    # path only picks the cell; __vec passes through and __norm is
-    # re-derived JVM-side), but a boundary-tie cell choice is not
-    # bit-guaranteed, which the registered oracle rows require — see
-    # ivf_assign_blas' parity-scope docstring.
-    assign = ivf_assign_blas if assign_blas else ivf_assign_literal
-    # TWO-STEP ENCODE AROUND THE CELL SHUFFLE (round 9, found by
-    # thread-dumping a wedged 1M build): higher-order functions run on
-    # the INTERPRETED expression path (no whole-stage codegen), where
-    # a collapsed projection re-evaluates its inputs per lambda
-    # element — `sq_encode(_unit(vec, norm))` re-derives the full unit
-    # TRANSFORM for every one of the d code dimensions (d² work), and
-    # when the norm's fold expression is also inlined (nothing between
-    # the projections to stop CollapseProject — the BLAS assignment
-    # path, which lacks the fold path's explode/Generate barrier) the
-    # l2 fold re-evaluates per divide: d³ per row, a >100× blowup at
-    # 1M×64d. Computing the unit vector BEFORE the cell shuffle and
-    # encoding AFTER it makes the shuffle the materialization barrier:
-    # post-shuffle, `__unit` is a concrete attribute and encode is d
-    # array reads per row. Unit values, codes, and results are
-    # bit-identical — only evaluation count changes. The shuffle
-    # itself was already here (clustering by cell bounds
-    # files-per-cell by the repartition width and gives probed-cell
-    # reads contiguous row groups — measured 9.1 s → ~5 s at sf0.1).
-    coded = (
-        assign(
-            repartition_for_compute(corpus), cent_rows, "candidate_id", 1, id_col, vec_col
-        )
-        .select(
-            "candidate_id",
-            "cell_id",
-            _unit(F.col("__vec"), F.col("__norm")).alias("__unit"),
-        )
-        .repartition("cell_id")
-        .select(
-            "candidate_id",
-            "cell_id",
-            sq_encode(F.col("__unit"), mns, rngs).alias("sq"),
-        )
+            **({"residual": 1} if residual else {}),
+        },
+        extra_meta,
     )
-    spark = corpus.sparkSession
-    meta_text = json.dumps(
-        _with_extra_meta(
-            {
-                "kind": "ivfsq",
-                "dim": len(mns),
-                "n_cells": n_cells,
-                "mns": json.dumps(mns),
-                "rngs": json.dumps(rngs),
-                "centroids": json.dumps(
-                    [[int(c), list(map(float, v)), float(n)] for c, v, n in cent_rows]
-                ),
-            },
-            extra_meta,
-        )
-    )
-    _publish_codes(spark, path, coded, meta_text)
+
+
+def index_builder(kind: str) -> Callable[..., None]:
+    """The build function for index ``kind`` — the one ``{kind:
+    build}`` table behind `Engine.build_ann_index`,
+    `maxsim.build_token_index` and `rebuild_if_drifted`. Looked up at
+    call time, so a wrapped module attribute is honoured."""
+    return _by_kind({"ivfsq": build_ivfsq_index, "ivfpq": build_ivfpq_index}, kind)
 
 
 def _publish_codes(
@@ -356,11 +680,10 @@ def _publish_codes(
     coded: DataFrame,
     meta_text: str,
 ) -> None:
-    """FRESH-vs-REBUILD publish decision shared by every index KIND
-    (IVF-SQ8 and IVF-PQ builds — round 10: the commit protocol is
-    quantizer-agnostic, only the coded columns and the geometry JSON
-    differ). ``coded`` must already be clustered by cell (both builds
-    shuffle upstream of the encode).
+    """FRESH-vs-REBUILD publish decision of `_publish_build` (the
+    commit protocol is quantizer-agnostic: only the coded column and
+    the geometry JSON differ by kind). ``coded`` must already be
+    clustered by cell (`_encoded` shuffles upstream of the encode).
 
     FRESH path: nothing resolvable exists, so no reader can be
     mid-scan — write generation-0 in place, no staging rename; the
@@ -456,40 +779,6 @@ def _commit_generation(
     return new_name
 
 
-def _read_meta(spark: SparkSession, path: str, name: str, kind: str):
-    """(parsed ``_meta``, centroid rows) of generation ``name``,
-    KIND-GUARDED: serving one kind's artifact through the other kind's
-    reader would KeyError deep in a stats parse at best — fail with
-    the actual mistake instead. Metas without "kind" are SQ8."""
-    meta = json.loads(_read_meta_text(spark, path, name))
-    found = meta.get("kind", "ivfsq")
-    if found != kind:
-        raise ValueError(
-            f"index at {path} ({name}) is kind={found!r}, not {kind} — "
-            "serve it with the matching search function"
-        )
-    cent_rows = [
-        (int(c), [float(x) for x in v], float(n))
-        for c, v, n in json.loads(meta["centroids"])
-    ]
-    return meta, cent_rows
-
-
-def _read_index_meta(spark: SparkSession, path: str, name: str):
-    """(mns, rngs, cent_rows, dim, n_cells) for generation ``name`` of
-    the index at ``path``, parsed from that generation's ``_meta``.
-    Taking the RESOLVED name pins geometry and codes to one
-    resolution: callers resolve once and read both from it, so a
-    pointer flip between two reads can never pair old codes with new
-    stats, and a caller holding a STALE generation name reads that
-    generation's own geometry."""
-    meta, cent_rows = _read_meta(spark, path, name, "ivfsq")
-    mns = json.loads(meta["mns"])
-    rngs = json.loads(meta["rngs"])
-    dim = int(meta["dim"]) if "dim" in meta else len(mns)
-    return mns, rngs, cent_rows, dim, int(meta["n_cells"])
-
-
 def _ivfsq_scored_blas(
     codes: DataFrame,
     q_rows: list,
@@ -497,7 +786,7 @@ def _ivfsq_scored_blas(
     rngs: list[float],
     cut: int,
 ) -> DataFrame:
-    """`search_ivfsq_index`'s BLAS scoring leg: (query_id,
+    """`search_index`'s SQ8 ``score_blas`` leg: (query_id,
     candidate_id, sq_sim) rows holding, per partition, the top-``cut``
     candidates per query under the final comparator (6-dp-rounded
     dequantized dot desc, candidate id asc) — the driver-side window
@@ -593,7 +882,7 @@ def _ivfsq_scored_blas(
     )
 
 
-def search_ivfsq_index(
+def search_index(
     spark: SparkSession,
     path: str,
     queries: DataFrame,
@@ -606,17 +895,20 @@ def search_ivfsq_index(
     vectors: DataFrame | None = None,
     score_blas: bool = False,
 ) -> DataFrame:
-    """Serve top-k from a persisted IVF-SQ8 index. The live codes
-    directory is resolved through the ``CURRENT`` pointer (see the
-    module docstring — one small read per serve),
-    the query batch is assigned to its ``n_probe`` cells with the
-    PERSISTED centroids, and the probed cell ids are collected
-    (query-batch-sized — tiny by the ANN contract) and pushed into
-    the codes scan as an `isin` partition filter, so only those
-    cells' files are read. Scoring,
-    rounding, and ranking are the exact expressions of
-    `sq.ivfsq_topk` — results are bit-identical to the in-memory
-    path.
+    """Serve top-k from a persisted index of either kind. The live
+    generation is resolved ONCE (codes + geometry as one unit) and
+    its ``_meta`` names the codec; the query batch is assigned to its
+    ``n_probe`` cells with the PERSISTED centroids and mapped to the
+    codec's query column (SQ8: the unit vector; PQ: the ADC table,
+    computed once per query — per probed cell under residual
+    geometry), and the probed cell ids are collected (query-batch-
+    sized — tiny by the ANN contract) and pushed into the codes scan
+    as an `isin` partition filter, so only those cells' files are
+    read. Scoring, rounding and ranking are the exact expressions of
+    the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk` — results are
+    bit-identical to them. Returns (query_id, candidate_id, sq_sim,
+    rank) from an SQ8 index, (query_id, candidate_id, adc_dist, rank)
+    from a PQ index; an unknown recorded kind raises ValueError.
 
     ``allowed``: optional FILTERED search (the vector-DB metadata
     predicate: "top-k among candidates matching WHERE ..."): a frame
@@ -624,70 +916,83 @@ def search_ivfsq_index(
     restriction is applied as a left-semi join on the pruned codes
     scan BEFORE scoring — pre-filter semantics, so the returned ranks
     are dense over matching candidates only (never post-filtered
-    holes), and non-matching vectors in probed cells are never
-    dequantized. Partition pruning is unchanged: the semi join runs
-    over only the probed cells' files, and AQE broadcasts a
-    dim-table-sized allowed set; a corpus-sized allowed set shuffles
-    just the probed partitions, never the whole index.
+    holes), and non-matching codes in probed cells are never scored.
+    Partition pruning is unchanged: the semi join runs over only the
+    probed cells' files, and AQE broadcasts a dim-table-sized allowed
+    set; a corpus-sized allowed set shuffles just the probed
+    partitions, never the whole index.
 
-    ``rerank`` + ``vectors``: EXACT RE-RANK of an overfetched SQ8
-    shortlist (the `pq.ivfpq_topk(rerank=...)` pattern brought to the
-    persisted index — SCALE.md §7o-r8 remedy (b)): on clone-saturated
-    corpora the quantized dot cannot separate near-duplicate cohorts
-    (measured: id-overlap recall 0.24 at 1M stacked for ANY centroid
-    set), so the top-``rerank`` SQ8 candidates per query join back to
-    ``vectors`` (a frame carrying ``id_col``/``vec_col`` — normally
-    the corpus the index was built from) and the final top-k ranks on
-    the exact rounded cosine with candidate-id tiebreak. Cost: one
-    shortlist-sized equi-join (queries × rerank rows) + the exact
-    fold over those pairs — never corpus-shaped; partition pruning on
-    the codes scan is untouched. The returned schema gains the exact
-    score as ``cos_sim`` in place of ``sq_sim``.
+    ``rerank`` + ``vectors``: EXACT RE-RANK of an overfetched
+    quantized shortlist (SCALE.md §7o-r8 remedy (b)): on
+    clone-saturated corpora the quantized score cannot separate
+    near-duplicate cohorts (measured: SQ8 id-overlap recall 0.24 at
+    1M stacked for ANY centroid set), so the top-``rerank``
+    candidates per query join back to ``vectors`` (a frame carrying
+    ``id_col``/``vec_col`` — normally the corpus the index was built
+    from) and the final top-k ranks on the exact rounded cosine with
+    candidate-id tiebreak — each kind's cosine spelled as its
+    in-memory path and oracle spell it. Raw vectors join through the
+    BROADCAST shortlist and only survivors are normalized (round 10:
+    normalizing the whole vectors frame first was corpus-shaped work,
+    +20.9 s on a 10.0 s 1M serve), so the cost is one
+    shortlist-sized join; partition pruning on the codes scan is
+    untouched. The returned schema carries the exact score as
+    ``cos_sim`` in place of the quantized one.
 
-    ``score_blas`` (round 10 — the `ivf_assign_blas`/`score_blas`
-    lesson applied to THE dominant serve term at batch scale): the
-    probed-pair SQ scoring — dequantize + dot per (candidate, query)
-    pair — runs as one numpy reconstruct+matmul per Arrow batch with
-    per-partition top-k selection, instead of one interpreted JVM
-    fold per pair (measured: the 1M×200-query serve spends most of
-    its 10 s there). Partition pruning, the allowed-set semi join,
-    and the rerank stage are untouched; the query units are collected
-    from the SAME JVM expressions, so only the candidate-side
-    reconstruct-dot accumulation and the float HALF_UP replication
-    differ — the usual opt-in parity scope (boundary roundings not
-    bit-guaranteed; registered oracle rows keep the fold path;
-    equality on the test corpora is asserted in
-    tests/test_ann_index.py)."""
-    from .similarity import ivf_assign_literal
-    from .sq import _unit, sq_score
-
-    # ONE resolution pins this serve's codes AND geometry to the same
-    # generation (round 9): resolving twice — once for meta, once for
-    # the scan — could straddle a rebuild's pointer flip and score one
-    # generation's codes with another's quantizer stats (ADVICE r8).
-    live_name = _resolve_codes_name(spark, path)
-    mns, rngs, cent_rows, _dim, _nc = _read_index_meta(spark, path, live_name)
-
-    q = ivf_assign_literal(
-        queries, cent_rows, "query_id", n_probe, id_col, vec_col
-    ).select(
-        "query_id",
-        "cell_id",
-        _unit(F.col("__vec"), F.col("__norm")).alias("qu"),
+    ``score_blas`` (SQ8 only; ValueError on PQ): the probed-pair
+    scoring — dequantize + dot per (candidate, query) pair — runs as
+    one numpy reconstruct+matmul per Arrow batch with per-partition
+    top-k selection instead of one interpreted JVM fold per pair
+    (measured: the 1M×200-query serve spends most of its 10 s
+    there). The query units are collected — at most
+    `MAX_BLAS_PROBE_ROWS` (query, probed cell) rows, else ValueError
+    — from the SAME JVM expressions, so only the candidate-side
+    accumulation and the float HALF_UP replication differ: the usual
+    opt-in parity scope (boundary roundings not bit-guaranteed;
+    registered oracle rows keep the fold path; equality on the test
+    corpora is asserted in tests/test_ann_index.py)."""
+    if rerank is not None:
+        if vectors is None:
+            raise ValueError(
+                "search_index(rerank=...) needs `vectors` — a frame "
+                f"with ({id_col}, {vec_col}) to score the shortlist exactly "
+                "(the index stores codes, not vectors)"
+            )
+        if rerank < k:
+            raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
+    ix = _live(spark, path)
+    codec, g = ix.codec, ix.geo
+    if score_blas and codec is not SQ8:
+        raise ValueError(
+            f"score_blas=True serves SQ8 indexes only; the index at {path} "
+            f"is kind={codec.kind!r}"
+        )
+    frame, pre = codec.pre_encode(
+        ivf_assign_literal(queries, ix.cent_rows, "query_id", n_probe, id_col, vec_col),
+        g,
+        ix.cent_rows,
+    )
+    q = frame.select(
+        "query_id", "cell_id", codec.query(pre, g).alias(codec.query_col)
     )
     if score_blas:
-        # one collect serves both the probe set and the per-cell query
-        # matrices (query-batch × probes rows — tiny by contract); the
-        # qu values are the JVM fold's own, so only the candidate-side
-        # accumulation differs from the fold path
-        q_rows = q.collect()
+        # one bounded collect serves both the probe set and the
+        # per-cell query matrices
+        q_rows = q.limit(MAX_BLAS_PROBE_ROWS + 1).collect()
+        if len(q_rows) > MAX_BLAS_PROBE_ROWS:
+            raise ValueError(
+                f"search_index(score_blas=True): the query batch exceeds "
+                f"MAX_BLAS_PROBE_ROWS={MAX_BLAS_PROBE_ROWS} (query, probed "
+                "cell) rows — they are collected to the driver; chunk the "
+                "batch or use the fold path"
+            )
         probed = sorted({int(r["cell_id"]) for r in q_rows})
     else:
         probed = sorted(
             {r["cell_id"] for r in q.select("cell_id").distinct().collect()}
         )
 
-    codes = spark.read.parquet(f"{path}/{live_name}").filter(
+    codes = spark.read.parquet(f"{path}/{ix.name}").filter(
         F.col("cell_id").isin([int(c) for c in probed])
     )
     if allowed is not None:
@@ -696,79 +1001,36 @@ def search_ivfsq_index(
             "candidate_id",
             "left_semi",
         )
+    score_col = codec.score_col
     if score_blas:
-        scored = _ivfsq_scored_blas(
-            codes, q_rows, mns, rngs, cut=max(k, rerank or 0)
-        )
+        scored = _ivfsq_scored_blas(codes, q_rows, *g, cut=max(k, rerank or 0))
     else:
         joined = codes.join(F.broadcast(q), "cell_id").filter(
             F.col("query_id") != F.col("candidate_id")
         )
         scored = joined.select(
-            "query_id",
-            "candidate_id",
-            F.round(sq_score(F.col("qu"), F.col("sq"), mns, rngs), 6).alias("sq_sim"),
+            "query_id", "candidate_id", F.round(codec.score(g), 6).alias(score_col)
         )
-    w = W.partitionBy("query_id").orderBy(F.desc("sq_sim"), F.asc("candidate_id"))
+    order = F.desc(score_col) if codec.descending else F.asc(score_col)
+    w = W.partitionBy("query_id").orderBy(order, F.asc("candidate_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
     if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "candidate_id", "sq_sim", "rank")
+        return ranked.filter(F.col("rank") <= k).select(
+            "query_id", "candidate_id", score_col, "rank"
         )
-    if vectors is None:
-        raise ValueError(
-            "search_ivfsq_index(rerank=...) needs `vectors` — a frame "
-            f"with ({id_col}, {vec_col}) to score the shortlist exactly "
-            "(the index stores codes, not vectors)"
-        )
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    from ..functions.vectors import l2_norm
-    from .similarity import dot
-    from .util import hof_bind
-
-    shortlist = (
-        scored.withColumn("__sqrk", F.row_number().over(w))
-        .filter(F.col("__sqrk") <= rerank)
-        .select("query_id", "candidate_id")
+    shortlist = ranked.filter(F.col("rank") <= rerank).select(
+        "query_id", "candidate_id"
     )
-    # q carries one row per probed cell — the shortlist join needs one
-    # unit vector per query
-    qv = q.select("query_id", "qu").dropDuplicates(["query_id"])
-    # Join RAW vectors through the BROADCAST shortlist and unit-
-    # normalize only the survivors (round 10, found by timing the
-    # 1M×200-query serve: the previous shape unit-normalized the
-    # ENTIRE vectors frame before the join — corpus-shaped work in
-    # the "shortlist-sized" stage — and worse, CollapseProject inlined
-    # the norm fold into the unit lambda, d² per corpus row: +20.9 s
-    # on a 10.0 s serve; now +≈1 s). The broadcast makes the corpus
-    # side a map-side probe: non-shortlisted vectors are scanned,
-    # never shuffled, never normalized. Per-pair arithmetic is
-    # unchanged (same unit divide, same fold order — the norm is
-    # hof_bind-bound so it evaluates once per survivor), so results
-    # stay bit-identical and the oracle replay is untouched.
+    qv, cos = codec.exact(q, queries, id_col, vec_col)
     cand = vectors.select(
         F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("__cvec")
     )
     exact = (
         cand.join(F.broadcast(shortlist), "candidate_id")
         .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "candidate_id",
-            F.round(
-                hof_bind(
-                    l2_norm(F.col("__cvec")),
-                    lambda n: dot(F.col("qu"), _unit(F.col("__cvec"), n)),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
     )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("candidate_id")
-    )
+    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
     return (
         exact.withColumn("rank", F.row_number().over(w2).cast("long"))
         .filter(F.col("rank") <= k)
@@ -776,80 +1038,54 @@ def search_ivfsq_index(
     )
 
 
-def append_to_ivfsq_index(
+#: the SQ8-era name, kept because perfbench/workloads.py imports it
+search_ivfsq_index = search_index
+
+
+def append_index(
     new_vectors: DataFrame,
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Append a shard to a persisted IVF-SQ8 index — the nightly-
-    ingest shape (the embedding counterpart of d12's incremental
-    MinHash index): new vectors are assigned and encoded with the
-    index's PERSISTED centroids and quantizer stats (no refit — the
-    production behavior: an index's geometry is frozen between
-    rebuilds, and quantizer drift is handled by periodic full
-    rebuilds, not per-shard refits, so existing codes stay valid and
-    comparable). The write appends into the same cell partitions;
-    searches immediately see the new vectors."""
+    """Append a shard to a persisted index of either kind — the
+    nightly-ingest shape: new vectors are assigned and encoded with
+    the index's PERSISTED centroids and quantizer (no refit — an
+    index's geometry is frozen between rebuilds, and quantizer drift
+    is handled by periodic rebuilds, not per-shard refits, so
+    existing codes stay valid and comparable; for PQ that includes
+    the residual flag). One resolution covers geometry and target
+    directory. A shard whose vector width differs from the recorded
+    ``dim`` fails before any write (encoding it would write NULL or
+    mis-sliced codes into every later serve). The write appends into
+    the same cell partitions, one file per touched cell; searches
+    immediately see the new vectors."""
     spark = new_vectors.sparkSession
-    # One resolution for geometry AND the target directory — the
-    # search-path consistency rule (round 9), applied to the writer.
-    live_name = _resolve_codes_name(spark, path)
-    mns, rngs, cent_rows, dim, _nc = _read_index_meta(spark, path, live_name)
-
-    # Fail FAST on dimensionality mismatch: encoding a wrong-dim
-    # vector would silently write NULL code elements (element_at past
-    # the stats arrays returns NULL), corrupting the index for every
-    # future search. limit(1) short-circuits the probe scan.
-    bad = new_vectors.filter(F.size(F.col(vec_col)) != dim).limit(1).count()
+    ix = _live(spark, path)
+    bad = new_vectors.filter(F.size(F.col(vec_col)) != ix.dim).limit(1).count()
     if bad:
         raise ValueError(
-            f"append_to_ivfsq_index: shard vectors must have dim={dim} "
-            f"to match the persisted quantizer at {path}"
+            f"append_index: shard vectors must have dim={ix.dim} to match "
+            f"the persisted {ix.codec.kind} geometry at {path}"
         )
-
-    from .similarity import ivf_assign_literal
-    from .sq import _unit, sq_encode
-
-    # Two-step encode around a cell shuffle — build's interpreted-HOF
-    # lesson (see build_ivfsq_index): post-shuffle, `__unit` is a
-    # concrete attribute and encode is d array reads per row instead
-    # of d re-evaluations of the unit transform. The shuffle also
-    # bounds the shard's file fan-out to one file per touched cell
-    # instead of (tasks × cells).
-    coded = (
-        ivf_assign_literal(
-            new_vectors, cent_rows, "candidate_id", 1, id_col, vec_col
-        )
-        .select(
-            "candidate_id",
-            "cell_id",
-            _unit(F.col("__vec"), F.col("__norm")).alias("__unit"),
-        )
-        .repartition("cell_id")
-        .select(
-            "candidate_id",
-            "cell_id",
-            sq_encode(F.col("__unit"), mns, rngs).alias("sq"),
-        )
+    assigned = ivf_assign_literal(
+        new_vectors, ix.cent_rows, "candidate_id", 1, id_col, vec_col
     )
-    coded.write.mode("append").partitionBy("cell_id").parquet(
-        f"{path}/{live_name}"
-    )
-    # Same file-listing-staleness guard as build: a session that
-    # already searched this path must not serve a cached listing
-    # missing the new shard's files.
-    spark.catalog.refreshByPath(f"{path}/{live_name}")
+    live = f"{path}/{ix.name}"
+    _encoded(ix.codec, ix.geo, ix.cent_rows, assigned).write.mode(
+        "append"
+    ).partitionBy("cell_id").parquet(live)
+    # a session that already searched this path must not serve a
+    # cached listing missing the new shard's files
+    spark.catalog.refreshByPath(live)
 
 
-def compact_ivfsq_index(
+def compact_index(
     spark: SparkSession, path: str, files_before: int | None = None
 ) -> tuple[int, int]:
-    """Compact a persisted index's codes (BOTH kinds since round 10 —
-    compaction never interprets geometry, it carries the ``_meta``
-    text forward; the name keeps the original SQ8 spelling for its
-    callers) — the maintenance
-    pass the append path (`append_to_ivfsq_index`) makes necessary:
+    """Compact a persisted index's codes (either kind — compaction
+    never interprets geometry, it carries the ``_meta`` text forward)
+    — the maintenance pass `append_index` makes necessary:
     every nightly shard adds one file per touched cell partition, and
     after enough appends the probed-cell scan cost is dominated by
     file-open overhead, not bytes (the same accretion economics as
@@ -903,425 +1139,6 @@ def compact_ivfsq_index(
     return before, _count_files(f"{path}/{new_name}")
 
 
-#: kind-neutral spelling — compaction works on both index kinds
-compact_index = compact_ivfsq_index
-
-
-def append_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """KIND-AGNOSTIC append (round 12, for the streaming ingest sink):
-    sniff the index's kind from its own meta (`_sniff_kind` — never
-    interpret geometry here) and dispatch to the matching append.
-    Frozen-geometry semantics are the kind's own (including the PQ
-    residual flag, which `append_to_ivfpq_index` reads from the same
-    meta)."""
-    if _sniff_kind(new_vectors.sparkSession, path) == "ivfpq":
-        append_to_ivfpq_index(new_vectors, path, id_col=id_col, vec_col=vec_col)
-    else:
-        append_to_ivfsq_index(new_vectors, path, id_col=id_col, vec_col=vec_col)
-
-
-def append_to_ivfpq_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append a shard to a persisted IVF-PQ index — the PQ spelling of
-    `append_to_ivfsq_index` (same frozen-geometry contract: new
-    vectors are assigned and encoded with the PERSISTED centroids and
-    codebooks, no refit; drift is handled by periodic rebuilds). One
-    resolution covers geometry and target directory; dim-mismatch
-    fails fast before any write; the two-step encode around the cell
-    shuffle bounds the shard's file fan-out to one file per touched
-    cell and keeps `pq_encode` reading a concrete unit attribute."""
-    from .pq import _unit, pq_encode, residual_cent_df, residual_expr
-    from .similarity import ivf_assign_literal
-
-    spark = new_vectors.sparkSession
-    live_name = _resolve_codes_name(spark, path)
-    cbs, cent_rows, dim, _nc, residual = _read_ivfpq_meta(
-        spark, path, live_name
-    )
-
-    bad = new_vectors.filter(F.size(F.col(vec_col)) != dim).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"append_to_ivfpq_index: shard vectors must have dim={dim} "
-            f"to match the persisted codebooks at {path}"
-        )
-    assigned = ivf_assign_literal(
-        new_vectors, cent_rows, "candidate_id", 1, id_col, vec_col
-    )
-    if residual:
-        # frozen geometry includes the residual flag: the shard
-        # encodes residuals to the PERSISTED centroids with the
-        # PERSISTED residual books (round 12, §7s).
-        pre = assigned.join(
-            F.broadcast(residual_cent_df(spark, cent_rows)), "cell_id"
-        ).select(
-            "candidate_id",
-            "cell_id",
-            residual_expr(
-                F.col("__vec"), F.col("__norm"), F.col("__cu")
-            ).alias("__unit"),
-        )
-    else:
-        pre = assigned.select(
-            "candidate_id",
-            "cell_id",
-            _unit(F.col("__vec"), F.col("__norm")).alias("__unit"),
-        )
-    coded = pre.repartition("cell_id").select(
-        "candidate_id",
-        "cell_id",
-        pq_encode(F.col("__unit"), cbs).alias("pq"),
-    )
-    coded.write.mode("append").partitionBy("cell_id").parquet(
-        f"{path}/{live_name}"
-    )
-    spark.catalog.refreshByPath(f"{path}/{live_name}")
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    n_cells: int | None = 16,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    corpus_cache_key: tuple | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    assign_blas: bool = False,
-    extra_meta: dict | None = None,
-    residual: bool = False,
-) -> None:
-    """Build + persist an IVF-PQ index — the COMPRESSED persisted kind
-    (round 10), completing the lifecycle family's memory story: the
-    SQ8 codes are ``dim`` bytes/vector, the PQ codes ``n_subspaces``
-    bytes (8 here vs 64 — at 10⁹ vectors the difference is whether
-    the hot index is 64 GB or 8 GB per 10⁹, i.e. whether one
-    executor's page cache holds a shard of it). Same layout, same
-    pointer-file commit, same FRESH-vs-REBUILD decision as the SQ8
-    build (`_publish_codes` — the protocol is quantizer-agnostic):
-    codes land partitioned by cell with the geometry co-located, so
-    `search_ivfpq_index` serves partition-pruned ADC scans.
-
-    Geometry = IVF centroids + PQ codebooks. ``codebooks=None`` keeps
-    the deterministic lowest-id anchor books (`pq_anchor_codebooks` —
-    oracle-replayable, the registered-row configuration); a deployment
-    passes `pq_kmeans_codebooks`' learned books exactly like the SQ8
-    build's ``centroids`` hook. Encoding follows the two-step
-    discipline (unit vector computed BEFORE the cell shuffle, encode
-    AFTER it — the §7o-r9 interpreted-HOF lesson): post-shuffle the
-    unit vector is a concrete attribute, so `pq_encode`'s bound
-    slices cost M·d array reads per row, not M·K·d re-derivations.
-
-    ``assign_blas``: same opt-in as the SQ8 build — the n×cells
-    assignment as one numpy matmul per Arrow batch; codes are
-    bit-identical off tie boundaries (see `ivf_assign_blas`).
-    ``extra_meta``: `build_ivfsq_index`'s contract — caller-owned
-    JSON-safe fields merged into the ``_meta`` geometry.
-
-    ``residual=True`` (round 12 — SCALE.md §7s, measured first): the
-    fine stage encodes x_unit − c_unit(cell(x)) instead of x_unit —
-    the classic IVF-ADC refinement. The flag is RECORDED in the
-    geometry (serving a residual index with raw ADC tables would be
-    silently wrong), `search_ivfpq_index` dispatches on it, appends
-    encode with it, and compaction carries it forward with the rest
-    of the meta text. Opt-in by measurement: +0.16 recall@5 at equal
-    bytes on the structured corpus, a LOSS on the unstructured one
-    (§7s — decide per corpus, e.g. via a held-out recall probe).
-    Anchor books under the flag come from the lowest-id RESIDUALS;
-    caller ``codebooks`` must be residual-fitted."""
-    from .pq import (
-        _unit,
-        pq_anchor_codebooks,
-        pq_encode,
-        pq_residual_anchor_codebooks,
-        residual_cent_df,
-        residual_expr,
-    )
-    from .similarity import (
-        auto_cells,
-        collect_centroid_rows,
-        ivf_assign_blas,
-        ivf_assign_literal,
-        ivf_centroids,
-    )
-    from .util import repartition_for_compute
-
-    spark = corpus.sparkSession
-    ck = corpus_cache_key
-    if n_cells is None:
-        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
-    cent_rows = _memo(
-        ck,
-        ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
-        lambda: collect_centroid_rows(
-            ivf_centroids(corpus, n_cells, id_col, vec_col)
-        ),
-    )
-
-    assign = ivf_assign_blas if assign_blas else ivf_assign_literal
-    cent_df = residual_cent_df(spark, cent_rows) if residual else None
-
-    def assigned_resids():
-        # residual lands as a concrete attribute before the cell
-        # shuffle (the two-step-encode discipline below); broadcast
-        # centroid join, map-side.
-        return assign(
-            repartition_for_compute(corpus), cent_rows, "candidate_id", 1, id_col, vec_col
-        ).join(F.broadcast(cent_df), "cell_id").select(
-            "candidate_id",
-            "cell_id",
-            residual_expr(
-                F.col("__vec"), F.col("__norm"), F.col("__cu")
-            ).alias("__resid"),
-        )
-
-    if codebooks is not None:
-        cbs = codebooks
-    elif residual:
-        cbs = _memo(
-            ck,
-            ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
-            lambda: pq_residual_anchor_codebooks(
-                assigned_resids(), n_subspaces, n_codes
-            ),
-        )
-    else:
-        cbs = _memo(
-            ck,
-            ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
-            lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
-        )
-    dim = len(cbs) * len(cbs[0][0])
-    if codebooks is not None:
-        # Caller-supplied books define the geometry; the corpus width
-        # must match or F.slice mis-encodes silently — same fail-fast
-        # `append_to_ivfpq_index` performs against persisted books.
-        bad = corpus.filter(F.size(F.col(vec_col)) != dim).limit(1).count()
-        if bad:
-            raise ValueError(
-                f"build_ivfpq_index: corpus vectors must have dim={dim} "
-                f"(= n_subspaces × sub_dim of the supplied codebooks)"
-            )
-
-    if residual:
-        coded = (
-            assigned_resids()
-            .repartition("cell_id")
-            .select(
-                "candidate_id",
-                "cell_id",
-                pq_encode(F.col("__resid"), cbs).alias("pq"),
-            )
-        )
-    else:
-        coded = (
-            assign(
-                repartition_for_compute(corpus), cent_rows, "candidate_id", 1, id_col, vec_col
-            )
-            .select(
-                "candidate_id",
-                "cell_id",
-                _unit(F.col("__vec"), F.col("__norm")).alias("__unit"),
-            )
-            .repartition("cell_id")
-            .select(
-                "candidate_id",
-                "cell_id",
-                pq_encode(F.col("__unit"), cbs).alias("pq"),
-            )
-        )
-    meta_text = json.dumps(
-        _with_extra_meta(
-            {
-                "kind": "ivfpq",
-                "dim": dim,
-                "n_cells": n_cells,
-                "n_subspaces": len(cbs),
-                "n_codes": len(cbs[0]),
-                "codebooks": json.dumps(
-                    [[[float(x) for x in code] for code in book] for book in cbs]
-                ),
-                "centroids": json.dumps(
-                    [[int(c), list(map(float, v)), float(n)] for c, v, n in cent_rows]
-                ),
-                **({"residual": 1} if residual else {}),
-            },
-            extra_meta,
-        )
-    )
-    _publish_codes(spark, path, coded, meta_text)
-
-
-def _read_ivfpq_meta(spark: SparkSession, path: str, name: str):
-    """(codebooks, cent_rows, dim, n_cells, residual) for generation
-    ``name`` of the IVF-PQ index at ``path`` — `_read_index_meta`'s
-    contract (the generation's own ``_meta``; kind-guarded both
-    ways). The 5th element is the residual-encoding flag: serving
-    residual codes with raw ADC tables — or vice versa — would be
-    silently wrong, so the geometry carries it and the serve
-    dispatches on it; metas without the field are raw."""
-    meta, cent_rows = _read_meta(spark, path, name, "ivfpq")
-    cbs = [
-        [[float(x) for x in code] for code in book]
-        for book in json.loads(meta["codebooks"])
-    ]
-    return (
-        cbs,
-        cent_rows,
-        int(meta["dim"]),
-        int(meta["n_cells"]),
-        bool(meta.get("residual", 0)),
-    )
-
-
-def search_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allowed: DataFrame | None = None,
-    rerank: int | None = None,
-    vectors: DataFrame | None = None,
-) -> DataFrame:
-    """Serve top-k from a persisted IVF-PQ index: resolve the live
-    generation ONCE (codes + geometry as one unit — the round-9
-    consistency rule), assign the query batch to its ``n_probe``
-    cells with the persisted centroids, compute each query's ADC
-    table ONCE from the persisted codebooks, push the probed cell ids
-    into the codes scan as a partition filter, and rank candidates on
-    the quantized squared-L2 — M table lookups per (candidate, query)
-    pair, no vector math in the scan. Results are BIT-IDENTICAL to
-    the in-memory `pq.ivfpq_topk` under the same geometry (same
-    assignment, same bound-slice ADC folds via `pq.pq_adc_table`,
-    same `pq.adc_sum` add order, same rounding and tiebreaks) —
-    asserted in tests/test_pq_index.py; the persisted kind only moves
-    where the codes live.
-
-    ``allowed``: pre-filter semantics on the pruned scan, exactly
-    `search_ivfsq_index`'s contract. ``rerank`` + ``vectors``: the
-    EXACT cosine re-rank of an overfetched ADC shortlist — raw
-    vectors join through the BROADCAST shortlist (never
-    corpus-shaped work; the round-10 rescore discipline), per-pair
-    expression identical to `pq.ivfpq_topk(rerank=...)`'s so the
-    oracle replay composes unchanged. Output: (query_id,
-    candidate_id, adc_dist, rank), or cos_sim in place of adc_dist
-    when reranked."""
-    from ..functions.vectors import dot, l2_norm
-    from .pq import _unit, adc_sum, pq_adc_table
-    from .similarity import ivf_assign_literal
-    from .util import hof_bind
-
-    live_name = _resolve_codes_name(spark, path)
-    cbs, cent_rows, _dim, _nc, residual = _read_ivfpq_meta(
-        spark, path, live_name
-    )
-    n_sub = len(cbs)
-
-    q = ivf_assign_literal(
-        queries, cent_rows, "query_id", n_probe, id_col, vec_col
-    )
-    if residual:
-        # residual geometry (round 12, §7s): the ADC table is per
-        # (query, probed cell) from q_unit − c_unit(cell) — the cell
-        # equi-join below already pairs each candidate with its own
-        # cell's table, the classic IVF-ADC serve shape.
-        from .pq import residual_cent_df, residual_expr
-
-        q = q.join(
-            F.broadcast(residual_cent_df(spark, cent_rows)), "cell_id"
-        ).select(
-            "query_id",
-            "cell_id",
-            hof_bind(
-                residual_expr(F.col("__vec"), F.col("__norm"), F.col("__cu")),
-                lambda r: pq_adc_table(r, cbs),
-            ).alias("dtab"),
-        )
-    else:
-        q = q.select(
-            "query_id",
-            "cell_id",
-            hof_bind(
-                _unit(F.col("__vec"), F.col("__norm")),
-                lambda u: pq_adc_table(u, cbs),
-            ).alias("dtab"),
-        )
-    probed = sorted(
-        {r["cell_id"] for r in q.select("cell_id").distinct().collect()}
-    )
-    codes = spark.read.parquet(f"{path}/{live_name}").filter(
-        F.col("cell_id").isin([int(c) for c in probed])
-    )
-    if allowed is not None:
-        codes = codes.join(
-            allowed.select(F.col(id_col).alias("candidate_id")),
-            "candidate_id",
-            "left_semi",
-        )
-    joined = codes.join(F.broadcast(q), "cell_id").filter(
-        F.col("query_id") != F.col("candidate_id")
-    )
-    scored = joined.select(
-        "query_id", "candidate_id", F.round(adc_sum(n_sub), 6).alias("adc_dist")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("candidate_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    if rerank is None:
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "candidate_id", "adc_dist", "rank"
-        )
-    if vectors is None:
-        raise ValueError(
-            "search_ivfpq_index(rerank=...) needs `vectors` — a frame "
-            f"with ({id_col}, {vec_col}) to score the shortlist exactly "
-            "(the index stores codes, not vectors)"
-        )
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    shortlist = ranked.filter(F.col("rank") <= rerank).select(
-        "query_id", "candidate_id"
-    )
-    # Raw vectors through the broadcast shortlist; per-pair expression
-    # identical to pq.ivfpq_topk's rescore (dot over the norm product
-    # on RAW vectors — NOT the SQ serve's unit-dot spelling; the PQ
-    # oracle's rescore block replays this exact form).
-    cv = vectors.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("c_vec")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
-    )
-    cos = dot(F.col("q_vec"), F.col("c_vec")) / (
-        F.col("q_norm") * l2_norm(F.col("c_vec"))
-    )
-    rescored = (
-        cv.join(F.broadcast(shortlist), "candidate_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
-
-
 def search_sharded_indexes(
     spark: SparkSession,
     paths: list[str],
@@ -1362,7 +1179,7 @@ def search_sharded_indexes(
     if not paths:
         raise ValueError("search_sharded_indexes needs at least one shard")
     parts = [
-        search_ivfsq_index(
+        search_index(
             spark, p, queries, k=k, n_probe=n_probe,
             id_col=id_col, vec_col=vec_col, allowed=allowed,
         ).select("query_id", "candidate_id", "sq_sim")
@@ -1454,13 +1271,6 @@ def compact_if_accreted(
     return False, stats
 
 
-def _sniff_kind(spark: SparkSession, path: str) -> str:
-    """The index's own kind from the live generation's ``_meta`` — the
-    dispatch layer never interprets geometry."""
-    live = _resolve_codes_name(spark, path)
-    return json.loads(_read_meta_text(spark, path, live)).get("kind", "ivfsq")
-
-
 def index_recall_probe(
     spark: SparkSession,
     path: str,
@@ -1471,12 +1281,11 @@ def index_recall_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Recall@k of the persisted index against EXACT ground truth on a
-    probe query set — the monitoring metric the REBUILD schedule runs
-    on (round 13, VERDICT r12 #5's other half: s16's drift monitor
-    compares two INDEX flows and needs both built; this probe needs
-    only the live index plus one exact pass over ``vectors`` for the
-    probe queries). Kind-agnostic (meta sniff, never geometry).
+    """Recall@k of the persisted index (either kind) against EXACT
+    ground truth on a probe query set — the monitoring metric the
+    REBUILD schedule runs on (s16's drift monitor compares two INDEX
+    flows and needs both built; this probe needs only the live index
+    plus one exact pass over ``vectors`` for the probe queries).
     Returns `operators/similarity.topk_recall`'s
     (query_id, n_hits, recall) frame.
 
@@ -1484,18 +1293,9 @@ def index_recall_probe(
     corpus) — that IS what a recall probe costs; keep the probe set
     serving-contract-sized (tens of queries) and/or point ``vectors``
     at a sampled sub-corpus, exactly the s07 rule."""
-    from .similarity import brute_force_topk, topk_recall
-
-    if _sniff_kind(spark, path) == "ivfpq":
-        served = search_ivfpq_index(
-            spark, path, queries, k=k, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        served = search_ivfsq_index(
-            spark, path, queries, k=k, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col,
-        )
+    served = search_index(
+        spark, path, queries, k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col
+    )
     exact = brute_force_topk(queries, vectors, k=k, id_col=id_col, vec_col=vec_col)
     return topk_recall(exact, served, k=k)
 
@@ -1512,18 +1312,17 @@ def rebuild_if_drifted(
     vec_col: str = "embedding",
     **build_kw,
 ) -> tuple[bool, float]:
-    """The DRIFT-SCHEDULE trigger, completing the maintenance pair
-    (round 13): `compact_if_accreted` fires on file accretion
-    (layout), this fires on recall decay (geometry) — REBUILD the
-    index from ``corpus`` when `index_recall_probe`'s mean recall@k
-    over ``queries`` falls below ``threshold``. Frozen-geometry
-    appends decay recall as the corpus drifts from the fitted
-    quantizer (SCALE.md §7i; s16); the rebuild refits and commits
-    through the staged-generation protocol, so readers mid-scan are
-    never disturbed and a crash leaves the old index serving. The
-    kind is preserved (meta sniff); ``build_kw`` flows to the kind's
-    build (n_cells=None re-sizes √n by default). Returns
-    (fired, mean_recall_before)."""
+    """The DRIFT-SCHEDULE trigger, completing the maintenance pair:
+    `compact_if_accreted` fires on file accretion (layout), this
+    fires on recall decay (geometry) — REBUILD the index from
+    ``corpus`` when `index_recall_probe`'s mean recall@k over
+    ``queries`` falls below ``threshold``. Frozen-geometry appends
+    decay recall as the corpus drifts from the fitted quantizer
+    (SCALE.md §7i; s16); the rebuild refits and commits through the
+    staged-generation protocol, so readers mid-scan are never
+    disturbed and a crash leaves the old index serving. The recorded
+    kind is preserved; ``build_kw`` flows to its build (n_cells=None
+    re-sizes √n by default). Returns (fired, mean_recall_before)."""
     probe = index_recall_probe(
         spark, path, queries, corpus, k=k, n_probe=n_probe,
         id_col=id_col, vec_col=vec_col,
@@ -1531,14 +1330,8 @@ def rebuild_if_drifted(
     mean = float(probe.agg(F.avg("recall").alias("r")).first()["r"])
     if mean >= threshold:
         return False, mean
-    if _sniff_kind(spark, path) == "ivfpq":
-        build_ivfpq_index(
-            corpus, path, n_cells=build_kw.pop("n_cells", None),
-            id_col=id_col, vec_col=vec_col, **build_kw,
-        )
-    else:
-        build_ivfsq_index(
-            corpus, path, n_cells=build_kw.pop("n_cells", None),
-            id_col=id_col, vec_col=vec_col, **build_kw,
-        )
+    index_builder(_live(spark, path).codec.kind)(
+        corpus, path, n_cells=build_kw.pop("n_cells", None),
+        id_col=id_col, vec_col=vec_col, **build_kw,
+    )
     return True, mean

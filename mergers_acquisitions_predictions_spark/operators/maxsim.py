@@ -438,26 +438,14 @@ def build_token_index(
     were encoded with, so `maxsim_search_tokens_persisted` fails fast
     on a mismatched serve-time T (and can default T from the meta)
     instead of silently mapping hits to wrong parent documents."""
-    comp = composite_tokens(cand_tokens, n_tokens, id_col, pos_col, vec_col)
-    extra = {"n_tokens": int(n_tokens)}
-    if kind == "ivfsq":
-        from .ann_index import build_ivfsq_index
+    from .ann_index import index_builder
 
-        build_ivfsq_index(
-            comp, path, n_cells=None,
-            corpus_cache_key=corpus_cache_key, assign_blas=assign_blas,
-            extra_meta=extra, **build_kw,
-        )
-    elif kind == "ivfpq":
-        from .ann_index import build_ivfpq_index
-
-        build_ivfpq_index(
-            comp, path, n_cells=None,
-            corpus_cache_key=corpus_cache_key, assign_blas=assign_blas,
-            extra_meta=extra, **build_kw,
-        )
-    else:
-        raise ValueError(f"unknown token index kind {kind!r}")
+    index_builder(kind)(
+        composite_tokens(cand_tokens, n_tokens, id_col, pos_col, vec_col),
+        path, n_cells=None,
+        corpus_cache_key=corpus_cache_key, assign_blas=assign_blas,
+        extra_meta={"n_tokens": int(n_tokens)}, **build_kw,
+    )
 
 
 def maxsim_search_tokens_persisted(
@@ -486,9 +474,8 @@ def maxsim_search_tokens_persisted(
     on the QUANTIZED dot (oracle:
     `plans/lsh_oracle.colbert_persisted_retrieval_sql`).
 
-    Serves BOTH persisted kinds: the index's own meta names its kind
-    (the `compact_index` sniff — never interprets geometry here) and
-    stage 1 dispatches to the matching search function; on an
+    Serves BOTH persisted kinds through `ann_index.search_index`,
+    which takes the codec from the index's own ``_meta``; on an
     ``ivfpq`` token index the first stage ranks on the ADC distance.
 
     ``n_tokens`` is CROSS-CHECKED against the T the index records
@@ -515,15 +502,13 @@ def maxsim_search_tokens_persisted(
     the §7r-c crossover rule)."""
     import json as _json
 
-    from .ann_index import _read_meta_text, _resolve_codes_name
+    from .ann_index import _read_meta_text, _resolve_codes_name, search_index
 
-    # kind + recorded-T sniff from the live generation's `_meta`, read
-    # on EVERY serve (a driver-side one-file read, no Spark job), so
-    # the fail-fast T cross-check below can never be skipped.
+    # recorded-T sniff from the live generation's `_meta`, read on
+    # EVERY serve (a driver-side one-file read, no Spark job), so the
+    # fail-fast T cross-check below can never be skipped.
     live = _resolve_codes_name(spark, index_path)
-    side = _json.loads(_read_meta_text(spark, index_path, live))
-    kind = side.get("kind", "ivfsq")
-    meta_T = side.get("n_tokens")
+    meta_T = _json.loads(_read_meta_text(spark, index_path, live)).get("n_tokens")
     if n_tokens is None:
         if meta_T is None:
             raise ValueError(
@@ -541,18 +526,7 @@ def maxsim_search_tokens_persisted(
         )
     T = n_tokens
     comp_q = composite_tokens(query_tokens, T, id_col, pos_col, vec_col)
-    if kind == "ivfpq":
-        from .ann_index import search_ivfpq_index
-
-        hits = search_ivfpq_index(
-            spark, index_path, comp_q, k=k0, n_probe=n_probe
-        )
-    else:
-        from .ann_index import search_ivfsq_index
-
-        hits = search_ivfsq_index(
-            spark, index_path, comp_q, k=k0, n_probe=n_probe
-        )
+    hits = search_index(spark, index_path, comp_q, k=k0, n_probe=n_probe)
     shortlist = _parent_shortlist(hits, T)
     if token_table_path is not None:
         if cand_tokens is not None:

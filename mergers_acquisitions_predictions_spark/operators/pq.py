@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.vectors import l2_norm
+from .sq import _unit
 from .util import hof_bind, repartition_for_compute
 
 
@@ -85,11 +86,6 @@ def pq_anchor_codebooks(
     return [
         [u[m * sub : (m + 1) * sub] for u in units] for m in range(n_subspaces)
     ]
-
-
-def _unit(vec: Column, norm: Column) -> Column:
-    """Normalize an array<float> to unit double: x/‖v‖ per element."""
-    return F.transform(vec, lambda x: x.cast("double") / norm)
 
 
 def residual_cent_df(spark, cent_rows) -> DataFrame:
@@ -267,7 +263,7 @@ def adc_sum(n_sub: int) -> Column:
     add chain — the oracle's outer `list_sum` order. Reads the
     ``dtab`` (per-query ADC table) and ``pq`` (candidate codes)
     columns of the joined probe frame; shared by the in-memory
-    `ivfpq_topk` scan and the persisted `ann_index.search_ivfpq_index`
+    `ivfpq_topk` scan and the persisted `ann_index.search_index`
     serve so the two paths stay bit-identical by construction."""
     adc: Column = F.lit(0.0)
     for m in range(n_sub):
@@ -495,7 +491,7 @@ def ivfpq_topk(
     )
     # RAW vectors through the BROADCAST shortlist; norms only for the
     # survivors (round 10 — the same corpus-shaped-rescore fix as
-    # `ann_index.search_ivfsq_index`: the previous shape computed
+    # `ann_index.search_index`: the previous shape computed
     # l2_norm for every corpus row before the join and left the join
     # strategy to size estimates, which shuffled the corpus). The
     # per-pair expression is unchanged — dot/(q_norm·c_norm), same

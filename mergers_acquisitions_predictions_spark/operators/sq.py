@@ -54,8 +54,9 @@ from .util import repartition_for_compute
 
 
 def _unit(vec: Column, norm: Column) -> Column:
-    """x/‖v‖ per element in double — identical spelling to pq._unit
-    and the oracle's list_transform, so unit values are bit-equal."""
+    """x/‖v‖ per element in double — the one unit-normalization the
+    SQ8 and PQ encoders and serves share, spelled like the oracle's
+    list_transform so unit values are bit-equal."""
     return F.transform(vec, lambda x: x.cast("double") / norm)
 
 

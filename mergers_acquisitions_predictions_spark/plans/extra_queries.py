@@ -218,7 +218,7 @@ def s19_sampled_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at 1M stacked was SQ8 quantization noise among 500-deep
     clone cohorts — it hits ANY centroid set and is remedied by
     dedup-before-index or the exact re-rank serve
-    (`ann_index.search_ivfsq_index(rerank=...)`), not by the fit.
+    (`ann_index.search_index(rerank=...)`), not by the fit.
 
     The production floor (`_FIT_SAMPLE_FLOOR` = 100k, below which the
     full fit is cheap and sampling only adds variance) is OVERRIDDEN
@@ -1513,7 +1513,7 @@ def s47_hybrid_persisted_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement + s13's CTE chain (queries < 3) + s11's fused-ppb
     spelling, composed verbatim. Reference analogue: none — SURVEY §7
     Phase 4 surface."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.bm25 import build_bm25_index, search_bm25_index
     from ..operators.similarity import rrf_fuse
     from ..operators.util import run_overlapped
@@ -1548,7 +1548,7 @@ def s47_hybrid_persisted_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = search_bm25_index(spark, lex_path, q_lex, k=5, exclude_self=True).select(
         "query_id", F.col("doc_id").alias("candidate_id"), "rank"
     )
-    dense = search_ivfsq_index(
+    dense = search_index(
         spark, dense_path, e.filter(F.col("vec_id") < 3), k=5, n_probe=2
     ).select("query_id", "candidate_id", "rank")
     return rrf_fuse([lex, dense], k=5, c=60)

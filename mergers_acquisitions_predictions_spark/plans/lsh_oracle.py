@@ -596,18 +596,18 @@ def ivfsq_topk_sql(
     learned from the filtered split only, while codes/assignment/
     search still cover every vector — the exact semantics of
     `ann_index.build_ivfsq_index` on a split followed by
-    `append_to_ivfsq_index` of the remainder (s14: the persisted
+    `append_index` of the remainder (s14: the persisted
     geometry is frozen; appended shards are encoded with it).
 
     ``candidate_filter`` (e.g. "AND c.candidate_id IN (SELECT vec_id
     FROM embeddings WHERE label % 2 = 1)") restricts the CANDIDATE
     side of the scored pairs — the pre-filter semantics of
-    `ann_index.search_ivfsq_index(allowed=...)`: ranks are dense over
+    `ann_index.search_index(allowed=...)`: ranks are dense over
     matching candidates only, and the index geometry (stats, cells,
     codes) is untouched by the predicate.
 
     ``rerank`` (round 8): mirrors
-    `ann_index.search_ivfsq_index(rerank=R, vectors=...)` — the
+    `ann_index.search_index(rerank=R, vectors=...)` — the
     top-R SQ8 candidates per query re-scored on the EXACT rounded
     unit-vector dot (the `unit` CTE both engines already share), then
     ranked to k on (cos_sim DESC, candidate_id). The clone-cohort

@@ -464,7 +464,7 @@ def s13_persisted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build the IVF-SQ8 index to DISK (`ann_index.build_ivfsq_index` —
     codes partitioned by cell_id, quantizer + centroids in a meta
     sidecar), then serve top-k from the persisted artifact
-    (`search_ivfsq_index` — the query batch's probed cells are pushed
+    (`search_index` — the query batch's probed cells are pushed
     into the codes scan as an `isin` PartitionFilter, so the scan
     reads ONLY those cells' files; partition pruning is plan-asserted
     in tests/test_ann_index.py). Search is bit-identical to the
@@ -487,14 +487,14 @@ def s13_persisted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same prefix are best-effort reaped at build time, age-gated
     (>6h untouched) so a concurrently-live session's artifact is
     never pulled out from under its reads."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfsq")
     build_ivfsq_index(
         e, path, n_cells=None, corpus_cache_key=(sf_dir, "embeddings")
     )
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -567,14 +567,14 @@ def s20_reranked_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving pairs on the exact probability product — the same
     cheap-prefilter-then-exact-score shape this serve applies to
     ANN."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfsq")
     build_ivfsq_index(
         e, path, n_cells=None, corpus_cache_key=(sf_dir, "embeddings")
     )
-    return search_ivfsq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -594,7 +594,7 @@ def s14_index_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NIGHTLY-INGEST index flow, driver-certified (VERDICT r4
     #5): build the persisted IVF-SQ8 index from HALF the corpus
     (vec_id % 2 = 0), append the other half as a shard
-    (`ann_index.append_to_ivfsq_index` — assigned and encoded with
+    (`ann_index.append_index` — assigned and encoded with
     the index's FROZEN centroids and quantizer stats, the production
     behavior between full rebuilds), then serve top-k over the
     combined artifact. The oracle replays the frozen-geometry
@@ -606,9 +606,9 @@ def s14_index_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally asserted in tests/test_ann_index.py; the incremental
     MinHash sibling is d12."""
     from ..operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -619,8 +619,8 @@ def s14_index_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=None,
         corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
     )
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
-    return search_ivfsq_index(
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -901,14 +901,14 @@ def s17_filtered_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered ranking is hash-checked cross-engine. Reference scope:
     the reference has no ANN surface at all (SURVEY §2.8) — this is
     part of the LLM-pipeline mandate's similarity-search family."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfsq_filt")
     build_ivfsq_index(
         e, path, n_cells=None, corpus_cache_key=(sf_dir, "embeddings")
     )
-    return search_ivfsq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -929,7 +929,7 @@ def s18_index_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     other half as TWO nightly shards (each append adds one file per
     touched cell — the accretion that degrades probed-cell scans into
     file-open overhead at 100 TB), COMPACT the codes
-    (`ann_index.compact_ivfsq_index` — per-cell clustered rewrite
+    (`ann_index.compact_index` — per-cell clustered rewrite
     committed by the POINTER-FILE protocol since round 8, VERDICT r7
     #4: the new generation directory is staged + renamed into place,
     then the ``CURRENT`` manifest atomically flips to name it, so a
@@ -943,10 +943,10 @@ def s18_index_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (s13) → append (s14) → compact (s18) → serve / stream-serve
     (s15) / drift-monitor (s16)."""
     from ..operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfsq_index,
-        compact_ivfsq_index,
-        search_ivfsq_index,
+        compact_index,
+        search_index,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -957,10 +957,10 @@ def s18_index_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=None,
         corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
     )
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 1), path)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 3), path)
-    compact_ivfsq_index(spark, path)
-    return search_ivfsq_index(
+    append_index(e.filter(F.col("vec_id") % 4 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 4 == 3), path)
+    compact_index(spark, path)
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -1010,7 +1010,7 @@ def s21_dedup_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: the reference's own dedup-before-downstream
     hygiene — `acq_etl_code.scala:96-100` distincts the joined frame
     before everything that consumes it."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.similarity import semantic_dedup
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1033,7 +1033,7 @@ def s21_dedup_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_cache_key=(sf_dir, "embeddings", "semdedup0.4x8"),
     )
     del dd  # checkpoint blocks released deterministically, post-build
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -1084,7 +1084,7 @@ def s22_dedup_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's dedup-before-downstream hygiene
     (`acq_etl_code.scala:96-100`) followed by its cheap-prefilter-
     then-exact-score shape (`predictions.scala:17-38`)."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.similarity import semantic_dedup
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1103,7 +1103,7 @@ def s22_dedup_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_cache_key=(sf_dir, "embeddings", "semdedup0.4x8"),
     )
     del dd, kept  # checkpoint blocks released deterministically
-    return search_ivfsq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -1135,12 +1135,12 @@ def s23_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Production note (SCALE.md §7o): on clone-saturated corpora PQ's
     quantization noise needs the exact re-rank remedy exactly like
-    SQ8 — `search_ivfpq_index(rerank=..., vectors=...)` is the
+    SQ8 — `search_index(rerank=..., vectors=...)` is the
     deployment serve (frame-equality-tested vs the in-memory rerank
     path); this row certifies the plain ADC contract the remedies
     stack on. No reference analogue (the reference has no vector
     search) — SURVEY §7 Phase 4 surface."""
-    from ..operators.ann_index import build_ivfpq_index, search_ivfpq_index
+    from ..operators.ann_index import build_ivfpq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfpq")
@@ -1152,7 +1152,7 @@ def s23_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_codes=16,
         corpus_cache_key=(sf_dir, "embeddings"),
     )
-    return search_ivfpq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -1190,7 +1190,7 @@ def s24_maxsim_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-certified in tests/test_maxsim.py). Reference analogue: none
     (the reference has no vector search) — SURVEY §7 Phase 4 surface,
     the reranking stage modern retrieval stacks put on top of ANN."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.maxsim import maxsim_rerank
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1199,7 +1199,7 @@ def s24_maxsim_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivfsq_index(
         e, path, n_cells=None, corpus_cache_key=(sf_dir, "embeddings")
     )
-    shortlist = search_ivfsq_index(spark, path, q, k=15, n_probe=2)
+    shortlist = search_index(spark, path, q, k=15, n_probe=2)
     return maxsim_rerank(shortlist, q, e, k=5, n_tokens=4, dim=64)
 
 
@@ -1223,7 +1223,7 @@ def s25_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescore, both deterministic. Late-registered (outside the driver
     window — the s23/s24 rows carry the family's window slots) but
     fully oracle-backed at every SF via tests/test_oracle_parity."""
-    from ..operators.ann_index import build_ivfpq_index, search_ivfpq_index
+    from ..operators.ann_index import build_ivfpq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfpq")
@@ -1235,7 +1235,7 @@ def s25_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_codes=16,
         corpus_cache_key=(sf_dir, "embeddings"),
     )
-    return search_ivfpq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -1286,7 +1286,7 @@ def s27_maxsim_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     broken survivor cut would hash-fail. Candidate-side grouping is
     shortlist-sized, never corpus-shaped. Late-registered (outside
     the driver window) but fully oracle-backed at every SF."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.maxsim import maxsim_rerank_tokens, token_slices
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1295,7 +1295,7 @@ def s27_maxsim_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivfsq_index(
         e, path, n_cells=None, corpus_cache_key=(sf_dir, "embeddings")
     )
-    shortlist = search_ivfsq_index(spark, path, q, k=15, n_probe=2)
+    shortlist = search_index(spark, path, q, k=15, n_probe=2)
     toks = e.select(
         "vec_id",
         F.posexplode(token_slices(F.col("embedding"), 4, 16)).alias(
@@ -1388,7 +1388,7 @@ def s29_pq_learned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment config — content-keyed sample → per-subspace fits →
     frozen books encode the full corpus — is what this row
     hash-certifies via the artifact replay."""
-    from ..operators.ann_index import build_ivfpq_index, search_ivfpq_index
+    from ..operators.ann_index import build_ivfpq_index, search_index
     from ..operators.pq import pq_kmeans_codebooks
     from ..operators.util import local_rows_df
     from ..sources.writers import publish_parquet_atomic
@@ -1425,7 +1425,7 @@ def s29_pq_learned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         codebooks=cbs_art,
         corpus_cache_key=(sf_dir, "embeddings", "learned_cb"),
     )
-    return search_ivfpq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -1519,7 +1519,7 @@ def s31_token_table_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trip (bit-exact for double arrays), so s24/s27's
     EXACT oracle applies verbatim and the hash certifies layout,
     round-trip, pruning, and grouped rebuild end to end."""
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..operators.maxsim import (
         maxsim_rerank_tokens,
         read_token_table,
@@ -1546,7 +1546,7 @@ def s31_token_table_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         tok_path,
     )
-    shortlist = search_ivfsq_index(spark, path, q, k=15, n_probe=2)
+    shortlist = search_index(spark, path, q, k=15, n_probe=2)
     # driver-sized by the serving contract: |queries| × rerank ids
     cand_ids = [
         r["candidate_id"]
@@ -1870,7 +1870,7 @@ def s37_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code the within-cell spread, measured +0.16 recall@5 at equal
     bytes on the structured corpus (and a LOSS on the unstructured
     one, which is why ``residual=True`` is opt-in and RECORDED in the
-    index geometry — `search_ivfpq_index` dispatches on the flag, and
+    index geometry — `search_index` dispatches on the flag, and
     appends/compactions carry it with the frozen geometry). The serve
     computes the query's ADC table PER PROBED CELL from the matching
     query residual; the cell equi-join pairs each candidate with its
@@ -1884,7 +1884,7 @@ def s37_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 164 pre-existing oracle strings are byte-identical across
     the residual hook. No reference analogue — SURVEY §7 Phase 4
     surface."""
-    from ..operators.ann_index import build_ivfpq_index, search_ivfpq_index
+    from ..operators.ann_index import build_ivfpq_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
     path = _scratch_index_path(spark, sf_dir, "ivfpq_resid")
@@ -1897,7 +1897,7 @@ def s37_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         residual=True,
         corpus_cache_key=(sf_dir, "embeddings"),
     )
-    return search_ivfpq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -1935,7 +1935,7 @@ def s38_pq_residual_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally; everything downstream of the per-subspace fits is
     hash-checked cross-engine (the s29/s05 artifact recipe). No
     reference analogue — SURVEY §7 Phase 4 surface."""
-    from ..operators.ann_index import build_ivfpq_index, search_ivfpq_index
+    from ..operators.ann_index import build_ivfpq_index, search_index
     from ..operators.pq import pq_kmeans_residual_codebooks
     from ..operators.similarity import collect_centroid_rows, ivf_centroids
     from ..operators.util import local_rows_df, memoized_literal
@@ -1987,7 +1987,7 @@ def s38_pq_residual_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         residual=True,
         corpus_cache_key=(sf_dir, "embeddings"),
     )
-    return search_ivfpq_index(
+    return search_index(
         spark,
         path,
         e.filter(F.col("vec_id") < 5),
@@ -2084,7 +2084,7 @@ def s40_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Phase 4/5 surface)."""
     import os
 
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..streaming.serving import ingest_batch
 
     from ..operators.util import run_overlapped
@@ -2123,7 +2123,7 @@ def s40_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_overlapped(_build, _wire)
     batch = spark.read.schema("vec_id long, embedding array<float>").json(vdir)
     ingest_batch(path, batch)
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -2156,7 +2156,7 @@ def s41_stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     analogue: none (SURVEY §7 Phase 4/5 surface)."""
     import os
 
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..streaming.serving import ingest_batch_staged
 
     from ..operators.util import run_overlapped
@@ -2199,7 +2199,7 @@ def s41_stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFram
             f"replayed batch appended {replayed} vectors (first "
             f"delivery appended {appended}) — exactly-once broken"
         )
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -2232,7 +2232,7 @@ def s42_stream_ingest_compact_serve(spark: SparkSession, sf_dir: str) -> DataFra
     from ..operators.ann_index import (
         build_ivfsq_index,
         compact_if_accreted,
-        search_ivfsq_index,
+        search_index,
     )
     from ..streaming.serving import ingest_batch
 
@@ -2291,7 +2291,7 @@ def s42_stream_ingest_compact_serve(spark: SparkSession, sf_dir: str) -> DataFra
             f"accretion trigger did not fire after two streamed "
             f"micro-batches (stats: {stats})"
         )
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 
@@ -2331,7 +2331,7 @@ def s43_index_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall probe IS; the probe set stays sample-sized (s07's rule).
     Reference analogue: none (SURVEY §7 Phase 4/5 surface)."""
     from ..operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfsq_index,
         index_recall_probe,
     )
@@ -2344,7 +2344,7 @@ def s43_index_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=None,
         corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
     )
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     return index_recall_probe(
         spark, path, e.filter(F.col("vec_id") < 5), e, k=5, n_probe=2
     )
@@ -2381,7 +2381,7 @@ def s44_stream_append_only_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     Phase 4/5 surface)."""
     import os
 
-    from ..operators.ann_index import build_ivfsq_index, search_ivfsq_index
+    from ..operators.ann_index import build_ivfsq_index, search_index
     from ..streaming.serving import (
         reconcile_index_from_snapshot,
         stage_batch_append_only,
@@ -2445,7 +2445,7 @@ def s44_stream_append_only_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
             f"reconcile re-run appended {replayed} vectors (first run "
             f"appended {appended}) — exactly-once broken"
         )
-    return search_ivfsq_index(
+    return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )
 

@@ -149,45 +149,6 @@ def write_token_balanced_shards(
     )
 
 
-def write_parquet_observed(
-    df: DataFrame,
-    path: str,
-    metrics: dict,
-    mode: str = "overwrite",
-    partition_by=None,
-) -> dict:
-    """Parquet sink with SINGLE-PASS metrics via Spark's Observation
-    API: the named aggregate expressions in ``metrics`` (e.g.
-    ``{"n_docs": F.count(F.lit(1)), "tokens": F.sum("n_tokens")}``)
-    are accumulated DURING the write and returned as a dict — no
-    second scan of the data to answer "how many rows/tokens did the
-    nightly job emit?". At 100 TB a post-hoc count re-reads the
-    table; an observation is free (metrics ride the write tasks).
-
-    Only Observation-legal aggregates apply (no distinct, no order-
-    dependent aggs); returns ``{name: value}``.
-
-    SESSION CAVEAT (round 14): SparkSession.observationManager is the
-    session's only NON-transient lazy field (Spark 4.1) — the first
-    Observation initializes it, and every later Java serialization of
-    a session-capturing closure in the same session then fails
-    (MLlib models carry their session via trainingSummary:
-    `NotSerializableException: ObservationManager`). No registered
-    query path uses this sink; keep it out of sessions that later
-    ship MLlib models into task closures (see build_bm25_index's
-    derived-stats spelling for the workaround)."""
-    from pyspark.sql import Observation
-
-    obs = Observation("write_metrics")
-    named = [expr.alias(name) for name, expr in metrics.items()]
-    observed = df.observe(obs, *named)
-    w = observed.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return dict(obs.get)
-
-
 def write_orc(
     df: DataFrame, path: str, mode: str = "overwrite", partition_by=None
 ) -> None:

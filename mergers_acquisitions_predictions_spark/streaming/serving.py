@@ -42,7 +42,7 @@ def serve_batch(
     requires ``rerank`` and ``vectors``); both rescores are
     shortlist-shaped, so the per-batch cost stays the pruned scan +
     a shortlist-sized join regardless of corpus size."""
-    from ..operators.ann_index import search_ivfsq_index
+    from ..operators.ann_index import search_index
 
     if maxsim_tokens is not None:
         if rerank is None or vectors is None:
@@ -53,7 +53,7 @@ def serve_batch(
             raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
         from ..operators.maxsim import maxsim_rerank
 
-        shortlist = search_ivfsq_index(
+        shortlist = search_index(
             spark, index_path, batch_df, k=rerank, n_probe=n_probe,
             id_col=id_col, vec_col=vec_col,
         )
@@ -61,7 +61,7 @@ def serve_batch(
             shortlist, batch_df, vectors, k=k, n_tokens=maxsim_tokens,
             id_col=id_col, vec_col=vec_col, dim=dim,
         )
-    return search_ivfsq_index(
+    return search_index(
         spark, index_path, batch_df, k=k, n_probe=n_probe,
         id_col=id_col, vec_col=vec_col, rerank=rerank, vectors=vectors,
     )

@@ -67,10 +67,10 @@ def timed(fn, *a, **kw):
 
 def main(sizes=(100_000, 1_000_000)) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfsq_index,
-        compact_ivfsq_index,
-        search_ivfsq_index,
+        compact_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.similarity import (
         auto_cells,
@@ -98,7 +98,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
         )
 
         def serve():
-            return search_ivfsq_index(
+            return search_index(
                 spark, idx, queries, k=5, n_probe=2
             ).count()
 
@@ -110,7 +110,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
             "query_id", "candidate_id"
         )
         exact.persist().count()
-        approx = search_ivfsq_index(spark, idx, queries, k=5, n_probe=2)
+        approx = search_index(spark, idx, queries, k=5, n_probe=2)
         rec = topk_recall(exact, approx, k=5).agg(
             F.avg("recall").alias("r")
         ).first()["r"]
@@ -128,11 +128,11 @@ def main(sizes=(100_000, 1_000_000)) -> None:
                 ).alias("embedding"),
             )
         )
-        _, row["t_append_2k"] = timed(append_to_ivfsq_index, shard, idx)
+        _, row["t_append_2k"] = timed(append_index, shard, idx)
         serve()
         row["t_serve_post_append"] = min(timed(serve)[1] for _ in range(3))
         (files_b, files_a), row["t_compact"] = timed(
-            compact_ivfsq_index, spark, idx
+            compact_index, spark, idx
         )
         row["files_before_after"] = [files_b, files_a]
         serve()

@@ -9,7 +9,7 @@ assignment term is the §7o-r9 build cost at T×n. Two routes:
    shape at 1M docs (4M tokens × 2000 cells).
 2. PERSISTED (composition, measured here): the token frame is just
    (id, embedding), so `build_ivfsq_index(assign_blas=True)` builds
-   the token index with the matmul assignment, `search_ivfsq_index`
+   the token index with the matmul assignment, `search_index`
    serves each query token's top-k0 from the pruned scan, and the
    parent mapping + `maxsim_rerank_tokens` finish exactly as s28 —
    the recommended deployment shape, priced here.
@@ -36,7 +36,7 @@ SUB = 16
 def main(sizes=(100_000,)) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         maxsim_rerank_tokens,

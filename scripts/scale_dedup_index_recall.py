@@ -50,7 +50,7 @@ def timed(fn, *a, **kw):
 def main(n: int = 1_000_000) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.similarity import (
         auto_cells,
@@ -93,7 +93,7 @@ def main(n: int = 1_000_000) -> None:
         build_ivfsq_index, corpus, idx_full, n_cells=row["cells_full"]
     )
     appr, row["t_serve_sq8"] = timed(
-        lambda: search_ivfsq_index(
+        lambda: search_index(
             spark, idx_full, queries, k=5, n_probe=2
         ).persist()
     )
@@ -103,7 +103,7 @@ def main(n: int = 1_000_000) -> None:
 
     # --- remedy (b), the s20 serve: overfetch + exact re-rank -------
     appr, row["t_serve_rerank"] = timed(
-        lambda: search_ivfsq_index(
+        lambda: search_index(
             spark, idx_full, queries, k=5, n_probe=2, rerank=50, vectors=corpus
         ).persist()
     )
@@ -145,7 +145,7 @@ def main(n: int = 1_000_000) -> None:
     )
     exact_dd.count()
     appr, row["t_serve_dedup"] = timed(
-        lambda: search_ivfsq_index(
+        lambda: search_index(
             spark, idx_dd, queries, k=5, n_probe=2
         ).persist()
     )

@@ -35,7 +35,7 @@ from scripts.scale_1m_index import stacked_corpus, timed  # noqa: E402
 def main(sizes=(100_000, 1_000_000)) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         maxsim_rerank,
@@ -60,12 +60,12 @@ def main(sizes=(100_000, 1_000_000)) -> None:
         )
 
         def serve(**kw):
-            return search_ivfsq_index(
+            return search_index(
                 spark, idx, queries, k=5, n_probe=2, **kw
             ).count()
 
         def serve_maxsim(n_tokens=4, R=50):
-            sl = search_ivfsq_index(spark, idx, queries, k=R, n_probe=2)
+            sl = search_index(spark, idx, queries, k=R, n_probe=2)
             return maxsim_rerank(
                 sl, queries, corpus, k=5, n_tokens=n_tokens
             ).count()
@@ -96,7 +96,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
             )
             truth.persist().count()
             row["t_exact_maxsim_25q"] = round(time.perf_counter() - t0, 2)
-            sl = search_ivfsq_index(spark, idx, tq, k=50, n_probe=2)
+            sl = search_index(spark, idx, tq, k=50, n_probe=2)
             appr = maxsim_rerank(sl, tq, corpus, k=5, n_tokens=4)
             rec = (
                 topk_recall(truth, appr, k=5)

@@ -45,11 +45,11 @@ def du_bytes(path: str) -> int:
 
 def main(sizes=(100_000, 1_000_000)) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
         build_ivfpq_index,
         build_ivfsq_index,
         compact_index,
-        search_ivfpq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.similarity import (
         auto_cells,
@@ -92,7 +92,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
         row["bytes_sq_codes"] = du_bytes(idx_sq)
 
         def serve(**kw):
-            return search_ivfpq_index(
+            return search_index(
                 spark, idx, queries, k=5, n_probe=2, **kw
             ).count()
 
@@ -111,7 +111,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
             ("adc", {}),
             ("rerank50", {"rerank": 50, "vectors": corpus}),
         ):
-            appr = search_ivfpq_index(
+            appr = search_index(
                 spark, idx, queries, k=5, n_probe=2, **kw
             )
             rec = (
@@ -130,7 +130,7 @@ def main(sizes=(100_000, 1_000_000)) -> None:
                 + 0.05 * F.sin(F.col("vec_id") * 131 + 999 + i.cast("double")),
             ).alias("embedding"),
         )
-        _, row["t_append_2k"] = timed(append_to_ivfpq_index, shard, idx)
+        _, row["t_append_2k"] = timed(append_index, shard, idx)
         serve()
         row["t_serve_post_append"] = min(timed(serve)[1] for _ in range(3))
         (fb, fa), row["t_compact"] = timed(compact_index, spark, idx)

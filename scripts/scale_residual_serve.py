@@ -47,7 +47,7 @@ def main(
 ) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfpq_index,
-        search_ivfpq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.pq import (
         pq_kmeans_codebooks,
@@ -115,7 +115,7 @@ def main(
 
         for rerank in (None, 50, 200):
             def serve():
-                return search_ivfpq_index(
+                return search_index(
                     spark, idx, queries, k=5, n_probe=2, rerank=rerank,
                     vectors=None if rerank is None else corpus,
                 ).persist()

@@ -45,7 +45,7 @@ def timed(fn, *a, **kw):
 def main(n: int = 1_000_000) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.similarity import (
         auto_cells,
@@ -94,7 +94,7 @@ def main(n: int = 1_000_000) -> None:
         _, t_build = timed(
             build_ivfsq_index, corpus, idx, n_cells=cells, centroids=cent
         )
-        appr_sq = search_ivfsq_index(spark, idx, queries, k=5, n_probe=2)
+        appr_sq = search_index(spark, idx, queries, k=5, n_probe=2)
         row[f"recall_{label}_sq8"] = recall_of(appr_sq)
         row[f"t_build_{label}"] = t_build
         # exact-scored serve over the SAME centroids

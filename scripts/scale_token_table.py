@@ -35,7 +35,7 @@ N_QUERIES = 200
 def main(sizes=(1_000_000,)) -> None:
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         maxsim_rerank_tokens,
@@ -67,7 +67,7 @@ def main(sizes=(1_000_000,)) -> None:
         _, row["t_write_token_table"] = timed(write_token_table, toks, tokpq)
 
         def serve_explode():
-            sl = search_ivfsq_index(spark, idx, queries, k=R, n_probe=2)
+            sl = search_index(spark, idx, queries, k=R, n_probe=2)
             qt = toks.filter(F.col("vec_id") < N_QUERIES)
             return maxsim_rerank_tokens(sl, qt, toks, k=5).count()
 
@@ -76,7 +76,7 @@ def main(sizes=(1_000_000,)) -> None:
             # broadcast-semi-join candidate cut inside the rerank —
             # only the token SOURCE differs (parquet scan vs slice
             # derivation over the corpus scan)
-            sl = search_ivfsq_index(spark, idx, queries, k=R, n_probe=2)
+            sl = search_index(spark, idx, queries, k=R, n_probe=2)
             tt = read_token_table(spark, tokpq)
             qt = tt.filter(F.col("vec_id") < N_QUERIES)
             return maxsim_rerank_tokens(sl, qt, tt, k=5).count()
@@ -87,7 +87,7 @@ def main(sizes=(1_000_000,)) -> None:
             # it avoids paying the first stage twice), its ids prune
             # the token scan as a pushed In filter
             sl = (
-                search_ivfsq_index(spark, idx, queries, k=R, n_probe=2)
+                search_index(spark, idx, queries, k=R, n_probe=2)
                 .select("query_id", "candidate_id")
                 .persist()
             )

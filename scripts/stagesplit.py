@@ -34,15 +34,12 @@ import time
 
 
 #: (module path, function name, label) — the eager lifecycle stages
-#: bench.py attributes, plus the aliases bench.py misses (compact_index
-#: is the alias `compact_if_accreted` actually calls) and the BM25 /
-#: token-index builders for the r14 deep-pass rows.
+#: bench.py attributes, plus the BM25 / token-index builders for the
+#: r14 deep-pass rows.
 STAGED = [
     ("operators.ann_index", "build_ivfsq_index", "build"),
-    ("operators.ann_index", "append_to_ivfsq_index", "append"),
-    ("operators.ann_index", "compact_ivfsq_index", "compact"),
-    ("operators.ann_index", "compact_index", "compact"),
     ("operators.ann_index", "append_index", "append"),
+    ("operators.ann_index", "compact_index", "compact"),
     ("operators.similarity", "kmeans_centroids", "fit"),
     ("operators.similarity", "semantic_dedup", "dedup"),
     ("operators.maxsim", "build_token_index", "tok_index"),
@@ -90,8 +87,8 @@ def main() -> None:
     sc = spark.sparkContext
 
     # --- wrap the eager stage functions: wall-time + job description.
-    # Wrapped functions NEST (ingest_batch -> append_index ->
-    # append_to_ivfsq_index; reconcile -> append -> publish): the job
+    # Wrapped functions NEST (ingest_batch -> append_index;
+    # reconcile -> append -> publish): the job
     # description is always refined to the INNERMOST label (finest
     # event-log attribution), but wall seconds are recorded only by
     # the OUTERMOST wrapped call so the per-phase splits partition the

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from mergers_acquisitions_predictions_spark.operators.ann_index import (
     build_ivfsq_index,
-    search_ivfsq_index,
+    search_index,
 )
 from mergers_acquisitions_predictions_spark.operators.sq import ivfsq_topk
 from mergers_acquisitions_predictions_spark.sources.readers import load_table
@@ -21,7 +21,7 @@ def test_persisted_index_matches_inmemory_path(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=16)
-    got = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    got = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     want = sorted(map(tuple, ivfsq_topk(q, e, k=5, n_cells=16, n_probe=2).collect()))
     assert got == want  # bit-identical: same stats/codes/fold orders
 
@@ -35,7 +35,7 @@ def test_probe_scan_is_partition_pruned(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 2)
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=16)
-    out = search_ivfsq_index(spark, path, q, k=5, n_probe=2)
+    out = search_index(spark, path, q, k=5, n_probe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the isin over the partition column must appear as a
     # PartitionFilter on the codes scan (directory-level pruning),
@@ -76,7 +76,7 @@ def test_index_cell_stats_integrity_probe(spark, tmp_path):
     once (the post-append integrity probe). Works on the PQ kind too
     (the diagnostic never touches geometry)."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfpq_index,
         index_cell_stats,
     )
@@ -94,7 +94,7 @@ def test_index_cell_stats_integrity_probe(spark, tmp_path):
     assert stats0.agg(F.sum("n_rows")).first()[0] == e.filter(
         F.col("vec_id") % 2 == 0
     ).count()
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     stats1 = {r["cell_id"]: r["n_rows"] for r in index_cell_stats(spark, path).collect()}
     assert sum(stats1.values()) == n  # every row exactly once
     # cross-check against the in-plan assignment under the SAME
@@ -122,7 +122,7 @@ def test_append_shard_searchable_with_frozen_quantizer(spark, tmp_path):
     and is immediately searchable; original results are unchanged
     for queries whose neighborhoods the shard doesn't enter."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
     )
 
     e = load_table(spark, SF, "embeddings")
@@ -131,10 +131,10 @@ def test_append_shard_searchable_with_frozen_quantizer(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfsq_index(base, path, n_cells=16)
     n_base = spark.read.parquet(f"{path}/codes").count()
-    append_to_ivfsq_index(shard, path)
+    append_index(shard, path)
     assert spark.read.parquet(f"{path}/codes").count() == n_base + 10
     q = e.filter(F.col("vec_id") == 3)  # a shard member as the query
-    got = search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()
+    got = search_index(spark, path, q, k=5, n_probe=2).collect()
     assert len(got) == 5
     assert all(r.query_id == 3 and r.candidate_id != 3 for r in got)
 
@@ -187,7 +187,7 @@ def test_streaming_queries_served_from_persisted_index(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            search_ivfsq_index(
+            search_index(
                 spark, path, e.filter(F.col("vec_id") < 3), k=5, n_probe=2
             ).collect(),
         )
@@ -207,7 +207,7 @@ def test_filtered_search_prefilter_semantics(spark, tmp_path):
     allowed = e.filter(F.col("label") % 2 == 1)
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=16)
-    got = search_ivfsq_index(spark, path, q, k=5, n_probe=2, allowed=allowed)
+    got = search_index(spark, path, q, k=5, n_probe=2, allowed=allowed)
     rows = got.collect()
     odd_ids = {r["vec_id"] for r in allowed.select("vec_id").collect()}
     assert rows and all(r.candidate_id in odd_ids for r in rows)
@@ -216,7 +216,7 @@ def test_filtered_search_prefilter_semantics(spark, tmp_path):
         assert ranks == list(range(1, len(ranks) + 1))
     # stricter-filter consistency: shrinking the allowed set can only
     # remove candidates, and survivors keep their relative order
-    tight = search_ivfsq_index(
+    tight = search_index(
         spark, path, q, k=5, n_probe=2,
         allowed=e.filter(F.col("label") == 1),
     ).collect()
@@ -244,7 +244,7 @@ def test_filtered_search_keeps_partition_pruning(spark, tmp_path):
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=16)
-    out = search_ivfsq_index(
+    out = search_index(
         spark, path, e.filter(F.col("vec_id") < 2), k=5, n_probe=2,
         allowed=e.filter(F.col("label") % 2 == 1),
     )
@@ -254,25 +254,25 @@ def test_filtered_search_keeps_partition_pruning(spark, tmp_path):
 
 
 def test_compaction_is_layout_only_and_merges_files(spark, tmp_path):
-    """compact_ivfsq_index: after two append shards the codes carry
+    """compact_index: after two append shards the codes carry
     extra per-cell files; compaction must reduce the file count,
     keep search results BIT-identical, and keep partition pruning."""
     import os
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
-        compact_ivfsq_index,
+        append_index,
+        compact_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=8)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 1), path)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 3), path)
+    append_index(e.filter(F.col("vec_id") % 4 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 4 == 3), path)
     q = e.filter(F.col("vec_id") < 5)
-    pre = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    pre = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     n_codes_pre = spark.read.parquet(f"{path}/codes").count()
-    before, after = compact_ivfsq_index(spark, path)
+    before, after = compact_index(spark, path)
     assert after < before, (before, after)
     # pointer-file commit: CURRENT names the new generation; no
     # staging leftovers; the REPLACED generation (legacy codes/) is
@@ -286,7 +286,7 @@ def test_compaction_is_layout_only_and_merges_files(spark, tmp_path):
     assert not [d for d in os.listdir(path) if ".staging_" in d]
     assert os.path.isdir(f"{path}/codes")  # retained previous gen
     assert spark.read.parquet(_codes_path(spark, path)).count() == n_codes_pre
-    post_df = search_ivfsq_index(spark, path, q, k=5, n_probe=2)
+    post_df = search_index(spark, path, q, k=5, n_probe=2)
     post = sorted(map(tuple, post_df.collect()))
     assert pre == post  # layout-only: bytes moved, meaning identical
     plan = post_df._jdf.queryExecution().executedPlan().toString()
@@ -299,18 +299,18 @@ def test_compaction_idempotent_on_fresh_build(spark, tmp_path):
     clustered; results unchanged; second compaction a no-op-shaped
     rewrite)."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        compact_ivfsq_index,
+        compact_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
     q = e.filter(F.col("vec_id") < 3)
-    pre = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
-    b1, a1 = compact_ivfsq_index(spark, path)
-    b2, a2 = compact_ivfsq_index(spark, path)
+    pre = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
+    b1, a1 = compact_index(spark, path)
+    b2, a2 = compact_index(spark, path)
     assert b2 == a1  # second pass sees the first's layout
-    post = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    post = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert pre == post
     # generation chain: g2 live, g1 retained, g0 (codes) reaped
     import os
@@ -334,15 +334,15 @@ def test_reader_never_sees_missing_codes_dir_mid_compaction(spark, tmp_path):
     and promote; this probe would have caught it."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         _codes_path,
-        append_to_ivfsq_index,
-        compact_ivfsq_index,
+        append_index,
+        compact_index,
     )
     from mergers_acquisitions_predictions_spark.sources import fs as FS
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=8)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     n_total = spark.read.parquet(_codes_path(spark, path)).count()
 
     probes: list[int] = []
@@ -370,7 +370,7 @@ def test_reader_never_sees_missing_codes_dir_mid_compaction(spark, tmp_path):
     try:
         mp.setattr(FS, "fs_rename", probing_rename)
         mp.setattr(FS, "fs_replace_file", probing_replace)
-        compact_ivfsq_index(spark, path)
+        compact_index(spark, path)
     finally:
         mp.undo()
     probe()
@@ -395,7 +395,7 @@ def test_compaction_pointer_swap_failure_leaves_old_index_serving(
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         _resolve_codes_name,
-        compact_ivfsq_index,
+        compact_index,
     )
     from mergers_acquisitions_predictions_spark.sources import fs as FS
 
@@ -403,14 +403,14 @@ def test_compaction_pointer_swap_failure_leaves_old_index_serving(
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
     q = e.filter(F.col("vec_id") < 3)
-    pre = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    pre = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
 
     def failing_swap(spark_, p, text):
         raise OSError("injected pointer-swap failure")
 
     monkeypatch.setattr(FS, "fs_replace_file", failing_swap)
     with pytest.raises(OSError, match="injected pointer-swap"):
-        compact_ivfsq_index(spark, path)
+        compact_index(spark, path)
     monkeypatch.undo()
     # pointer untouched (the injected failure precedes any delete) →
     # the OLD index serves; the promoted orphan is retained, complete
@@ -419,16 +419,16 @@ def test_compaction_pointer_swap_failure_leaves_old_index_serving(
     orphans = [d for d in os.listdir(path) if d.startswith("codes_g")]
     assert orphans == ["codes_g000001"]
     assert os.path.exists(f"{path}/codes_g000001/_meta")
-    post = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    post = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert pre == post
     # the NEXT successful maintenance commit numbers PAST the orphan
     # (no name collision) and reaps it as an ordinary old generation
-    compact_ivfsq_index(spark, path)
+    compact_index(spark, path)
     assert _resolve_codes_name(spark, path) == "codes_g000002"
     gens = sorted(d for d in os.listdir(path) if d.startswith("codes_g"))
     assert gens == ["codes_g000002"]  # orphan reaped; "codes" retained
     assert os.path.isdir(f"{path}/codes")
-    post2 = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    post2 = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert pre == post2
 
 
@@ -468,7 +468,7 @@ def test_foreign_rewrite_seen_by_next_serve(spark, tmp_path):
 
     def serve():
         return sorted(
-            map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+            map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
         )
 
     build_ivfsq_index(e, path, n_cells=8)
@@ -482,9 +482,9 @@ def test_foreign_rewrite_seen_by_next_serve(spark, tmp_path):
     with open(meta_path) as f:
         original = f.read()
     bad = json.loads(original)
-    bad.update(kind="ivfpq", note="foreign")
+    bad.update(kind="ivfzz", note="foreign")
     _foreign_write(meta_path, json.dumps(bad))
-    with pytest.raises(ValueError, match="kind='ivfpq', not ivfsq"):
+    with pytest.raises(ValueError, match="unknown index kind 'ivfzz'"):
         serve()
     _foreign_write(meta_path, original)
     assert serve() == want8
@@ -499,8 +499,8 @@ def test_second_session_reads_each_generation_meta_once(spark, tmp_path, monkeyp
     cache keys on the file's length and mtime, not on the session),
     and its results are bit-identical to the building session's."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
-        compact_ivfsq_index,
+        append_index,
+        compact_index,
     )
     from mergers_acquisitions_predictions_spark.sources import fs as FS
 
@@ -525,7 +525,7 @@ def test_second_session_reads_each_generation_meta_once(spark, tmp_path, monkeyp
         return sorted(
             map(
                 tuple,
-                search_ivfsq_index(session, path, queries, k=5, n_probe=2).collect(),
+                search_index(session, path, queries, k=5, n_probe=2).collect(),
             )
         )
 
@@ -534,8 +534,8 @@ def test_second_session_reads_each_generation_meta_once(spark, tmp_path, monkeyp
     q = e.filter(F.col("vec_id") < 5)
     assert first == [serve(spark, q)] * 3
 
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
-    compact_ivfsq_index(spark, path)  # live = codes_g000001
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    compact_index(spark, path)  # live = codes_g000001
     reads.clear()
     again = [serve(other, q2) for _ in range(3)]
     assert reads == ["codes_g000001/_meta"]
@@ -551,24 +551,24 @@ def test_legacy_layout_without_pointer_still_serves(spark, tmp_path):
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         _resolve_codes_name,
-        compact_ivfsq_index,
+        compact_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
     q = e.filter(F.col("vec_id") < 3)
-    want = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    want = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
 
     os.remove(f"{path}/CURRENT")  # simulate the pre-pointer layout
     assert _resolve_codes_name(spark, path) == "codes"
-    got = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    got = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert got == want
 
-    compact_ivfsq_index(spark, path)
+    compact_index(spark, path)
     os.remove(f"{path}/CURRENT")
     assert _resolve_codes_name(spark, path) == "codes_g000001"
-    got2 = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    got2 = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert got2 == want
 
 
@@ -583,13 +583,13 @@ def test_rebuild_promotes_generation_and_retains_previous(spark, tmp_path):
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         _resolve_codes_name,
-        compact_ivfsq_index,
+        compact_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
-    compact_ivfsq_index(spark, path)
+    compact_index(spark, path)
     assert _resolve_codes_name(spark, path) == "codes_g000001"
     build_ivfsq_index(e, path, n_cells=8)
     assert _resolve_codes_name(spark, path) == "codes_g000002"
@@ -597,7 +597,7 @@ def test_rebuild_promotes_generation_and_retains_previous(spark, tmp_path):
     # cycle old at the compact) is reaped now
     assert os.path.isdir(f"{path}/codes_g000001")
     assert not os.path.isdir(f"{path}/codes")
-    got = search_ivfsq_index(
+    got = search_index(
         spark, path, e.filter(F.col("vec_id") < 3), k=5, n_probe=2
     )
     assert got.count() == 15
@@ -614,27 +614,25 @@ def test_rebuild_keeps_stale_reader_consistent(spark, tmp_path):
     import json as _json
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        _read_index_meta,
         _read_meta_text,
         _resolve_codes_name,
-        compact_ivfsq_index,
+        compact_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
-    compact_ivfsq_index(spark, path)  # live = codes_g000001, has _meta
+    compact_index(spark, path)  # live = codes_g000001, has _meta
     stale_name = _resolve_codes_name(spark, path)
     assert stale_name == "codes_g000001"
     build_ivfsq_index(e, path, n_cells=4)  # rebuild with NEW geometry
     # the stale generation still exists and resolves ITS OWN geometry
     old_meta = _json.loads(_read_meta_text(spark, path, stale_name))
-    assert int(old_meta["n_cells"]) == 8
-    assert _read_index_meta(spark, path, stale_name)[4] == 8
+    assert int(old_meta["n_cells"]) == 8 and len(_json.loads(old_meta["centroids"])) == 8
     # while a fresh resolution serves the rebuilt 4-cell index
     new_name = _resolve_codes_name(spark, path)
-    assert _read_index_meta(spark, path, new_name)[4] == 4
-    got = search_ivfsq_index(
+    assert int(_json.loads(_read_meta_text(spark, path, new_name))["n_cells"]) == 4
+    got = search_index(
         spark, path, e.filter(F.col("vec_id") < 3), k=5, n_probe=2
     )
     assert got.count() == 15
@@ -672,7 +670,7 @@ def test_build_with_learned_centroids_roundtrips(spark, tmp_path):
     persisted serve must be bit-identical to the in-memory ivf+SQ8
     path run over the same learned centroids."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        compact_ivfsq_index,
+        compact_index,
     )
     from mergers_acquisitions_predictions_spark.operators.similarity import (
         kmeans_centroids,
@@ -685,7 +683,7 @@ def test_build_with_learned_centroids_roundtrips(spark, tmp_path):
     ).persist()
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, centroids=cent)
-    got = search_ivfsq_index(spark, path, q, k=5, n_probe=2)
+    got = search_index(spark, path, q, k=5, n_probe=2)
     rows = got.collect()
     assert len(rows) == 25
     # persisted meta carries the LEARNED cells (count follows table)
@@ -702,8 +700,8 @@ def test_build_with_learned_centroids_roundtrips(spark, tmp_path):
     assert persisted == fitted
     # lifecycle on learned geometry: compaction stays layout-only
     pre = sorted(map(tuple, rows))
-    compact_ivfsq_index(spark, path)
-    post = sorted(map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect()))
+    compact_index(spark, path)
+    post = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     assert pre == post
     cent.unpersist()
 
@@ -713,7 +711,7 @@ def test_sq8_rerank_restores_clone_cohort_recall(spark, tmp_path):
     clone-saturated corpus the quantized dot cannot separate
     near-duplicate cohorts, so plain SQ8 id-overlap recall collapses;
     an exact re-rank of the overfetched shortlist
-    (search_ivfsq_index(rerank=..., vectors=corpus)) restores it.
+    (search_index(rerank=..., vectors=corpus)) restores it.
     Also: rerank without vectors, and rerank < k, fail loudly."""
     import pytest
 
@@ -743,8 +741,8 @@ def test_sq8_rerank_restores_clone_cohort_recall(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfsq_index(corpus, path, n_cells=8)
     exact = brute_force_topk(q, corpus, k=5).select("query_id", "candidate_id")
-    plain = search_ivfsq_index(spark, path, q, k=5, n_probe=2)
-    rer = search_ivfsq_index(
+    plain = search_index(spark, path, q, k=5, n_probe=2)
+    rer = search_index(
         spark, path, q, k=5, n_probe=2, rerank=60, vectors=corpus
     )
     assert rer.columns == ["query_id", "candidate_id", "cos_sim", "rank"]
@@ -757,9 +755,9 @@ def test_sq8_rerank_restores_clone_cohort_recall(spark, tmp_path):
     assert avg_rer > avg_plain, (avg_plain, avg_rer)
     assert avg_rer == 1.0, avg_rer
     with pytest.raises(ValueError, match="needs `vectors`"):
-        search_ivfsq_index(spark, path, q, k=5, n_probe=2, rerank=60)
+        search_index(spark, path, q, k=5, n_probe=2, rerank=60)
     with pytest.raises(ValueError, match="must be >= k"):
-        search_ivfsq_index(
+        search_index(
             spark, path, q, k=5, n_probe=2, rerank=3, vectors=corpus
         )
     corpus.unpersist()
@@ -824,7 +822,7 @@ def test_rerank_serve_is_oracle_replayable(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=None)  # auto cells, oracle-matched
     got = normalize(
-        search_ivfsq_index(
+        search_index(
             spark, path, q, k=5, n_probe=2, rerank=15, vectors=e
         ).toPandas()
     )
@@ -869,7 +867,7 @@ def test_dedup_rerank_compose_is_oracle_replayable(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfsq_index(kept, path, n_cells=None)
     got = normalize(
-        search_ivfsq_index(
+        search_index(
             spark,
             path,
             e.filter(F.col("vec_id") < 5),
@@ -897,7 +895,7 @@ def test_dedup_rerank_compose_is_oracle_replayable(spark, tmp_path):
 
 
 def test_serve_score_blas_matches_fold(spark, tmp_path):
-    """`search_ivfsq_index(score_blas=True)` must return the SAME
+    """`search_index(score_blas=True)` must return the SAME
     frame as the fold serve across k / n_probe / allowed / rerank
     combinations at two SFs — the parity-scope empirical leg (the
     matmul diverges only at .5 rounding boundaries within float
@@ -921,12 +919,12 @@ def test_serve_score_blas_matches_fold(spark, tmp_path):
         ]
         for kw in cases:
             fold = sorted(
-                map(tuple, search_ivfsq_index(spark, path, q, **kw).collect())
+                map(tuple, search_index(spark, path, q, **kw).collect())
             )
             blas = sorted(
                 map(
                     tuple,
-                    search_ivfsq_index(
+                    search_index(
                         spark, path, q, score_blas=True, **kw
                     ).collect(),
                 )
@@ -934,17 +932,65 @@ def test_serve_score_blas_matches_fold(spark, tmp_path):
             assert fold == blas, (tag, kw)
 
 
+def test_serve_score_blas_over_bound_raises(spark, sf_dir, tmp_path, monkeypatch):
+    """The ``score_blas`` serve collects its (query, probed cell) rows
+    to the driver: past `MAX_BLAS_PROBE_ROWS` it raises, naming the
+    bound, instead of collecting an unbounded batch."""
+    import pytest
+
+    from mergers_acquisitions_predictions_spark.operators import ann_index
+
+    e = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivfsq_index(e, path, n_cells=8)
+    q = e.filter(F.col("vec_id") < 5)  # 5 queries × 2 probes = 10 rows
+    monkeypatch.setattr(ann_index, "MAX_BLAS_PROBE_ROWS", 9)
+    with pytest.raises(ValueError, match="MAX_BLAS_PROBE_ROWS=9"):
+        search_index(spark, path, q, k=3, n_probe=2, score_blas=True)
+    monkeypatch.setattr(ann_index, "MAX_BLAS_PROBE_ROWS", 10)
+    assert search_index(spark, path, q, k=3, n_probe=2, score_blas=True).count() == 15
+
+
+def test_unknown_recorded_kind_raises_naming_it(spark, sf_dir, tmp_path):
+    """The kind recorded in ``_meta`` picks the codec; a kind no codec
+    serves fails serve, append and rebuild-by-kind loudly, naming the
+    kind — never a KeyError deep in a geometry parse."""
+    import json
+
+    import pytest
+
+    from mergers_acquisitions_predictions_spark.operators.ann_index import (
+        append_index,
+        index_builder,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=4)
+    meta_path = f"{path}/codes/_meta"
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["kind"] = "hnsw"
+    _foreign_write(meta_path, json.dumps(meta))
+    with pytest.raises(ValueError, match="unknown index kind 'hnsw'"):
+        search_index(spark, path, e.filter(F.col("vec_id") < 2), k=3)
+    with pytest.raises(ValueError, match="unknown index kind 'hnsw'"):
+        append_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    with pytest.raises(ValueError, match="unknown index kind 'hnsw'"):
+        index_builder("hnsw")
+
+
 def test_streaming_index_ingest_matches_batch_append(spark, tmp_path):
     """Round 12: the `ingest_vector_stream` foreachBatch sink — a REAL
     availableNow file stream of arriving vectors appended to the
     persisted index under its frozen geometry, in MULTIPLE micro-batch
     files — must leave the index serving bit-identically to the batch
-    `append_to_ivfsq_index` path over the same shard (s14's
+    `append_index` path over the same shard (s14's
     equivalence through the streaming entry point)."""
     import json as _json
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         ingest_vector_stream,
@@ -988,17 +1034,17 @@ def test_streaming_index_ingest_matches_batch_append(spark, tmp_path):
     )
     stream.awaitTermination(180)
 
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), batch_path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), batch_path)
     got = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     want = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, batch_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert got == want and len(want) == 25
@@ -1013,9 +1059,9 @@ def test_streaming_ingest_pq_residual_kind(spark, tmp_path):
     import json as _json
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
         build_ivfpq_index,
-        search_ivfpq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         ingest_vector_stream,
@@ -1057,17 +1103,17 @@ def test_streaming_ingest_pq_residual_kind(spark, tmp_path):
         .start()
     )
     stream.awaitTermination(180)
-    append_to_ivfpq_index(odd, batch_path)
+    append_index(odd, batch_path)
     got = sorted(
         map(
             tuple,
-            search_ivfpq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     want = sorted(
         map(
             tuple,
-            search_ivfpq_index(spark, batch_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert got == want and len(want) == 25
@@ -1104,7 +1150,7 @@ def test_extra_meta_geometry_collision_is_loud(spark, tmp_path):
     ok = str(tmp_path / "ok_sq")
     build_ivfsq_index(e, ok, n_cells=4, extra_meta={"n_tokens": 4})
     q = e.limit(2)
-    assert search_ivfsq_index(spark, ok, q, k=3, n_probe=2).count() == 6
+    assert search_index(spark, ok, q, k=3, n_probe=2).count() == 6
 
 
 def test_staged_ingest_exactly_once_through_real_stream(spark, tmp_path):
@@ -1120,7 +1166,7 @@ def test_staged_ingest_exactly_once_through_real_stream(spark, tmp_path):
     import json as _json
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         ingest_batch_staged,
@@ -1168,17 +1214,17 @@ def test_staged_ingest_exactly_once_through_real_stream(spark, tmp_path):
     )
     stream.awaitTermination(180)
 
-    append_to_ivfsq_index(odd, batch_path)
+    append_index(odd, batch_path)
     want = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, batch_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
         )
     )
     got = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert got == want and len(want) == 25
@@ -1198,7 +1244,7 @@ def test_staged_ingest_exactly_once_through_real_stream(spark, tmp_path):
     again = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert again == want
@@ -1237,7 +1283,7 @@ def test_sharded_fanout_serve(spark, tmp_path):
     # independent re-derivation: union the single-shard serves and
     # re-rank globally with the serve's own key
     parts = [
-        search_ivfsq_index(spark, p, q, k=5, n_probe=2).select(
+        search_index(spark, p, q, k=5, n_probe=2).select(
             "query_id", "candidate_id", "sq_sim"
         )
         for p in paths
@@ -1279,7 +1325,7 @@ def test_append_only_ingest_through_real_stream(spark, tmp_path):
     import os
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         ingest_vector_stream_append_only,
@@ -1334,17 +1380,17 @@ def test_append_only_ingest_through_real_stream(spark, tmp_path):
     )
     assert subdirs == ["batch_id=0", "batch_id=1"]
 
-    append_to_ivfsq_index(odd, batch_path)
+    append_index(odd, batch_path)
     want = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, batch_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
         )
     )
     got = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert got == want and len(want) == 25
@@ -1362,7 +1408,7 @@ def test_append_only_ingest_through_real_stream(spark, tmp_path):
     again = sorted(
         map(
             tuple,
-            search_ivfsq_index(spark, stream_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert again == want
@@ -1392,7 +1438,7 @@ def test_reconcile_dedupes_cross_batch_duplicate_ids(spark, tmp_path):
     appended = reconcile_index_from_snapshot(spark, path, staged)
     assert appended == odd.count()
     # every id encoded exactly once → k hits per query, no duplicates
-    hits = search_ivfsq_index(
+    hits = search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     ).collect()
     assert len(hits) == 25
@@ -1443,7 +1489,7 @@ def test_accretion_monitor_and_trigger(spark, tmp_path):
     above the threshold, be layout-only (bit-identical serve), and
     report the common no-op fast path below it."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         compact_if_accreted,
         index_accretion_stats,
     )
@@ -1454,12 +1500,12 @@ def test_accretion_monitor_and_trigger(spark, tmp_path):
     build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=16)
     s0 = index_accretion_stats(spark, path)
     assert s0["n_cells"] == 16 and s0["n_files"] >= 16
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 1), path)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 4 == 3), path)
+    append_index(e.filter(F.col("vec_id") % 4 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 4 == 3), path)
     s1 = index_accretion_stats(spark, path)
     assert s1["max_files_per_cell"] > s0["max_files_per_cell"]
     before = sorted(
-        map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
     )
     # below threshold: no-op, no new generation
     fired, _ = compact_if_accreted(
@@ -1473,7 +1519,7 @@ def test_accretion_monitor_and_trigger(spark, tmp_path):
     assert s2["max_files_per_cell"] <= s1["max_files_per_cell"]
     assert s2["n_files"] < s1["n_files"]
     after = sorted(
-        map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
     )
     assert after == before
 
@@ -1486,8 +1532,8 @@ def test_compact_accepts_monitor_file_count(spark, tmp_path):
     compact's own listing would, and the compacted serve stays
     bit-identical."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
-        compact_ivfsq_index,
+        append_index,
+        compact_index,
         index_accretion_stats,
     )
 
@@ -1495,18 +1541,18 @@ def test_compact_accepts_monitor_file_count(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 3)
     path = str(tmp_path / "idx_fb")
     build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=16)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     stats = index_accretion_stats(spark, path)
     pre = sorted(
-        map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
     )
-    before, after = compact_ivfsq_index(
+    before, after = compact_index(
         spark, path, files_before=stats["n_files"]
     )
     assert before == stats["n_files"]  # the monitor's count, verbatim
     assert after == index_accretion_stats(spark, path)["n_files"]
     post = sorted(
-        map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
     )
     assert post == pre
 
@@ -1575,9 +1621,9 @@ def test_staged_reconcile_is_kind_agnostic_pq_residual(spark, tmp_path):
     the residual flag — equal to the batch PQ append — and a replay
     still appends nothing."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
         build_ivfpq_index,
-        search_ivfpq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         ingest_batch_staged,
@@ -1596,17 +1642,17 @@ def test_staged_reconcile_is_kind_agnostic_pq_residual(spark, tmp_path):
     staged = str(tmp_path / "staged_tbl")
     assert ingest_batch_staged(staged_path, staged, odd, batch_id=0) == odd.count()
     assert ingest_batch_staged(staged_path, staged, odd, batch_id=0) == 0
-    append_to_ivfpq_index(odd, batch_path)
+    append_index(odd, batch_path)
     got = sorted(
         map(
             tuple,
-            search_ivfpq_index(spark, staged_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, staged_path, q, k=5, n_probe=2).collect(),
         )
     )
     want = sorted(
         map(
             tuple,
-            search_ivfpq_index(spark, batch_path, q, k=5, n_probe=2).collect(),
+            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
         )
     )
     assert got == want and len(want) == 25
@@ -1619,7 +1665,7 @@ def test_rebuild_if_drifted_trigger(spark, tmp_path):
     threshold it is a no-op that reports the measured recall; the
     probe itself is kind-agnostic."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
         build_ivfpq_index,
         index_recall_probe,
         rebuild_if_drifted,
@@ -1629,7 +1675,7 @@ def test_rebuild_if_drifted_trigger(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx_drift")
     build_ivfsq_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=16)
-    append_to_ivfsq_index(e.filter(F.col("vec_id") % 2 == 1), path)
+    append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     probe = index_recall_probe(spark, path, q, e, k=5, n_probe=2)
     rows = {r["query_id"]: r["recall"] for r in probe.collect()}
     assert len(rows) == 5 and all(0.0 <= v <= 1.0 for v in rows.values())
@@ -1647,10 +1693,10 @@ def test_rebuild_if_drifted_trigger(spark, tmp_path):
     fresh = str(tmp_path / "idx_fresh")
     build_ivfsq_index(e, fresh, n_cells=16)
     got = sorted(
-        map(tuple, search_ivfsq_index(spark, path, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect())
     )
     want = sorted(
-        map(tuple, search_ivfsq_index(spark, fresh, q, k=5, n_probe=2).collect())
+        map(tuple, search_index(spark, fresh, q, k=5, n_probe=2).collect())
     )
     assert got == want and len(want) == 25
     # kind-agnostic probe: PQ index goes through the ADC serve

@@ -88,7 +88,7 @@ def test_build_with_blas_assignment_serves_identically(spark, tmp_path):
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.sources.readers import load_table
 
@@ -97,8 +97,8 @@ def test_build_with_blas_assignment_serves_identically(spark, tmp_path):
     p1, p2 = str(tmp_path / "fold"), str(tmp_path / "blas")
     build_ivfsq_index(e, p1, n_cells=16)
     build_ivfsq_index(e, p2, n_cells=16, assign_blas=True)
-    got1 = sorted(map(tuple, search_ivfsq_index(spark, p1, q, k=5, n_probe=2).collect()))
-    got2 = sorted(map(tuple, search_ivfsq_index(spark, p2, q, k=5, n_probe=2).collect()))
+    got1 = sorted(map(tuple, search_index(spark, p1, q, k=5, n_probe=2).collect()))
+    got2 = sorted(map(tuple, search_index(spark, p2, q, k=5, n_probe=2).collect()))
     assert got1 == got2
     codes1 = sorted(map(tuple, spark.read.parquet(f"{p1}/codes").collect()))
     codes2 = sorted(map(tuple, spark.read.parquet(f"{p2}/codes").collect()))

@@ -359,7 +359,7 @@ def test_facade_ann_index_kind_dispatch(spark, tmp_path):
     path = str(tmp_path / "pqidx")
     eng.build_ann_index(e, path, kind="ivfpq", n_cells=4)
     hits = eng.search_ann_index(
-        path, e.filter(F.col("vec_id") < 2), k=3, kind="ivfpq", n_probe=2
+        path, e.filter(F.col("vec_id") < 2), k=3, n_probe=2
     ).collect()
     assert hits and {"query_id", "candidate_id", "adc_dist", "rank"} == set(
         hits[0].asDict()

@@ -643,3 +643,63 @@ def test_driver_window_rotation_rule_r13():
     assert len(fill_r10) == 6
     want = mandatory | fill_r10
     assert want == set(DRIVER_WINDOW)  # exactly fills the 50 slots
+
+
+def test_tooling_imports_resolve():
+    """Every package name the benchmark (perfbench/), the scripts and
+    bench.py import — or wrap by name through bench.py's `_staged` /
+    scripts/stagesplit.py's STAGED table — exists, so a rename in the
+    package cannot silently break them. AST walk, no Spark session."""
+    import ast
+    import importlib
+    import pathlib
+
+    pkg = "mergers_acquisitions_predictions_spark"
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [
+        *sorted((root / "perfbench").glob("*.py")),
+        *sorted((root / "scripts").glob("*.py")),
+        root / "bench.py",
+    ]
+
+    def resolves(module: str, name: str) -> bool:
+        mod = importlib.import_module(module)
+        if hasattr(mod, name):
+            return True
+        try:
+            importlib.import_module(f"{module}.{name}")
+            return True
+        except ModuleNotFoundError:
+            return False
+
+    missing = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        aliases: dict[str, str] = {}  # `import pkg.x as X` → X: pkg.x
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == pkg:
+                        importlib.import_module(a.name)
+                        aliases[a.asname or a.name] = a.name
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == pkg:
+                missing += [
+                    f"{f.name}: {node.module}.{a.name}"
+                    for a in node.names
+                    if not resolves(node.module, a.name)
+                ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "_staged"
+                and isinstance(node.args[0], ast.Name)
+                and node.args[0].id in aliases
+            ):
+                module, name = aliases[node.args[0].id], node.args[1].value
+                if not resolves(module, name):
+                    missing.append(f"{f.name}: _staged {module}.{name}")
+            if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "STAGED":
+                for mod_path, name, _label in ast.literal_eval(node.value):
+                    if not resolves(f"{pkg}.{mod_path}", name):
+                        missing.append(f"{f.name}: STAGED {mod_path}.{name}")
+    assert not missing, missing

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from mergers_acquisitions_predictions_spark.operators.ann_index import (
     build_ivfsq_index,
-    search_ivfsq_index,
+    search_index,
 )
 from mergers_acquisitions_predictions_spark.operators.maxsim import (
     maxsim_rerank,
@@ -201,7 +201,7 @@ def test_token_index_append_lifecycle(spark, tmp_path):
     serve must cover every query doc, return the family's ranking
     contract, and be deterministic across repeated serves."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfsq_index,
+        append_index,
     )
     from mergers_acquisitions_predictions_spark.operators.maxsim import (
         build_token_index,
@@ -221,7 +221,7 @@ def test_token_index_append_lifecycle(spark, tmp_path):
     odd = toks.filter(F.col("vec_id") % 2 == 1)
     split_path = str(tmp_path / "tok_split")
     build_token_index(even, split_path, n_tokens=4)
-    append_to_ivfsq_index(composite_tokens(odd, 4), split_path)
+    append_index(composite_tokens(odd, 4), split_path)
     q = toks.filter(F.col("vec_id") < 3)
     got = sorted(
         map(
@@ -277,7 +277,7 @@ def test_token_index_pq_kind(spark, tmp_path):
         )
     )
     assert warm and len({r[0] for r in warm}) == 3
-    with pytest.raises(ValueError, match="unknown token index kind"):
+    with pytest.raises(ValueError, match="unknown index kind 'hnsw'"):
         build_token_index(toks, str(tmp_path / "x"), n_tokens=4, kind="hnsw")
 
 
@@ -300,7 +300,7 @@ def test_maxsim_serve_is_oracle_replayable(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=None)
-    shortlist = search_ivfsq_index(spark, path, q, k=15, n_probe=2)
+    shortlist = search_index(spark, path, q, k=15, n_probe=2)
     got = normalize(
         maxsim_rerank(shortlist, q, e, k=5, n_tokens=4).toPandas()
     )
@@ -447,7 +447,7 @@ def test_streaming_maxsim_serve_matches_batch(spark, tmp_path):
 
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
         build_ivfsq_index,
-        search_ivfsq_index,
+        search_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
         serve_query_stream,
@@ -489,7 +489,7 @@ def test_streaming_maxsim_serve_matches_batch(spark, tmp_path):
     )
     stream.awaitTermination(120)
 
-    shortlist = search_ivfsq_index(
+    shortlist = search_index(
         spark, path, e.filter(F.col("vec_id") < 3), k=15, n_probe=2
     )
     want = sorted(

@@ -2,8 +2,8 @@
 build/serve equivalence with the in-memory `pq.ivfpq_topk` under
 identical geometry, the partition-pruning contract, the rerank and
 allowed serve modes, the staged-generation rebuild commit it shares
-with the SQ8 kind, and the kind guards that keep one kind's reader
-off the other kind's artifact."""
+with the SQ8 kind, and the recorded kind choosing the codec for the
+one shared serve."""
 
 from __future__ import annotations
 
@@ -13,8 +13,7 @@ from pyspark.sql import functions as F
 from mergers_acquisitions_predictions_spark.operators.ann_index import (
     build_ivfpq_index,
     build_ivfsq_index,
-    search_ivfpq_index,
-    search_ivfsq_index,
+    search_index,
 )
 from mergers_acquisitions_predictions_spark.operators.pq import ivfpq_topk
 from mergers_acquisitions_predictions_spark.sources.readers import load_table
@@ -31,7 +30,7 @@ def test_persisted_pq_matches_inmemory_path(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
     build_ivfpq_index(e, path, n_cells=16, n_subspaces=8, n_codes=16)
-    got = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    got = _rows(search_index(spark, path, q, k=5, n_probe=2))
     want = _rows(
         ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2, n_subspaces=8, n_codes=16)
     )
@@ -44,7 +43,7 @@ def test_persisted_pq_rerank_matches_inmemory(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfpq_index(e, path, n_cells=16)
     got = _rows(
-        search_ivfpq_index(spark, path, q, k=5, n_probe=2, rerank=12, vectors=e)
+        search_index(spark, path, q, k=5, n_probe=2, rerank=12, vectors=e)
     )
     want = _rows(ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2, rerank=12))
     assert got == want  # the exact-rescore expression is shared verbatim
@@ -55,7 +54,7 @@ def test_pq_probe_scan_is_partition_pruned(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 2)
     path = str(tmp_path / "idx")
     build_ivfpq_index(e, path, n_cells=16)
-    out = search_ivfpq_index(spark, path, q, k=5, n_probe=2)
+    out = search_index(spark, path, q, k=5, n_probe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("cell_id" in ln and "IN" in ln.upper() for ln in scan_lines), plan
@@ -67,12 +66,12 @@ def test_pq_allowed_prefilter(spark, tmp_path):
     path = str(tmp_path / "idx")
     build_ivfpq_index(e, path, n_cells=16)
     # allowed = full corpus → identical to the unfiltered serve
-    full = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2, allowed=e))
-    assert full == _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    full = _rows(search_index(spark, path, q, k=5, n_probe=2, allowed=e))
+    assert full == _rows(search_index(spark, path, q, k=5, n_probe=2))
     # allowed = a metadata predicate → pre-filter semantics: every
     # candidate matches, and ranks are dense 1..k over the matches
     allowed = e.filter(F.col("vec_id") % 2 == 0)
-    got = search_ivfpq_index(
+    got = search_index(
         spark, path, q, k=5, n_probe=2, allowed=allowed
     ).collect()
     assert got and all(r["candidate_id"] % 2 == 0 for r in got)
@@ -101,25 +100,32 @@ def test_pq_rebuild_commits_generation(spark, tmp_path):
     build_ivfpq_index(e, path, n_cells=16)  # REBUILD at the live path
     assert fs_read_text(spark, f"{path}/CURRENT").strip() == "codes_g000001"
     assert fs_exists(spark, f"{path}/codes")  # retained one cycle
-    got = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    got = _rows(search_index(spark, path, q, k=5, n_probe=2))
     want = _rows(ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2))
     assert got == want
 
 
-def test_kind_guards_cross_serving(spark, tmp_path):
-    """Serving an IVF-PQ artifact with the SQ8 reader (or vice versa)
-    must fail LOUD on the geometry's kind field, not KeyError deep in
-    a stats parse."""
+def test_engine_serve_takes_kind_from_meta(spark, tmp_path):
+    """`Engine.search_ann_index` names no kind: on a PQ index the
+    recorded kind picks the PQ codec, so the rows carry ``adc_dist``
+    and equal the in-memory `ivfpq_topk` bit for bit — beside an SQ8
+    index served through the same call. ``score_blas`` has no PQ leg
+    and says so."""
+    from mergers_acquisitions_predictions_spark.engine import Engine
+
+    eng = Engine(spark)
     e = load_table(spark, SF, "embeddings")
-    q = e.filter(F.col("vec_id") < 2)
-    pq_path = str(tmp_path / "pq")
-    sq_path = str(tmp_path / "sq")
+    q = e.filter(F.col("vec_id") < 5)
+    pq_path, sq_path = str(tmp_path / "pq"), str(tmp_path / "sq")
     build_ivfpq_index(e, pq_path, n_cells=16)
     build_ivfsq_index(e, sq_path, n_cells=16)
-    with pytest.raises(ValueError, match="kind='ivfpq', not ivfsq"):
-        search_ivfsq_index(spark, pq_path, q, k=5, n_probe=2).collect()
-    with pytest.raises(ValueError, match="kind='ivfsq', not ivfpq"):
-        search_ivfpq_index(spark, sq_path, q, k=5, n_probe=2).collect()
+    got = eng.search_ann_index(pq_path, q, k=5, n_probe=2)
+    assert got.columns == ["query_id", "candidate_id", "adc_dist", "rank"]
+    assert _rows(got) == _rows(ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2))
+    sq = eng.search_ann_index(sq_path, q, k=5, n_probe=2)
+    assert sq.columns == ["query_id", "candidate_id", "sq_sim", "rank"]
+    with pytest.raises(ValueError, match="score_blas=True serves SQ8"):
+        search_index(spark, pq_path, q, k=5, score_blas=True)
 
 
 def test_pq_append_then_serve_matches_full_fit(spark, tmp_path):
@@ -130,22 +136,22 @@ def test_pq_append_then_serve_matches_full_fit(spark, tmp_path):
     post-append serve must equal the in-memory path over the FULL
     corpus exactly."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
     )
 
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
     build_ivfpq_index(e.filter(F.col("vec_id") < 400), path, n_cells=16)
-    append_to_ivfpq_index(e.filter(F.col("vec_id") >= 400), path)
-    got = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    append_index(e.filter(F.col("vec_id") >= 400), path)
+    got = _rows(search_index(spark, path, q, k=5, n_probe=2))
     want = _rows(ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2))
     assert got == want
 
 
 def test_pq_append_dim_mismatch_fails_fast(spark, tmp_path):
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
     )
 
     e = load_table(spark, SF, "embeddings")
@@ -153,7 +159,7 @@ def test_pq_append_dim_mismatch_fails_fast(spark, tmp_path):
     build_ivfpq_index(e, path, n_cells=16)
     short = e.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
     with pytest.raises(ValueError, match="dim=64"):
-        append_to_ivfpq_index(short, path)
+        append_index(short, path)
 
 
 def test_pq_build_codebook_dim_mismatch_fails_fast(spark, tmp_path):
@@ -176,7 +182,7 @@ def test_pq_compact_is_layout_only(spark, tmp_path):
     """`compact_index` (the shared kind-agnostic compaction) on a PQ
     index: fewer files, a committed generation, bit-identical serve."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
         compact_index,
     )
     from mergers_acquisitions_predictions_spark.sources.fs import fs_read_text
@@ -185,15 +191,15 @@ def test_pq_compact_is_layout_only(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "idx")
     build_ivfpq_index(e.filter(F.col("vec_id") < 300), path, n_cells=16)
-    append_to_ivfpq_index(
+    append_index(
         e.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), path
     )
-    append_to_ivfpq_index(e.filter(F.col("vec_id") >= 400), path)
-    pre = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    append_index(e.filter(F.col("vec_id") >= 400), path)
+    pre = _rows(search_index(spark, path, q, k=5, n_probe=2))
     before, after = compact_index(spark, path)
     assert after < before
     assert fs_read_text(spark, f"{path}/CURRENT").strip() == "codes_g000001"
-    assert _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2)) == pre
+    assert _rows(search_index(spark, path, q, k=5, n_probe=2)) == pre
 
 
 def test_residual_persisted_matches_inmemory(spark, tmp_path):
@@ -207,7 +213,7 @@ def test_residual_persisted_matches_inmemory(spark, tmp_path):
     build_ivfpq_index(
         e, path, n_cells=16, n_subspaces=8, n_codes=16, residual=True
     )
-    got = _rows(search_ivfpq_index(spark, path, q, k=5, n_probe=2))
+    got = _rows(search_index(spark, path, q, k=5, n_probe=2))
     want = _rows(
         ivfpq_topk(
             q, e, k=5, n_cells=16, n_probe=2, n_subspaces=8, n_codes=16,
@@ -227,7 +233,7 @@ def test_residual_flag_survives_append_and_compact(spark, tmp_path):
     shard would silently corrupt the index), and compaction must carry
     the flag forward byte-identically (layout-only contract)."""
     from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_to_ivfpq_index,
+        append_index,
         compact_index,
     )
 
@@ -239,9 +245,9 @@ def test_residual_flag_survives_append_and_compact(spark, tmp_path):
     build_ivfpq_index(
         even, split, n_cells=16, n_subspaces=8, n_codes=16, residual=True
     )
-    append_to_ivfpq_index(odd, split)
-    served = _rows(search_ivfpq_index(spark, split, q, k=5, n_probe=2))
+    append_index(odd, split)
+    served = _rows(search_index(spark, split, q, k=5, n_probe=2))
     assert served and len({r[0] for r in served}) == 5
     before, after = compact_index(spark, split)
     assert after <= before
-    assert _rows(search_ivfpq_index(spark, split, q, k=5, n_probe=2)) == served
+    assert _rows(search_index(spark, split, q, k=5, n_probe=2)) == served

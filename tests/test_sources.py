@@ -176,37 +176,6 @@ def test_token_balanced_shards(spark, tmp_path):
     assert dirs == {f"shard={s}" for s in set(shards)}
 
 
-def test_write_parquet_observed_single_pass_metrics(spark, tmp_path):
-    """Observation metrics accumulated during the write must equal a
-    separate aggregation, and the written data must be complete."""
-    from pyspark.sql import functions as F
-
-    from mergers_acquisitions_predictions_spark.sources.writers import (
-        write_parquet_observed,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "observed")
-    got = write_parquet_observed(
-        docs,
-        path,
-        {
-            "n_docs": F.count(F.lit(1)),
-            "total_chars": F.sum("n_chars"),
-            "max_doc": F.max("doc_id"),
-        },
-    )
-    want = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.max("doc_id").alias("max_doc"),
-    ).first()
-    assert got["n_docs"] == want.n_docs
-    assert got["total_chars"] == want.total_chars
-    assert got["max_doc"] == want.max_doc
-    assert spark.read.parquet(path).count() == want.n_docs
-
-
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     from mergers_acquisitions_predictions_spark.sources.readers import read_orc
     from mergers_acquisitions_predictions_spark.sources.writers import write_orc
