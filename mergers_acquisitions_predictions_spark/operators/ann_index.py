@@ -119,15 +119,15 @@ from .similarity import (
     topk_recall,
 )
 from .sq import _unit, sq_encode, sq_score, sq_stats
-from .util import hof_bind, repartition_for_compute
+from .util import hof_bind, local_rows_df, repartition_for_compute
 
 _CURRENT = "CURRENT"
 _GEN_PREFIX = "codes_g"
 _META_FILE = "_meta"
 
-#: bound on the ``score_blas`` serve's driver collect of (query,
-#: probed cell) rows — queries × n_probe
-MAX_BLAS_PROBE_ROWS = 100_000
+#: bound on a serve's driver collect of (query, probed cell) rows —
+#: queries × n_probe
+MAX_PROBE_ROWS = 100_000
 
 
 def _with_extra_meta(geometry: dict, extra_meta: dict | None) -> dict:
@@ -901,11 +901,17 @@ def search_index(
     ``n_probe`` cells with the PERSISTED centroids and mapped to the
     codec's query column (SQ8: the unit vector; PQ: the ADC table,
     computed once per query — per probed cell under residual
-    geometry), and the probed cell ids are collected (query-batch-
-    sized — tiny by the ANN contract) and pushed into the codes scan
-    as an `isin` partition filter, so only those cells' files are
-    read. Scoring, rounding and ranking are the exact expressions of
-    the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk` — results are
+    geometry). Those (query_id, cell_id, <query column>) rows are
+    collected ONCE — at most `MAX_PROBE_ROWS` of them, else
+    ValueError — and give both the probed cell ids, pushed into the
+    codes scan as an `isin` partition filter so only those cells'
+    files are read, and the broadcast query side, re-entered as a
+    JVM-local frame (`util.local_rows_df`). The returned plan thus
+    holds no scan of ``queries`` (except a PQ ``rerank``, whose exact
+    cosine reads the raw query vectors) and runs no Python worker on
+    the fold path. Scoring, rounding and ranking are the exact
+    expressions of the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk` —
+    results are
     bit-identical to them. Returns (query_id, candidate_id, sq_sim,
     rank) from an SQ8 index, (query_id, candidate_id, adc_dist, rank)
     from a PQ index; an unknown recorded kind raises ValueError.
@@ -944,9 +950,8 @@ def search_index(
     one numpy reconstruct+matmul per Arrow batch with per-partition
     top-k selection instead of one interpreted JVM fold per pair
     (measured: the 1M×200-query serve spends most of its 10 s
-    there). The query units are collected — at most
-    `MAX_BLAS_PROBE_ROWS` (query, probed cell) rows, else ValueError
-    — from the SAME JVM expressions, so only the candidate-side
+    there). It scores against the same collected query units — the
+    SAME JVM expressions — so only the candidate-side
     accumulation and the float HALF_UP replication differ: the usual
     opt-in parity scope (boundary roundings not bit-guaranteed;
     registered oracle rows keep the fold path; equality on the test
@@ -975,25 +980,20 @@ def search_index(
     q = frame.select(
         "query_id", "cell_id", codec.query(pre, g).alias(codec.query_col)
     )
-    if score_blas:
-        # one bounded collect serves both the probe set and the
-        # per-cell query matrices
-        q_rows = q.limit(MAX_BLAS_PROBE_ROWS + 1).collect()
-        if len(q_rows) > MAX_BLAS_PROBE_ROWS:
-            raise ValueError(
-                f"search_index(score_blas=True): the query batch exceeds "
-                f"MAX_BLAS_PROBE_ROWS={MAX_BLAS_PROBE_ROWS} (query, probed "
-                "cell) rows — they are collected to the driver; chunk the "
-                "batch or use the fold path"
-            )
-        probed = sorted({int(r["cell_id"]) for r in q_rows})
-    else:
-        probed = sorted(
-            {r["cell_id"] for r in q.select("cell_id").distinct().collect()}
+    # one bounded collect gives the probed cells, the BLAS leg's
+    # per-cell query matrices and the fold path's broadcast side
+    q_rows = q.limit(MAX_PROBE_ROWS + 1).collect()
+    if len(q_rows) > MAX_PROBE_ROWS:
+        raise ValueError(
+            f"search_index: the query batch exceeds MAX_PROBE_ROWS="
+            f"{MAX_PROBE_ROWS} (query, probed cell) rows — they are "
+            "collected to the driver; chunk the batch"
         )
+    q = local_rows_df(spark, q_rows, q.schema)
+    probed = sorted({int(r["cell_id"]) for r in q_rows})
 
     codes = spark.read.parquet(f"{path}/{ix.name}").filter(
-        F.col("cell_id").isin([int(c) for c in probed])
+        F.col("cell_id").isin(probed)
     )
     if allowed is not None:
         codes = codes.join(

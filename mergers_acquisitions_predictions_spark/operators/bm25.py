@@ -34,6 +34,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from .util import local_rows_df
 
 #: BM25 constants, pre-folded in Python so both engines consume the
 #: same double literals (k1 = 1.2, b = 0.75).
@@ -48,6 +49,10 @@ ONE_MINUS_B = 0.25
 #: sized frame passed as the query side — and fails loudly instead of
 #: pulling it onto the driver.
 MAX_QUERY_BATCH_ROWS = 100_000
+
+#: Schema of the 1-row ``{path}/stats`` sidecar: the build writes it,
+#: the append and the serve read it with it (no schema-inference job).
+STATS_DDL = "nn bigint, sdl bigint"
 
 
 def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -97,21 +102,16 @@ def _corpus_stats(toks: DataFrame) -> DataFrame:
 
 def _materialize_query_batch(q: DataFrame):
     """Collect the (query_id, term) batch to the driver ONCE and
-    rebuild it as a single-partition local frame (round 14, guide
-    §2.4/§5): the batch is serving-contract sized — the same rule
-    that already let `search_bm25_index` collect the distinct term
-    list — but the lazy spelling embedded the caller's query-
-    DERIVATION subplan twice per serve (once under the term-set
-    prune, once under the contribution join; for the registered rows
-    that subplan is t09's corpus-wide TF-IDF, re-executed per
-    appearance because separate broadcast exchanges never reuse).
-    Returns (qloc, terms): the exact collected rows as a local frame
-    (schema preserved — duplicates and types survive, so results are
+    rebuild it with `util.local_rows_df` as a JVM-local frame. The
+    caller's query-derivation subplan (for the registered rows, t09's
+    corpus-wide TF-IDF) then runs once per serve, not once under the
+    term-set prune and again under the contribution join, and no job
+    of the serve reads the batch through a Python worker. Returns
+    (qloc, terms): the exact collected rows as a local frame with
+    ``q``'s schema (duplicates and types survive, so results are
     bit-identical) and the sorted non-null distinct terms for the
-    postings-side In-prune. One partition is the point
-    (`util.local_rows_df`'s py4j lesson). Raises ValueError past
+    postings-side In-prune. Raises ValueError past
     ``MAX_QUERY_BATCH_ROWS`` rows."""
-    spark = q.sparkSession
     rows = q.limit(MAX_QUERY_BATCH_ROWS + 1).collect()
     if len(rows) > MAX_QUERY_BATCH_ROWS:
         raise ValueError(
@@ -120,10 +120,7 @@ def _materialize_query_batch(q: DataFrame):
             "into serving-sized batches"
         )
     terms = sorted({r["term"] for r in rows if r["term"] is not None})
-    qloc = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), q.schema
-    )
-    return qloc, terms
+    return local_rows_df(q.sparkSession, rows, q.schema), terms
 
 
 def bm25_topk(
@@ -344,10 +341,7 @@ def build_bm25_index(
         .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long"))
         .first()[0]
     )
-    publish_parquet_atomic(
-        spark.createDataFrame([(nn, sdl)], "nn bigint, sdl bigint"),
-        f"{path}/stats",
-    )
+    publish_parquet_atomic(local_rows_df(spark, [(nn, sdl)], STATS_DDL), f"{path}/stats")
 
 
 def append_bm25_index(
@@ -392,7 +386,7 @@ def append_bm25_index(
     from ..sources.writers import publish_parquet_atomic
 
     spark = docs_new.sparkSession
-    old_stats = spark.read.parquet(f"{path}/stats")
+    old_stats = spark.read.schema(STATS_DDL).parquet(f"{path}/stats")
 
     # ONE tokenize pass over the new shard for the postings job (dl
     # rides the exploded rows map-side) + one O(batch) stats pass —
@@ -466,7 +460,7 @@ def search_bm25_index(
     )
     # avgdl derives from the exact-integer sidecar with the SAME
     # division the in-memory path performs — identical double
-    stats = spark.read.parquet(f"{path}/stats").select(
+    stats = spark.read.schema(STATS_DDL).parquet(f"{path}/stats").select(
         "nn", (F.col("sdl").cast("double") / F.col("nn")).alias("avgdl")
     )
     contrib = (

@@ -152,25 +152,15 @@ def pq_residual_anchor_codebooks(
 
 def _cb_literal(codebooks: list[list[list[float]]]) -> Column:
     """The codebooks as ONE nested array<array<array<double>>> literal
-    column. Keeping the codebook a literal (not a join) keeps
-    encoding map-side; keeping it ONE column (not n_subspaces x
-    n_codes unrolled sub-expressions) keeps the Catalyst tree small —
-    the first formulation here unrolled 128 aggregate expressions and
-    spent seconds per query in driver-side analysis alone. The
-    ~1k-element literal itself is memoized per session (py4j
-    construction cost — util.memoized_literal, PERF.md s03 lesson)."""
-    from .util import memoized_literal
+    column (`util.array_literal`: a single folded Literal). Keeping
+    the codebook a literal (not a join) keeps encoding map-side;
+    keeping it ONE column (not n_subspaces x n_codes unrolled
+    sub-expressions) keeps the Catalyst tree small — the first
+    formulation here unrolled 128 aggregate expressions and spent
+    seconds per query in driver-side analysis alone."""
+    from .util import array_literal
 
-    from .util import double_matrix_literal
-
-    frozen = tuple(tuple(tuple(map(float, code)) for code in book) for book in codebooks)
-    return memoized_literal(
-        ("pq_codebooks", frozen),
-        # one F.expr parse per subspace book (n_subspaces py4j calls
-        # instead of one per float — util.double_array_literal's
-        # round-8 lesson applied to the 3-level codebook shape)
-        lambda: F.array(*[double_matrix_literal(book) for book in codebooks]),
-    )
+    return array_literal(codebooks, "array<array<array<double>>>")
 
 
 def _sqdist(u_slice: Column, code: Column) -> Column:

@@ -20,7 +20,14 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..functions.vectors import cosine, dot, l2_norm
-from .util import own_caches, repartition_for_compute
+from .util import (
+    array_literal,
+    double_array_literal,
+    double_matrix_literal,
+    local_rows_df,
+    own_caches,
+    repartition_for_compute,
+)
 
 
 def brute_force_topk(
@@ -116,7 +123,7 @@ def _brute_force_topk_blas(
         )
     out_ddl = "query_id long, candidate_id long, cos_sim double"
     if not q_rows:
-        return spark.createDataFrame([], out_ddl + ", rank long")
+        return local_rows_df(spark, [], out_ddl + ", rank long")
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
     qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
@@ -239,7 +246,7 @@ def all_pairs_cosine_blas(
             "use lsh_neardup_pairs for unbounded inputs"
         )
     if not r_rows:
-        return spark.createDataFrame([], out_schema)
+        return local_rows_df(spark, [], out_schema)
     r_ids = np.array([r[0] for r in r_rows], dtype=np.int64)
     r_mat = np.array([r[1] for r in r_rows], dtype=np.float64)
     r_norms = np.linalg.norm(r_mat, axis=1)
@@ -504,31 +511,17 @@ def auto_cells(n_vectors: int, floor: int = 16) -> int:
     return max(floor, int(math.isqrt(n_vectors)))
 
 
-def _plane_lit_arrays(planes: list[list[float]]) -> list:
-    """Hyperplane literal arrays, memoized per session: building a
-    64-float literal Column costs ~40 py4j round trips and a
-    multi-table bucket expression needs 32+ of them per side per
-    invocation — measured as 4.1 s of DRIVER-side DataFrame
-    construction vs 1.2 s execution for s03 at sf0.1 (PERF.md).
-    Planes are pure functions of (dim, n, seed), so the Columns are
-    safely shared by every LSH consumer in the session."""
-    from .util import memoized_literal
-
-    from .util import double_array_literal
-
-    return memoized_literal(
-        ("planes", tuple(tuple(p) for p in planes)),
-        lambda: [double_array_literal(p) for p in planes],
-    )
-
-
 def lsh_bucket(vec_col, planes: list[list[float]]):
     """Sign-LSH bucket key: one bit per hyperplane (sign of the dot
-    product), concatenated to a string key. Pure expression."""
+    product), concatenated to a string key. Pure expression; each
+    plane is one folded ``array<double>`` constant
+    (`util.double_array_literal`)."""
     bits = []
-    for plane in _plane_lit_arrays(planes):
+    for plane in planes:
         d = F.aggregate(
-            F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
+            F.zip_with(
+                vec_col, double_array_literal(plane), lambda x, y: x.cast("double") * y
+            ),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
@@ -759,8 +752,6 @@ def kmeans_centroids(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    from .util import local_rows_df
-
     cent = local_rows_df(spark, rows, "cell_id BIGINT, cent_vec ARRAY<DOUBLE>")
     return cent.select(
         "cell_id", "cent_vec", l2_norm(F.col("cent_vec")).alias("cent_norm")
@@ -857,21 +848,9 @@ def ivf_assign_literal(
     k = len(cent_rows)
     if k == 0:
         raise ValueError("ivf_assign_literal needs at least one centroid")
-    from .util import memoized_literal
-
-    from .util import double_array_literal, double_matrix_literal
-
-    frozen = tuple((int(r[0]), tuple(map(float, r[1])), float(r[2])) for r in cent_rows)
-    cvecs, cnorms, cids = memoized_literal(
-        ("centroids", frozen),
-        lambda: (
-            double_matrix_literal([r[1] for r in cent_rows]),
-            double_array_literal([r[2] for r in cent_rows]),
-            F.expr(
-                "array(" + ",".join(f"{int(r[0])}L" for r in cent_rows) + ")"
-            ),
-        ),
-    )
+    cvecs = double_matrix_literal([r[1] for r in cent_rows])
+    cnorms = double_array_literal([r[2] for r in cent_rows])
+    cids = array_literal([r[0] for r in cent_rows], "array<bigint>")
     side = df.select(
         F.col(id_col).alias(id_alias),
         F.col(vec_col).alias("__vec"),

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.vectors import l2_norm
-from .util import repartition_for_compute
+from .util import double_array_literal, repartition_for_compute
 
 
 def _unit(vec: Column, norm: Column) -> Column:
@@ -86,15 +86,6 @@ def sq_stats(
     return mns, rngs
 
 
-def _lit_arr(xs: list[float]) -> Column:
-    from .util import double_array_literal, memoized_literal
-
-    return memoized_literal(
-        ("sq_stats_arr", tuple(map(float, xs))),
-        lambda: double_array_literal(xs),
-    )
-
-
 def sq_encode(
     unit_vec: Column, mns: list[float], rngs: list[float]
 ) -> Column:
@@ -106,7 +97,7 @@ def sq_encode(
     stat arrays (the pq.py lesson: literals + HOFs keep the Catalyst
     tree O(1) in the config constants)."""
     d = len(mns)
-    mnl, rgl = _lit_arr(mns), _lit_arr(rngs)
+    mnl, rgl = double_array_literal(mns), double_array_literal(rngs)
 
     def code(i: Column) -> Column:
         ii = i.cast("int")
@@ -135,7 +126,7 @@ def sq_score(
     like cosine (queries are exact; only the corpus side carries
     quantization error)."""
     d = len(mns)
-    mnl, rgl = _lit_arr(mns), _lit_arr(rngs)
+    mnl, rgl = double_array_literal(mns), double_array_literal(rngs)
     return F.aggregate(
         F.sequence(F.lit(1), F.lit(d)),
         F.lit(0.0),

@@ -6,7 +6,7 @@ import os
 import threading
 import weakref
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def _owner_lists(result: DataFrame) -> tuple[list[DataFrame], list]:
@@ -194,48 +194,54 @@ def fit_released(estimator, dataset: DataFrame):
         dataset.unpersist(blocking=False)
 
 
-def double_array_literal(values):
-    """A double-array literal built with ONE py4j call: the values are
-    rendered as a SQL ``array(...)`` string (``repr`` is the shortest
-    round-trip form, and ``Double.parseDouble`` reads it back to the
-    IDENTICAL IEEE double — measured bit-equal against the
-    ``F.array(F.lit(...))`` tree) and parsed JVM-side by ``F.expr``.
-    The element-wise construction costs one py4j round trip PER
-    LITERAL — at an index-artifact's size that is the cold-process
-    serve latency: a 1000-cell × 64-dim centroid table measured
-    24.3 s element-wise vs 0.15 s as one parse (round 8; the py4j
-    construction-cost lesson, PERF.md round 4, removed at the SOURCE
-    instead of only memoized away — the session memo still sits on
-    top so repeat consumers pay neither). Non-finite values (never
-    produced by the index fits) fall back to the element-wise tree,
-    whose Literal carries them exactly."""
-    import math
+def array_literal(values, ddl: str) -> Column:
+    """A nested array constant of type ``ddl`` — ``array<`` ... ``>``
+    around a ``double`` or ``bigint`` leaf, at any depth — as ONE string
+    literal read by ``from_json``: the Column holds a single
+    ``Literal`` whatever the element count, and ConstantFolding turns
+    the ``from_json`` into one array ``Literal`` when the plan is
+    optimized, so the JSON is parsed once per query execution, never
+    per row. Nothing is parsed again when a Dataset operation re-uses
+    the Column (an ``F.expr`` text stays an unparsed expression that
+    Spark 4.1's Column API hands to the SQL parser at every use).
+    Doubles are written by ``repr`` (shortest round-trip form) and read
+    back as the IDENTICAL IEEE values, the sign of -0.0 and subnormals
+    included. Double leaves are coerced with ``float``, bigint leaves
+    with ``int``. A double table holding a non-finite value is built
+    element-wise instead (a tree of ``F.lit`` Literals carries NaN and
+    ±inf exactly); JSON has no spelling for them."""
+    import json
 
     from pyspark.sql import functions as F
 
-    vals = [float(x) for x in values]
-    if all(map(math.isfinite, vals)):
-        return F.expr("array(" + ",".join(f"{x!r}D" for x in vals) + ")")
-    return F.array(*[F.lit(x) for x in vals])
+    depth = ddl.count("<")
+    leaf = {"double": float, "bigint": int}[ddl.rstrip(">").rsplit("<", 1)[-1]]
+
+    def coerce(v, d):
+        return leaf(v) if d == 0 else [coerce(x, d - 1) for x in v]
+
+    def tree(v, d):
+        return F.lit(v) if d == 0 else F.array(*[tree(x, d - 1) for x in v])
+
+    vals = coerce(values, depth)
+    try:
+        text = json.dumps(vals, allow_nan=False)
+    except ValueError:  # a non-finite double
+        return tree(vals, depth)
+    return F.from_json(F.lit(text), ddl)
 
 
-def double_matrix_literal(rows):
-    """`double_array_literal` one level up: array<array<double>> in
-    one ``F.expr`` parse (the centroid-table / PCA-weights shape)."""
-    import math
+def double_array_literal(values) -> Column:
+    """``values`` as one ``array<double>`` constant (`array_literal`):
+    bit-exact, one folded Literal per plan, non-finite values kept
+    through the element-wise fallback."""
+    return array_literal(values, "array<double>")
 
-    from pyspark.sql import functions as F
 
-    mat = [[float(x) for x in r] for r in rows]
-    if all(math.isfinite(x) for r in mat for x in r):
-        return F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{x!r}D" for x in r) + ")" for r in mat
-            )
-            + ")"
-        )
-    return F.array(*[F.array(*[F.lit(x) for x in r]) for r in mat])
+def double_matrix_literal(rows) -> Column:
+    """``rows`` as one ``array<array<double>>`` constant
+    (`array_literal`) — the centroid-table / PCA-weights shape."""
+    return array_literal(rows, "array<array<double>>")
 
 
 def run_overlapped(*thunks):
@@ -280,17 +286,28 @@ def run_overlapped(*thunks):
         return results
 
 
-def local_rows_df(spark, rows: list, schema: str) -> DataFrame:
-    """DataFrame from a small DRIVER-side row list (index artifacts:
-    centroid tables, BPE merge lists, vocabularies) as a SINGLE
-    python-RDD partition. The default ``spark.createDataFrame(rows)``
-    spreads the list over ``defaultParallelism`` python-RDD slices,
-    and every job over it then pays one Python-worker round trip PER
-    SLICE — measured 2-7 s for a 44-row centroid table on local[32]
-    (the py4j/worker construction-cost lesson, PERF.md round 4) vs
-    ~0.25 s with one slice. Driver-sized inputs only: one partition
-    is the point."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+def local_rows_df(spark, rows: list, schema) -> DataFrame:
+    """DataFrame over a small DRIVER-side row list (index artifacts,
+    BPE merge lists, vocabularies, collected serving batches) that
+    the JVM holds as a ``LocalRelation``: the rows cross to the JVM
+    once as an Arrow stream, and no job over the frame starts a
+    Python worker (a ``sparkContext.parallelize`` frame runs one per
+    slice in every job that reads it). ``schema`` is a DDL string or
+    a StructType; ``rows`` are tuples or Rows of plain values in
+    schema order (numbers, strings, arrays of them). Values arrive
+    exactly as given — doubles bit-for-bit — and an empty list gives
+    an empty frame of that schema. Driver-sized inputs only."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(st)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, st)
 
 
 #: One lock for both memo maps. Concurrent-query drivers (thread-pool
@@ -357,22 +374,19 @@ def source_fingerprint(key: tuple):
     return tuple(_fp_of_path(p) for p in _abs_path_elements(key))
 
 
-#: Session-scoped memo for expensive literal-Column construction.
-#: Building a literal array column costs one py4j round trip PER
-#: ELEMENT; index-artifact literals (hyperplanes, centroids, PQ
-#: codebooks, SQ stats) are ~1-4k elements and were being rebuilt on
-#: every query invocation — measured as SECONDS of driver-side
-#: DataFrame construction (PERF.md, s03 breakdown). Keyed by
-#: applicationId so a Column from a stopped session is never reused;
-#: values stored as (source_fingerprint, value) so a mutated source
-#: path invalidates (see source_fingerprint).
+#: Session-scoped memo for driver-side values derived from a CORPUS
+#: (row counts, collected centroid tables, quantizer stats, fitted
+#: codebooks): each costs one or more Spark jobs to recompute. Keyed
+#: by applicationId so a value from a stopped session is never
+#: reused; values stored as (source_fingerprint, value) so a mutated
+#: source path invalidates (see source_fingerprint).
 _LITERAL_MEMO: dict = {}
 
 
 #: Live-session entry bound: distinct keys accumulate per corpus /
 #: config (centroids, quantizer stats, codebooks); past this many the
-#: session's own entries are dropped and rebuilt on demand (one py4j
-#: construction each — the memo is a perf knob, never correctness).
+#: session's own entries are dropped and rebuilt on demand (the memo
+#: is a perf knob, never correctness).
 _LITERAL_MEMO_MAX = 256
 
 

@@ -934,8 +934,8 @@ def test_serve_score_blas_matches_fold(spark, tmp_path):
 
 def test_serve_score_blas_over_bound_raises(spark, sf_dir, tmp_path, monkeypatch):
     """The ``score_blas`` serve collects its (query, probed cell) rows
-    to the driver: past `MAX_BLAS_PROBE_ROWS` it raises, naming the
-    bound, instead of collecting an unbounded batch."""
+    to the driver: past `MAX_PROBE_ROWS` it raises, naming the bound,
+    instead of collecting an unbounded batch."""
     import pytest
 
     from mergers_acquisitions_predictions_spark.operators import ann_index
@@ -944,11 +944,54 @@ def test_serve_score_blas_over_bound_raises(spark, sf_dir, tmp_path, monkeypatch
     path = str(tmp_path / "idx")
     build_ivfsq_index(e, path, n_cells=8)
     q = e.filter(F.col("vec_id") < 5)  # 5 queries × 2 probes = 10 rows
-    monkeypatch.setattr(ann_index, "MAX_BLAS_PROBE_ROWS", 9)
-    with pytest.raises(ValueError, match="MAX_BLAS_PROBE_ROWS=9"):
+    monkeypatch.setattr(ann_index, "MAX_PROBE_ROWS", 9)
+    with pytest.raises(ValueError, match="MAX_PROBE_ROWS=9"):
         search_index(spark, path, q, k=3, n_probe=2, score_blas=True)
-    monkeypatch.setattr(ann_index, "MAX_BLAS_PROBE_ROWS", 10)
+    monkeypatch.setattr(ann_index, "MAX_PROBE_ROWS", 10)
     assert search_index(spark, path, q, k=3, n_probe=2, score_blas=True).count() == 15
+
+
+def test_serve_fold_path_over_bound_raises(spark, sf_dir, tmp_path, monkeypatch):
+    """The fold-path serve collects its (query, probed cell) rows once
+    too — for the probed cells and the broadcast side — under the same
+    `MAX_PROBE_ROWS` bound: past it, a ValueError names the bound."""
+    import pytest
+
+    from mergers_acquisitions_predictions_spark.operators import ann_index
+
+    e = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivfsq_index(e, path, n_cells=8)
+    q = e.filter(F.col("vec_id") < 5)  # 5 queries × 2 probes = 10 rows
+    monkeypatch.setattr(ann_index, "MAX_PROBE_ROWS", 9)
+    with pytest.raises(ValueError, match="MAX_PROBE_ROWS=9"):
+        search_index(spark, path, q, k=3, n_probe=2)
+    monkeypatch.setattr(ann_index, "MAX_PROBE_ROWS", 10)
+    assert search_index(spark, path, q, k=3, n_probe=2).count() == 15
+
+
+def test_serve_plan_holds_no_query_scan_or_python_rdd(spark, sf_dir, tmp_path):
+    """The serve collects its (query, probed cell) rows once and
+    broadcasts them as a JVM-local frame: the returned plan scans
+    neither the caller's query frame (a parquet read here) nor any
+    Python RDD, and the rows equal the serve over the same queries
+    held in memory."""
+    e = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivfsq_index(e, path, n_cells=8)
+    qpath = str(tmp_path / "queries.parquet")
+    e.filter(F.col("vec_id") < 6).write.parquet(qpath)
+    q = spark.read.parquet(qpath)
+    py_q = spark.createDataFrame(q.collect(), q.schema)
+    for queries in (q, py_q):
+        out = search_index(spark, path, queries, k=3, n_probe=2)
+        logical = out._jdf.queryExecution().optimizedPlan().toString()
+        physical = out._jdf.queryExecution().executedPlan().toString()
+        assert "LogicalRDD" not in logical, logical
+        assert "queries.parquet" not in physical, physical
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, search_index(spark, path, q, k=3, n_probe=2).collect())
+    )
 
 
 def test_unknown_recorded_kind_raises_naming_it(spark, sf_dir, tmp_path):

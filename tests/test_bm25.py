@@ -163,6 +163,36 @@ def test_bm25_persisted_serve_matches_inmemory(spark, tmp_path):
     assert got2 == want2 and 3 not in {t[1] for t in got2}
 
 
+def test_bm25_serve_plan_holds_no_query_scan_or_python_rdd(spark, tmp_path):
+    """The serve collects the (query_id, term) batch once and re-enters
+    it as a JVM-local frame: the returned plan scans neither the
+    caller's query frame (a parquet read here) nor any Python RDD, and
+    the stats sidecar is read with its writer's schema."""
+    from mergers_acquisitions_predictions_spark.operators.bm25 import (
+        STATS_DDL,
+        build_bm25_index,
+        search_bm25_index,
+    )
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    path = str(tmp_path / "bm25_idx")
+    build_bm25_index(docs, path)
+    from pyspark.sql.types import StructType
+
+    assert spark.read.parquet(f"{path}/stats").schema == StructType.fromDDL(STATS_DDL)
+    qpath = str(tmp_path / "queries.parquet")
+    spark.createDataFrame(
+        [(100, "spark"), (100, "query"), (200, "pond")], "query_id long, term string"
+    ).write.parquet(qpath)
+    served = search_bm25_index(spark, path, spark.read.parquet(qpath), k=10)
+    logical = served._jdf.queryExecution().optimizedPlan().toString()
+    physical = served._jdf.queryExecution().executedPlan().toString()
+    assert "LogicalRDD" not in logical, logical
+    assert "queries.parquet" not in physical, physical
+    want = sorted(map(tuple, bm25_topk(docs, spark.read.parquet(qpath), k=10).collect()))
+    assert sorted(map(tuple, served.collect())) == want and want
+
+
 def test_bm25_append_equals_full_rebuild(spark, tmp_path):
     """Rounds 13–14: `append_bm25_index` must leave the artifact
     serving VALUE-IDENTICALLY to a full rebuild over the union —

@@ -403,11 +403,10 @@ def test_engine_publish_invalidates_fingerprints_despite_ttl(spark, tmp_path):
 
 
 def test_double_literal_helpers_bit_equal_and_fallback(spark):
-    """Round 8: the one-parse SQL literal construction must be
-    BIT-EQUAL to the element-wise F.lit tree (repr is shortest
-    round-trip; Double.parseDouble reads it back exactly), including
-    exponent-form reprs, and must fall back to the F.lit tree for
-    non-finite values."""
+    """The one-literal construction must be BIT-EQUAL to the
+    element-wise F.lit tree (repr is the shortest round-trip form and
+    reads back exactly), including exponent-form reprs, and must fall
+    back to the F.lit tree for non-finite values."""
     import math
 
     from pyspark.sql import functions as F
@@ -446,3 +445,57 @@ def test_double_literal_helpers_bit_equal_and_fallback(spark):
         .first()["a"]
     )
     assert got[0] == 1.0 and math.isnan(got[1])
+
+
+def test_array_literal_is_one_folded_bit_exact_constant(spark):
+    """`util.array_literal` (behind `double_array_literal` /
+    `double_matrix_literal`): the Column is not an unparsed SQL text
+    (Spark 4.1 re-parses an ``F.expr`` at every Dataset use), the
+    values come back bit-for-bit — sign of -0.0, the smallest
+    subnormal and the largest double included, at 1-, 2- and 3-level
+    nesting and as bigints — and the optimized plan of a multi-row
+    select holds the folded constant, not a per-row ``from_json``."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from mergers_acquisitions_predictions_spark.operators.util import (
+        array_literal,
+        double_array_literal,
+        double_matrix_literal,
+    )
+
+    def bits(v):
+        if isinstance(v, list):
+            return [bits(x) for x in v]
+        return struct.pack(">d", v)
+
+    edge = [-0.0, 0.0, 5e-324, 1.7976931348623157e308, -2.5e-310, 0.1, 1 / 3]
+    vals = edge + [i * 1.0000000000000002e-3 for i in range(2000)]
+    mat = [vals[:40], [-x for x in vals[:40]]]
+    ten = [[[-0.0, 5e-324], [1.7976931348623157e308, 0.1]], [[2.0, -3.5], [1e-300, 7.0]]]
+    ids = [3, 2**62, -1, 0]
+    cols = {
+        "a": double_array_literal(vals),
+        "m": double_matrix_literal(mat),
+        "t": array_literal(ten, "array<array<array<double>>>"),
+        "i": array_literal(ids, "array<bigint>"),
+    }
+    for c in cols.values():
+        assert "SqlExpression" not in c._jc.node().getClass().getName()
+    row = spark.range(1).select(*[c.alias(n) for n, c in cols.items()]).first()
+    assert bits(list(row["a"])) == bits(vals)
+    assert bits([list(r) for r in row["m"]]) == bits(mat)
+    assert bits([[list(c) for c in b] for b in row["t"]]) == bits(ten)
+    assert list(row["i"]) == ids
+
+    used = spark.range(50).select(
+        "id",
+        F.element_at(cols["a"], (F.col("id") + 1).cast("int")).alias("v"),
+        F.element_at(cols["m"], 2)[F.col("id") % 40].alias("w"),
+    )
+    plan = used._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "from_json" not in plan and "jsontostructs" not in plan, plan[:400]
+    got = sorted(used.collect())
+    assert bits([r["v"] for r in got]) == bits(vals[:50])
+    assert bits([r["w"] for r in got]) == bits([-x for x in vals[:40]] * 2)[:50]
