@@ -84,9 +84,17 @@ O(probed cells), which is the entire reason an IVF index exists.
 The pruning is test-asserted from the physical plan
 (tests/test_ann_index.py, tests/test_pq_index.py).
 
-Search results are BIT-IDENTICAL to the in-memory `sq.ivfsq_topk` /
-`pq.ivfpq_topk` paths (asserted) — same geometry, same codes, same
-fold orders; only the storage changes.
+ONE SERVE KERNEL: the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk`
+ops are this module's lifecycle with the codes held in a (memoized)
+frame instead of on disk. They fit with the build's `_fit_centroids`
+/ `_pq_books`, encode with `_encoded`, and serve with the same two
+steps as `search_index`: `_probe` (queries → their ``n_probe`` cells
+→ the codec's query column) and `_rank` (broadcast probe join,
+rounded codec score, per-query window top-k, optional exact
+rerank). Only the persisted serve collects the probe side, prunes
+the codes scan to the probed cells and offers ``allowed`` and
+``score_blas``; scores and ranks are the same expressions on both
+paths, so their results are bit-identical (asserted).
 """
 
 from __future__ import annotations
@@ -97,7 +105,6 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from ..functions.vectors import dot, l2_norm
 from .pq import (
@@ -119,7 +126,14 @@ from .similarity import (
     topk_recall,
 )
 from .sq import _unit, sq_encode, sq_score, sq_stats
-from .util import hof_bind, local_rows_df, repartition_for_compute
+from .topk import grouped_topk
+from .util import (
+    bounded_collect,
+    hof_bind,
+    local_rows_df,
+    memoized_frame,
+    repartition_for_compute,
+)
 
 _CURRENT = "CURRENT"
 _GEN_PREFIX = "codes_g"
@@ -322,8 +336,8 @@ def _sq_exact(q: DataFrame, queries: DataFrame, id_col: str, vec_col: str) -> tu
 
 
 def _pq_exact(q: DataFrame, queries: DataFrame, id_col: str, vec_col: str) -> tuple:
-    # dot over the norm product on RAW vectors — `pq.ivfpq_topk`'s
-    # rescore, which the PQ oracle's rescore block replays
+    # dot over the norm product on RAW vectors — the rescore the PQ
+    # oracle's rescore block replays
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -410,26 +424,19 @@ def _live(spark: SparkSession, path: str) -> _Live:
 
 def _encoded(codec: _Codec, g: tuple, cent_rows: list, assigned: DataFrame) -> DataFrame:
     """(candidate_id, cell_id, <codes column>) for an assigned frame —
-    the encode build and append share.
+    the one encode of the build, the append and the in-memory ops.
 
-    TWO-STEP ENCODE AROUND THE CELL SHUFFLE (round 9, found by
-    thread-dumping a wedged 1M build): higher-order functions run on
-    the INTERPRETED expression path (no whole-stage codegen), where a
-    collapsed projection re-evaluates its inputs per lambda element —
-    `sq_encode(_unit(vec, norm))` re-derives the full unit TRANSFORM
-    for every one of the d code dimensions (d² work), and when the
-    norm's fold expression is also inlined (nothing between the
-    projections to stop CollapseProject — the BLAS assignment path,
-    which lacks the fold path's explode/Generate barrier) the l2 fold
-    re-evaluates per divide: d³ per row, a >100× blowup at 1M×64d.
-    Computing the pre-encode vector BEFORE the cell shuffle and
-    encoding AFTER it makes the shuffle the materialization barrier:
-    post-shuffle, ``__unit`` is a concrete attribute and encode is d
-    array reads per row (M·d for PQ's bound slices). Values and codes
-    are bit-identical — only evaluation count changes. The shuffle
-    also clusters by cell: files-per-cell bounded by the repartition
-    width (one file per touched cell for an append shard) and
-    contiguous row groups for probed-cell reads."""
+    The pre-encode vector is computed BEFORE the cell shuffle and
+    encoded AFTER it, so the shuffle is a materialization barrier:
+    higher-order functions run on the interpreted expression path,
+    where an encode over an inlined ``_unit(vec, norm)`` would
+    re-derive the whole unit transform per code dimension (d² work
+    per row, d³ with the norm fold inlined too — SCALE.md §7o-r9).
+    Post-shuffle, ``__unit`` is a concrete attribute and encode is d
+    array reads per row (M·d for PQ's bound slices). The shuffle also
+    clusters by cell: files-per-cell bounded by the repartition width
+    (one file per touched cell for an append shard) and contiguous
+    row groups for probed-cell reads."""
     frame, pre = codec.pre_encode(assigned, g, cent_rows)
     return (
         frame.select("candidate_id", "cell_id", pre.alias("__unit"))
@@ -470,6 +477,55 @@ def _assigned(
     assign = ivf_assign_blas if assign_blas else ivf_assign_literal
     return assign(
         repartition_for_compute(corpus), cent_rows, "candidate_id", 1, id_col, vec_col
+    )
+
+
+def _pq_books(
+    corpus: DataFrame,
+    assigned: DataFrame,
+    cent_rows: list,
+    n_cells: int,
+    n_subspaces: int,
+    n_codes: int,
+    ck: tuple | None,
+    codebooks: list[list[list[float]]] | None,
+    residual: bool,
+    id_col: str,
+    vec_col: str,
+) -> list[list[list[float]]]:
+    """The PQ codebooks of `build_ivfpq_index` and `pq.ivfpq_topk`:
+    the caller's ``codebooks``, else the lowest-id anchor books of the
+    unit vectors or — ``residual`` — of the residuals of ``assigned``
+    (memoized under ``ck``). Caller books define the geometry, so a
+    corpus whose width is not theirs raises ValueError instead of
+    mis-encoding silently through ``F.slice``."""
+    if codebooks is not None:
+        dim = len(codebooks) * len(codebooks[0][0])
+        if corpus.filter(F.size(F.col(vec_col)) != dim).limit(1).count():
+            raise ValueError(
+                f"corpus vectors must have dim={dim} "
+                f"(= n_subspaces × sub_dim of the supplied codebooks)"
+            )
+        return codebooks
+    if residual:
+
+        def resid_books():
+            frame, resid = _pq_pre(assigned, True, cent_rows)
+            return pq_residual_anchor_codebooks(
+                frame.select("candidate_id", resid.alias("__resid")),
+                n_subspaces,
+                n_codes,
+            )
+
+        return _memo(
+            ck,
+            ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
+            resid_books,
+        )
+    return _memo(
+        ck,
+        ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
+        lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
     )
 
 
@@ -613,39 +669,11 @@ def build_ivfpq_index(
     ck = corpus_cache_key
     n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
     assigned = _assigned(corpus, cent_rows, assign_blas, id_col, vec_col)
-    if codebooks is not None:
-        cbs = codebooks
-    elif residual:
-
-        def resid_books():
-            frame, resid = _pq_pre(assigned, True, cent_rows)
-            return pq_residual_anchor_codebooks(
-                frame.select("candidate_id", resid.alias("__resid")),
-                n_subspaces,
-                n_codes,
-            )
-
-        cbs = _memo(
-            ck,
-            ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
-            resid_books,
-        )
-    else:
-        cbs = _memo(
-            ck,
-            ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
-            lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
-        )
+    cbs = _pq_books(
+        corpus, assigned, cent_rows, n_cells, n_subspaces, n_codes, ck,
+        codebooks, residual, id_col, vec_col,
+    )
     dim = len(cbs) * len(cbs[0][0])
-    if codebooks is not None:
-        # caller books define the geometry; a mismatched corpus width
-        # would mis-encode silently through F.slice
-        bad = corpus.filter(F.size(F.col(vec_col)) != dim).limit(1).count()
-        if bad:
-            raise ValueError(
-                f"build_ivfpq_index: corpus vectors must have dim={dim} "
-                f"(= n_subspaces × sub_dim of the supplied codebooks)"
-            )
     _publish_build(
         PQ,
         (cbs, residual),
@@ -882,6 +910,113 @@ def _ivfsq_scored_blas(
     )
 
 
+def _probe(
+    codec: _Codec,
+    g: tuple,
+    cent_rows: list,
+    queries: DataFrame,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The probe side of both serves: (query_id, cell_id, <query
+    column>) — each query assigned to its ``n_probe`` nearest cells
+    by the centroid rows, then mapped through the codec's pre-encode
+    and query expressions (SQ8: the unit vector; PQ: the ADC table,
+    one per query — per probed cell under residual geometry)."""
+    frame, pre = codec.pre_encode(
+        ivf_assign_literal(queries, cent_rows, "query_id", n_probe, id_col, vec_col),
+        g,
+        cent_rows,
+    )
+    return frame.select(
+        "query_id", "cell_id", codec.query(pre, g).alias(codec.query_col)
+    )
+
+
+def _rank(
+    codec: _Codec,
+    g: tuple,
+    codes: DataFrame,
+    q: DataFrame,
+    k: int,
+    rerank: int | None,
+    vectors: DataFrame | None,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    scored: DataFrame | None = None,
+) -> DataFrame:
+    """The rank step of both serves. The (candidate_id, cell_id,
+    <codes>) frame ``codes`` joins the BROADCAST probe side ``q`` on
+    cell_id (self-pairs dropped) and each pair scores as the codec's
+    expression rounded to 6 dp — unless ``scored`` already holds
+    (query_id, candidate_id, <score>) rows (the ``score_blas`` leg).
+    Each query keeps its top ``k`` — top ``rerank`` under a rerank —
+    by (score in the codec's order, candidate_id asc). ``rerank``
+    joins that shortlist, broadcast, to the raw ``vectors`` (only the
+    survivors are normalized) and ranks the top ``k`` on the codec's
+    exact cosine, rounded to 6 dp, as ``cos_sim``."""
+    score_col = codec.score_col
+    if scored is None:
+        scored = (
+            codes.join(F.broadcast(q), "cell_id")
+            .filter(F.col("query_id") != F.col("candidate_id"))
+            .select(
+                "query_id", "candidate_id", F.round(codec.score(g), 6).alias(score_col)
+            )
+        )
+    order = F.desc(score_col) if codec.descending else F.asc(score_col)
+    top = grouped_topk(
+        scored, ["query_id"], [order, F.asc("candidate_id")],
+        k if rerank is None else rerank, "rank",
+    )
+    if rerank is None:
+        return top.select("query_id", "candidate_id", score_col, "rank")
+    qv, cos = codec.exact(q, queries, id_col, vec_col)
+    cand = vectors.select(
+        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("__cvec")
+    )
+    exact = (
+        cand.join(F.broadcast(top.select("query_id", "candidate_id")), "candidate_id")
+        .join(F.broadcast(qv), "query_id")
+        .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
+    )
+    return grouped_topk(
+        exact, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
+
+
+def _corpus_topk(
+    codec: _Codec,
+    g: tuple,
+    cent_rows: list,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    codes_key: tuple | None,
+    rerank: int | None = None,
+) -> DataFrame:
+    """The in-memory serve (`sq.ivfsq_topk`, `pq.ivfpq_topk`): the
+    corpus assigned and encoded exactly as a build encodes it
+    (`_assigned` → `_encoded`), held as a frame — memoized under
+    ``codes_key`` (`util.memoized_frame`) when one is given — and
+    served by the shared `_probe` (lazy: no collect) and `_rank`,
+    with ``corpus`` as the rerank's vectors."""
+
+    def codes() -> DataFrame:
+        return _encoded(
+            codec, g, cent_rows, _assigned(corpus, cent_rows, False, id_col, vec_col)
+        )
+
+    c = codes() if codes_key is None else memoized_frame(codes_key, codes)
+    q = _probe(codec, g, cent_rows, queries, n_probe, id_col, vec_col)
+    return _rank(codec, g, c, q, k, rerank, corpus, queries, id_col, vec_col)
+
+
 def search_index(
     spark: SparkSession,
     path: str,
@@ -897,24 +1032,22 @@ def search_index(
 ) -> DataFrame:
     """Serve top-k from a persisted index of either kind. The live
     generation is resolved ONCE (codes + geometry as one unit) and
-    its ``_meta`` names the codec; the query batch is assigned to its
-    ``n_probe`` cells with the PERSISTED centroids and mapped to the
-    codec's query column (SQ8: the unit vector; PQ: the ADC table,
-    computed once per query — per probed cell under residual
-    geometry). Those (query_id, cell_id, <query column>) rows are
-    collected ONCE — at most `MAX_PROBE_ROWS` of them, else
-    ValueError — and give both the probed cell ids, pushed into the
-    codes scan as an `isin` partition filter so only those cells'
-    files are read, and the broadcast query side, re-entered as a
-    JVM-local frame (`util.local_rows_df`). The returned plan thus
-    holds no scan of ``queries`` (except a PQ ``rerank``, whose exact
-    cosine reads the raw query vectors) and runs no Python worker on
-    the fold path. Scoring, rounding and ranking are the exact
-    expressions of the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk` —
-    results are
-    bit-identical to them. Returns (query_id, candidate_id, sq_sim,
-    rank) from an SQ8 index, (query_id, candidate_id, adc_dist, rank)
-    from a PQ index; an unknown recorded kind raises ValueError.
+    its ``_meta`` names the codec. The probe side (`_probe`: the
+    query batch assigned to its ``n_probe`` cells with the PERSISTED
+    centroids, mapped to the codec's query column) is collected ONCE
+    in one job (`util.bounded_collect` — at most `MAX_PROBE_ROWS`
+    rows, else ValueError) and gives both the probed cell ids, pushed
+    into the codes scan as an `isin` partition filter so only those
+    cells' files are read, and the broadcast query side, re-entered
+    as a JVM-local frame (`util.local_rows_df`). The returned plan
+    thus holds no scan of ``queries`` (except a PQ ``rerank``, whose
+    exact cosine reads the raw query vectors) and runs no Python
+    worker on the fold path. Ranking is the shared `_rank` step that
+    the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk` run too, so
+    results are bit-identical to theirs. Returns (query_id,
+    candidate_id, sq_sim, rank) from an SQ8 index, (query_id,
+    candidate_id, adc_dist, rank) from a PQ index; an unknown
+    recorded kind raises ValueError.
 
     ``allowed``: optional FILTERED search (the vector-DB metadata
     predicate: "top-k among candidates matching WHERE ..."): a frame
@@ -972,23 +1105,15 @@ def search_index(
             f"score_blas=True serves SQ8 indexes only; the index at {path} "
             f"is kind={codec.kind!r}"
         )
-    frame, pre = codec.pre_encode(
-        ivf_assign_literal(queries, ix.cent_rows, "query_id", n_probe, id_col, vec_col),
-        g,
-        ix.cent_rows,
-    )
-    q = frame.select(
-        "query_id", "cell_id", codec.query(pre, g).alias(codec.query_col)
-    )
+    q = _probe(codec, g, ix.cent_rows, queries, n_probe, id_col, vec_col)
     # one bounded collect gives the probed cells, the BLAS leg's
     # per-cell query matrices and the fold path's broadcast side
-    q_rows = q.limit(MAX_PROBE_ROWS + 1).collect()
-    if len(q_rows) > MAX_PROBE_ROWS:
-        raise ValueError(
-            f"search_index: the query batch exceeds MAX_PROBE_ROWS="
-            f"{MAX_PROBE_ROWS} (query, probed cell) rows — they are "
-            "collected to the driver; chunk the batch"
-        )
+    q_rows = bounded_collect(
+        q,
+        MAX_PROBE_ROWS,
+        f"search_index: the query batch (MAX_PROBE_ROWS={MAX_PROBE_ROWS} "
+        "(query, probed cell) rows)",
+    )
     q = local_rows_df(spark, q_rows, q.schema)
     probed = sorted({int(r["cell_id"]) for r in q_rows})
 
@@ -1001,40 +1126,13 @@ def search_index(
             "candidate_id",
             "left_semi",
         )
-    score_col = codec.score_col
-    if score_blas:
-        scored = _ivfsq_scored_blas(codes, q_rows, *g, cut=max(k, rerank or 0))
-    else:
-        joined = codes.join(F.broadcast(q), "cell_id").filter(
-            F.col("query_id") != F.col("candidate_id")
-        )
-        scored = joined.select(
-            "query_id", "candidate_id", F.round(codec.score(g), 6).alias(score_col)
-        )
-    order = F.desc(score_col) if codec.descending else F.asc(score_col)
-    w = W.partitionBy("query_id").orderBy(order, F.asc("candidate_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    if rerank is None:
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "candidate_id", score_col, "rank"
-        )
-    shortlist = ranked.filter(F.col("rank") <= rerank).select(
-        "query_id", "candidate_id"
+    scored = (
+        _ivfsq_scored_blas(codes, q_rows, *g, cut=max(k, rerank or 0))
+        if score_blas
+        else None
     )
-    qv, cos = codec.exact(q, queries, id_col, vec_col)
-    cand = vectors.select(
-        F.col(id_col).alias("candidate_id"), F.col(vec_col).alias("__cvec")
-    )
-    exact = (
-        cand.join(F.broadcast(shortlist), "candidate_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
+    return _rank(
+        codec, g, codes, q, k, rerank, vectors, queries, id_col, vec_col, scored
     )
 
 
@@ -1186,14 +1284,9 @@ def search_sharded_indexes(
         for p in paths
     ]
     merged = reduce(DataFrame.unionByName, parts)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("sq_sim"), F.asc("candidate_id")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "sq_sim", "rank")
-    )
+    return grouped_topk(
+        merged, ["query_id"], [F.desc("sq_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "sq_sim", "rank")
 
 
 def index_cell_stats(spark: SparkSession, path: str) -> DataFrame:

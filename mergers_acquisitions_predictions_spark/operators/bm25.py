@@ -34,7 +34,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from .util import local_rows_df
+from .topk import grouped_topk
+from .util import bounded_collect, local_rows_df
 
 #: BM25 constants, pre-folded in Python so both engines consume the
 #: same double literals (k1 = 1.2, b = 0.75).
@@ -112,13 +113,9 @@ def _materialize_query_batch(q: DataFrame):
     bit-identical) and the sorted non-null distinct terms for the
     postings-side In-prune. Raises ValueError past
     ``MAX_QUERY_BATCH_ROWS`` rows."""
-    rows = q.limit(MAX_QUERY_BATCH_ROWS + 1).collect()
-    if len(rows) > MAX_QUERY_BATCH_ROWS:
-        raise ValueError(
-            f"BM25 query batch exceeds {MAX_QUERY_BATCH_ROWS} (query_id, "
-            "term) rows — the batch is collected to the driver; split it "
-            "into serving-sized batches"
-        )
+    rows = bounded_collect(
+        q, MAX_QUERY_BATCH_ROWS, "BM25 query batch of (query_id, term) rows"
+    )
     terms = sorted({r["term"] for r in rows if r["term"] is not None})
     return local_rows_df(q.sparkSession, rows, q.schema), terms
 
@@ -245,12 +242,9 @@ def _rank_contributions(
             ).alias("bm25"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "bm25", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("bm25"), F.asc("doc_id")], k, "rank"
+    ).select("query_id", "doc_id", "bm25", "rank")
 
 
 def build_bm25_index(

@@ -1,10 +1,13 @@
-"""Join operators (SURVEY §2.3, J1–J6 + the general family).
+"""Join operators (SURVEY §2.3: the J6 semi/anti forms + the fuzzy and
+range families). The plain equi, dimension-lookup and theta joins
+(J1/J4/J5) are written inline where the queries use them
+(`plans/relational.q03`–`q05`).
 
 Thin, declarative wrappers: each returns a lazy DataFrame so Catalyst
 still sees one plan (broadcast selection, join reordering, AQE runtime
 switches all apply). The value over raw `.join` calls is the named
-semantics + the scale-minded defaults (broadcast hints for dims,
-dedup-before-join guidance from SURVEY §4).
+semantics + the scale-minded defaults (dedup-before-join guidance
+from SURVEY §4).
 """
 
 from __future__ import annotations
@@ -13,23 +16,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def dim_lookup(fact: DataFrame, dim: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """J4 dimension lookup (`predictions.scala:27-28` ticker join) with
-    an explicit broadcast hint — at 100 TB the dim table must never be
-    the shuffle side."""
-    return fact.join(F.broadcast(dim), on, "inner")
-
-
-def theta_join(
-    left: DataFrame, right: DataFrame, equi: Column, residual: Column, how: str = "inner"
-) -> DataFrame:
-    """J5 (`predictions.scala:37`): equi-key + non-equi residual.
-    Catalyst plans the equi part as a hash/sort-merge join and applies
-    the residual as a post-join filter — callers must supply a real
-    equi component or this degenerates to a nested-loop cross join."""
-    return left.join(right, equi & residual, how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:

@@ -39,8 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from .topk import grouped_topk
 from .util import hof_bind
 
 
@@ -144,12 +144,9 @@ def maxsim_rerank(
             ).alias("maxsim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("maxsim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "maxsim", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("maxsim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "maxsim", "rank")
 
 
 def tokens_to_arrays(
@@ -280,12 +277,9 @@ def maxsim_rerank_tokens(
             ).alias("maxsim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("maxsim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "maxsim", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("maxsim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "maxsim", "rank")
 
 
 def maxsim_search_tokens(

@@ -25,7 +25,11 @@ value-exactly (plans/lsh_oracle.ivfpq_topk_sql), making even this
 approximate index hash-checkable. A production deployment swaps the
 anchor codebooks for per-subspace k-means (train once, persist —
 exactly like `kmeans_centroids` vs `ivf_centroids`); every join
-shape below is unchanged.
+shape is unchanged.
+
+The PQ primitives live here; `ivfpq_topk` fits, encodes and serves
+through the persisted index's own functions (`operators/ann_index.py`
+— one serve kernel for both paths).
 
 No reference analogue (the reference has no vector search at all) —
 this is part of the training-data-pipeline surface SURVEY §7 Phase 4
@@ -39,11 +43,10 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from ..functions.vectors import l2_norm
 from .sq import _unit
-from .util import hof_bind, repartition_for_compute
+from .util import hof_bind
 
 
 def pq_anchor_codebooks(
@@ -191,16 +194,15 @@ def pq_encode(
     tree (the unrolled form cost seconds of driver-side analysis
     per query; see _cb_literal).
 
-    Evaluation-count discipline (round 10, the §7o-r9 interpreted-HOF
-    lesson): the subspace SLICE and the per-subspace DISTANCE array
-    are each bound ONCE as lambda variables (`util.hof_bind`) —
-    composing them inline re-evaluated the slice per code and the
-    whole K-distance array twice (argmin = array_position +
-    array_min), and when the CALLER splices a composed unit-transform
-    into ``unit_vec`` the re-evaluations multiply through it
-    (M·K·d-ish work per row). Callers should pass ``unit_vec`` as a
-    concrete attribute or bind it the same way (see `ivfpq_topk`).
-    Bit-identical — same arithmetic, fewer evaluations."""
+    Evaluation count (the §7o-r9 interpreted-HOF lesson): the
+    subspace SLICE and the per-subspace DISTANCE array are each bound
+    ONCE as lambda variables (`util.hof_bind`) — inline, the slice is
+    re-evaluated per code and the K-distance array twice (argmin =
+    array_position + array_min), and a composed ``unit_vec`` would
+    multiply through both (M·K·d-ish work per row). Pass ``unit_vec``
+    as a concrete attribute: `ann_index._encoded` encodes after the
+    cell shuffle. Bit-identical — same arithmetic, fewer
+    evaluations."""
     sub = len(codebooks[0][0])
     n_sub = len(codebooks)
     cbs = _cb_literal(codebooks)
@@ -252,9 +254,8 @@ def adc_sum(n_sub: int) -> Column:
     """Σ_m dtab[m][pq[m]] over ``n_sub`` subspaces as a left-to-right
     add chain — the oracle's outer `list_sum` order. Reads the
     ``dtab`` (per-query ADC table) and ``pq`` (candidate codes)
-    columns of the joined probe frame; shared by the in-memory
-    `ivfpq_topk` scan and the persisted `ann_index.search_index`
-    serve so the two paths stay bit-identical by construction."""
+    columns of the joined probe frame — the PQ codec's score in
+    `ann_index`'s one rank step."""
     adc: Column = F.lit(0.0)
     for m in range(n_sub):
         adc = adc + F.element_at(
@@ -283,6 +284,13 @@ def ivfpq_topk(
     cross-joins), then an ADC scan ranks each query's probed
     candidates by quantized squared-L2 on the unit sphere.
 
+    The in-memory form of the persisted PQ index: centroids and
+    codebooks are fitted (`ann_index._pq_books`), the corpus encoded
+    and the queries served by the SAME functions
+    `ann_index.build_ivfpq_index` and `ann_index.search_index` use
+    (`ann_index._corpus_topk`), so the two paths return bit-identical
+    rows.
+
     ``rerank=R`` adds the production third stage: the ADC scan keeps
     a per-query shortlist of R candidates (cheap — codes only), then
     EXACT cosine re-scores just those R full vectors and the top-k
@@ -293,222 +301,61 @@ def ivfpq_topk(
     Output schema switches to (query_id, candidate_id, cos_sim,
     rank) — the same contract as the other ANN paths.
 
-    Plan shape for 100 TB: cell assignment + PQ encoding are one
-    map-side pass over the corpus (broadcast centroids, literal
-    codebooks — in a deployment both are precomputed and the coded
-    corpus ``(candidate_id, cell_id, pq)`` is the PERSISTED index: 9
-    bytes/vector + the partition key). Queries broadcast with their
-    precomputed ADC tables; per candidate the score is M element_at
-    lookups + M-1 adds — no vector math in the scan. The only
-    shuffle is the per-query top-k window, keyed by query_id.
+    Plan shape for 100 TB: cell assignment is map-side against
+    literal centroids, one shuffle clusters the corpus by cell and
+    the encode runs after it; the coded corpus ``(candidate_id,
+    cell_id, pq)`` is 9 bytes/vector + the partition key. Queries
+    broadcast with their precomputed ADC tables; per candidate the
+    score is M element_at lookups + M-1 adds — no vector math in the
+    scan. The per-query top-k window shuffles only probed pairs.
 
     Returns (query_id, candidate_id, adc_dist, rank); adc_dist is the
     6-dp-rounded quantized distance (≈ 2−2·cos), rank ties broken by
     candidate_id — deterministic, DuckDB-replayable end to end.
 
+    ``codebooks``: caller books (e.g. `pq_kmeans_codebooks`); a
+    corpus whose width is not n_subspaces × their sub-dimension
+    raises ValueError.
+
     ``corpus_cache_key``: opt-in session memoization of the index
-    artifacts (count, centroid rows, the PQ-coded corpus frame) per
-    (corpus, config) — the usual contract: the key identifies corpus
-    content, results are identical either way. Only applies to the
-    coded frame when ``codebooks`` is None (caller-supplied books
-    have content the key cannot see).
+    artifacts (count, centroid rows, anchor books, the PQ-coded
+    corpus frame) per (corpus, config) — the usual contract: the key
+    identifies corpus content, results are identical either way.
+    Only applies to the coded frame when ``codebooks`` is None
+    (caller-supplied books have content the key cannot see).
 
-    ``residual=True`` (round 12 — SCALE.md §7s): the fine stage
-    encodes x_unit − c_unit(cell(x)) instead of x_unit, and the
-    query's ADC table is computed PER PROBED CELL from the matching
-    query residual (the classic IVF-ADC serve shape — n_probe small
-    tables per query instead of one; the cell equi-join already
-    pairs each candidate with its own cell's table). Same bytes,
-    same join shapes, same ranking contract; §7s measured +0.16
-    recall@5 on the structured corpus and a LOSS on the unstructured
-    one — opt-in by design. Anchor books come from the lowest-id
-    RESIDUALS (`pq_residual_anchor_codebooks`); caller-supplied
-    ``codebooks`` must have been fitted on residuals."""
-    from .similarity import auto_cells, ivf_assign_literal, ivf_centroids
-    from .util import memoized_frame, memoized_literal
+    ``residual=True`` (SCALE.md §7s): the fine stage encodes x_unit −
+    c_unit(cell(x)) instead of x_unit, and the query's ADC table is
+    computed PER PROBED CELL from the matching query residual (the
+    classic IVF-ADC serve shape — n_probe small tables per query
+    instead of one; the cell equi-join already pairs each candidate
+    with its own cell's table). Same bytes, same join shapes, same
+    ranking contract; §7s measured +0.16 recall@5 on the structured
+    corpus and a LOSS on the unstructured one — opt-in by design.
+    Anchor books come from the lowest-id RESIDUALS
+    (`pq_residual_anchor_codebooks`); caller-supplied ``codebooks``
+    must have been fitted on residuals."""
+    from .ann_index import PQ, _assigned, _corpus_topk, _fit_centroids, _pq_books
 
-    memoize = corpus_cache_key is not None
-    if n_cells is None:  # √n sizing policy — see similarity.auto_cells
-        n = (
-            memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-            if memoize
-            else corpus.count()
-        )
-        n_cells = auto_cells(n)
-
-    # centroids as driver constants (n_cells rows — the same class of
-    # collect as the codebooks above): assignment then needs NO
-    # broadcast fan-out join and NO per-vector argmax window over the
-    # corpus — the whole index build is one map-side pass.
-    def collect_cents():
-        return [
-            (r["cell_id"], [float(x) for x in r["cent_vec"]], float(r["cent_norm"]))
-            for r in ivf_centroids(corpus, n_cells, id_col, vec_col).collect()
-        ]
-
-    if memoize:
-        cent_rows = memoized_literal(
-            ("ivf_cent_rows", corpus_cache_key, n_cells, id_col, vec_col),
-            collect_cents,
-        )
-    else:
-        cent_rows = collect_cents()
-
-    cent_df = (
-        residual_cent_df(corpus.sparkSession, cent_rows) if residual else None
+    ck = corpus_cache_key
+    n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
+    cbs = _pq_books(
+        corpus,
+        _assigned(corpus, cent_rows, False, id_col, vec_col),
+        cent_rows, n_cells, n_subspaces, n_codes, ck, codebooks, residual,
+        id_col, vec_col,
     )
-
-    def corpus_resids() -> DataFrame:
-        # residual computed BEFORE the downstream shuffle/encode so it
-        # lands as a concrete attribute (the §7o-r9 discipline); the
-        # centroid join is broadcast and map-side.
-        return ivf_assign_literal(
-            repartition_for_compute(corpus),
-            cent_rows,
-            "candidate_id",
-            1,
-            id_col,
-            vec_col,
-        ).join(F.broadcast(cent_df), "cell_id").select(
-            "candidate_id",
-            "cell_id",
-            residual_expr(
-                F.col("__vec"), F.col("__norm"), F.col("__cu")
-            ).alias("__resid"),
+    key = (
+        None
+        if ck is None or codebooks is not None
+        else (
+            "ivfpq_codes", ck, n_cells, n_subspaces, n_codes, id_col, vec_col,
+            *(("resid",) if residual else ()),
         )
-
-    if residual:
-        cbs = (
-            codebooks
-            if codebooks is not None
-            else pq_residual_anchor_codebooks(
-                corpus_resids(), n_subspaces, n_codes
-            )
-        )
-    else:
-        cbs = (
-            codebooks
-            if codebooks is not None
-            else pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col)
-        )
-    n_sub = len(cbs)
-
-    def corpus_codes() -> DataFrame:
-        if residual:
-            return corpus_resids().select(
-                "candidate_id",
-                "cell_id",
-                hof_bind(F.col("__resid"), lambda r: pq_encode(r, cbs)).alias(
-                    "pq"
-                ),
-            )
-        return ivf_assign_literal(
-            repartition_for_compute(corpus),
-            cent_rows,
-            "candidate_id",
-            1,
-            id_col,
-            vec_col,
-        ).select(
-            "candidate_id",
-            "cell_id",
-            # unit bound ONCE (util.hof_bind): spliced inline it would
-            # re-derive the full unit transform per (subspace, code)
-            # read inside pq_encode — the §7o-r9 blowup shape.
-            hof_bind(
-                _unit(F.col("__vec"), F.col("__norm")),
-                lambda u: pq_encode(u, cbs),
-            ).alias("pq"),
-        )
-
-    if memoize and codebooks is None:
-        c = memoized_frame(
-            (
-                "ivfpq_codes",
-                corpus_cache_key,
-                n_cells,
-                n_subspaces,
-                n_codes,
-                id_col,
-                vec_col,
-                *(("resid",) if residual else ()),
-            ),
-            corpus_codes,
-        )
-    else:
-        c = corpus_codes()
-    q = ivf_assign_literal(
-        queries, cent_rows, "query_id", n_probe, id_col, vec_col
     )
-    if residual:
-        q = q.join(F.broadcast(cent_df), "cell_id").select(
-            "query_id",
-            "cell_id",
-            hof_bind(
-                residual_expr(F.col("__vec"), F.col("__norm"), F.col("__cu")),
-                lambda r: pq_adc_table(r, cbs),
-            ).alias("dtab"),
-        )
-    else:
-        q = q.select(
-            "query_id",
-            "cell_id",
-            hof_bind(
-                _unit(F.col("__vec"), F.col("__norm")),
-                lambda u: pq_adc_table(u, cbs),
-            ).alias("dtab"),
-        )
-
-    joined = c.join(F.broadcast(q), "cell_id").filter(
-        F.col("query_id") != F.col("candidate_id")
-    )
-    scored = joined.select(
-        "query_id", "candidate_id", F.round(adc_sum(n_sub), 6).alias("adc_dist")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("candidate_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    if rerank is None:
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "candidate_id", "adc_dist", "rank"
-        )
-
-    from ..functions.vectors import dot
-
-    shortlist = ranked.filter(F.col("rank") <= rerank).select(
-        "query_id", "candidate_id"
-    )
-    # RAW vectors through the BROADCAST shortlist; norms only for the
-    # survivors (round 10 — the same corpus-shaped-rescore fix as
-    # `ann_index.search_index`: the previous shape computed
-    # l2_norm for every corpus row before the join and left the join
-    # strategy to size estimates, which shuffled the corpus). The
-    # per-pair expression is unchanged — dot/(q_norm·c_norm), same
-    # fold orders — so values stay bit-identical and the oracle
-    # replay is untouched.
-    cv = corpus.select(
-        F.col(id_col).alias("candidate_id"),
-        F.col(vec_col).alias("c_vec"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
-    )
-    cos = dot(F.col("q_vec"), F.col("c_vec")) / (
-        F.col("q_norm") * l2_norm(F.col("c_vec"))
-    )
-    rescored = (
-        cv.join(F.broadcast(shortlist), "candidate_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
+    return _corpus_topk(
+        PQ, (cbs, residual), cent_rows, corpus, queries, k, n_probe, id_col,
+        vec_col, key, rerank,
     )
 
 

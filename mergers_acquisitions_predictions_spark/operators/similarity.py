@@ -20,8 +20,10 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..functions.vectors import cosine, dot, l2_norm
+from .topk import grouped_topk
 from .util import (
     array_literal,
+    bounded_collect,
     double_array_literal,
     double_matrix_literal,
     local_rows_df,
@@ -82,12 +84,9 @@ def brute_force_topk(
         .join(F.broadcast(q), F.col("query_id") != F.col("candidate_id"))
         .select("query_id", "candidate_id", F.round(cos, 6).alias("cos_sim"))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def _brute_force_topk_blas(
@@ -114,13 +113,11 @@ def _brute_force_topk_blas(
     from .util import repartition_for_compute as _rfc
 
     spark = corpus.sparkSession
-    q_rows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"brute_force_topk(score_blas=True): query side exceeds "
-            f"{max_query_rows} rows — the queries are broadcast as a "
-            "dense matrix; chunk the batch or use the fold path"
-        )
+    q_rows = bounded_collect(
+        queries.select(id_col, vec_col),
+        max_query_rows,
+        "brute_force_topk(score_blas=True): query side",
+    )
     out_ddl = "query_id long, candidate_id long, cos_sim double"
     if not q_rows:
         return local_rows_df(spark, [], out_ddl + ", rank long")
@@ -194,12 +191,9 @@ def _brute_force_topk_blas(
             )
 
     part = _rfc(corpus.select(id_col, vec_col)).mapInPandas(score, schema=out_ddl)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        part.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
+    return grouped_topk(
+        part, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def all_pairs_cosine_blas(
@@ -239,12 +233,11 @@ def all_pairs_cosine_blas(
     # Guard the driver-side collect: this operator is an OPT-IN for
     # pre-bounded right sides; past the cap the caller must use the
     # distributed LSH path (lsh_neardup_pairs), not raise the cap.
-    r_rows = right.select(id_col, vec_col).limit(max_right_rows + 1).collect()
-    if len(r_rows) > max_right_rows:
-        raise ValueError(
-            f"all_pairs_cosine_blas: right side exceeds {max_right_rows} rows; "
-            "use lsh_neardup_pairs for unbounded inputs"
-        )
+    r_rows = bounded_collect(
+        right.select(id_col, vec_col),
+        max_right_rows,
+        "all_pairs_cosine_blas: right side",
+    )
     if not r_rows:
         return local_rows_df(spark, [], out_schema)
     r_ids = np.array([r[0] for r in r_rows], dtype=np.int64)
@@ -1079,7 +1072,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    use_arrow: bool = False,
     corpus_cache_key: tuple | None = None,
     queries_cache_key: tuple | None = None,
 ) -> DataFrame:
@@ -1103,11 +1095,6 @@ def ivf_topk(
     index would instead fit k-means (pyspark.ml, m05 machinery) and
     persist the centroid table; every join shape below is unchanged —
     pass such a table (e.g. `kmeans_centroids`) via ``centroids``.
-
-    ``use_arrow`` scores the probe pairs with `arrow_pair_cosines`
-    (threshold −2 ⇒ no prefilter: top-k needs every cosine) instead
-    of the JVM fold — bit-identical ranks (round + row_number stay
-    JVM-side); worth it at 768+ dims, see semantic_dedup.
 
     ``n_cells=None`` sizes cells as √n (`auto_cells`) — the policy a
     deployment should use; registered oracle queries pin an explicit
@@ -1221,30 +1208,13 @@ def ivf_topk(
     joined = c.join(F.broadcast(q), "cell_id").filter(
         F.col("query_id") != F.col("candidate_id")
     )
-    if use_arrow:
-        raw = arrow_pair_cosines(
-            joined,
-            threshold=-2.0,  # cos ∈ [−1,1]: keep every probe pair
-            keep_cols=("query_id", "candidate_id"),
-            a_vec="q_vec",
-            b_vec="c_vec",
-            a_norm="q_norm",
-            b_norm="c_norm",
-        )
-    else:
-        cos = dot(F.col("q_vec"), F.col("c_vec")) / (
-            F.col("q_norm") * F.col("c_norm")
-        )
-        raw = joined.select("query_id", "candidate_id", cos.alias("cos_sim"))
-    scored = raw.select(
-        "query_id", "candidate_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
+    cos = dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
+    scored = joined.select(
+        "query_id", "candidate_id", F.round(cos, 6).alias("cos_sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def lsh_topk(
@@ -1400,12 +1370,9 @@ def lsh_topk(
         "candidate_id",
         F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def mine_hard_negatives(
@@ -1476,12 +1443,9 @@ def mine_hard_negatives(
             .filter(F.col("__ql") != F.col("__cl"))
             .drop("__ql", "__cl")
         )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("candidate_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= n_neg)
-        .select("query_id", "candidate_id", "cos_sim", "rank")
-    )
+    return grouped_topk(
+        cand, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], n_neg, "rank"
+    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def topk_recall(

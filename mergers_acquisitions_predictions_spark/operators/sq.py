@@ -19,7 +19,9 @@ executor RAM but the scan is compute-light.
 Composition with the IVF coarse quantizer keeps the scan sub-linear
 exactly as in `pq.ivfpq_topk`: candidates come from an equi-join on
 the query's ``n_probe`` nearest cells — corpus x query never
-cross-joins.
+cross-joins. The quantizer primitives live here; `ivfsq_topk` fits,
+encodes and serves through the persisted index's own functions
+(`operators/ann_index.py` — one serve kernel for both paths).
 
 Determinism/oracle contract (same discipline as pq.py): stats are
 per-dimension min/max of the UNIT-normalized corpus (exact double
@@ -33,11 +35,12 @@ Plan shape for 100 TB: stats aggregation is one posexplode +
 dim-keyed groupBy whose shuffle is #partitions x dim rows after
 map-side partial aggregation (the collect is ``dim`` rows — a driver
 constant like centroids/codebooks, persisted once at index build).
-Cell assignment + encoding are one map-side pass over the corpus
-scan; the persisted index is (candidate_id, cell_id, sq) at ~d bytes
-per vector. Queries broadcast with full-precision unit vectors
-(asymmetric distance — queries are never quantized), and the only
-corpus-sized shuffle is the per-query top-k window keyed by query_id.
+Cell assignment is map-side; one shuffle clusters the unit vectors
+by cell and the encode runs after it (`ann_index._encoded`), giving
+the (candidate_id, cell_id, sq) index at ~d bytes per vector.
+Queries broadcast with full-precision unit vectors (asymmetric
+distance — queries are never quantized), and the per-query top-k
+window, keyed by query_id, shuffles only probed pairs.
 
 No reference analogue (the reference has no vector search) — part of
 the training-data-pipeline surface SURVEY §7 Phase 4 calls for.
@@ -47,10 +50,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from ..functions.vectors import l2_norm
-from .util import double_array_literal, repartition_for_compute
+from .util import double_array_literal
 
 
 def _unit(vec: Column, norm: Column) -> Column:
@@ -149,13 +151,18 @@ def ivfsq_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    stats: tuple[list[float], list[float]] | None = None,
     corpus_cache_key: tuple | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF-SQ8: cosine IVF cells prune the
     candidate space (equi-join on cell_id), then the scan ranks each
     query's probed candidates by the asymmetric dequantized dot
     product against 1-byte-per-dimension codes.
+
+    The in-memory form of the persisted SQ8 index: stats and
+    centroids are fitted, the corpus encoded and the queries served
+    by the SAME functions `ann_index.build_ivfsq_index` and
+    `ann_index.search_index` use (`ann_index._corpus_topk`), so the
+    two paths return bit-identical rows.
 
     Returns (query_id, candidate_id, sq_sim, rank); sq_sim is the
     6-dp-rounded dequantized cosine, rank ties broken by
@@ -170,102 +177,13 @@ def ivfsq_topk(
     artifacts — count, quantizer stats, centroid rows, and the
     ENCODED-corpus frame (the in-memory codes) — per (corpus,
     config); the usual contract (key identifies corpus content,
-    results identical either way). Ignored for stats when ``stats``
-    is caller-supplied."""
-    from .similarity import (
-        auto_cells,
-        collect_centroid_rows,
-        ivf_assign_literal,
-        ivf_centroids,
-    )
-    from .util import memoized_frame, memoized_literal
+    results identical either way)."""
+    from .ann_index import SQ8, _corpus_topk, _fit_centroids, _memo
 
-    memoize = corpus_cache_key is not None
-    if n_cells is None:  # √n sizing policy — see similarity.auto_cells
-        n = (
-            memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-            if memoize
-            else corpus.count()
-        )
-        n_cells = auto_cells(n)
-    if stats is not None:
-        mns, rngs = stats
-    elif memoize:
-        mns, rngs = memoized_literal(
-            ("sq_stats", corpus_cache_key, vec_col), lambda: sq_stats(corpus, vec_col)
-        )
-    else:
-        mns, rngs = sq_stats(corpus, vec_col)
-    if memoize:
-        cent_rows = memoized_literal(
-            ("ivf_cent_rows", corpus_cache_key, n_cells, id_col, vec_col),
-            lambda: collect_centroid_rows(
-                ivf_centroids(corpus, n_cells, id_col, vec_col)
-            ),
-        )
-    else:
-        cent_rows = collect_centroid_rows(
-            ivf_centroids(corpus, n_cells, id_col, vec_col)
-        )
-
-    def corpus_codes() -> DataFrame:
-        from .util import hof_bind
-
-        # Bind the unit vector ONCE as a HOF lambda variable before
-        # encoding (util.hof_bind — the §7o-r9 interpreted-HOF lesson
-        # applied to the IN-MEMORY encode): splicing `_unit(...)` into
-        # sq_encode's per-dimension lambda re-evaluates the full unit
-        # transform per code dimension — d² work per row, ~40 s of
-        # pure re-evaluation at 1M×64d and quadratically worse at
-        # embedding dims. The persisted build (ann_index) breaks the
-        # same composition with its cell shuffle; here no shuffle
-        # exists to lean on, so the binding is expression-level.
-        # Values and codes are bit-identical (asserted by this
-        # family's oracles and by the in-memory-vs-persisted equality
-        # test).
-        return ivf_assign_literal(
-            repartition_for_compute(corpus),
-            cent_rows,
-            "candidate_id",
-            1,
-            id_col,
-            vec_col,
-        ).select(
-            "candidate_id",
-            "cell_id",
-            hof_bind(
-                _unit(F.col("__vec"), F.col("__norm")),
-                lambda u: sq_encode(u, mns, rngs),
-            ).alias("sq"),
-        )
-
-    if memoize and stats is None:
-        c = memoized_frame(
-            ("ivfsq_codes", corpus_cache_key, n_cells, id_col, vec_col), corpus_codes
-        )
-    else:
-        c = corpus_codes()
-    q = ivf_assign_literal(
-        queries, cent_rows, "query_id", n_probe, id_col, vec_col
-    ).select(
-        "query_id",
-        "cell_id",
-        _unit(F.col("__vec"), F.col("__norm")).alias("qu"),
-    )
-
-    joined = c.join(F.broadcast(q), "cell_id").filter(
-        F.col("query_id") != F.col("candidate_id")
-    )
-    scored = joined.select(
-        "query_id",
-        "candidate_id",
-        F.round(sq_score(F.col("qu"), F.col("sq"), mns, rngs), 6).alias("sq_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sq_sim"), F.asc("candidate_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "candidate_id", "sq_sim", "rank")
+    ck = corpus_cache_key
+    stats = _memo(ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col))
+    n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
+    return _corpus_topk(
+        SQ8, stats, cent_rows, corpus, queries, k, n_probe, id_col, vec_col,
+        None if ck is None else ("ivfsq_codes", ck, n_cells, id_col, vec_col),
     )

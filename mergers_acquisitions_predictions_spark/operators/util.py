@@ -286,6 +286,24 @@ def run_overlapped(*thunks):
         return results
 
 
+def bounded_collect(df: DataFrame, bound: int, what: str) -> list:
+    """The rows of ``df`` collected to the driver in ONE job, or a
+    ValueError ``"<what> exceeds <bound> rows"`` when there are more
+    than ``bound``. A root ``limit(bound + 1)`` alone plans as
+    CollectLimit, which scans partitions in scale-up rounds — one job
+    per round, so a many-partition input costs several jobs;
+    ``coalesce(1)`` ahead of the limit makes it one task in one job.
+    Meant for driver-sized inputs (serving batches, broadcast sides),
+    whose last stage that single task reads in full."""
+    rows = df.coalesce(1).limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"{what} exceeds {bound} rows — the rows are collected to the "
+            "driver; split the input into smaller batches"
+        )
+    return rows
+
+
 def local_rows_df(spark, rows: list, schema) -> DataFrame:
     """DataFrame over a small DRIVER-side row list (index artifacts,
     BPE merge lists, vocabularies, collected serving batches) that

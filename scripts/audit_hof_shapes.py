@@ -9,12 +9,13 @@ fold-inside-lambda composition fails loudly here.
 
 Audited shapes (round 10, full findings in SCALE.md §7p):
 
-- s10/s08 in-memory encode: the corpus-side unit transform must sit
-  INSIDE the hof_bind idiom (`element_at(transform(array(transform(`)
-  — bound once, read O(1) per code dimension. Before the fix the
-  encode spliced `_unit(...)` into the per-dimension lambda: d² unit
-  re-derivations per row (and M·K·d for PQ), invisible at 64d bench
-  scale, fatal at embedding dims.
+- s10/s08 in-memory encode: the corpus-side unit transform must be
+  its own ``__unit`` attribute computed BELOW the cell shuffle
+  (`ann_index._encoded`, the encode the persisted build uses too), so
+  the encode above the shuffle reads it O(1) per code dimension. An
+  encode that spliced `_unit(...)` into the per-dimension lambda would
+  pay d² unit re-derivations per row (and M·K·d for PQ), invisible at
+  64d bench scale, fatal at embedding dims.
 - s13 persisted serve / s10 in-memory serve / s02 brute force: the
   scoring fold ABOVE the join must read attributes only — every
   unit-divide in the plan sits BELOW the join on the (broadcast,
@@ -76,21 +77,19 @@ def main() -> int:
         m = re.search(r"^\s*[:+ ]*\+- Join ", plan, re.M)
         return plan[: m.start()] if m else plan
 
-    # --- encode stages: every unit-divide on a CORPUS-SIZED side must
-    # be hof_bind-bound; query-side unbound units are fine (their own
-    # Project, attribute inputs, query-batch-sized broadcast side).
-    for qname, n_div, n_bound_min in [
-        ("s10_ivfsq_topk", 2, 1),   # corpus encode bound; q-side unit own-Project
-        ("s08_ivfpq_topk", 2, 2),   # pq encode + adc table both bound
-    ]:
+    # --- encode stages: the corpus-side unit-divide is the ``__unit``
+    # attribute below the cell shuffle; the encode projection above it
+    # (the one producing the codes column) holds no unit-divide.
+    for qname, codes in [("s10_ivfsq_topk", "sq"), ("s08_ivfpq_topk", "pq")]:
         plan = plan_of(qname)
-        div_lines = [l for l in plan.split("\n") if re.search(DIV, l)]
-        bound = sum(1 for l in div_lines if BOUND in l)
+        lines = plan.split("\n")
+        enc = [l for l in lines if f" AS {codes}#" in l]
+        unit = [l for l in lines if re.search(DIV, l) and " AS __unit#" in l]
         check(
             f"{qname} encode",
-            len(div_lines) == n_div and bound >= n_bound_min,
-            f"{len(div_lines)} unit-divide projects (want {n_div}), "
-            f"{bound} hof_bind-bound (want >= {n_bound_min})",
+            bool(enc) and bool(unit) and not any(re.search(DIV, l) for l in enc),
+            f"{len(unit)} __unit projects below the shuffle, {len(enc)} "
+            "encode projects reading it (no unit-divide inside)",
         )
         check(
             f"{qname} scoring",

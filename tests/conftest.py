@@ -27,5 +27,13 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def executed_plans() -> dict:
+    """(sf_dir, query name) -> executed-plan text of the frames the
+    parity sweep built; the registry-wide plan lint reads it instead
+    of building each query again."""
+    return {}
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", SF_SMOKE)

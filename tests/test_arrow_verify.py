@@ -139,19 +139,3 @@ def test_semantic_dedup_arrow_bitwise_equals_fold(spark, emb):
     assert fold.exceptAll(arrow).count() == 0
     assert arrow.exceptAll(fold).count() == 0
     assert arrow.count() > 0
-
-
-def test_ivf_topk_arrow_bitwise_equals_fold(spark, emb):
-    """ivf_topk under use_arrow: every (query, candidate, cos, rank)
-    row bit-identical — the −2 no-prefilter threshold must not drop
-    any probe pair the fold plan would rank."""
-    from mergers_acquisitions_predictions_spark.operators.similarity import (
-        ivf_topk,
-    )
-
-    q = emb.filter(F.col("vec_id") < 8)
-    fold = ivf_topk(q, emb, k=5, use_arrow=False)
-    arrow = ivf_topk(q, emb, k=5, use_arrow=True)
-    assert fold.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(fold).count() == 0
-    assert arrow.count() > 0

@@ -14,10 +14,8 @@ from mergers_acquisitions_predictions_spark.operators.aggregates import (
 from mergers_acquisitions_predictions_spark.operators.dedup import exact_dedup
 from mergers_acquisitions_predictions_spark.operators.joins import (
     anti_join,
-    dim_lookup,
     range_join_bucketed,
     semi_join,
-    theta_join,
 )
 from mergers_acquisitions_predictions_spark.operators.topk import global_topk, grouped_topk
 
@@ -31,21 +29,32 @@ def test_semi_anti_partition_the_left(spark):
     assert n_semi + n_anti == left.count()
 
 
-def test_theta_join_excludes_self_pairs(spark):
-    df = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], ["id", "g"])
-    other = df.select(F.col("id").alias("id2"), F.col("g").alias("g2"))
-    pairs = theta_join(
-        df, other, F.col("g") == F.col("g2"), F.col("id") != F.col("id2")
-    ).collect()
-    assert {(r.id, r.id2) for r in pairs} == {(1, 2), (2, 1)}
+def test_bounded_collect_is_one_job_and_raises_past_bound(spark, tmp_path):
+    """`util.bounded_collect` runs ONE job whatever the input's
+    partition count (a root ``limit`` scans partitions in scale-up
+    rounds, one job each), returns every row under the bound and
+    raises, naming the bound, past it."""
+    import pytest
 
+    from mergers_acquisitions_predictions_spark.operators.util import bounded_collect
 
-def test_dim_lookup_broadcasts(spark):
-    fact = spark.createDataFrame([(1, 10.0), (2, 20.0)], ["k", "v"])
-    dim = spark.createDataFrame([(1, "x")], ["k", "label"])
-    out = dim_lookup(fact, dim, "k")
-    assert out.collect() == [out.sparkSession.createDataFrame([(1, 10.0, "x")], ["k", "v", "label"]).first()]
-    assert "Broadcast" in out._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    for n in (1, 2, 8):
+        path = str(tmp_path / f"p{n}")
+        spark.range(0, 8, 1, n).write.parquet(path)
+        df = spark.read.parquet(path).filter(F.col("id") >= 0)
+        group = f"bounded-collect-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = bounded_collect(df, 100, "ids")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sorted(r.id for r in rows) == list(range(8))
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, n
+    assert len(bounded_collect(df, 8, "ids")) == 8
+    with pytest.raises(ValueError, match="ids exceeds 7 rows"):
+        bounded_collect(df, 7, "ids")
 
 
 def test_range_join_bucketed_matches_naive(spark):

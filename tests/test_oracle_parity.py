@@ -15,5 +15,5 @@ ORACLE_QUERY_NAMES = sorted(ORACLES)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERY_NAMES)
-def test_query_matches_oracle(spark, sf_dir, name):
-    assert_query_matches_oracle(spark, name, sf_dir)
+def test_query_matches_oracle(spark, sf_dir, executed_plans, name):
+    assert_query_matches_oracle(spark, name, sf_dir, executed_plans)

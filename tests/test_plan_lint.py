@@ -1,12 +1,11 @@
 """Plan lint over EVERY registered query: no silent scale cliffs.
 
-The optimized physical plan of each registry entry must not contain a
-CartesianProduct or BroadcastNestedLoopJoin — the two shapes that are
-O(n·m) at scale — except where the quadratic product IS the declared
-semantics (allowlisted below with the reason). A refactor that breaks
-an equi-key join condition (e.g. drops a band/bucket/cell key) turns
-a hash join into a BNLJ without failing any value test at sf0.001;
-this sweep catches it at plan-build time, no execution needed."""
+The check and its allowlist live in `oracle_utils`
+(`assert_no_quadratic_joins`), and the parity sweep runs them on the
+frame each oracle comparison builds. This sweep covers the whole
+registry at the smoke SF from the plans that sweep recorded; it
+builds a query's frame only when the sweep has not (this file run
+alone, or the sweep run at another SF)."""
 
 from __future__ import annotations
 
@@ -14,60 +13,10 @@ import pytest
 
 from mergers_acquisitions_predictions_spark.plans import QUERIES
 
-SF = "/root/testdata/sf0.001"
-
-#: name -> reason. Two legitimate families: (a) the quadratic
-#: product IS the declared semantics; (b) a BroadcastNestedLoopJoin
-#: against a side that is provably TINY and input-size-independent
-#: (a 1-row scalar aggregate or a k-row centroid table) — linear in
-#: the corpus, the textbook scalar-subquery/fan-out plan.
-ALLOW = {
-    # (a) quadratic by declared semantics
-    "d05_embedding_neardups": "exact all-pairs cosine: the small-n oracle anchor for d07/d11",
-    "q35_cross_join_grid": "deliberate small-dims cross join building a dense grid",
-    "s02_cosine_topk": "brute-force baseline: broadcast query set x corpus is O(q*n) by definition",
-    "s07_ann_recall": "embeds s02's brute-force EXACT baseline (the referent recall is measured "
-    "against, O(q*n) on a query SAMPLE by definition); the recall join itself is equi-keyed",
-    "s26_maxsim_exact_topk": "exact late-interaction baseline: broadcast query set x corpus "
-    "all-pairs is O(q*n) by definition (s24 is the scale path — SQ8 shortlist + maxsim rescore)",
-    "s43_index_recall_probe": "embeds s02's brute-force EXACT baseline as the probe's ground "
-    "truth (s07's rule pointed at the persisted lifecycle): O(q*n) on a query SAMPLE is what "
-    "a recall probe costs by definition; the served side stays partition-pruned",
-    # (s12_mmr_rerank left the allowlist in round 4: its registered
-    # shortlist now comes from the bucketed lsh_topk path)
-    # (b) BNLJ against a bounded broadcast side
-    "q23_scalar_subquery": "1-row scalar aggregate broadcast",
-    "q37_any_all_semantics": "1-row min/max aggregate broadcast (ANY/ALL rewrite)",
-    "t09_tfidf_top_terms": "1-row doc-count broadcast for the IDF term",
-    "t38_bm25_topk": "1-row (N, avgdl) corpus-stats broadcast for the BM25 "
-    "normalizer (t09's rule); every other join is equi-keyed on term/doc_id",
-    "s46_hybrid_bm25_dense": "embeds t38's 1-row corpus-stats broadcast (and "
-    "s02's declared-exact dense baseline); the fusion join is equi-keyed",
-    "t39_bm25_persisted_serve": "1-row persisted stats-sidecar broadcast "
-    "(t38's rule; the workload-derivation embeds t09's 1-row doc-count); the "
-    "postings scan is In-pushdown pruned and every join is equi-keyed",
-    "t40_bm25_append_serve": "t39's serve shape (1-row stats-sidecar "
-    "broadcast + t09 workload derivation) over the exact-merge appended "
-    "artifact; every join is equi-keyed",
-    "t41_bm25_stream_ingest": "t39's serve shape over the stream-reconciled "
-    "artifact (1-row stats-sidecar broadcast + t09 workload derivation); "
-    "every join is equi-keyed",
-    "s47_hybrid_persisted_serve": "embeds t39's 1-row stats-sidecar "
-    "broadcast on the lexical route; the dense route is the pruned s13 "
-    "serve and the fusion join is equi-keyed",
-    "t19_quality_rank_filter": "1-row total-count broadcast for the decile cut",
-    # (the ivf_assign centroid fan-out entries were removed in round 3:
-    # ivf_assign_literal made every IVF consumer BNLJ-free)
-}
-
-BAD = ("CartesianProduct", "BroadcastNestedLoopJoin")
+from .conftest import SF_SMOKE
+from .oracle_utils import assert_no_quadratic_joins, executed_plan
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_quadratic_join_shapes(spark, name):
-    df = QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    found = [b for b in BAD if b in plan]
-    if name in ALLOW:
-        return  # quadratic by declared semantics
-    assert not found, f"{name}: {found} in physical plan"
+def test_no_quadratic_join_shapes(spark, executed_plans, name):
+    assert_no_quadratic_joins(name, executed_plan(spark, name, SF_SMOKE, executed_plans))

@@ -178,6 +178,18 @@ def test_pq_build_codebook_dim_mismatch_fails_fast(spark, tmp_path):
         build_ivfpq_index(short, str(tmp_path / "idx2"), n_cells=8, codebooks=cbs)
 
 
+def test_inmemory_codebook_dim_mismatch_fails_fast(spark):
+    """`ivfpq_topk(codebooks=...)` shares the build's codebook step,
+    so books whose width is not the corpus dim raise like
+    `build_ivfpq_index` does instead of mis-encoding silently through
+    F.slice: 8 subspaces × 4 dims = 32 against the 64-dim corpus."""
+    e = load_table(spark, SF, "embeddings")
+    q = e.filter(F.col("vec_id") < 5)
+    books = [[[0.5] * 4 for _ in range(16)] for _ in range(8)]
+    with pytest.raises(ValueError, match="dim=32"):
+        ivfpq_topk(q, e, k=5, n_cells=8, n_probe=2, codebooks=books)
+
+
 def test_pq_compact_is_layout_only(spark, tmp_path):
     """`compact_index` (the shared kind-agnostic compaction) on a PQ
     index: fewer files, a committed generation, bit-identical serve."""
