@@ -170,10 +170,12 @@ class Engine:
         self, queries: DataFrame, corpus: DataFrame, method: str = "brute", **kw
     ) -> DataFrame:
         """Similarity search: 'brute' (exact), 'lsh' (sign-LSH
-        multi-table), 'ivf' (cell-partitioned index), 'ivfpq'
-        (compressed codes + ADC; pass rerank=R for the exact-re-rank
-        production config), 'ivfsq' (8-bit scalar quantization —
-        4x-smaller index, ~lossless, no re-rank needed)."""
+        multi-table), 'ivf' (cell-partitioned index, exact cosine),
+        'ivfpq' (compressed codes + ADC; pass rerank=R for the
+        exact-re-rank production config), 'ivfsq' (8-bit scalar
+        quantization — 4x-smaller index, ~lossless, no re-rank
+        needed). The three IVF methods serve through one kernel
+        (`operators/ann_index._corpus_topk`) with their own codec."""
         from .operators import similarity as S
         from .operators.pq import ivfpq_topk
         from .operators.sq import ivfsq_topk

@@ -84,17 +84,22 @@ O(probed cells), which is the entire reason an IVF index exists.
 The pruning is test-asserted from the physical plan
 (tests/test_ann_index.py, tests/test_pq_index.py).
 
-ONE SERVE KERNEL: the in-memory `sq.ivfsq_topk` / `pq.ivfpq_topk`
-ops are this module's lifecycle with the codes held in a (memoized)
-frame instead of on disk. They fit with the build's `_fit_centroids`
-/ `_pq_books`, encode with `_encoded`, and serve with the same two
-steps as `search_index`: `_probe` (queries → their ``n_probe`` cells
-→ the codec's query column) and `_rank` (broadcast probe join,
-rounded codec score, per-query window top-k, optional exact
-rerank). Only the persisted serve collects the probe side, prunes
-the codes scan to the probed cells and offers ``allowed`` and
-``score_blas``; scores and ranks are the same expressions on both
-paths, so their results are bit-identical (asserted).
+ONE SERVE KERNEL: the three in-memory IVF ops — `sq.ivfsq_topk`,
+`pq.ivfpq_topk` and the unquantized `similarity.ivf_topk` — are this
+module's lifecycle with the codes held in a (memoized) frame instead
+of on disk. They fit with the build's `_fit_centroids` (which also
+takes a caller centroid table) / `_pq_books`, encode with `_encoded`
+(`_corpus_topk`), and serve with the same two steps as
+`search_index`: `_probe` (queries → their ``n_probe`` cells → the
+codec's query column) and `_rank` (broadcast probe join, rounded
+codec score, per-query window top-k, optional exact rerank).
+`ivf_topk` runs the third codec, `FLOAT`, which is never persisted:
+its codes and query columns are the (vector, norm) pair and it
+scores the exact cosine as ``cos_sim``. Only the persisted serve
+collects the probe side, prunes the codes scan to the probed cells
+and offers ``allowed`` and ``score_blas``; scores and ranks are the
+same expressions on both paths, so their results are bit-identical
+(asserted).
 """
 
 from __future__ import annotations
@@ -117,6 +122,8 @@ from .pq import (
     residual_expr,
 )
 from .similarity import (
+    _blas_topk,
+    _half_up_6dp,
     auto_cells,
     brute_force_topk,
     collect_centroid_rows,
@@ -280,7 +287,8 @@ class _Codec(NamedTuple):
     """What differs between the index kinds — nothing else does.
 
     ``geometry`` parses the kind's quantizer from a ``_meta`` dict
-    (SQ8: ``(mns, rngs)``; PQ: ``(codebooks, residual)``); the other
+    (SQ8: ``(mns, rngs)``; PQ: ``(codebooks, residual)``; None for the
+    never-persisted `FLOAT` codec, whose ``g`` is ``()``); the other
     callables take that tuple as ``g``. ``pre_encode(assigned, g,
     cent_rows)`` maps an `ivf_assign_literal`-shaped frame to
     ``(frame, column)``: the vector both the corpus and the query side
@@ -292,10 +300,10 @@ class _Codec(NamedTuple):
     ``score_col`` in ``descending`` order. ``exact(q, queries, id_col,
     vec_col)`` gives the rerank's query frame and its exact cosine
     against the candidate vector ``__cvec`` — each kind keeps the
-    spelling its oracle replays."""
+    spelling its oracle replays (None: no rerank)."""
 
     kind: str
-    geometry: Callable[[dict], tuple]
+    geometry: Callable[[dict], tuple] | None
     pre_encode: Callable[[DataFrame, tuple, list], tuple]
     encode: Callable[[Column, tuple], Column]
     codes_col: str
@@ -304,7 +312,7 @@ class _Codec(NamedTuple):
     score: Callable[[tuple], Column]
     score_col: str
     descending: bool
-    exact: Callable[[DataFrame, DataFrame, str, str], tuple]
+    exact: Callable[[DataFrame, DataFrame, str, str], tuple] | None
 
 
 def _unit_pre(assigned: DataFrame, g: tuple, cent_rows: list) -> tuple:
@@ -383,6 +391,28 @@ PQ = _Codec(
 )
 
 
+#: the unquantized codec of `similarity.ivf_topk` — never persisted:
+#: both sides carry the (vector, norm) pair and pairs score as the
+#: exact rounded cosine
+FLOAT = _Codec(
+    kind="float",
+    geometry=None,
+    pre_encode=lambda assigned, g, cent_rows: (
+        assigned,
+        F.struct(F.col("__vec").alias("v"), F.col("__norm").alias("n")),
+    ),
+    encode=lambda u, g: u,
+    codes_col="cv",
+    query=lambda u, g: u,
+    query_col="qv",
+    score=lambda g: dot(F.col("qv.v"), F.col("cv.v"))
+    / (F.col("qv.n") * F.col("cv.n")),
+    score_col="cos_sim",
+    descending=True,
+    exact=None,
+)
+
+
 def _by_kind(table: dict, kind, where: str = ""):
     """``table[kind]``, or a ValueError naming the unknown kind."""
     if kind not in table:
@@ -450,10 +480,21 @@ def _encoded(codec: _Codec, g: tuple, cent_rows: list, assigned: DataFrame) -> D
 
 
 def _fit_centroids(
-    corpus: DataFrame, n_cells: int | None, ck: tuple | None, id_col: str, vec_col: str
+    corpus: DataFrame,
+    n_cells: int | None,
+    ck: tuple | None,
+    id_col: str,
+    vec_col: str,
+    centroids: DataFrame | None = None,
 ) -> tuple[int, list]:
-    """(n_cells, centroid rows) of the deterministic lowest-id anchors;
-    ``n_cells=None`` sizes √n (`similarity.auto_cells`)."""
+    """(n_cells, centroid rows): the caller's ``centroids`` table
+    (cell_id, cent_vec, cent_norm), which defines the cell count and is
+    never memoized (``ck`` cannot see its provenance), else the
+    deterministic lowest-id anchors; ``n_cells=None`` sizes √n
+    (`similarity.auto_cells`)."""
+    if centroids is not None:
+        cent_rows = collect_centroid_rows(centroids)
+        return len(cent_rows), cent_rows
     if n_cells is None:
         n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
     return n_cells, _memo(
@@ -608,13 +649,9 @@ def build_ivfsq_index(
     mns, rngs = _memo(
         ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col)
     )
-    if centroids is not None:
-        # caller-fitted table: driver-sized collect, no memo (the key
-        # cannot see the table's provenance)
-        cent_rows = collect_centroid_rows(centroids)
-        n_cells = len(cent_rows)
-    else:
-        n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
+    n_cells, cent_rows = _fit_centroids(
+        corpus, n_cells, ck, id_col, vec_col, centroids
+    )
     _publish_build(
         SQ8,
         (mns, rngs),
@@ -816,20 +853,15 @@ def _ivfsq_scored_blas(
 ) -> DataFrame:
     """`search_index`'s SQ8 ``score_blas`` leg: (query_id,
     candidate_id, sq_sim) rows holding, per partition, the top-``cut``
-    candidates per query under the final comparator (6-dp-rounded
-    dequantized dot desc, candidate id asc) — the driver-side window
-    then ranks partitions × queries × cut rows, never the probed
-    pairs. Per Arrow batch, codes reconstruct in one vectorized
-    ``mn + (code·rng)/255`` (the JVM expression's per-element order)
-    and score against that cell's query matrix with one matmul; the
-    partitioned scan makes batches effectively single-cell, so the
-    groupby is a cheap passthrough. Self-pairs are masked to −inf (the
-    fold path's `query_id != candidate_id`) and boundary ties at the
-    cut survive to the id tiebreak. Parity scope = the other
-    ``*_blas`` operators: matmul accumulation + float HALF_UP
-    replication; opt-in only."""
+    candidates per query (`similarity._blas_topk`). Per Arrow batch,
+    codes reconstruct in one vectorized ``mn + (code·rng)/255`` (the
+    JVM expression's per-element order) and score against that cell's
+    query matrix with one matmul, rounded by
+    `similarity._half_up_6dp`; the partitioned scan makes batches
+    effectively single-cell, so the groupby is a cheap passthrough.
+    Parity scope = the other ``*_blas`` operators: matmul accumulation
+    + float HALF_UP replication; opt-in only."""
     import numpy as np
-    import pandas as pd
 
     spark = codes.sparkSession
     by_cell: dict = {}
@@ -848,62 +880,22 @@ def _ivfsq_scored_blas(
 
     def score(batches):
         groups = bc.value
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for cell, sub in pdf.groupby("cell_id"):
-                g = groups.get(int(cell))
-                if g is None:
-                    continue
-                qids, Q = g
-                C = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in sub["sq"]]
-                )
-                cand = sub["candidate_id"].to_numpy(dtype=np.int64)
-                recon = MN[None, :] + (C * RG[None, :]) / 255.0
-                S = recon @ Q.T
-                scaled = S * 1e6
-                R = (
-                    np.where(
-                        scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)
-                    )
-                    / 1e6
-                )
-                R[cand[:, None] == qids[None, :]] = -np.inf
-                nb = R.shape[0]
-                if nb > cut:
-                    thr = np.partition(R, nb - cut, axis=0)[nb - cut]
-                    keep = (R >= thr) & np.isfinite(R)
-                else:
-                    keep = np.isfinite(R)
-                rows, cols = np.nonzero(keep)
-                order = np.argsort(cols, kind="stable")
-                rows, cols = rows[order], cols[order]
-                bounds = np.searchsorted(cols, np.arange(len(qids) + 1))
-                for j in range(len(qids)):
-                    lo, hi = bounds[j], bounds[j + 1]
-                    if lo == hi:
+
+        def blocks():
+            for pdf in batches:
+                for cell, sub in pdf.groupby("cell_id"):
+                    g = groups.get(int(cell))
+                    if g is None:
                         continue
-                    cs, ss = acc.setdefault(int(qids[j]), ([], []))
-                    cs.append(cand[rows[lo:hi]])
-                    ss.append(R[rows[lo:hi], j])
-        out_q, out_c, out_s = [], [], []
-        for qid in acc:
-            c = np.concatenate(acc[qid][0])
-            s = np.concatenate(acc[qid][1])
-            sel = np.lexsort((c, -s))[:cut]
-            out_q.append(np.full(sel.size, qid, dtype=np.int64))
-            out_c.append(c[sel])
-            out_s.append(s[sel])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "candidate_id": np.concatenate(out_c),
-                    "sq_sim": np.concatenate(out_s),
-                }
-            )
+                    qids, Q = g
+                    C = np.asarray(
+                        [np.asarray(v, dtype=np.float64) for v in sub["sq"]]
+                    )
+                    recon = MN[None, :] + (C * RG[None, :]) / 255.0
+                    cand = sub["candidate_id"].to_numpy(dtype=np.int64)
+                    yield cand, qids, _half_up_6dp(recon @ Q.T)
+
+        yield from _blas_topk(blocks(), cut, "sq_sim")
 
     return codes.select("candidate_id", "cell_id", "sq").mapInPandas(
         score, schema="query_id long, candidate_id long, sq_sim double"
@@ -1000,8 +992,9 @@ def _corpus_topk(
     codes_key: tuple | None,
     rerank: int | None = None,
 ) -> DataFrame:
-    """The in-memory serve (`sq.ivfsq_topk`, `pq.ivfpq_topk`): the
-    corpus assigned and encoded exactly as a build encodes it
+    """The in-memory serve (`sq.ivfsq_topk`, `pq.ivfpq_topk`,
+    `similarity.ivf_topk`): the corpus assigned and encoded exactly as
+    a build encodes it
     (`_assigned` → `_encoded`), held as a frame — memoized under
     ``codes_key`` (`util.memoized_frame`) when one is given — and
     served by the shared `_probe` (lazy: no collect) and `_rank`,

@@ -41,7 +41,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .topk import grouped_topk
-from .util import hof_bind
+from .util import bounded_collect, hof_bind
+
+#: bound on `maxsim_search_tokens_persisted`'s driver collect of the
+#: distinct (query, parent) shortlist — ≤ queries × T × k0 rows by the
+#: serving contract
+MAX_SHORTLIST_ROWS = 1_000_000
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -294,7 +299,6 @@ def maxsim_search_tokens(
     pos_col: str = "token_id",
     vec_col: str = "token",
     corpus_cache_key: tuple | None = None,
-    queries_cache_key: tuple | None = None,
 ) -> DataFrame:
     """The FULL late-interaction retrieval architecture (ColBERT,
     Khattab & Zaharia 2020 §3.6): token-level candidate generation +
@@ -328,7 +332,6 @@ def maxsim_search_tokens(
         n_cells=n_cells,
         n_probe=n_probe,
         corpus_cache_key=corpus_cache_key,
-        queries_cache_key=queries_cache_key,
     )
     return maxsim_rerank_tokens(
         _parent_shortlist(hits, T),
@@ -486,14 +489,15 @@ def maxsim_search_tokens_persisted(
     `write_token_table` parquet instead of an in-memory frame — the
     full production shape touches only two persisted artifacts (the
     token index and the token table) plus the online query batch.
-    The parent shortlist is collected (driver-sized by the serving
-    contract: ≤ queries × T × k0 pairs before distinct — the s31
-    rule) so stage 1 runs ONCE (the §7r-c lesson: never recompute the
-    first stage to derive ids), and the survivors' tokens are read
-    with the id In-filter pushed into the clustered scan
-    (``ids_pushdown=True`` — right for online batches; pass False for
-    large batch reranks to cut via the broadcast semi join instead,
-    the §7r-c crossover rule)."""
+    The parent shortlist is collected in one job under
+    `MAX_SHORTLIST_ROWS` (driver-sized by the serving contract:
+    ≤ queries × T × k0 pairs before distinct — the s31 rule; past the
+    bound, ValueError) so stage 1 runs ONCE (the §7r-c lesson: never
+    recompute the first stage to derive ids), and the survivors'
+    tokens are read with the id In-filter pushed into the clustered
+    scan (``ids_pushdown=True`` — right for online batches; pass False
+    for large batch reranks to cut via the broadcast semi join
+    instead, the §7r-c crossover rule)."""
     import json as _json
 
     from .ann_index import _read_meta_text, _resolve_codes_name, search_index
@@ -535,7 +539,12 @@ def maxsim_search_tokens_persisted(
         # join from the local rows.
         pairs = [
             (int(r["query_id"]), int(r["candidate_id"]))
-            for r in shortlist.collect()
+            for r in bounded_collect(
+                shortlist,
+                MAX_SHORTLIST_ROWS,
+                "maxsim_search_tokens_persisted: the parent shortlist "
+                f"(MAX_SHORTLIST_ROWS={MAX_SHORTLIST_ROWS})",
+            )
         ]
         shortlist = local_rows_df(
             spark, pairs, "query_id BIGINT, candidate_id BIGINT"

@@ -8,8 +8,8 @@ corpus-side index a search fleet keeps hot shrinks 32×, and the
 asymmetric-distance (ADC) scan compares a full-precision query
 against those codes with M table lookups per candidate instead of a
 64-dim dot product. Composition with the IVF coarse quantizer
-(`operators/similarity.ivf_assign`) keeps the scan sub-linear: only
-the query's ``n_probe`` cells are ADC-scanned.
+(`operators/similarity.ivf_assign_literal`) keeps the scan
+sub-linear: only the query's ``n_probe`` cells are ADC-scanned.
 
 Everything is SPHERICAL: vectors are L2-normalized before encoding,
 so squared-L2 ADC distance ranks identically to cosine (‖u−v‖² =

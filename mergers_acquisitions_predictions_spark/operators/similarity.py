@@ -89,6 +89,69 @@ def brute_force_topk(
     ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
+def _half_up_6dp(S):
+    """Spark's ``round(x, 6)`` (HALF_UP) replicated on a float array:
+    floor(x·1e6 + 0.5) / ceil(x·1e6 − 0.5) by sign — numpy's own
+    round() is HALF_EVEN. The float multiply and add carry their own
+    ulp error, so a value within float error of a .5 boundary can
+    round apart from Spark's decimal rounding: the parity scope of
+    every ``*_blas`` leg."""
+    import numpy as np
+
+    scaled = S * 1e6
+    return np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5)) / 1e6
+
+
+def _blas_topk(blocks, cut: int, score_col: str):
+    """The per-partition top-k of the ``*_blas`` scoring legs: over
+    ``blocks`` of (candidate ids, query ids, rounded candidate × query
+    score matrix), yield one pandas frame (query_id, candidate_id,
+    ``score_col``) holding each query's top ``cut`` candidates under
+    the final comparator (score desc, candidate id asc), so the
+    driver-side window ranks partitions × queries × cut rows, never
+    the scored pairs. Self-pairs are masked to −inf (the fold paths'
+    ``query_id != candidate_id``); the per-query cut threshold is
+    vectorized across the block, and boundary ties at it survive to
+    the id tiebreak."""
+    import numpy as np
+    import pandas as pd
+
+    acc: dict = {}
+    for cand, qids, R in blocks:
+        R[cand[:, None] == qids[None, :]] = -np.inf
+        nb = R.shape[0]
+        if nb > cut:
+            thr = np.partition(R, nb - cut, axis=0)[nb - cut]
+            keep = (R >= thr) & np.isfinite(R)
+        else:
+            keep = np.isfinite(R)
+        rows, cols = np.nonzero(keep)
+        order = np.argsort(cols, kind="stable")
+        rows, cols = rows[order], cols[order]
+        bounds = np.searchsorted(cols, np.arange(len(qids) + 1))
+        for j in range(len(qids)):
+            lo, hi = bounds[j], bounds[j + 1]
+            if lo < hi:
+                cs, ss = acc.setdefault(int(qids[j]), ([], []))
+                cs.append(cand[rows[lo:hi]])
+                ss.append(R[rows[lo:hi], j])
+    out_q, out_c, out_s = [], [], []
+    for qid, (cs, ss) in acc.items():
+        c, s = np.concatenate(cs), np.concatenate(ss)
+        sel = np.lexsort((c, -s))[:cut]
+        out_q.append(np.full(sel.size, qid, dtype=np.int64))
+        out_c.append(c[sel])
+        out_s.append(s[sel])
+    if out_q:
+        yield pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "candidate_id": np.concatenate(out_c),
+                score_col: np.concatenate(out_s),
+            }
+        )
+
+
 def _brute_force_topk_blas(
     queries: DataFrame,
     corpus: DataFrame,
@@ -100,17 +163,11 @@ def _brute_force_topk_blas(
     """`brute_force_topk`'s BLAS scoring leg: the query batch is
     collected (bounded — the ANN contract's small side, same guard
     class as `all_pairs_cosine_blas`) and broadcast; each Arrow batch
-    of the corpus scores against it with one ``V @ Q.T`` and keeps a
-    per-partition top-k per query under the FINAL comparator
-    (6-dp-rounded score desc, candidate id asc — the rounding is the
-    sign-aware floor(x·1e6+0.5) of `ivf_assign_blas`, sharing its
-    parity scope), so the driver-side window ranks partitions ×
-    queries × k rows, never the corpus. Self-pairs are excluded
-    exactly as the fold path's `query_id != candidate_id`."""
+    of the corpus scores against it with one ``V @ Q.T``, rounded by
+    `_half_up_6dp`, and `_blas_topk` keeps its per-partition top-k
+    per query, so the driver-side window ranks partitions × queries ×
+    k rows, never the corpus."""
     import numpy as np
-    import pandas as pd
-
-    from .util import repartition_for_compute as _rfc
 
     spark = corpus.sparkSession
     q_rows = bounded_collect(
@@ -128,69 +185,23 @@ def _brute_force_topk_blas(
 
     def score(batches):
         ids, Qm, qns = bc.value
-        nq = len(ids)
-        acc_c: list[list] = [[] for _ in range(nq)]
-        acc_s: list[list] = [[] for _ in range(nq)]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cid = pdf[id_col].to_numpy(dtype=np.int64)
-            vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-            S = (V @ Qm.T) / (vn[:, None] * qns[None, :])
-            scaled = S * 1e6
-            R = (
-                np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-                / 1e6
-            )
-            # self-pairs out of contention (the fold path's filter) —
-            # -inf never survives the finite-keep mask below
-            R[cid[:, None] == ids[None, :]] = -np.inf
-            nb = R.shape[0]
-            # per-query k-th-largest threshold, VECTORIZED across the
-            # batch (a python loop doing full-column work per query
-            # measured ~2× slower end-to-end at 1M×200); boundary TIES
-            # survive to the id tiebreak via >=
-            if nb > k:
-                thr = np.partition(R, nb - k, axis=0)[nb - k]
-                keep = (R >= thr) & np.isfinite(R)
-            else:
-                keep = np.isfinite(R)
-            rows, cols = np.nonzero(keep)
-            order = np.argsort(cols, kind="stable")
-            rows, cols = rows[order], cols[order]
-            bounds = np.searchsorted(cols, np.arange(nq + 1))
-            for j in range(nq):
-                lo, hi = bounds[j], bounds[j + 1]
-                if lo == hi:
-                    continue
-                c = cid[rows[lo:hi]]
-                s = R[rows[lo:hi], j]
-                sel = np.lexsort((c, -s))[:k]  # score desc, id asc
-                acc_c[j].append(c[sel])
-                acc_s[j].append(s[sel])
-        out_q, out_c, out_s = [], [], []
-        for j in range(nq):
-            if not acc_c[j]:
-                continue
-            c = np.concatenate(acc_c[j])
-            s = np.concatenate(acc_s[j])
-            order = np.lexsort((c, -s))[:k]
-            out_q.append(np.full(order.size, ids[j], dtype=np.int64))
-            out_c.append(c[order])
-            out_s.append(s[order])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "candidate_id": np.concatenate(out_c),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
 
-    part = _rfc(corpus.select(id_col, vec_col)).mapInPandas(score, schema=out_ddl)
+        def blocks():
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                V = np.asarray(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                )
+                vn = np.sqrt(np.einsum("ij,ij->i", V, V))
+                S = (V @ Qm.T) / (vn[:, None] * qns[None, :])
+                yield pdf[id_col].to_numpy(dtype=np.int64), ids, _half_up_6dp(S)
+
+        yield from _blas_topk(blocks(), k, "cos_sim")
+
+    part = repartition_for_compute(corpus.select(id_col, vec_col)).mapInPandas(
+        score, schema=out_ddl
+    )
     return grouped_topk(
         part, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
     ).select("query_id", "candidate_id", "cos_sim", "rank")
@@ -689,7 +700,7 @@ def kmeans_centroids(
     replacement for `ivf_centroids`' deterministic anchor vectors:
     k-means (fixed seed) learns cells that follow the data
     distribution, so cell populations are balanced. Returns the same
-    (cell_id, cent_vec, cent_norm) schema, so `ivf_assign`/
+    (cell_id, cent_vec, cent_norm) schema, so `ivf_assign_literal`/
     `ivf_topk`/`semantic_dedup` consume it unchanged.
 
     SPHERICAL fit: vectors are L2-normalized before training, because
@@ -751,46 +762,18 @@ def kmeans_centroids(
     )
 
 
-def ivf_assign(
-    df: DataFrame,
-    cent: DataFrame,
-    id_alias: str,
-    probes: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its ``probes`` nearest centroid cells:
-    broadcast of the tiny centroid table, one map-side cosine per
-    (vector, centroid), one argmax window keyed by vector id. Returns
-    (id_alias, __vec, __norm, cell_id) — one row per probed cell."""
-    side = df.select(
-        F.col(id_col).alias(id_alias),
-        F.col(vec_col).alias("__vec"),
-        l2_norm(F.col(vec_col)).alias("__norm"),
-    )
-    cos = dot(F.col("__vec"), F.col("cent_vec")) / (
-        F.col("__norm") * F.col("cent_norm")
-    )
-    w = W.partitionBy(id_alias).orderBy(F.desc("__cell_sim"), F.asc("cell_id"))
-    return (
-        side.join(F.broadcast(cent), F.lit(True))
-        .select(
-            id_alias,
-            "__vec",
-            "__norm",
-            "cell_id",
-            F.round(cos, 6).alias("__cell_sim"),
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= probes)
-        .select(id_alias, "__vec", "__norm", "cell_id")
-    )
+#: bound on a centroid table's driver collect — √n cells for corpora
+#: up to ~4·10⁹ vectors; a caller table (a parquet artifact, say)
+#: past it is not a centroid table
+MAX_CENTROID_ROWS = 65_536
 
 
 def collect_centroid_rows(cent: DataFrame) -> list[tuple[int, list[float], float]]:
     """Materialize a (cell_id, cent_vec, cent_norm) centroid table as
     driver constants for `ivf_assign_literal` — n_cells rows by
     construction, the index artifact a deployment holds in memory.
+    Collected in one job under `MAX_CENTROID_ROWS`
+    (`util.bounded_collect`): a larger table raises ValueError.
 
     SORTED by cell_id (ADVICE r8): `collect()` order of an unordered
     DataFrame is not stable across invocations, and two things key off
@@ -807,7 +790,10 @@ def collect_centroid_rows(cent: DataFrame) -> list[tuple[int, list[float], float
     return sorted(
         (
             (r["cell_id"], [float(x) for x in r["cent_vec"]], float(r["cent_norm"]))
-            for r in cent.collect()
+            for r in bounded_collect(
+                cent, MAX_CENTROID_ROWS,
+                f"centroid table (MAX_CENTROID_ROWS={MAX_CENTROID_ROWS})",
+            )
         ),
         key=lambda t: t[0],
     )
@@ -821,22 +807,20 @@ def ivf_assign_literal(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """`ivf_assign` with the centroid table as LITERALS instead of a
-    broadcast join: per row, one transform computes the rounded
-    cosine to every centroid, and the ``probes`` nearest cells come
-    from a sort of the (−sim, cell_id) struct array — entirely
-    map-side, no ×n_cells row fan-out and no per-vector argmax window
-    exchange. Identical semantics to `ivf_assign` (6-dp rounding,
-    sim-desc / cell-id-asc tiebreak), so any oracle replaying the
-    window formulation stays green.
+    """Assign each vector to its ``probes`` nearest centroid cells,
+    with the centroid table as LITERALS: per row, one transform
+    computes the rounded cosine to every centroid, and the ``probes``
+    nearest cells come from a sort of the (−sim, cell_id) struct
+    array — entirely map-side, no ×n_cells row fan-out and no
+    per-vector argmax window exchange. Returns (id_alias, __vec,
+    __norm, cell_id), one row per probed cell; cosines are rounded to
+    6 dp and ties go to the lower cell id, the ranking the oracles'
+    argmax window (`plans/lsh_oracle.ivf_assign_sql`) replays.
 
     ``cent_rows`` is the collected centroid table [(cell_id, vec,
     norm)] — n_cells rows, driver-sized by construction (the same
     class of collect as `kmeans_centroids` / `pq_anchor_codebooks`;
-    a deployment holds the index's centroids as constants anyway).
-    Use for the corpus-sized side of an index build, where the window
-    exchange is the dominant cost; the DataFrame form remains right
-    when centroids are produced and consumed plan-side."""
+    a deployment holds the index's centroids as constants anyway)."""
     cent_rows = sorted(cent_rows, key=lambda r: r[0])
     k = len(cent_rows)
     if k == 0:
@@ -910,16 +894,9 @@ def ivf_assign_blas(
     zero disagreements measured on the test corpora
     (tests/test_blas_similarity.py sweeps probes 1 and 2 at two SFs)
     and vanishing at scale, but not a bit-level guarantee, which the
-    driver-checked oracles require. HALF_UP's tie DIRECTION is
-    replicated (floor(x·1e6+0.5) / ceil(x·1e6−0.5) by sign — numpy's
-    own round() is HALF_EVEN and would diverge on every odd-digit
-    boundary, not just within float error of one), but the
-    replication is itself approximate (ADVICE r9): Spark's HALF_UP
-    rounds the value's DECIMAL rendering via BigDecimal, while the
-    float ×1e6 multiply and +0.5 add here carry their own ulp error —
-    so single-value roundings can differ near .5 boundaries
-    independent of matmul accumulation order, the same divergence
-    class as the accumulation-order caveat above."""
+    driver-checked oracles require. The 6-dp rounding is
+    `_half_up_6dp`, whose own float error near .5 boundaries is the
+    same divergence class as the accumulation-order caveat above."""
     import numpy as np
 
     cent_rows = sorted(cent_rows, key=lambda r: r[0])
@@ -943,12 +920,7 @@ def ivf_assign_blas(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )  # batch × dim
             norms = np.sqrt(np.einsum("ij,ij->i", V, V))
-            S = (V @ C.T) / (norms[:, None] * cn[None, :])
-            scaled = S * 1e6
-            R = (
-                np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-                / 1e6
-            )
+            R = _half_up_6dp((V @ C.T) / (norms[:, None] * cn[None, :]))
             if n_probe == 1:
                 # first max = lowest cell_id among exact ties (columns
                 # are cell_id-ascending by the sort above)
@@ -1073,148 +1045,53 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     corpus_cache_key: tuple | None = None,
-    queries_cache_key: tuple | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the
     cell-partitioned counterpart of the sign-LSH path: every corpus
     vector is assigned to its nearest of ``n_cells`` centroid cells;
-    a query scores only the vectors in its ``n_probe`` nearest cells.
+    a query scores only the vectors in its ``n_probe`` nearest cells,
+    by the exact cosine of the raw vectors.
 
-    Plan shape for 100 TB: cell assignment is a broadcast of the tiny
-    centroid table against the streaming corpus (one row per vector ×
-    n_cells map-side, one argmax window keyed by vector id — in a real
-    deployment the assignment is precomputed once and stored as a
-    bucketed/partitioned column, making search a partition-pruned
-    scan). The probe join is an equi-join on cell_id: corpus × query
-    never cross-joins, and raising n_probe trades recall for scanned
-    cells exactly like an IVF nprobe knob.
+    The unquantized member of the IVF family: centroids are fitted
+    and the corpus assigned by the functions the SQ8/PQ index builds
+    use, and queries are served by the same kernel as `sq.ivfsq_topk`,
+    `pq.ivfpq_topk` and the persisted serve (`ann_index._corpus_topk`
+    with the `ann_index.FLOAT` codec): literal-centroid assignment,
+    then an equi-join of the query's probed cells against the
+    broadcast query side — corpus × query never cross-joins, and
+    raising n_probe trades recall for scanned cells exactly like an
+    IVF nprobe knob.
+
+    Returns (query_id, candidate_id, cos_sim, rank); cos_sim is the
+    6-dp-rounded cosine, rank ties broken by candidate_id, self-pairs
+    excluded.
 
     Centroids are the ``n_cells`` lowest-id corpus vectors —
     deterministic and oracle-replayable (DuckDB regenerates the same
-    cells, so the approximate result is value-checkable). A production
-    index would instead fit k-means (pyspark.ml, m05 machinery) and
-    persist the centroid table; every join shape below is unchanged —
-    pass such a table (e.g. `kmeans_centroids`) via ``centroids``.
+    cells, so the approximate result is value-checkable). ``centroids``
+    takes a caller table (cell_id, cent_vec, cent_norm) instead, e.g.
+    a `kmeans_centroids` fit; it defines the cell count.
+    ``n_cells=None`` sizes cells as √n (`auto_cells`).
 
-    ``n_cells=None`` sizes cells as √n (`auto_cells`) — the policy a
-    deployment should use; registered oracle queries pin an explicit
-    count so the oracle SQL stays static.
+    ``corpus_cache_key``: opt-in session memoization of the corpus
+    count, the anchor centroid rows and the assigned corpus frame
+    (`util.memoized_frame`); the key must identify corpus content.
+    Under caller ``centroids`` a digest of their collected rows joins
+    the frame's key, so two tables under one key never share an
+    assignment. Results are identical with or without the memo."""
+    import hashlib
 
-    ``corpus_cache_key``: opt-in SESSION-SCOPED reuse of the
-    corpus-side index artifacts — the corpus count (auto_cells
-    sizing), the collected centroid rows, and the assigned-corpus
-    frame (`util.memoized_frame`) — the in-memory analogue of the
-    persisted index (s13): a deployment assigns cells once per
-    corpus, not once per query. With ``centroids=None`` the
-    deterministic lowest-id centroids are a pure function of the
-    corpus, so the key alone identifies the assignment; with a
-    CALLER-SUPPLIED centroid table (round 8) a digest of the
-    collected centroid rows — driver-sized by construction — is
-    folded into the memo key, so the assignment memo stays exact:
-    a different fit (or a refit over changed data) can never serve
-    another table's cached assignment. That closes the gap that made
-    every learned-centroid serve recompute the full corpus
-    assignment (the n × n_cells map-side cost — THE build term at
-    1M×1000 cells, SCALE.md §7o). ``queries_cache_key``: same
-    contract for the query-side
-    assignment frame — `ivf_assign_literal` folds n_cells × dim
-    literals into the expression tree, a driver-side construction
-    cost the memoized plan object pays once per session. Results are
-    identical with or without the cache."""
-    from .util import memoized_frame, memoized_literal
+    from .ann_index import FLOAT, _corpus_topk, _fit_centroids
 
-    memoize = corpus_cache_key is not None
-    if n_cells is None:
-        n = (
-            memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-            if memoize
-            else corpus.count()
-        )
-        n_cells = auto_cells(n)
-    cent = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(corpus, n_cells, id_col, vec_col)
+    ck = corpus_cache_key
+    n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col, centroids)
+    digest = None
+    if ck is not None and centroids is not None:
+        digest = hashlib.md5(repr(cent_rows).encode()).hexdigest()
+    return _corpus_topk(
+        FLOAT, (), cent_rows, corpus, queries, k, n_probe, id_col, vec_col,
+        None if ck is None else ("ivf_codes", ck, n_cells, digest, id_col, vec_col),
     )
-
-    if centroids is not None:
-        # driver-sized collect either way; the digest below keys the
-        # assignment memo to THIS table's content. cent_rows is
-        # cell_id-sorted by collect_centroid_rows, so the digest is a
-        # function of table CONTENT, not of collect() arrival order —
-        # the same fit can never miss its own memo entry (ADVICE r8).
-        cent_rows = collect_centroid_rows(cent)
-        cent_digest = None
-        if memoize or queries_cache_key is not None:
-            import hashlib
-
-            cent_digest = hashlib.md5(
-                repr(cent_rows).encode()
-            ).hexdigest()
-    elif memoize:
-        cent_digest = None
-        cent_rows = memoized_literal(
-            ("ivf_cent_rows", corpus_cache_key, n_cells, id_col, vec_col),
-            lambda: collect_centroid_rows(cent),
-        )
-    else:
-        cent_digest = None
-        cent_rows = collect_centroid_rows(cent)
-
-    def assign(df: DataFrame, id_alias: str, probes: int) -> DataFrame:
-        return ivf_assign_literal(df, cent_rows, id_alias, probes, id_col, vec_col)
-
-    def corpus_assigned() -> DataFrame:
-        return assign(repartition_for_compute(corpus), "candidate_id", 1).select(
-            "candidate_id",
-            F.col("__vec").alias("c_vec"),
-            F.col("__norm").alias("c_norm"),
-            "cell_id",
-        )
-
-    if memoize:
-        c = memoized_frame(
-            ("ivf_assign", corpus_cache_key, n_cells, cent_digest, id_col, vec_col),
-            corpus_assigned,
-        )
-    else:
-        c = corpus_assigned()
-
-    def queries_assigned() -> DataFrame:
-        return assign(queries, "query_id", n_probe).select(
-            "query_id",
-            F.col("__vec").alias("q_vec"),
-            F.col("__norm").alias("q_norm"),
-            "cell_id",
-        )
-
-    if queries_cache_key is not None:
-        q = memoized_frame(
-            (
-                "ivf_assign_q",
-                queries_cache_key,
-                n_cells,
-                cent_digest,
-                n_probe,
-                id_col,
-                vec_col,
-            ),
-            queries_assigned,
-        )
-    else:
-        q = queries_assigned()
-    joined = c.join(F.broadcast(q), "cell_id").filter(
-        F.col("query_id") != F.col("candidate_id")
-    )
-    cos = dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
-    scored = joined.select(
-        "query_id", "candidate_id", F.round(cos, 6).alias("cos_sim")
-    )
-    return grouped_topk(
-        scored, ["query_id"], [F.desc("cos_sim"), F.asc("candidate_id")], k, "rank"
-    ).select("query_id", "candidate_id", "cos_sim", "rank")
 
 
 def lsh_topk(

@@ -1,19 +1,11 @@
-"""Top-k operators (SURVEY §2.5 — the `describeTopics(5)` pattern).
-
-Global top-k: `orderBy(...).limit(k)` — Spark plans TakeOrdered, a
-per-partition heap + driver merge; no global sort materializes.
-Per-group top-k: window row_number — one shuffle on the group key.
-"""
+"""Per-group top-k (SURVEY §2.5 — the `describeTopics(5)` pattern):
+window row_number — one shuffle on the group key."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-
-
-def global_topk(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    return df.orderBy(*order).limit(k)
 
 
 def grouped_topk(

@@ -193,9 +193,9 @@ def ivf_assign_sql(
     cent_cte: str = "cent",
     table: str = "embeddings",
 ) -> str:
-    """DuckDB mirror of `operators/similarity.ivf_assign`:
+    """DuckDB mirror of `operators/similarity.ivf_assign_literal`:
     argmax-cosine cell assignment over a centroid CTE (rounded to
-    6 dp with cell-id tiebreak, same as the Spark window).
+    6 dp with cell-id tiebreak, the order of its struct-array sort).
     ``cent_cte`` names that CTE — the default ``"cent"`` keeps every
     pre-round-9 oracle string byte-identical; a composite oracle that
     runs TWO independent IVF stages in one statement (s21: SemDeDup's

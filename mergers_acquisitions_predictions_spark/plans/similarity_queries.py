@@ -203,7 +203,6 @@ def s04_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=None,
         n_probe=2,
         corpus_cache_key=(sf_dir, "embeddings"),
-        queries_cache_key=(sf_dir, "embeddings", "vec_id<5"),
     )
 
 
@@ -1345,7 +1344,6 @@ def s28_colbert_token_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tokens=4,
         n_probe=2,
         corpus_cache_key=(sf_dir, "embeddings", "tokens4"),
-        queries_cache_key=(sf_dir, "embeddings", "tokens4", "vec_id<5"),
     )
 
 

@@ -157,7 +157,6 @@ def main(sizes=(100_000, 1_000_000)) -> None:
                 n_probe=2,
                 centroids=cent,
                 corpus_cache_key=(*ck, label),
-                queries_cache_key=(*ck, label, "q"),
             ).select("query_id", "candidate_id")
             rec = topk_recall(exact, appr, k=5).agg(
                 F.avg("recall").alias("r")

@@ -54,7 +54,6 @@ def main(n: int = 100_000) -> None:
             n_probe=2,
             centroids=cent,
             corpus_cache_key=(corpus_path, label),
-            queries_cache_key=(corpus_path, label, "q"),
         ).select("query_id", "candidate_id")
         rec = (
             topk_recall(exact, appr, k=5).agg(F.avg("recall").alias("r")).first()["r"]

@@ -79,7 +79,6 @@ def main(n: int = 1_000_000, dim: int = 64) -> None:
             n_probe=2,
             centroids=cent,
             corpus_cache_key=(path, label),
-            queries_cache_key=(path, label, "q"),
         ).select("query_id", "candidate_id")
         rec, t_serve = timed(
             lambda: topk_recall(exact, appr, k=5)

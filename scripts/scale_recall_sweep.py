@@ -187,7 +187,6 @@ def main(sizes=(100_000,), dim: int = 64, only: str | None = None) -> None:
                                 n_probe=n_probe,
                                 centroids=cent,
                                 corpus_cache_key=(path, cent_label),
-                                queries_cache_key=(path, cent_label, "q50"),
                             )
                             .select("query_id", "candidate_id", "rank")
                             .persist()

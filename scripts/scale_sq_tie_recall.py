@@ -106,7 +106,6 @@ def main(n: int = 1_000_000) -> None:
             n_probe=2,
             centroids=cent,
             corpus_cache_key=(path, label),
-            queries_cache_key=(path, label, "q"),
         )
         row[f"recall_{label}_exact"] = recall_of(appr_ex)
         print(

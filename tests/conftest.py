@@ -35,5 +35,19 @@ def executed_plans() -> dict:
 
 
 @pytest.fixture(scope="session")
+def sq8_index(spark, tmp_path_factory) -> str:
+    """Path of an IVF-SQ8 index over the SF_CORRECTNESS embeddings with
+    16 anchor cells, built once per session. Tests only read it."""
+    from mergers_acquisitions_predictions_spark.operators.ann_index import (
+        build_ivfsq_index,
+    )
+    from mergers_acquisitions_predictions_spark.sources.readers import load_table
+
+    path = str(tmp_path_factory.mktemp("sq8_index") / "idx")
+    build_ivfsq_index(load_table(spark, SF_CORRECTNESS, "embeddings"), path, n_cells=16)
+    return path
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", SF_SMOKE)

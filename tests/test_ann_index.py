@@ -16,25 +16,23 @@ from mergers_acquisitions_predictions_spark.sources.readers import load_table
 SF = "/root/testdata/sf0.01"
 
 
-def test_persisted_index_matches_inmemory_path(spark, tmp_path):
+def test_persisted_index_matches_inmemory_path(spark, sq8_index):
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = str(tmp_path / "idx")
-    build_ivfsq_index(e, path, n_cells=16)
+    path = sq8_index
     got = sorted(map(tuple, search_index(spark, path, q, k=5, n_probe=2).collect()))
     want = sorted(map(tuple, ivfsq_topk(q, e, k=5, n_cells=16, n_probe=2).collect()))
     assert got == want  # bit-identical: same stats/codes/fold orders
 
 
-def test_probe_scan_is_partition_pruned(spark, tmp_path):
+def test_probe_scan_is_partition_pruned(spark, sq8_index):
     """The codes scan must carry the probed cells as a partition
     filter — files from unprobed cells are never read. Asserted from
     the physical plan's PartitionFilters AND from the pruned file
     scan's partition count."""
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 2)
-    path = str(tmp_path / "idx")
-    build_ivfsq_index(e, path, n_cells=16)
+    path = sq8_index
     out = search_index(spark, path, q, k=5, n_probe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the isin over the partition column must appear as a
@@ -195,7 +193,7 @@ def test_streaming_queries_served_from_persisted_index(spark, tmp_path):
     assert sorted(got) == want and len(want) == 15
 
 
-def test_filtered_search_prefilter_semantics(spark, tmp_path):
+def test_filtered_search_prefilter_semantics(spark, sq8_index):
     """`allowed=` restricts candidates BEFORE ranking (pre-filter):
     every hit satisfies the predicate, ranks are dense 1..k over the
     matching candidates, and the result equals the in-memory path run
@@ -205,8 +203,7 @@ def test_filtered_search_prefilter_semantics(spark, tmp_path):
     e = load_table(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
     allowed = e.filter(F.col("label") % 2 == 1)
-    path = str(tmp_path / "idx")
-    build_ivfsq_index(e, path, n_cells=16)
+    path = sq8_index
     got = search_index(spark, path, q, k=5, n_probe=2, allowed=allowed)
     rows = got.collect()
     odd_ids = {r["vec_id"] for r in allowed.select("vec_id").collect()}
@@ -238,12 +235,11 @@ def test_filtered_search_prefilter_semantics(spark, tmp_path):
         assert seq[: len(loose_order.get(qid, []))] == loose_order.get(qid, [])[: len(seq)]
 
 
-def test_filtered_search_keeps_partition_pruning(spark, tmp_path):
+def test_filtered_search_keeps_partition_pruning(spark, sq8_index):
     """The semi join with the allowed set must not defeat the probed-
     cells PartitionFilter on the codes scan."""
     e = load_table(spark, SF, "embeddings")
-    path = str(tmp_path / "idx")
-    build_ivfsq_index(e, path, n_cells=16)
+    path = sq8_index
     out = search_index(
         spark, path, e.filter(F.col("vec_id") < 2), k=5, n_probe=2,
         allowed=e.filter(F.col("label") % 2 == 1),
@@ -894,7 +890,7 @@ def test_dedup_rerank_compose_is_oracle_replayable(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
 
 
-def test_serve_score_blas_matches_fold(spark, tmp_path):
+def test_serve_score_blas_matches_fold(spark, tmp_path, sq8_index):
     """`search_index(score_blas=True)` must return the SAME
     frame as the fold serve across k / n_probe / allowed / rerank
     combinations at two SFs — the parity-scope empirical leg (the
@@ -905,10 +901,10 @@ def test_serve_score_blas_matches_fold(spark, tmp_path):
     import pandas as pd
 
     e01 = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    e1 = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    for tag, e in (("sf0.001", e01), ("sf0.01", e1)):
-        path = str(tmp_path / f"idx_{tag}")
-        build_ivfsq_index(e, path, n_cells=16)
+    path01 = str(tmp_path / "idx_sf0.001")
+    build_ivfsq_index(e01, path01, n_cells=16)
+    e1 = load_table(spark, SF, "embeddings")
+    for tag, e, path in (("sf0.001", e01, path01), ("sf0.01", e1, sq8_index)):
         q = e.filter(F.col("vec_id") < 7)
         cases = [
             dict(k=5, n_probe=2),

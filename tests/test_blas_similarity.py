@@ -217,28 +217,24 @@ def test_blas_assign_tie_boundary_policy(spark):
     assert blas == [1]  # floor trick: 0.064062 < 0.064063 -> cell 1
 
 
-def test_residual_fit_blas_assignment_matches_fold(spark):
+def test_residual_fit_blas_assignment_matches_fold(spark, sq8_index):
     """Round 13 (VERDICT r12 #2): `pq_kmeans_residual_codebooks`'
     BLAS-assigned fit must learn the SAME books as the fold-assigned
     fit on the test corpus — the assignment feeds only the residual
     subtraction, and the cell choice is identical off tie boundaries
     (the `ivf_assign_blas` parity contract); the seeded Lloyd runs
     then see identical training rows."""
+    from mergers_acquisitions_predictions_spark.operators.ann_index import _live
     from mergers_acquisitions_predictions_spark.operators.pq import (
         pq_kmeans_residual_codebooks,
-    )
-    from mergers_acquisitions_predictions_spark.operators.similarity import (
-        collect_centroid_rows,
-        ivf_centroids,
     )
     from mergers_acquisitions_predictions_spark.sources.readers import load_table
 
     e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    cent_rows = collect_centroid_rows(ivf_centroids(e, 16))
-    fold = pq_kmeans_residual_codebooks(
-        e, cent_rows, n_subspaces=8, n_codes=4
-    )
+    # the shared index's 16 anchor centroids (its _meta geometry)
+    cent_rows = _live(spark, sq8_index).cent_rows
+    fold = pq_kmeans_residual_codebooks(e, cent_rows, n_subspaces=2, n_codes=4)
     blas = pq_kmeans_residual_codebooks(
-        e, cent_rows, n_subspaces=8, n_codes=4, assign_blas=True
+        e, cent_rows, n_subspaces=2, n_codes=4, assign_blas=True
     )
     assert fold == blas

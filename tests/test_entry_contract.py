@@ -648,10 +648,13 @@ def test_driver_window_rotation_rule_r13():
 def test_tooling_imports_resolve():
     """Every package name the benchmark (perfbench/), the scripts and
     bench.py import — or wrap by name through bench.py's `_staged` /
-    scripts/stagesplit.py's STAGED table — exists, so a rename in the
-    package cannot silently break them. AST walk, no Spark session."""
+    scripts/stagesplit.py's STAGED table — exists, and every keyword a
+    direct call passes to an imported package function is one of its
+    parameters, so a rename or a deleted option in the package cannot
+    silently break them. AST walk, no Spark session."""
     import ast
     import importlib
+    import inspect
     import pathlib
 
     pkg = "mergers_acquisitions_predictions_spark"
@@ -672,10 +675,20 @@ def test_tooling_imports_resolve():
         except ModuleNotFoundError:
             return False
 
+    def bad_keywords(call: ast.Call, fn) -> list[str]:
+        try:
+            params = inspect.signature(fn).parameters
+        except (TypeError, ValueError):
+            return []
+        if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            return []
+        return [kw.arg for kw in call.keywords if kw.arg and kw.arg not in params]
+
     missing = []
     for f in files:
         tree = ast.parse(f.read_text())
         aliases: dict[str, str] = {}  # `import pkg.x as X` → X: pkg.x
+        names: dict[str, object] = {}  # `from pkg.x import f as g` → g: f
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 for a in node.names:
@@ -683,12 +696,30 @@ def test_tooling_imports_resolve():
                         importlib.import_module(a.name)
                         aliases[a.asname or a.name] = a.name
             elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == pkg:
-                missing += [
-                    f"{f.name}: {node.module}.{a.name}"
-                    for a in node.names
-                    if not resolves(node.module, a.name)
-                ]
+                for a in node.names:
+                    if not resolves(node.module, a.name):
+                        missing.append(f"{f.name}: {node.module}.{a.name}")
+                    else:
+                        obj = getattr(importlib.import_module(node.module), a.name, None)
+                        if callable(obj):
+                            names[a.asname or a.name] = obj
         for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                fn = None
+                if isinstance(node.func, ast.Name):
+                    fn = names.get(node.func.id)
+                elif (
+                    isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id in aliases
+                ):
+                    mod = importlib.import_module(aliases[node.func.value.id])
+                    fn = getattr(mod, node.func.attr, None)
+                if fn is not None:
+                    missing += [
+                        f"{f.name}:{node.lineno}: {fn.__name__}({kw}=)"
+                        for kw in bad_keywords(node, fn)
+                    ]
             if (
                 isinstance(node, ast.Call)
                 and getattr(node.func, "id", None) == "_staged"

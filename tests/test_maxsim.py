@@ -639,6 +639,41 @@ def test_one_call_token_table_route_matches_in_memory(spark, tmp_path):
         maxsim_search_tokens_persisted(spark, idx, q, k=5, k0=10)
 
 
+def test_token_table_shortlist_over_bound_raises(spark, tmp_path, monkeypatch):
+    """The token-table serve collects its distinct (query, parent)
+    shortlist to the driver: past `MAX_SHORTLIST_ROWS` it raises,
+    naming the bound; at the shortlist's own size it serves."""
+    from mergers_acquisitions_predictions_spark.operators import maxsim
+
+    e = load_table(spark, SF_SMALL, "embeddings")
+    toks = e.select(
+        "vec_id",
+        F.posexplode(maxsim.token_slices(F.col("embedding"), 4, 16)).alias(
+            "token_id", "token"
+        ),
+    )
+    idx, tbl = str(tmp_path / "tok_idx"), str(tmp_path / "tok_tbl")
+    maxsim.build_token_index(toks, idx, n_tokens=4)
+    maxsim.write_token_table(toks, tbl)
+    q = toks.filter(F.col("vec_id") < 3)
+    comp_q = maxsim.composite_tokens(q, 4, "vec_id", "token_id", "token")
+    n = maxsim._parent_shortlist(
+        search_index(spark, idx, comp_q, k=10, n_probe=2), 4
+    ).count()
+    assert n > 1
+
+    def serve():
+        return maxsim.maxsim_search_tokens_persisted(
+            spark, idx, q, k=5, k0=10, token_table_path=tbl
+        )
+
+    monkeypatch.setattr(maxsim, "MAX_SHORTLIST_ROWS", n - 1)
+    with pytest.raises(ValueError, match=f"MAX_SHORTLIST_ROWS={n - 1}"):
+        serve()
+    monkeypatch.setattr(maxsim, "MAX_SHORTLIST_ROWS", n)
+    assert serve().count() > 0
+
+
 def test_n_tokens_check_survives_same_session_compact(spark, tmp_path):
     """A same-session `compact_index` promotes a NEW generation; the
     n_tokens cross-check must hold through it (the serve reads the

@@ -17,7 +17,7 @@ from mergers_acquisitions_predictions_spark.operators.joins import (
     range_join_bucketed,
     semi_join,
 )
-from mergers_acquisitions_predictions_spark.operators.topk import global_topk, grouped_topk
+from mergers_acquisitions_predictions_spark.operators.topk import grouped_topk
 
 
 def test_semi_anti_partition_the_left(spark):
@@ -120,8 +120,6 @@ def test_topk(spark):
     df = spark.createDataFrame(
         [("g1", i, float(i)) for i in range(5)] + [("g2", 9, 1.0)], ["g", "id", "v"]
     )
-    top = global_topk(df, [F.desc("v"), F.asc("id")], 2).collect()
-    assert [(r.g, r.id) for r in top] == [("g1", 4), ("g1", 3)]
     per_group = grouped_topk(df, ["g"], [F.desc("v"), F.asc("id")], 1).collect()
     assert {(r.g, r.id) for r in per_group} == {("g1", 4), ("g2", 9)}
 

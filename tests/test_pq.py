@@ -115,11 +115,13 @@ def test_kmeans_codebooks_deterministic_and_swap_equivalent(spark):
     )
 
     e = load_table(spark, SF, "embeddings")
-    a = pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16)
-    b = pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16)
+    # 4 subspaces × 16 codes and 5 Lloyd rounds: the smallest fit whose
+    # books still clear the recall floor below
+    a = pq_kmeans_codebooks(e, n_subspaces=4, n_codes=16, max_iter=5)
+    b = pq_kmeans_codebooks(e, n_subspaces=4, n_codes=16, max_iter=5)
     assert a == b  # fixed seeds -> identical centers
-    assert len(a) == 8 and all(len(book) == 16 for book in a)
-    assert all(len(code) == 8 for book in a for code in book)
+    assert len(a) == 4 and all(len(book) == 16 for book in a)
+    assert all(len(code) == 16 for book in a for code in book)
 
     q = e.filter(F.col("vec_id") < 20)
     exact = brute_force_topk(q, e, k=5)
@@ -144,24 +146,26 @@ def test_kmeans_codebooks_sampled_fit(spark):
     )
 
     e = load_table(spark, SF, "embeddings")
-    full = pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16)
-    floored = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, fit_sample_per_code=25
-    )
+    # the branch cases separate at 2 subspaces × 4 codes (sample of
+    # 25 × 4 = 100 of the 500 rows)
+    small = dict(n_subspaces=2, n_codes=4, max_iter=5)
+    full = pq_kmeans_codebooks(e, **small)
+    floored = pq_kmeans_codebooks(e, fit_sample_per_code=25, **small)
     assert floored == full  # corpus below the 100k floor -> full fit
-    s1 = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, fit_sample_per_code=25, fit_floor=0
-    )
-    s2 = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, fit_sample_per_code=25, fit_floor=0
-    )
+    s1 = pq_kmeans_codebooks(e, fit_sample_per_code=25, fit_floor=0, **small)
+    s2 = pq_kmeans_codebooks(e, fit_sample_per_code=25, fit_floor=0, **small)
     assert s1 == s2  # content-keyed sample + fixed seeds -> stable
     assert s1 != full  # the sampled branch actually ran
-    assert len(s1) == 8 and all(len(book) == 16 for book in s1)
-    assert all(len(code) == 8 for book in s1 for code in book)
+    assert len(s1) == 2 and all(len(book) == 4 for book in s1)
+    assert all(len(code) == 32 for book in s1 for code in book)
+    # the recall floor needs 4 × 16 books (sample of 25 × 16 = 400)
+    sampled = pq_kmeans_codebooks(
+        e, n_subspaces=4, n_codes=16, max_iter=5, fit_sample_per_code=25,
+        fit_floor=0,
+    )
     q = e.filter(F.col("vec_id") < 20)
     exact = brute_force_topk(q, e, k=5)
-    got = ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2, codebooks=s1, rerank=40)
+    got = ivfpq_topk(q, e, k=5, n_cells=16, n_probe=2, codebooks=sampled, rerank=40)
     rec = topk_recall(exact, got, k=5).agg(F.avg("recall")).first()[0]
     assert rec >= 0.7
 
@@ -179,10 +183,9 @@ def test_pq_kmeans_codebooks_lazy_count(spark):
     )
 
     e = load_table(spark, SF, "embeddings")
-    plain = pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16)
-    keyed = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, corpus_cache_key=(SF, "emb", "t")
-    )
+    small = dict(n_subspaces=2, n_codes=4, max_iter=5)
+    plain = pq_kmeans_codebooks(e, **small)
+    keyed = pq_kmeans_codebooks(e, corpus_cache_key=(SF, "emb", "t"), **small)
     assert plain == keyed
     # the count landed under the index builds' shared memo key: a
     # lookup through that key is a hit and never calls its build
@@ -193,7 +196,5 @@ def test_pq_kmeans_codebooks_lazy_count(spark):
         ("count", (SF, "emb", "t"), "vec_id"), _unexpected_build
     ) == e.count()
     # forced sampled branch still works through the lazy probe
-    sampled = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, fit_sample_per_code=25, fit_floor=0
-    )
-    assert len(sampled) == 8 and len(sampled[0]) == 16
+    sampled = pq_kmeans_codebooks(e, fit_sample_per_code=25, fit_floor=0, **small)
+    assert len(sampled) == 2 and len(sampled[0]) == 4

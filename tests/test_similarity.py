@@ -363,6 +363,21 @@ def test_fit_floor_override_forces_sampled_branch(spark, monkeypatch):
     assert fit_rows[-1] == n  # default floor: full fit at 500 rows
 
 
+def test_caller_centroid_table_over_bound_raises(spark, emb, monkeypatch):
+    """A caller centroid table is collected to the driver: past
+    `MAX_CENTROID_ROWS` rows `ivf_topk` raises, naming the bound,
+    instead of collecting it."""
+    from mergers_acquisitions_predictions_spark.operators import similarity as S
+
+    q = emb.filter(F.col("vec_id") < 3)
+    cent = S.ivf_centroids(emb, 8)
+    monkeypatch.setattr(S, "MAX_CENTROID_ROWS", 7)
+    with pytest.raises(ValueError, match="MAX_CENTROID_ROWS=7"):
+        S.ivf_topk(q, emb, k=5, n_probe=2, centroids=cent)
+    monkeypatch.setattr(S, "MAX_CENTROID_ROWS", 8)
+    assert S.ivf_topk(q, emb, k=5, n_probe=2, centroids=cent).count() == 15
+
+
 def test_ivf_topk_supplied_centroid_memo_is_content_keyed(spark):
     """Round 8: with a caller-supplied centroid table, ivf_topk's
     corpus-assignment memo folds a digest of the collected centroid
