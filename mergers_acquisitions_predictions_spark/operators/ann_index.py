@@ -114,12 +114,10 @@ from pyspark.sql import functions as F
 from ..functions.vectors import dot, l2_norm
 from .pq import (
     adc_sum,
+    anchor_slices,
     pq_adc_table,
     pq_anchor_codebooks,
     pq_encode,
-    pq_residual_anchor_codebooks,
-    residual_cent_df,
-    residual_expr,
 )
 from .similarity import (
     _blas_topk,
@@ -137,6 +135,7 @@ from .topk import grouped_topk
 from .util import (
     bounded_collect,
     hof_bind,
+    keyed_memo,
     local_rows_df,
     memoized_frame,
     repartition_for_compute,
@@ -165,14 +164,6 @@ def _with_extra_meta(geometry: dict, extra_meta: dict | None) -> dict:
             f"extra_meta keys collide with frozen index geometry: {clash}"
         )
     return {**geometry, **extra_meta}
-
-
-def _memo(corpus_cache_key: tuple | None, key: tuple, build):
-    """``build()``, memoized under ``key`` (`util.memoized_literal`)
-    only when the caller opted in with a ``corpus_cache_key``."""
-    from .util import memoized_literal
-
-    return build() if corpus_cache_key is None else memoized_literal(key, build)
 
 
 def _gen_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -320,15 +311,27 @@ def _unit_pre(assigned: DataFrame, g: tuple, cent_rows: list) -> tuple:
 
 
 def _pq_pre(assigned: DataFrame, residual: bool, cent_rows: list) -> tuple:
+    """The PQ pre-encode: the unit vector, or — ``residual`` (SCALE.md
+    §7s; classic IVF-ADC, Jégou et al. 2011 §IV.B) — x_unit −
+    c_unit(cell(x)) against the persisted centroids, so the books only
+    code the within-cell spread. The unit centroids ``(cell_id,
+    __cu)`` are divided in Python IEEE doubles (bit-identical to the
+    oracle's ``cvec[i]/cnorm``) and join broadcast on ``cell_id``
+    (anchor ids, not dense); on the query side that cell equi-join
+    pairs each candidate with its own cell's ADC table. It is also the
+    training column of `pq.pq_kmeans_residual_codebooks` and of the
+    residual anchor books."""
+    unit = _unit(F.col("__vec"), F.col("__norm"))
     if not residual:
-        return _unit_pre(assigned, (), cent_rows)
-    # residual geometry (SCALE.md §7s): x_unit − c_unit(cell(x)) against
-    # the PERSISTED centroids; on the query side the cell equi-join then
-    # pairs each candidate with its own cell's table (IVF-ADC)
-    cents = F.broadcast(residual_cent_df(assigned.sparkSession, cent_rows))
+        return assigned, unit
+    cents = local_rows_df(
+        assigned.sparkSession,
+        [(int(c), [float(x) / float(n) for x in v]) for c, v, n in cent_rows],
+        "cell_id BIGINT, __cu ARRAY<DOUBLE>",
+    )
     return (
-        assigned.join(cents, "cell_id"),
-        residual_expr(F.col("__vec"), F.col("__norm"), F.col("__cu")),
+        assigned.join(F.broadcast(cents), "cell_id"),
+        F.zip_with(unit, F.col("__cu"), lambda a, b: a - b),
     )
 
 
@@ -496,8 +499,8 @@ def _fit_centroids(
         cent_rows = collect_centroid_rows(centroids)
         return len(cent_rows), cent_rows
     if n_cells is None:
-        n_cells = auto_cells(_memo(ck, ("count", ck, id_col), corpus.count))
-    return n_cells, _memo(
+        n_cells = auto_cells(keyed_memo(ck, ("count", ck, id_col), corpus.count))
+    return n_cells, keyed_memo(
         ck,
         ("ivf_cent_rows", ck, n_cells, id_col, vec_col),
         lambda: collect_centroid_rows(ivf_centroids(corpus, n_cells, id_col, vec_col)),
@@ -535,11 +538,12 @@ def _pq_books(
     vec_col: str,
 ) -> list[list[list[float]]]:
     """The PQ codebooks of `build_ivfpq_index` and `pq.ivfpq_topk`:
-    the caller's ``codebooks``, else the lowest-id anchor books of the
-    unit vectors or — ``residual`` — of the residuals of ``assigned``
-    (memoized under ``ck``). Caller books define the geometry, so a
-    corpus whose width is not theirs raises ValueError instead of
-    mis-encoding silently through ``F.slice``."""
+    the caller's ``codebooks``, else the lowest-id anchor books
+    (`pq.pq_anchor_codebooks`) or — ``residual`` — `pq.anchor_slices`
+    over the codec's residual pre-encode of ``assigned`` (memoized
+    under ``ck``). Caller books define the geometry, so a corpus whose
+    width is not theirs raises ValueError instead of mis-encoding
+    silently through ``F.slice``."""
     if codebooks is not None:
         dim = len(codebooks) * len(codebooks[0][0])
         if corpus.filter(F.size(F.col(vec_col)) != dim).limit(1).count():
@@ -549,21 +553,13 @@ def _pq_books(
             )
         return codebooks
     if residual:
-
-        def resid_books():
-            frame, resid = _pq_pre(assigned, True, cent_rows)
-            return pq_residual_anchor_codebooks(
-                frame.select("candidate_id", resid.alias("__resid")),
-                n_subspaces,
-                n_codes,
-            )
-
-        return _memo(
+        frame, resid = _pq_pre(assigned, True, cent_rows)
+        return keyed_memo(
             ck,
             ("pq_resid_cbs", ck, n_cells, n_subspaces, n_codes, id_col, vec_col),
-            resid_books,
+            lambda: anchor_slices(frame, "candidate_id", resid, n_subspaces, n_codes),
         )
-    return _memo(
+    return keyed_memo(
         ck,
         ("pq_anchor_cbs", ck, n_subspaces, n_codes, id_col, vec_col),
         lambda: pq_anchor_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col),
@@ -646,7 +642,7 @@ def build_ivfsq_index(
     own raise ValueError (enforced — ADVICE r12); ``None`` adds
     nothing."""
     ck = corpus_cache_key
-    mns, rngs = _memo(
+    mns, rngs = keyed_memo(
         ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col)
     )
     n_cells, cent_rows = _fit_centroids(

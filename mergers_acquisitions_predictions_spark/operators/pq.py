@@ -39,14 +39,36 @@ calls for alongside sign-LSH (similarity.lsh_topk) and IVF
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm
 from .sq import _unit
 from .util import hof_bind
+
+
+def anchor_slices(
+    frame: DataFrame,
+    id_col: str,
+    vec: Column,
+    n_subspaces: int,
+    n_codes: int,
+) -> list[list[list[float]]]:
+    """The one lowest-id anchor slice: the ``vec`` values of the
+    ``n_codes`` lowest-``id_col`` rows of ``frame``, each cut into
+    ``n_subspaces`` equal subvectors → ``books[m][c]`` is code ``c``
+    of subspace ``m``. Deterministic and oracle-replayable: the
+    oracle recomputes the same vectors and takes the same lowest-id
+    LIMIT. One driver collect of ``n_codes`` rows (a `limit`) — the
+    index-build artifact a deployment persists once. A width not
+    divisible by ``n_subspaces`` raises ValueError."""
+    rows = frame.select(id_col, vec.alias("__v")).orderBy(id_col).limit(n_codes).collect()
+    dim = len(rows[0]["__v"])
+    if dim % n_subspaces:
+        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
+    sub = dim // n_subspaces
+    vs = [[float(x) for x in r["__v"]] for r in rows]
+    return [[v[m * sub : (m + 1) * sub] for v in vs] for m in range(n_subspaces)]
 
 
 def pq_anchor_codebooks(
@@ -56,101 +78,15 @@ def pq_anchor_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """Deterministic PQ codebooks: the ``n_codes`` lowest-id corpus
-    vectors, L2-normalized, sliced into ``n_subspaces`` equal
-    subvectors → ``codebooks[m][c]`` is code ``c`` of subspace ``m``.
-
-    Driver-sized by construction (n_codes rows — same class as
-    `kmeans_centroids` materializing fitted centers); the one tiny
-    collect IS the index-build step a deployment persists once.
-    Normalization happens here in Python IEEE doubles with a
-    left-to-right squared-sum fold — bit-identical to both the
-    engine's `l2_norm` and the oracle's `list_sum` spelling, which is
-    what lets DuckDB regenerate the very same codebook values from
-    the parquet instead of needing literals."""
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(n_codes)
-        .collect()
+    """Deterministic PQ codebooks: `anchor_slices` of the ``n_codes``
+    lowest-id corpus vectors, L2-normalized (`sq._unit` over the
+    left-to-right `l2_norm` fold — the oracle's ``list_sum``
+    spelling, so DuckDB regenerates the same values from the
+    parquet)."""
+    return anchor_slices(
+        corpus, id_col, _unit(F.col(vec_col), l2_norm(F.col(vec_col))),
+        n_subspaces, n_codes,
     )
-    dim = len(rows[0][vec_col])
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    sub = dim // n_subspaces
-    units: list[list[float]] = []
-    for r in rows:
-        v = [float(x) for x in r[vec_col]]
-        acc = 0.0
-        for x in v:  # left-to-right, matches l2_norm / SQL list_sum
-            acc += x * x
-        nrm = math.sqrt(acc)
-        units.append([x / nrm for x in v])
-    return [
-        [u[m * sub : (m + 1) * sub] for u in units] for m in range(n_subspaces)
-    ]
-
-
-def residual_cent_df(spark, cent_rows) -> DataFrame:
-    """The UNIT-normalized centroid table ``(cell_id, __cu)`` for the
-    residual-encoding routes (round 12, SCALE.md §7s) as a
-    driver-sized single-partition frame: residual encode/serve joins
-    it broadcast on ``cell_id`` (cell ids are anchor vec_ids — NOT
-    dense — so a positional literal lookup would be wrong). The
-    division happens in Python IEEE doubles — bit-identical to the
-    oracle's ``cvec[i]/cnorm`` and to computing it plan-side."""
-    from .util import local_rows_df
-
-    return local_rows_df(
-        spark,
-        [
-            (int(c), [float(x) / float(n) for x in v])
-            for c, v, n in cent_rows
-        ],
-        "cell_id BIGINT, __cu ARRAY<DOUBLE>",
-    )
-
-
-def residual_expr(vec: Column, norm: Column, cu: Column) -> Column:
-    """x_unit − c_unit(cell(x)) — the residual the compressed fine
-    stage encodes under ``residual=True`` (classic IVF-ADC, Jégou et
-    al. 2011 §IV.B). ADC between two residuals of the SAME cell
-    estimates the same ‖q_u − x_u‖² the raw route estimates, but the
-    books only have to code the within-cell spread — §7s measured
-    +0.16 recall@5 at equal bytes on the structured corpus (and a
-    LOSS on the unstructured one: opt-in, never a default)."""
-    return F.zip_with(_unit(vec, norm), cu, lambda a, b: a - b)
-
-
-def pq_residual_anchor_codebooks(
-    resid_frame: DataFrame,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    id_col: str = "candidate_id",
-    res_col: str = "__resid",
-) -> list[list[list[float]]]:
-    """`pq_anchor_codebooks` for the residual route: the ``n_codes``
-    lowest-id RESIDUAL vectors, sliced per subspace — deterministic
-    and oracle-replayable (the oracle recomputes the same residuals
-    relationally and takes the same lowest-id LIMIT). The residuals
-    arrive computed (assignment + centroid subtract), so this is one
-    driver-sized collect like the raw anchor fit; a deployment swaps
-    in per-subspace k-means over residuals exactly as for the raw
-    kind (scripts/scale_pq_residual.fit_books_on)."""
-    rows = (
-        resid_frame.select(id_col, res_col)
-        .orderBy(id_col)
-        .limit(n_codes)
-        .collect()
-    )
-    dim = len(rows[0][res_col])
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    sub = dim // n_subspaces
-    res = [[float(x) for x in r[res_col]] for r in rows]
-    return [
-        [v[m * sub : (m + 1) * sub] for v in res] for m in range(n_subspaces)
-    ]
 
 
 def _cb_literal(codebooks: list[list[list[float]]]) -> Column:
@@ -332,9 +268,9 @@ def ivfpq_topk(
     with its own cell's table). Same bytes, same join shapes, same
     ranking contract; §7s measured +0.16 recall@5 on the structured
     corpus and a LOSS on the unstructured one — opt-in by design.
-    Anchor books come from the lowest-id RESIDUALS
-    (`pq_residual_anchor_codebooks`); caller-supplied ``codebooks``
-    must have been fitted on residuals."""
+    Anchor books come from the lowest-id RESIDUALS (`anchor_slices`
+    over the residual column); caller-supplied ``codebooks`` must
+    have been fitted on residuals."""
     from .ann_index import PQ, _assigned, _corpus_topk, _fit_centroids, _pq_books
 
     ck = corpus_cache_key
@@ -372,104 +308,28 @@ def pq_kmeans_codebooks(
     corpus_cache_key: tuple | None = None,
 ) -> list[list[list[float]]]:
     """LEARNED PQ codebooks — the production replacement for
-    `pq_anchor_codebooks`' deterministic anchor slices, exactly as
-    `kmeans_centroids` is for `ivf_centroids`: per subspace, k-means
-    (fixed seed) fits ``n_codes`` centroids to the distribution of
-    that subspace's unit-vector slices, minimizing the quantization
-    error the ADC distance carries. Same nested-list shape, so
-    `pq_encode`/`pq_adc_table`/`ivfpq_topk` consume it unchanged via
-    the ``codebooks=`` parameter.
+    `pq_anchor_codebooks`, as `kmeans_centroids` is for
+    `ivf_centroids`: the ``n_subspaces`` call of
+    `similarity.fit_kmeans_books` over the unit vectors, so book ``m``
+    is the ``n_codes`` k-means centers (``seed + m``) of subspace
+    ``m``'s unit-vector slices. Same nested-list shape as the anchor
+    books: `pq_encode` / `pq_adc_table` / ``codebooks=`` consume it
+    unchanged.
 
-    The training input is materialized ONCE (all subspace slices in
-    one cached frame); each of the ``n_subspaces`` fits is a
-    distributed MLlib Lloyd run over its slice column, and the
-    resulting centers are driver-sized (n_codes × sub_dim floats per
-    subspace) by construction — the index-build artifact a deployment
-    persists. The fit itself is iterative MLlib; since round 5 the s09
-    configuration is VALUE-checked anyway via the artifact recipe —
-    the learned codebooks are materialized and the oracle replays
-    encode + ADC + re-rank from the same files — while s08 (anchor
-    codebooks) hash-checks the identical join shapes with fully
-    regenerable constants.
+    Sample rule (`fit_kmeans_books`): above ``max(fit_sample_per_code
+    × n_codes, floor)`` rows the fits share one content-keyed
+    ``xxhash64(id) % m`` sample (default 6250 × 16 = the 100k sample
+    SCALE.md §7q measured); ``fit_floor`` overrides the 100k floor
+    (``0`` forces the sampled branch, as s29 does); ``None`` disables
+    sampling. ``corpus_cache_key`` memoizes the sizing count under
+    the index builds' key. The learned books still encode the FULL
+    corpus: encode, not fit, dominates once books are frozen."""
+    from .similarity import fit_kmeans_books
 
-    SAMPLED FIT (round 11, `kmeans_centroids`' recipe promoted —
-    SCALE.md §7q measured it: books fitted on a 100k sample were the
-    knob that fixed the ADC cut, fit 26 s): Lloyd cost here is
-    n_subspaces × max_iter × n × n_codes distances over the FULL
-    corpus; when the corpus exceeds ``fit_sample_per_code × n_codes``
-    rows (default 6250 × 16 = the measured 100k sample), each fit
-    runs on ONE deterministic content-keyed sample of ~that size
-    (``xxhash64(id) % m == 0`` — partitioning-independent; the slices
-    frame is built from the sample, so all ``n_subspaces`` fits share
-    it) and the learned books encode the FULL corpus through the
-    unchanged map-side `pq_encode` — M·K·d per row, a cost that does
-    NOT shrink with sampling (the deployment note: encode, not fit,
-    dominates once books are frozen). The 100k absolute floor keeps
-    small corpora on the full fit; ``fit_floor`` overrides it
-    (``0`` forces the sampled branch — how s29 exercises the
-    deployment path at oracle scale); ``None`` disables sampling.
-
-    Sizing the sample needs the corpus row count, but small corpora —
-    most callers at oracle scale — never take the sampled branch, and
-    an unconditional full ``count()`` job per fit just to learn that
-    was waste (ADVICE r11). The count is lazy now:
-    ``corpus_cache_key`` reuses the index builds' memoized count under
-    the SAME key (``("count", key, id_col)`` — a following
-    `build_ivfpq_index(corpus_cache_key=...)` then pays no count at
-    all); otherwise a ``limit(threshold+1).count()`` probe — an
-    early-exit scan bounded by the threshold, never corpus-shaped —
-    decides the branch, and only a corpus that actually exceeds the
-    threshold pays the full count that sizes its sampling modulus
-    (the branch where that count is genuinely needed)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from .similarity import _FIT_SAMPLE_FLOOR
-    from .util import fit_released, memoized_literal
-
-    first = corpus.select(vec_col).first()
-    dim = len(first[vec_col])
-    if fit_sample_per_code is not None:
-        target = fit_sample_per_code * n_codes
-        floor = _FIT_SAMPLE_FLOOR if fit_floor is None else fit_floor
-        thresh = max(target, floor)
-        if corpus_cache_key is not None:
-            n = memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-        else:
-            n = corpus.limit(thresh + 1).count()
-            if n > thresh:
-                n = corpus.count()
-        if n > thresh:
-            m = max(2, round(n / target))
-            corpus = corpus.filter(F.xxhash64(F.col(id_col)) % m == 0)
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    sub = dim // n_subspaces
-    unit = _unit(F.col(vec_col), l2_norm(F.col(vec_col)))
-    slices = corpus.select(
-        *[
-            array_to_vector(F.slice(unit, m * sub + 1, sub)).alias(f"__s{m}")
-            for m in range(n_subspaces)
-        ]
+    return fit_kmeans_books(
+        corpus, id_col, vec_col, n_subspaces, n_codes, seed, max_iter,
+        fit_sample_per_code, fit_floor, corpus_cache_key,
     )
-    slices = slices.persist()
-    try:
-        books: list[list[list[float]]] = []
-        for m in range(n_subspaces):
-            model = fit_released(
-                KMeans(
-                    k=n_codes, seed=seed + m, maxIter=max_iter, featuresCol=f"__s{m}"
-                ),
-                slices,
-            )
-            books.append(
-                [[float(x) for x in c] for c in model.clusterCenters()]
-            )
-        return books
-    finally:
-        slices.unpersist()
 
 
 def pq_kmeans_residual_codebooks(
@@ -486,90 +346,29 @@ def pq_kmeans_residual_codebooks(
     corpus_cache_key: tuple | None = None,
     assign_blas: bool = False,
 ) -> list[list[list[float]]]:
-    """LEARNED books for the RESIDUAL kind (round 12 — §7s's winning
-    configuration: learned books over residuals read 0.84 recall@5 vs
-    0.68 raw at equal bytes on the structured corpus): per subspace,
-    k-means over the RESIDUAL slices x_unit − c_unit(cell(x)) — the
-    input is NOT re-normalized (a residual is not a direction; the
-    §7s script's `fit_books_on` promoted into the API). ``cent_rows``
-    is the SAME collected centroid table the index build uses — the
-    residuals the books are fitted on must be the residuals the build
-    encodes. Sampling contract identical to `pq_kmeans_codebooks`
-    (content-keyed xxhash sample, 100k floor, lazy count).
+    """LEARNED books for the RESIDUAL kind: `pq_kmeans_codebooks`' call
+    over the residuals x_unit − c_unit(cell(x)) instead of the unit
+    vectors (not re-normalized: a residual is not a direction). The
+    residual column is the PQ codec's own pre-encode
+    (`ann_index._pq_pre`) of the sample's cell assignment against
+    ``cent_rows`` — pass the centroid table the index build uses, and
+    the books are fitted on exactly the residuals the build encodes.
+    Sampling as in `pq_kmeans_codebooks`; the sample is drawn before
+    the assignment.
 
-    ``assign_blas`` (round 13 — VERDICT r12 #2): unlike the raw fit,
-    the residual fit must CELL-ASSIGN its training rows before it can
-    subtract the centroid — an n×cells term the raw fit doesn't have,
-    and at 1M×1000 cells the fold-expression assignment made the
-    residual fit pay 472 s where the raw fit paid 88 s (§7s-b). The
-    flag routes that one step through `ivf_assign_blas` — the exact
-    shape `scale_assign_parity` proves bit-safe off tie boundaries —
-    and touches NOTHING downstream: residual subtraction, slicing and
-    the Lloyd fits consume the same columns either way. Default off,
-    matching every other registered-row fold-path default."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    ``assign_blas`` routes that assignment through `ivf_assign_blas`
+    (one numpy matmul per Arrow batch — at 1M × 1000 cells the fold
+    assignment dominates the fit, SCALE.md §7s-b); it only picks the
+    cell, which is identical off tie boundaries. Default off, like
+    every registered-row fold-path default."""
+    from .ann_index import _pq_pre
+    from .similarity import fit_kmeans_books, ivf_assign_blas, ivf_assign_literal
 
-    from .similarity import (
-        _FIT_SAMPLE_FLOOR,
-        ivf_assign_blas,
-        ivf_assign_literal,
-    )
-    from .util import fit_released, memoized_literal
-
-    first = corpus.select(vec_col).first()
-    dim = len(first[vec_col])
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    if fit_sample_per_code is not None:
-        target = fit_sample_per_code * n_codes
-        floor = _FIT_SAMPLE_FLOOR if fit_floor is None else fit_floor
-        thresh = max(target, floor)
-        if corpus_cache_key is not None:
-            n = memoized_literal(
-                ("count", corpus_cache_key, id_col), lambda: corpus.count()
-            )
-        else:
-            n = corpus.limit(thresh + 1).count()
-            if n > thresh:
-                n = corpus.count()
-        if n > thresh:
-            m = max(2, round(n / target))
-            corpus = corpus.filter(F.xxhash64(F.col(id_col)) % m == 0)
-    sub = dim // n_subspaces
     assign = ivf_assign_blas if assign_blas else ivf_assign_literal
-    resid = (
-        assign(corpus, cent_rows, "__rid", 1, id_col, vec_col)
-        .join(
-            F.broadcast(residual_cent_df(corpus.sparkSession, cent_rows)),
-            "cell_id",
-        )
-        .select(
-            residual_expr(
-                F.col("__vec"), F.col("__norm"), F.col("__cu")
-            ).alias("__r")
-        )
+    return fit_kmeans_books(
+        corpus, id_col, vec_col, n_subspaces, n_codes, seed, max_iter,
+        fit_sample_per_code, fit_floor, corpus_cache_key,
+        pre=lambda f: _pq_pre(
+            assign(f, cent_rows, "candidate_id", 1, id_col, vec_col), True, cent_rows
+        ),
     )
-    slices = resid.select(
-        *[
-            array_to_vector(F.slice(F.col("__r"), m * sub + 1, sub)).alias(
-                f"__s{m}"
-            )
-            for m in range(n_subspaces)
-        ]
-    ).persist()
-    try:
-        books: list[list[list[float]]] = []
-        for m in range(n_subspaces):
-            model = fit_released(
-                KMeans(
-                    k=n_codes, seed=seed + m, maxIter=max_iter, featuresCol=f"__s{m}"
-                ),
-                slices,
-            )
-            books.append(
-                [[float(x) for x in c] for c in model.clusterCenters()]
-            )
-        return books
-    finally:
-        slices.unpersist()

@@ -13,6 +13,7 @@ the JVM expression is the bottleneck, which at 64 dims it is not.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -682,8 +683,86 @@ def ivf_centroids(
 
 
 #: Below this corpus size the full Lloyd fit is cheap and sampling
-#: only adds variance — `kmeans_centroids` samples only above it.
+#: only adds variance — `fit_kmeans_books` samples only above it.
 _FIT_SAMPLE_FLOOR = 100_000
+
+
+def fit_kmeans_books(
+    frame: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_subspaces: int,
+    k: int,
+    seed: int,
+    max_iter: int,
+    sample_per_center: int | None,
+    fit_floor: int | None,
+    corpus_cache_key: tuple | None = None,
+    pre: Callable[[DataFrame], tuple[DataFrame, Column]] | None = None,
+) -> list[list[list[float]]]:
+    """The one learned-quantizer fit: ``books[m]`` holds the ``k``
+    MLlib k-means centers (``seed + m``, ``max_iter`` Lloyd rounds) of
+    slice ``m`` of ``n_subspaces`` equal slices of the training
+    vector. The IVF centroids are the one-subspace call, the PQ books
+    the ``n_subspaces`` call.
+
+    The training vector is the unit vector of ``vec_col``, or — with
+    ``pre`` — the column of ``pre(frame)``, which maps the (sampled)
+    frame to ``(frame, column)`` (the residual route's cell
+    assignment and centroid subtract run on the sample only).
+
+    Sample rule: with ``sample_per_center`` set and the row count
+    ``n`` above ``max(sample_per_center × k, floor)`` (``floor`` is
+    ``fit_floor``, else `_FIT_SAMPLE_FLOOR`), the fit runs on the
+    content-keyed sample ``xxhash64(id) % m == 0`` with ``m = max(2,
+    round(n / (sample_per_center × k)))`` — membership independent of
+    partitioning. ``n`` is one ``count()``, memoized under the index
+    builds' ``("count", corpus_cache_key, id_col)`` when a key is
+    given.
+
+    The slices are persisted once for all ``n_subspaces`` fits and
+    released after them. The training frame keeps the caller's
+    partitioning: k-means|| initialisation samples per partition, so a
+    repartition would change the centers."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from . import util
+    from .sq import _unit
+
+    cols = [F.col("__v")]
+    if n_subspaces > 1:
+        dim = len(frame.select(vec_col).first()[0])
+        if dim % n_subspaces:
+            raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
+        sub = dim // n_subspaces
+        cols = [F.slice(cols[0], m * sub + 1, sub) for m in range(n_subspaces)]
+    if sample_per_center is not None:
+        target = sample_per_center * k
+        floor = _FIT_SAMPLE_FLOOR if fit_floor is None else fit_floor
+        ck = corpus_cache_key
+        n = util.keyed_memo(ck, ("count", ck, id_col), frame.count)
+        if n > max(target, floor):
+            m = max(2, round(n / target))
+            frame = frame.filter(F.xxhash64(F.col(id_col)) % m == 0)
+    frame, vec = (
+        pre(frame) if pre else (frame, _unit(F.col(vec_col), l2_norm(F.col(vec_col))))
+    )
+    slices = (
+        frame.select(vec.alias("__v"))
+        .select(*[array_to_vector(c).alias(f"__s{m}") for m, c in enumerate(cols)])
+        .persist()
+    )
+    try:
+        models = [
+            util.fit_released(
+                KMeans(k=k, seed=seed + m, maxIter=max_iter, featuresCol=f"__s{m}"), slices
+            )
+            for m in range(len(cols))
+        ]
+    finally:
+        slices.unpersist()
+    return [[[float(x) for x in c] for c in model.clusterCenters()] for model in models]
 
 
 def kmeans_centroids(
@@ -698,65 +777,30 @@ def kmeans_centroids(
 ) -> DataFrame:
     """FITTED centroid table for the IVF index — the production
     replacement for `ivf_centroids`' deterministic anchor vectors:
-    k-means (fixed seed) learns cells that follow the data
-    distribution, so cell populations are balanced. Returns the same
-    (cell_id, cent_vec, cent_norm) schema, so `ivf_assign_literal`/
-    `ivf_topk`/`semantic_dedup` consume it unchanged.
+    k-means learns cells that follow the data distribution, so cell
+    populations are balanced. Returns the same (cell_id, cent_vec,
+    cent_norm) schema, so `ivf_assign_literal`/`ivf_topk`/
+    `semantic_dedup` consume it unchanged.
 
-    SPHERICAL fit: vectors are L2-normalized before training, because
-    the index assigns by COSINE — Euclidean k-means on raw vectors
-    learns cells that cosine assignment then disagrees with. On the
-    unit sphere the two metrics rank identically.
-
-    The model's centers are driver-sized (n_cells × dim floats) by
-    construction — materializing them into a small DataFrame is the
-    index-build step a real deployment persists once and broadcasts
-    forever after; training is pyspark.ml's distributed Lloyd
-    iterations over the corpus.
-
-    SAMPLED FIT (round 7, SCALE.md §7o): Lloyd cost is
-    max_iter × n × n_cells distances — at 1M vectors × √n cells that
-    is 2·10¹⁰ distance evaluations, the dominant index-build term by
-    far and the reason the §7m build curve is n·√n. When the corpus
-    exceeds ``fit_sample_per_cell × n_cells`` rows, the fit runs on a
-    deterministic content-keyed sample of ~that size
-    (``xxhash64(id) % m == 0`` — partitioning-independent, unlike
-    ``DataFrame.sample``) and the learned centroids apply to the FULL
-    corpus through the unchanged one-pass assignment. Measured at
-    100k × 316 cells: recall@5 identical to the full fit at a
-    fraction of the fit time (§7o table). ``None`` disables sampling;
-    an absolute 100k-row floor keeps small corpora on the full fit
-    (below it the full fit is cheap and sampling only adds variance —
-    the registered oracle queries' 2k-vector corpora are untouched).
-    ``fit_floor`` overrides that floor (``0`` forces the sampled
-    branch on any corpus above ``target`` — how the s19 driver query
-    exercises the large-corpus default path at oracle scale); None
-    keeps the module default ``_FIT_SAMPLE_FLOOR``."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = corpus.sparkSession
-    fit_src = corpus
-    if fit_sample_per_cell is not None:
-        target = fit_sample_per_cell * n_cells
-        floor = _FIT_SAMPLE_FLOOR if fit_floor is None else fit_floor
-        n = corpus.count()
-        if n > max(target, floor):
-            m = max(2, round(n / target))
-            fit_src = corpus.filter(
-                F.xxhash64(F.col(id_col)) % m == 0
-            )
-    unit = F.transform(
-        F.col(vec_col), lambda x: x.cast("double") / l2_norm(F.col(vec_col))
+    The one-subspace `fit_kmeans_books` call over the UNIT vectors
+    (the index assigns by cosine, and on the unit sphere Euclidean
+    k-means ranks like cosine), ``seed`` as given, ``k = n_cells``,
+    sampled above ``max(fit_sample_per_cell × n_cells, floor)`` rows
+    (`fit_kmeans_books`' rule; ``fit_floor`` overrides
+    `_FIT_SAMPLE_FLOOR`, ``0`` forces the sampled branch as s19 does,
+    ``fit_sample_per_cell=None`` disables sampling). The centers are
+    driver-sized (n_cells × dim floats) by construction: the
+    index-build artifact a deployment persists once (SCALE.md §7o
+    measures the sampled fit)."""
+    (books,) = fit_kmeans_books(
+        corpus, id_col, vec_col, 1, n_cells, seed, max_iter,
+        fit_sample_per_cell, fit_floor,
     )
-    feat = fit_src.select(array_to_vector(unit).alias("features"))
-    from .util import fit_released
-
-    model = fit_released(KMeans(k=n_cells, seed=seed, maxIter=max_iter), feat)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cent = local_rows_df(spark, rows, "cell_id BIGINT, cent_vec ARRAY<DOUBLE>")
+    cent = local_rows_df(
+        corpus.sparkSession,
+        list(enumerate(books)),
+        "cell_id BIGINT, cent_vec ARRAY<DOUBLE>",
+    )
     return cent.select(
         "cell_id", "cent_vec", l2_norm(F.col("cent_vec")).alias("cent_norm")
     )

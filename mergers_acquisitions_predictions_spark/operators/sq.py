@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm
-from .util import double_array_literal
+from .util import double_array_literal, keyed_memo
 
 
 def _unit(vec: Column, norm: Column) -> Column:
@@ -178,10 +178,10 @@ def ivfsq_topk(
     ENCODED-corpus frame (the in-memory codes) — per (corpus,
     config); the usual contract (key identifies corpus content,
     results identical either way)."""
-    from .ann_index import SQ8, _corpus_topk, _fit_centroids, _memo
+    from .ann_index import SQ8, _corpus_topk, _fit_centroids
 
     ck = corpus_cache_key
-    stats = _memo(ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col))
+    stats = keyed_memo(ck, ("sq_stats", ck, vec_col), lambda: sq_stats(corpus, vec_col))
     n_cells, cent_rows = _fit_centroids(corpus, n_cells, ck, id_col, vec_col)
     return _corpus_topk(
         SQ8, stats, cent_rows, corpus, queries, k, n_probe, id_col, vec_col,

@@ -447,6 +447,12 @@ def memoized_literal(key: tuple, build):
     return hit
 
 
+def keyed_memo(corpus_cache_key: tuple | None, key: tuple, build):
+    """``build()``, memoized under ``key`` (`memoized_literal`) only
+    when the caller opted in with a ``corpus_cache_key``."""
+    return build() if corpus_cache_key is None else memoized_literal(key, build)
+
+
 #: Session-scoped PERSISTED-DataFrame cache — the memoized_literal
 #: idea one level up (VERDICT r4 #4): index-shaped corpus frames
 #: (the multi-table LSH bucket assignment) are identical across every

@@ -1072,30 +1072,12 @@ def s09_ivfpq_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream of the per-subspace fits is hash-checked
     cross-engine."""
     from ..operators.pq import ivfpq_topk, pq_kmeans_codebooks
-    from ..operators.util import local_rows_df
+    from .handshake import publish_codebooks
 
     e = load_table(spark, sf_dir, "embeddings")
-    cbs = pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16)
-    rows = [
-        (m + 1, c, [float(x) for x in cbs[m][c]])
-        for m in range(len(cbs))
-        for c in range(len(cbs[m]))
-    ]
-    from ..sources.writers import publish_parquet_atomic
-
-    publish_parquet_atomic(
-        local_rows_df(spark, rows, "m BIGINT, code BIGINT, vec ARRAY<DOUBLE>"),
-        _S09_CB_PATH,
+    cbs_art = publish_codebooks(
+        spark, pq_kmeans_codebooks(e, n_subspaces=8, n_codes=16), _S09_CB_PATH
     )
-    art = spark.read.parquet(_S09_CB_PATH).collect()
-    nested: dict = {}
-    for r in art:
-        nested.setdefault(int(r["m"]), {})[int(r["code"])] = [
-            float(x) for x in r["vec"]
-        ]
-    cbs_art = [
-        [nested[m][c] for c in sorted(nested[m])] for m in sorted(nested)
-    ]
     return ivfpq_topk(
         e.filter(F.col("vec_id") < 5),
         e,

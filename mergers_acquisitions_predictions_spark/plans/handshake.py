@@ -88,3 +88,26 @@ def scratch_root() -> str:
 def handshake_path(name: str) -> str:
     """The fixed artifact path for handshake artifact ``name``."""
     return os.path.join(_SCRATCH, f"mergers_acquisitions_spark_{name}")
+
+
+def publish_codebooks(spark, books: list, path: str) -> list:
+    """The learned-artifact recipe: publish PQ books as the ``(m,
+    code, vec)`` parquet artifact at ``path``
+    (`sources.writers.publish_parquet_atomic`, ``m`` 1-based) and
+    return the books READ BACK from it as nested lists — the query
+    builds from the same files its oracle replays."""
+    from ..operators.util import local_rows_df
+    from ..sources.writers import publish_parquet_atomic
+
+    rows = [
+        (m + 1, c, [float(x) for x in code])
+        for m, book in enumerate(books)
+        for c, code in enumerate(book)
+    ]
+    publish_parquet_atomic(
+        local_rows_df(spark, rows, "m BIGINT, code BIGINT, vec ARRAY<DOUBLE>"), path
+    )
+    nested: dict = {}
+    for r in spark.read.parquet(path).collect():
+        nested.setdefault(int(r["m"]), {})[int(r["code"])] = [float(x) for x in r["vec"]]
+    return [[nested[m][c] for c in sorted(nested[m])] for m in sorted(nested)]

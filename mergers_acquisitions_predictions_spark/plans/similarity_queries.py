@@ -1388,31 +1388,16 @@ def s29_pq_learned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-certifies via the artifact replay."""
     from ..operators.ann_index import build_ivfpq_index, search_index
     from ..operators.pq import pq_kmeans_codebooks
-    from ..operators.util import local_rows_df
-    from ..sources.writers import publish_parquet_atomic
+    from .handshake import publish_codebooks
 
     e = load_table(spark, sf_dir, "embeddings")
-    cbs = pq_kmeans_codebooks(
-        e, n_subspaces=8, n_codes=16, fit_sample_per_code=25, fit_floor=0
-    )
-    rows = [
-        (m + 1, c, [float(x) for x in cbs[m][c]])
-        for m in range(len(cbs))
-        for c in range(len(cbs[m]))
-    ]
-    publish_parquet_atomic(
-        local_rows_df(spark, rows, "m BIGINT, code BIGINT, vec ARRAY<DOUBLE>"),
+    cbs_art = publish_codebooks(
+        spark,
+        pq_kmeans_codebooks(
+            e, n_subspaces=8, n_codes=16, fit_sample_per_code=25, fit_floor=0
+        ),
         _S29_CB_PATH,
     )
-    art = spark.read.parquet(_S29_CB_PATH).collect()
-    nested: dict = {}
-    for r in art:
-        nested.setdefault(int(r["m"]), {})[int(r["code"])] = [
-            float(x) for x in r["vec"]
-        ]
-    cbs_art = [
-        [nested[m][c] for c in sorted(nested[m])] for m in sorted(nested)
-    ]
     path = _scratch_index_path(spark, sf_dir, "ivfpq_learned")
     build_ivfpq_index(
         e,
@@ -1933,47 +1918,19 @@ def s38_pq_residual_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally; everything downstream of the per-subspace fits is
     hash-checked cross-engine (the s29/s05 artifact recipe). No
     reference analogue — SURVEY §7 Phase 4 surface."""
-    from ..operators.ann_index import build_ivfpq_index, search_index
+    from ..operators.ann_index import _fit_centroids, build_ivfpq_index, search_index
     from ..operators.pq import pq_kmeans_residual_codebooks
-    from ..operators.similarity import collect_centroid_rows, ivf_centroids
-    from ..operators.util import local_rows_df, memoized_literal
-    from ..sources.writers import publish_parquet_atomic
+    from .handshake import publish_codebooks
 
     e = load_table(spark, sf_dir, "embeddings")
-    # the SAME centroid table the build will use (shared memo key)
-    n = memoized_literal(
-        ("count", (sf_dir, "embeddings"), "vec_id"), lambda: e.count()
-    )
-    from ..operators.similarity import auto_cells
-
-    n_cells = auto_cells(n)
-    cent_rows = memoized_literal(
-        ("ivf_cent_rows", (sf_dir, "embeddings"), n_cells, "vec_id", "embedding"),
-        lambda: collect_centroid_rows(ivf_centroids(e, n_cells)),
-    )
+    ck = (sf_dir, "embeddings")
+    # the SAME centroid table the build will use (its memo keys)
+    _, cent_rows = _fit_centroids(e, None, ck, "vec_id", "embedding")
     cbs = pq_kmeans_residual_codebooks(
         e, cent_rows, n_subspaces=8, n_codes=16,
-        fit_sample_per_code=25, fit_floor=0,
-        corpus_cache_key=(sf_dir, "embeddings"),
+        fit_sample_per_code=25, fit_floor=0, corpus_cache_key=ck,
     )
-    rows = [
-        (m + 1, c, [float(x) for x in cbs[m][c]])
-        for m in range(len(cbs))
-        for c in range(len(cbs[m]))
-    ]
-    publish_parquet_atomic(
-        local_rows_df(spark, rows, "m BIGINT, code BIGINT, vec ARRAY<DOUBLE>"),
-        _S38_CB_PATH,
-    )
-    art = spark.read.parquet(_S38_CB_PATH).collect()
-    nested: dict = {}
-    for r in art:
-        nested.setdefault(int(r["m"]), {})[int(r["code"])] = [
-            float(x) for x in r["vec"]
-        ]
-    cbs_art = [
-        [nested[m][c] for c in sorted(nested[m])] for m in sorted(nested)
-    ]
+    cbs_art = publish_codebooks(spark, cbs, _S38_CB_PATH)
     path = _scratch_index_path(spark, sf_dir, "ivfpq_resid_learned")
     build_ivfpq_index(
         e,
@@ -1983,7 +1940,7 @@ def s38_pq_residual_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_codes=16,
         codebooks=cbs_art,
         residual=True,
-        corpus_cache_key=(sf_dir, "embeddings"),
+        corpus_cache_key=ck,
     )
     return search_index(
         spark,

@@ -10,9 +10,10 @@ LocalFileSystem, an ``hdfs://`` or ``s3a://`` URI binds to that
 store's connector, and the callers' commit logic is identical on
 every scheme (VERDICT r6 #2). Two commit protocols ride on top:
 
-- staging-swap renames (`writers.publish_parquet_atomic`,
-  `writers.compact_parquet`): stage → move-aside → promote → reap,
-  with restore-on-failure;
+- staging-swap renames (`writers.publish_parquet_atomic`, which
+  `writers.compact_parquet` and `streaming/sinks.upsert_batch` commit
+  through): stage → move-aside → promote → reap, with
+  restore-on-failure;
 - the POINTER-FILE commit (`ann_index` since round 8, VERDICT r7
   #4): write a complete new directory, then atomically replace a
   one-line ``CURRENT`` manifest (`fs_replace_file`) that readers

@@ -4,7 +4,7 @@ lacks natively (upserts, multi-table writes, JDBC merges).
 `upsert_parquet_sink` maintains a keyed parquet table: each
 micro-batch replaces rows whose key re-appears (latest by a version
 column wins). Plain parquet has no MERGE, so the upsert is
-read → anti-join → union → write-to-staging → atomic swap. On a real
+read → anti-join → union → `publish_parquet_atomic`. On a real
 lakehouse the body of `upsert_batch` becomes a Delta/Iceberg MERGE
 INTO and the staging dance disappears — the streaming wiring is
 identical.
@@ -15,9 +15,6 @@ append sinks or MERGE-capable formats cover those.
 """
 
 from __future__ import annotations
-
-import shutil
-from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -38,9 +35,18 @@ def upsert_batch(
     ingest (`streaming/serving.ingest_batch_staged` — VERDICT r12
     #3). Factored out of `upsert_parquet_sink` (round 13, the
     s15/s40 factoring) so the streaming sink and batch-shaped
-    replays run the IDENTICAL per-batch body."""
+    replays run the IDENTICAL per-batch body.
+
+    ``table_dir`` is any Hadoop path (bare, ``file://``, ``hdfs://``):
+    existence and the commit go through the path's own FileSystem
+    (`publish_parquet_atomic`'s staged write → move-aside → promote,
+    which also refreshes the session's file listing of the table).
+    ``batch_id`` is the micro-batch id foreachBatch passes; the
+    commit does not depend on it."""
+    from ..sources.fs import fs_exists
+    from ..sources.writers import publish_parquet_atomic
+
     spark = batch_df.sparkSession
-    table = Path(table_dir)
 
     def latest_per_key(df: DataFrame) -> DataFrame:
         # Deterministic winner even on version ties: the incoming
@@ -59,29 +65,12 @@ def upsert_batch(
         )
 
     fresh = batch_df.withColumn("__src", F.lit(1))
-    if table.exists():
-        current = spark.read.parquet(str(table)).withColumn("__src", F.lit(0))
+    if fs_exists(spark, table_dir):
+        current = spark.read.parquet(table_dir).withColumn("__src", F.lit(0))
         merged = latest_per_key(current.unionByName(fresh))
     else:
         merged = latest_per_key(fresh)
-    staging = table.with_name(table.name + f".staging{batch_id}")
-    merged.write.mode("overwrite").parquet(str(staging))
-    # Crash-safe promotion (rename-rename-delete): the live table
-    # is renamed ASIDE before staging takes its place, so a crash
-    # at any point leaves a complete table under `table` or
-    # `old` — never a window with neither.
-    old = table.with_name(table.name + f".old{batch_id}")
-    if table.exists():
-        table.rename(old)
-    staging.rename(table)
-    if old.exists():
-        shutil.rmtree(old)
-    # The swap happened behind Spark's back: the session's file
-    # listing cache (metadataCacheTTLSeconds = -1 by default) will
-    # otherwise serve any reader who touched this path BEFORE the
-    # upsert a stale file list — observed as a same-session reader
-    # seeing the pre-upsert table (tests/test_foreachbatch_sink).
-    spark.catalog.refreshByPath(str(table))
+    publish_parquet_atomic(merged, table_dir)
 
 
 def upsert_parquet_sink(

@@ -75,37 +75,16 @@ def decorr_corpus(spark, n: int, scratch: str) -> str:
 def fit_books_on(frame, vec_col: str, n_codes: int, seed: int = 42):
     """Per-subspace k-means books over ``vec_col`` AS GIVEN (no
     normalization — the residual route's input must not be re-unit'd;
-    for the raw route pass the unit column). Mirrors
-    `pq_kmeans_codebooks`' fit loop."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from mergers_acquisitions_predictions_spark.operators.util import (
-        fit_released,
+    for the raw route pass the unit column): the package's one fit
+    kernel, unsampled."""
+    from mergers_acquisitions_predictions_spark.operators.similarity import (
+        fit_kmeans_books,
     )
 
-    sub = DIM // M
-    slices = frame.select(
-        *[
-            array_to_vector(
-                F.slice(F.col(vec_col), m * sub + 1, sub)
-            ).alias(f"__s{m}")
-            for m in range(M)
-        ]
-    ).persist()
-    try:
-        books = []
-        for m in range(M):
-            model = fit_released(
-                KMeans(
-                    k=n_codes, seed=seed + m, maxIter=20, featuresCol=f"__s{m}"
-                ),
-                slices,
-            )
-            books.append([[float(x) for x in c] for c in model.clusterCenters()])
-        return books
-    finally:
-        slices.unpersist()
+    return fit_kmeans_books(
+        frame, "candidate_id", vec_col, M, n_codes, seed, 20, None, None,
+        pre=lambda f: (f, F.col(vec_col)),
+    )
 
 
 def main(n: int = 200_000) -> None:

@@ -87,3 +87,18 @@ def test_upsert_then_snapshot_diff_nightly_flow(spark, tmp_path):
     got = {r.doc_id: r.status for r in snapshot_diff(yesterday, today).collect()}
     assert got == {1: "unchanged", 2: "changed", 3: "unchanged", 4: "added"}
 
+
+
+def test_upsert_batch_commits_to_a_file_uri(spark, tmp_path):
+    """The upsert commits through the path's own Hadoop FileSystem, so
+    a ``file://`` table takes batches like a bare path: the second
+    batch's higher version wins its key, other keys stay."""
+    from mergers_acquisitions_predictions_spark.streaming.sinks import upsert_batch
+
+    table = f"file://{tmp_path}/table"
+    schema = "k long, v string, ver long"
+    upsert_batch(spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema), table, ["k"], "ver", 0)
+    upsert_batch(spark.createDataFrame([(1, "a2", 2), (3, "c", 2)], schema), table, ["k"], "ver", 1)
+    final = {r.k: r.v for r in spark.read.parquet(table).collect()}
+    assert final == {1: "a2", 2: "b", 3: "c"}
+    assert sorted(os.listdir(tmp_path)) == ["table"]

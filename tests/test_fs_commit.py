@@ -98,7 +98,7 @@ def test_compact_parquet_restores_table_on_promote_failure(
     real_rename = FS.fs_rename
 
     def failing_promote(spark_, src, dst):
-        if dst == path and src.endswith(".compacting"):
+        if dst == path and ".staging_" in src:
             raise OSError("injected promote failure")
         return real_rename(spark_, src, dst)
 
@@ -129,14 +129,13 @@ def test_fs_list_files_missing_path_yields_empty(spark, tmp_path):
         W.compact_parquet(spark, missing)
 
 
-def test_compact_parquet_restore_clears_partial_destination(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r7 (low): on S3A a promote 'rename' is copy+delete, so a
-    mid-copy failure can leave a PARTIAL destination. The restore
-    branch must clear it and put the .old table back — and the
-    ORIGINAL error must propagate, not the restore rename's
-    'destination exists'."""
+def _torn_promote_restores_previous(spark, tmp_path, monkeypatch, commit):
+    """On S3A a promote 'rename' is copy+delete, so a mid-copy failure
+    can leave a PARTIAL destination. The restore must clear it and put
+    the moved-aside table back — and the ORIGINAL error must
+    propagate, not the restore rename's 'destination exists'."""
+    import os
+
     path = str(tmp_path / "tbl")
     spark.range(100).repartition(8).write.parquet(path)
     total0 = spark.read.parquet(path).agg(F.sum("id")).collect()[0][0]
@@ -144,10 +143,8 @@ def test_compact_parquet_restore_clears_partial_destination(
     real_rename = FS.fs_rename
 
     def failing_promote(spark_, src, dst):
-        if dst == path and src.endswith(".compacting"):
+        if dst == path and ".staging_" in src:
             # simulate the S3A mid-copy crash: a partial dst exists
-            import os
-
             os.makedirs(path, exist_ok=True)
             with open(os.path.join(path, "part-partial.parquet"), "wb") as f:
                 f.write(b"torn")
@@ -156,11 +153,27 @@ def test_compact_parquet_restore_clears_partial_destination(
 
     monkeypatch.setattr(FS, "fs_rename", failing_promote)
     with pytest.raises(OSError, match="injected mid-copy"):
-        W.compact_parquet(spark, path, target_file_bytes=1 << 30)
-    # the COMPLETE pre-compaction table is back at path (not the torn
-    # partial, not stranded at .old)
+        commit(path)
+    # the COMPLETE previous table is back at path (not the torn
+    # partial, not stranded at .old_<tok>), and no twin is left
     spark.catalog.refreshByPath(path)
     assert spark.read.parquet(path).agg(F.sum("id")).collect()[0][0] == total0
-    import os
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
 
-    assert not os.path.exists(path + ".old")
+
+def test_compact_parquet_restore_clears_partial_destination(
+    spark, tmp_path, monkeypatch
+):
+    _torn_promote_restores_previous(
+        spark, tmp_path, monkeypatch,
+        lambda path: W.compact_parquet(spark, path, target_file_bytes=1 << 30),
+    )
+
+
+def test_publish_atomic_restore_clears_partial_destination(
+    spark, tmp_path, monkeypatch
+):
+    _torn_promote_restores_previous(
+        spark, tmp_path, monkeypatch,
+        lambda path: W.publish_parquet_atomic(spark.range(9), path),
+    )

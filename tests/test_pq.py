@@ -171,10 +171,10 @@ def test_kmeans_codebooks_sampled_fit(spark):
 
 
 def test_pq_kmeans_codebooks_lazy_count(spark):
-    """ADVICE r11: the sample-sizing count is lazy — a
-    ``corpus_cache_key`` reuses the builds' memoized count (same
-    key), and either way the books are identical to the keyless
-    path's (the branch decision depends only on n vs threshold)."""
+    """The sample-sizing count: a ``corpus_cache_key`` reuses the
+    builds' memoized count (same key), and either way the books are
+    identical to the keyless path's (the branch decision depends only
+    on n vs threshold)."""
     from mergers_acquisitions_predictions_spark.operators.pq import (
         pq_kmeans_codebooks,
     )
@@ -195,6 +195,54 @@ def test_pq_kmeans_codebooks_lazy_count(spark):
     assert memoized_literal(
         ("count", (SF, "emb", "t"), "vec_id"), _unexpected_build
     ) == e.count()
-    # forced sampled branch still works through the lazy probe
+    # forced sampled branch: sized by the same one count
     sampled = pq_kmeans_codebooks(e, fit_sample_per_code=25, fit_floor=0, **small)
     assert len(sampled) == 2 and len(sampled[0]) == 4
+
+
+@pytest.mark.parametrize("route", ["raw", "residual"])
+def test_fit_books_fit_each_subspace_on_its_own_slice(spark, sf_dir, route):
+    """Book ``m`` of the fit kernel is a one-subspace k-means fit
+    (``seed + m``) of slice ``m`` of the training vector alone — the
+    unit vector on the raw route, the PQ codec's residual pre-encode
+    of the cell assignment on the residual route. A book fitted on
+    another subspace's slice, or with another seed, differs."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from mergers_acquisitions_predictions_spark.functions.vectors import l2_norm
+    from mergers_acquisitions_predictions_spark.operators.ann_index import _pq_pre
+    from mergers_acquisitions_predictions_spark.operators.pq import (
+        pq_kmeans_codebooks,
+        pq_kmeans_residual_codebooks,
+    )
+    from mergers_acquisitions_predictions_spark.operators.similarity import (
+        collect_centroid_rows,
+        ivf_assign_literal,
+        ivf_centroids,
+    )
+    from mergers_acquisitions_predictions_spark.operators.sq import _unit
+    from mergers_acquisitions_predictions_spark.operators.util import fit_released
+
+    e = load_table(spark, sf_dir, "embeddings")
+    n_sub, k, seed, it = 4, 4, 7, 3
+    fit = dict(n_subspaces=n_sub, n_codes=k, seed=seed, max_iter=it,
+               fit_sample_per_code=None)
+    if route == "raw":
+        books = pq_kmeans_codebooks(e, **fit)
+        frame, vec = e, _unit(F.col("embedding"), l2_norm(F.col("embedding")))
+    else:
+        cent_rows = collect_centroid_rows(ivf_centroids(e, 8))
+        books = pq_kmeans_residual_codebooks(e, cent_rows, **fit)
+        frame, vec = _pq_pre(
+            ivf_assign_literal(e, cent_rows, "candidate_id", 1), True, cent_rows
+        )
+    sub = 64 // n_sub
+    for m in range(n_sub):
+        alone = frame.select(
+            array_to_vector(F.slice(vec, m * sub + 1, sub)).alias("f")
+        )
+        model = fit_released(
+            KMeans(k=k, seed=seed + m, maxIter=it, featuresCol="f"), alone
+        )
+        assert books[m] == [[float(x) for x in c] for c in model.clusterCenters()]
