@@ -577,29 +577,16 @@ class Engine:
 
         return ingest_vector_stream(path, stream_df, **kw)
 
-    def ingest_vector_stream_staged(
-        self, path: str, stream_df: DataFrame, staged_dir: str, **kw
-    ):
-        """EXACTLY-ONCE ingest sink (round 13 — VERDICT r12 #3): each
-        micro-batch stages into an idempotent keyed upsert table and
-        the index reconciles against the staged snapshot, so replayed
-        batches append nothing (streaming/serving.
-        ingest_vector_stream_staged; returns the DataStreamWriter)."""
-        from .streaming.serving import ingest_vector_stream_staged
-
-        return ingest_vector_stream_staged(path, stream_df, staged_dir, **kw)
-
     def ingest_vector_stream_append_only(
         self, path: str, stream_df: DataFrame, staged_dir: str, **kw
     ):
-        """EXACTLY-ONCE ingest sink for HIGH-FREQUENCY micro-batches
-        (round 13): each batch stages append-only into its own parquet
-        subdirectory at O(batch) cost and the index reconciles on a
+        """EXACTLY-ONCE ingest sink: each micro-batch stages
+        append-only into its own parquet subdirectory at O(batch) cost
+        and the index reconciles against the staged snapshot on a
         schedule (``reconcile_every=`` batches, or the caller's own
-        nightly `reconcile_ann_index` run) — the upsert-staged sink's
-        O(table)-rewrite cost removed (streaming/serving.
-        ingest_vector_stream_append_only; returns the
-        DataStreamWriter)."""
+        nightly `reconcile_ann_index` run), so replayed batches append
+        nothing (streaming/serving.ingest_vector_stream_append_only;
+        returns the DataStreamWriter)."""
         from .streaming.serving import ingest_vector_stream_append_only
 
         return ingest_vector_stream_append_only(

@@ -1336,8 +1336,9 @@ def compact_if_accreted(
     """The ACCRETION-SCHEDULE trigger: compact the index iff any cell
     partition has accreted more than ``max_files_per_cell`` files —
     the decision rule a nightly maintenance job runs after streaming
-    ingest (`ingest_vector_stream` / the staged exactly-once sink)
-    has been appending shards all day. Compaction is layout-only
+    ingest (`ingest_vector_stream` / the exactly-once
+    `ingest_vector_stream_append_only`) has been appending shards all
+    day. Compaction is layout-only
     (`compact_index` — pointer-file commit, geometry carried forward
     byte-identically), so firing it never changes results, only scan
     economics; NOT firing it is the common fast path (one listing

@@ -52,7 +52,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm
-from .util import double_array_literal, keyed_memo
+from .util import bounded_collect, double_array_literal, keyed_memo
+
+#: Driver-collect bound on `sq_stats`: one (dim, min, max) row per
+#: vector dimension. Embedding widths are hundreds to a few thousand;
+#: a wider "vector" is a caller mistake (a corpus-sized array column)
+#: and fails loudly instead of pulling that many rows to the driver.
+MAX_SQ_DIMS = 65_536
 
 
 def _unit(vec: Column, norm: Column) -> Column:
@@ -69,18 +75,20 @@ def sq_stats(
     """Per-dimension (min, range) of the unit-normalized corpus — the
     learned quantizer. Distributed: posexplode to (dim, x), one
     dim-keyed groupBy (map-side partial agg makes the shuffle
-    #partitions x dim rows, not corpus-sized), collect ``dim`` rows.
-    The collect IS the index-build artifact a deployment persists —
-    same class as `ivf_centroids` / `pq_anchor_codebooks`.
+    #partitions x dim rows, not corpus-sized), collect ``dim`` rows
+    in one job (`util.bounded_collect` — at most `MAX_SQ_DIMS`, else
+    ValueError). The collect IS the index-build artifact a deployment
+    persists — same class as `ivf_centroids` / `pq_anchor_codebooks`.
 
     min/max of doubles are exact comparisons (no accumulation), so
     the oracle's SQL aggregate reproduces them bit-identically."""
     u = _unit(F.col(vec_col), l2_norm(F.col(vec_col)))
-    rows = (
+    rows = bounded_collect(
         corpus.select(F.posexplode(u).alias("dim", "x"))
         .groupBy("dim")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .collect()
+        .agg(F.min("x").alias("mn"), F.max("x").alias("mx")),
+        MAX_SQ_DIMS,
+        f"SQ8 stats rows, one per dimension (MAX_SQ_DIMS={MAX_SQ_DIMS})",
     )
     by_dim = sorted(rows, key=lambda r: r["dim"])
     mns = [float(r["mn"]) for r in by_dim]

@@ -1376,59 +1376,29 @@ def t41_bm25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee). The same path through a REAL availableNow stream is
     separately asserted in tests/test_bm25.py. Reference analogue:
     none — SURVEY §7 Phase 4/5 surface."""
-    import os
-
     from ..operators.bm25 import build_bm25_index, search_bm25_index
     from ..streaming.serving import (
         reconcile_bm25_from_snapshot,
         stage_batch_append_only,
     )
-    from .similarity_queries import _scratch_index_path
+    from .similarity_queries import _scratch_index_path, _wire_batches
     from .text_queries import t09_tfidf_top_terms
-
-    from ..operators.util import run_overlapped
 
     d = load_table(spark, sf_dir, "documents")
     path = _scratch_index_path(spark, sf_dir, "bm25stream")
-    vdir = f"{path}_vdocs"
     staged = f"{path}_staged_docs"
-
-    def _build():
-        build_bm25_index(d.filter(F.col("doc_id") % 2 == 0), path)
-
-    def _stage_all():
-        # SEQUENTIAL within this thread: the replay re-targets b0's
-        # staged subdirectory, so it must follow the original staging
-        # (same-dir writes share the committer staging dir — the s18
-        # hazard).
-        batches = []
-        for i, pred in enumerate(
-            (F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3)
-        ):
-            (
-                d.filter(pred)
-                .select(F.to_json(F.struct("doc_id", "text")).alias("value"))
-                .coalesce(2)
-                .write.mode("overwrite")
-                .text(f"{vdir}/b{i}")
-            )
-            os.utime(f"{vdir}/b{i}")  # keep the reaper's dir-mtime key fresh
-            batch = spark.read.schema("doc_id long, text string").json(
-                f"{vdir}/b{i}"
-            )
-            batches.append(batch)
-            stage_batch_append_only(
-                staged, batch, batch_id=i, id_col="doc_id", vec_col="text"
-            )
-        stage_batch_append_only(  # checkpoint-rollback replay of batch 0
-            staged, batches[0], batch_id=0, id_col="doc_id", vec_col="text"
+    build_bm25_index(d.filter(F.col("doc_id") % 2 == 0), path)
+    batches = _wire_batches(
+        f"{path}_vdocs",
+        [d.filter(F.col("doc_id") % 4 == r).select("doc_id", "text") for r in (1, 3)],
+    )
+    for i, batch in enumerate(batches):
+        stage_batch_append_only(
+            staged, batch, batch_id=i, id_col="doc_id", vec_col="text"
         )
-
-    # The lexical index build touches only {path}; the wire/staging
-    # chain only {vdir, staged} — independent jobs with disjoint
-    # artifacts, overlapped (round 14, guide §2.6); the reconcile
-    # below is the join point needing both.
-    run_overlapped(_build, _stage_all)
+    stage_batch_append_only(  # checkpoint-rollback replay of batch 0
+        staged, batches[0], batch_id=0, id_col="doc_id", vec_col="text"
+    )
     appended = reconcile_bm25_from_snapshot(spark, path, staged)
     replayed = reconcile_bm25_from_snapshot(spark, path, staged)
     if replayed:  # the whole point: the re-run must append nothing

@@ -531,6 +531,49 @@ def _scratch_index_path(spark: SparkSession, sf_dir: str, kind: str) -> str:
     return os.path.join(scratch, f"{prefix}_{app}")
 
 
+def _half_index(
+    spark: SparkSession, e: DataFrame, sf_dir: str, kind: str, par: int = 0
+) -> str:
+    """The persisted IVF-SQ8 index of the ``vec_id % 2 == par`` half
+    of the corpus ``e`` (auto cell count, fit memoized under the
+    half's corpus key), built at the session's ``kind`` scratch path;
+    returns the path. The even half is the nightly-ingest base the
+    append and stream-ingest rows grow with the odd half."""
+    from ..operators.ann_index import build_ivfsq_index
+
+    path = _scratch_index_path(spark, sf_dir, kind)
+    build_ivfsq_index(
+        e.filter(F.col("vec_id") % 2 == par),
+        path,
+        n_cells=None,
+        corpus_cache_key=(sf_dir, "embeddings", f"vec_id%2={par}"),
+    )
+    return path
+
+
+def _wire_batches(vdir: str, shards: list[DataFrame]) -> list[DataFrame]:
+    """Micro-batch ``i`` of an ingest stream, replayed: ``shards[i]``
+    written to ``{vdir}/b{i}`` in the stream source's wire format
+    (JSONL, one `to_json` row per record) and read back with the
+    stream's schema (the shard's own). Ingest shards are data-sized,
+    so the write is distributed, never collected; Jackson writes
+    shortest-decimal floats, so float32 round-trips exactly."""
+    import os
+
+    batches = []
+    for i, shard in enumerate(shards):
+        out = f"{vdir}/b{i}"
+        (
+            shard.select(F.to_json(F.struct(*shard.columns)).alias("value"))
+            .coalesce(2)
+            .write.mode("overwrite")
+            .text(out)
+        )
+        os.utime(out)  # keep the reaper's dir-mtime key fresh (s15)
+        batches.append(shard.sparkSession.read.schema(shard.schema).json(out))
+    return batches
+
+
 @query(
     "s20_reranked_index_topk",
     oracle=f"WITH {_ivfsq_topk_sql(dim=64, n_cells='auto', n_probe=2, k=5, rerank=15)}\n",
@@ -604,20 +647,10 @@ def s14_index_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Append-vs-full-build equivalence of the SEARCH stage is
     additionally asserted in tests/test_ann_index.py; the incremental
     MinHash sibling is d12."""
-    from ..operators.ann_index import (
-        append_index,
-        build_ivfsq_index,
-        search_index,
-    )
+    from ..operators.ann_index import append_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_append")
-    build_ivfsq_index(
-        e.filter(F.col("vec_id") % 2 == 0),
-        path,
-        n_cells=None,
-        corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-    )
+    path = _half_index(spark, e, sf_dir, "ivfsq_append")
     append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
@@ -941,21 +974,10 @@ def s18_index_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ann_index). Completes the deployment story:
     build (s13) → append (s14) → compact (s18) → serve / stream-serve
     (s15) / drift-monitor (s16)."""
-    from ..operators.ann_index import (
-        append_index,
-        build_ivfsq_index,
-        compact_index,
-        search_index,
-    )
+    from ..operators.ann_index import append_index, compact_index, search_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_compact")
-    build_ivfsq_index(
-        e.filter(F.col("vec_id") % 2 == 0),
-        path,
-        n_cells=None,
-        corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-    )
+    path = _half_index(spark, e, sf_dir, "ivfsq_compact")
     append_index(e.filter(F.col("vec_id") % 4 == 1), path)
     append_index(e.filter(F.col("vec_id") % 4 == 3), path)
     compact_index(spark, path)
@@ -2037,46 +2059,13 @@ def s40_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path through a REAL availableNow stream is separately asserted in
     tests/test_ann_index.py. Reference analogue: none (SURVEY §7
     Phase 4/5 surface)."""
-    import os
-
-    from ..operators.ann_index import build_ivfsq_index, search_index
+    from ..operators.ann_index import search_index
     from ..streaming.serving import ingest_batch
 
-    from ..operators.util import run_overlapped
-
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_stream_ingest")
-    vdir = f"{path}_vbatch_ingest"
-
-    def _build():
-        build_ivfsq_index(
-            e.filter(F.col("vec_id") % 2 == 0),
-            path,
-            n_cells=None,
-            corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-        )
-
-    def _wire():
-        # the arriving shard is DATA-SIZED (half the corpus), so the
-        # wire files are written DISTRIBUTED (to_json per row —
-        # Jackson float serialization is shortest-decimal, so the
-        # float32 round-trip is exact), never collected: s15/s32
-        # collect only query batches, which are serving-contract-
-        # sized; an ingest shard is not.
-        (
-            e.filter(F.col("vec_id") % 2 == 1)
-            .select(F.to_json(F.struct("vec_id", "embedding")).alias("value"))
-            .coalesce(4)
-            .write.mode("overwrite")
-            .text(vdir)
-        )
-        os.utime(vdir)  # keep the reaper's dir-mtime key fresh (s15)
-
-    # build writes {path}, the wire write {vdir} — independent jobs,
-    # disjoint artifacts, overlapped (round 14, guide §2.6); the
-    # ingest below is the join point needing both.
-    run_overlapped(_build, _wire)
-    batch = spark.read.schema("vec_id long, embedding array<float>").json(vdir)
+    path = _half_index(spark, e, sf_dir, "ivfsq_stream_ingest")
+    odd = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
+    (batch,) = _wire_batches(f"{path}_vbatch_ingest", [odd])
     ingest_batch(path, batch)
     return search_index(
         spark, path, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
@@ -2090,17 +2079,16 @@ def s40_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s41_stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY-ONCE streaming index ingest, replayed batch-shaped
-    (round 13 — VERDICT r12 #3, the guarantee `ingest_vector_stream`
-    only documented): the odd-id shard arrives as a micro-batch
-    through the stream wire format and is DELIBERATELY DELIVERED
-    TWICE — the checkpoint-rollback failure mode — through
-    `streaming/serving.ingest_batch_staged`, the per-batch body the
-    `ingest_vector_stream_staged` foreachBatch sink runs: the batch
-    stages into the keyed idempotent upsert table
-    (`sinks.upsert_batch` — the replay merges to the byte-equal
-    snapshot) and the index is reconciled against the staged snapshot
-    (`reconcile_index_from_snapshot` — appends only ids the index's
-    own codes don't hold). The plain `ingest_batch` would
+    (the guarantee `ingest_vector_stream` lacks): the odd-id shard
+    arrives as a micro-batch through the stream wire format and is
+    DELIBERATELY DELIVERED TWICE — the checkpoint-rollback failure
+    mode — through the per-batch body the
+    `ingest_vector_stream_append_only(reconcile_every=1)` foreachBatch
+    sink runs: the batch stages into its own subdirectory
+    (`streaming/serving.stage_batch_append_only` — the replay
+    overwrites it) and the index is reconciled against the staged
+    snapshot (`reconcile_index_from_snapshot` — appends only ids the
+    index's own codes don't hold). The plain `ingest_batch` would
     double-append under the same replay and this row's hash would
     catch the duplicate top-k rows; instead the final index is
     identical to a single delivery, and the oracle is s14's verbatim
@@ -2109,46 +2097,22 @@ def s41_stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     multi-batch availableNow stream plus a simulated rollback is
     separately asserted in tests/test_ann_index.py. Reference
     analogue: none (SURVEY §7 Phase 4/5 surface)."""
-    import os
-
-    from ..operators.ann_index import build_ivfsq_index, search_index
-    from ..streaming.serving import ingest_batch_staged
-
-    from ..operators.util import run_overlapped
+    from ..operators.ann_index import search_index
+    from ..streaming.serving import (
+        reconcile_index_from_snapshot,
+        stage_batch_append_only,
+    )
 
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_e1_ingest")
-    vdir = f"{path}_vbatch_e1"
-
-    def _build():
-        build_ivfsq_index(
-            e.filter(F.col("vec_id") % 2 == 0),
-            path,
-            n_cells=None,
-            corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-        )
-
-    def _wire():
-        # distributed wire write — the s40 rule: ingest shards are
-        # data-sized, never collected; Jackson shortest-decimal floats
-        # round-trip float32 exactly.
-        (
-            e.filter(F.col("vec_id") % 2 == 1)
-            .select(F.to_json(F.struct("vec_id", "embedding")).alias("value"))
-            .coalesce(4)
-            .write.mode("overwrite")
-            .text(vdir)
-        )
-        os.utime(vdir)  # keep the reaper's dir-mtime key fresh (s15)
-
-    # build writes {path}, the wire write {vdir} — independent jobs,
-    # disjoint artifacts, overlapped (round 14, guide §2.6); the
-    # staged ingest below is the join point needing both.
-    run_overlapped(_build, _wire)
-    batch = spark.read.schema("vec_id long, embedding array<float>").json(vdir)
+    path = _half_index(spark, e, sf_dir, "ivfsq_e1_ingest")
+    odd = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
+    (batch,) = _wire_batches(f"{path}_vbatch_e1", [odd])
     staged = f"{path}_staged"
-    appended = ingest_batch_staged(path, staged, batch, batch_id=0)
-    replayed = ingest_batch_staged(path, staged, batch, batch_id=0)
+    delivered = []
+    for _ in range(2):  # first delivery, then the rollback replay
+        stage_batch_append_only(staged, batch, batch_id=0)
+        delivered.append(reconcile_index_from_snapshot(spark, path, staged))
+    appended, replayed = delivered
     if replayed:  # the whole point: the replay must append nothing
         raise AssertionError(
             f"replayed batch appended {replayed} vectors (first "
@@ -2182,64 +2146,21 @@ def s42_stream_ingest_compact_serve(spark: SparkSession, sf_dir: str) -> DataFra
     so the oracle is s14's verbatim. Deployment shape: stream ingests
     all day, the nightly job runs the trigger, serves never notice.
     Reference analogue: none (SURVEY §7 Phase 4/5 surface)."""
-    import os
-
-    from ..operators.ann_index import (
-        build_ivfsq_index,
-        compact_if_accreted,
-        search_index,
-    )
+    from ..operators.ann_index import compact_if_accreted, search_index
     from ..streaming.serving import ingest_batch
 
-    from ..operators.util import run_overlapped
-
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_ingest_loop")
-    vdir = f"{path}_vbatches"
-
-    def _build():
-        build_ivfsq_index(
-            e.filter(F.col("vec_id") % 2 == 0),
-            path,
-            n_cells=None,
-            corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-        )
-
-    def _wire(i: int, pred):
-        # one micro-batch onto the stream wire format (the s40 rule:
-        # distributed to_json write, never collected)
-        def go():
-            (
-                e.filter(pred)
-                .select(
-                    F.to_json(F.struct("vec_id", "embedding")).alias("value")
-                )
-                .coalesce(2)
-                .write.mode("overwrite")
-                .text(f"{vdir}/b{i}")
-            )
-            os.utime(f"{vdir}/b{i}")  # keep the reaper's dir-mtime key fresh
-
-        return go
-
-    # The wire writes target {vdir}/b0 and {vdir}/b1 and the build
-    # {path} — three independent job chains with disjoint artifacts,
-    # overlapped (round 14, guide §2.6). The two INGESTS stay
-    # sequential after the join point: both append into the live codes
-    # directory (shared committer staging — the s18 hazard) and the
-    # stream contract delivers batches in order anyway.
-    run_overlapped(
-        _build,
-        _wire(0, F.col("vec_id") % 4 == 1),
-        _wire(1, F.col("vec_id") % 4 == 3),
-    )
-    for i in range(2):
-        ingest_batch(
-            path,
-            spark.read.schema("vec_id long, embedding array<float>").json(
-                f"{vdir}/b{i}"
-            ),
-        )
+    path = _half_index(spark, e, sf_dir, "ivfsq_ingest_loop")
+    # the stream contract delivers batches in order, each appending
+    # into the live codes directory
+    for batch in _wire_batches(
+        f"{path}_vbatches",
+        [
+            e.filter(F.col("vec_id") % 4 == r).select("vec_id", "embedding")
+            for r in (1, 3)
+        ],
+    ):
+        ingest_batch(path, batch)
     fired, stats = compact_if_accreted(spark, path, max_files_per_cell=1)
     if not fired:
         raise AssertionError(
@@ -2285,20 +2206,10 @@ def s43_index_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact side is deliberately O(queries × corpus) — the cost a
     recall probe IS; the probe set stays sample-sized (s07's rule).
     Reference analogue: none (SURVEY §7 Phase 4/5 surface)."""
-    from ..operators.ann_index import (
-        append_index,
-        build_ivfsq_index,
-        index_recall_probe,
-    )
+    from ..operators.ann_index import append_index, index_recall_probe
 
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_recall_probe")
-    build_ivfsq_index(
-        e.filter(F.col("vec_id") % 2 == 0),
-        path,
-        n_cells=None,
-        corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-    )
+    path = _half_index(spark, e, sf_dir, "ivfsq_recall_probe")
     append_index(e.filter(F.col("vec_id") % 2 == 1), path)
     return index_recall_probe(
         spark, path, e.filter(F.col("vec_id") < 5), e, k=5, n_probe=2
@@ -2311,12 +2222,11 @@ def s43_index_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      build_filter='WHERE vec_id % 2 = 0')}\n""",
 )
 def s44_stream_append_only_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACTLY-ONCE ingest for HIGH-FREQUENCY micro-batches, replayed
-    batch-shaped (round 13 — the open item s41's upsert staging
-    documents: `ingest_batch_staged` rewrites the whole staged table
-    per batch, O(table), fine for nightly shards but not second-scale
-    micro-batches): the odd-id shard arrives as TWO micro-batches
-    through the stream wire format, each staged APPEND-ONLY into its
+    """EXACTLY-ONCE ingest on a SCHEDULED reconcile, replayed
+    batch-shaped (s41 reconciles per batch; high-frequency streams
+    stage many batches per reconcile): the odd-id shard arrives as
+    TWO micro-batches through the stream wire format, each staged
+    APPEND-ONLY into its
     own parquet subdirectory (`streaming/serving.
     stage_batch_append_only` — O(batch) write, the per-batch body the
     `ingest_vector_stream_append_only` foreachBatch sink runs); batch
@@ -2334,65 +2244,27 @@ def s44_stream_append_only_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     reconcile-every-2 schedule is separately asserted in
     tests/test_ann_index.py. Reference analogue: none (SURVEY §7
     Phase 4/5 surface)."""
-    import os
-
-    from ..operators.ann_index import build_ivfsq_index, search_index
+    from ..operators.ann_index import search_index
     from ..streaming.serving import (
         reconcile_index_from_snapshot,
         stage_batch_append_only,
     )
 
-    from ..operators.util import run_overlapped
-
     e = load_table(spark, sf_dir, "embeddings")
-    path = _scratch_index_path(spark, sf_dir, "ivfsq_ao_ingest")
-    vdir = f"{path}_vbatches_ao"
+    path = _half_index(spark, e, sf_dir, "ivfsq_ao_ingest")
     staged = f"{path}_staged_ao"
-
-    def _build():
-        build_ivfsq_index(
-            e.filter(F.col("vec_id") % 2 == 0),
-            path,
-            n_cells=None,
-            corpus_cache_key=(sf_dir, "embeddings", "vec_id%2=0"),
-        )
-
-    def _stage_all():
-        # two micro-batches over the stream wire format (the s40 rule:
-        # distributed to_json write, never collected; Jackson
-        # shortest-decimal floats round-trip float32 exactly);
-        # SEQUENTIAL within this thread — the replay re-targets b0's
-        # staged subdirectory, so it must follow the original staging
-        # (same-dir writes share the committer staging dir, the s18
-        # hazard).
-        batches = []
-        for i, pred in enumerate(
-            (F.col("vec_id") % 4 == 1, F.col("vec_id") % 4 == 3)
-        ):
-            (
-                e.filter(pred)
-                .select(
-                    F.to_json(F.struct("vec_id", "embedding")).alias("value")
-                )
-                .coalesce(2)
-                .write.mode("overwrite")
-                .text(f"{vdir}/b{i}")
-            )
-            os.utime(f"{vdir}/b{i}")  # keep the reaper's dir-mtime key fresh
-            batch = spark.read.schema(
-                "vec_id long, embedding array<float>"
-            ).json(f"{vdir}/b{i}")
-            batches.append(batch)
-            stage_batch_append_only(staged, batch, batch_id=i)
-        # checkpoint-rollback replay: batch 0 re-delivered under its
-        # own batch_id — overwrites its own staged subdirectory
-        stage_batch_append_only(staged, batches[0], batch_id=0)
-
-    # The index build touches only {path}; the wire/staging chain only
-    # {vdir, staged} — independent jobs with disjoint artifacts, so
-    # overlap them (round 14, guide §2.6); the reconcile below is the
-    # join point needing both.
-    run_overlapped(_build, _stage_all)
+    batches = _wire_batches(
+        f"{path}_vbatches_ao",
+        [
+            e.filter(F.col("vec_id") % 4 == r).select("vec_id", "embedding")
+            for r in (1, 3)
+        ],
+    )
+    for i, batch in enumerate(batches):
+        stage_batch_append_only(staged, batch, batch_id=i)
+    # checkpoint-rollback replay: batch 0 re-delivered under its own
+    # batch_id — overwrites its own staged subdirectory
+    stage_batch_append_only(staged, batches[0], batch_id=0)
     appended = reconcile_index_from_snapshot(spark, path, staged)
     replayed = reconcile_index_from_snapshot(spark, path, staged)
     if replayed:  # the whole point: the re-run must append nothing
@@ -2452,41 +2324,18 @@ def s45_sharded_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL'd and re-ranked globally, the engine merge replayed
     relationally. Reference analogue: none (SURVEY §7 Phase 4/5
     surface)."""
-    from ..operators.ann_index import (
-        build_ivfsq_index,
-        search_sharded_indexes,
-    )
+    from ..operators.ann_index import search_sharded_indexes
     from ..operators.util import run_overlapped
 
     e = load_table(spark, sf_dir, "embeddings")
-    # The two shard builds are INDEPENDENT jobs on disjoint corpus
-    # halves writing disjoint artifacts — overlap them from a small
-    # driver thread pool (round 13 optimization, guide §2.6: each
-    # build's straggler tail back-fills with the other build's tasks;
-    # the deployment analogue is per-tenant/window shard builds
-    # keeping the cluster full). Each build is deterministic in
-    # isolation (fixed seeds, content-keyed samples), so concurrency
-    # cannot change any artifact byte; the memo and reap paths are
-    # lock-guarded/disjoint-prefix respectively. round 14: through
-    # util.run_overlapped (inheritable thread-local job properties —
-    # ADVICE r13).
-    shard_paths = [
-        _scratch_index_path(spark, sf_dir, f"ivfsq_shard{par}")
-        for par in (0, 1)
-    ]
-
-    def build(par: int):
-        def go() -> None:
-            build_ivfsq_index(
-                e.filter(F.col("vec_id") % 2 == par),
-                shard_paths[par],
-                n_cells=None,
-                corpus_cache_key=(sf_dir, "embeddings", f"vec_id%2={par}"),
-            )
-
-        return go
-
-    run_overlapped(build(0), build(1))
+    # The two shard builds are independent jobs on disjoint halves
+    # writing disjoint artifacts, each deterministic in isolation:
+    # overlapping them lets each build's straggler tail back-fill with
+    # the other's tasks (0.7-0.9 s of ~3.2 s at sf0.1 in paired runs).
+    shard_paths = run_overlapped(
+        lambda: _half_index(spark, e, sf_dir, "ivfsq_shard0", 0),
+        lambda: _half_index(spark, e, sf_dir, "ivfsq_shard1", 1),
+    )
     return search_sharded_indexes(
         spark, shard_paths, e.filter(F.col("vec_id") < 5), k=5, n_probe=2
     )

@@ -9,6 +9,15 @@ same partition-pruned search a batch caller runs.
 registered batch-shaped replay (s15_stream_serve_replay, which gives
 the path a hash-checked driver row — VERDICT r4 #6) both call it, so
 the driver-certified code IS the code each micro-batch executes.
+
+The write side has two ingest paths: `ingest_batch` /
+`ingest_vector_stream` append each micro-batch directly
+(at-least-once), and the exactly-once path stages each batch into its
+own parquet subdirectory (`stage_batch_append_only`) and reconciles
+the index against the staged snapshot by id membership
+(`reconcile_index_from_snapshot`, `reconcile_bm25_from_snapshot`; the
+sinks `ingest_vector_stream_append_only` /
+`ingest_document_stream_append_only`).
 """
 
 from __future__ import annotations
@@ -104,22 +113,17 @@ def ingest_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """ONE micro-batch of the streaming INDEX-INGEST path (round 12 —
-    the write-side sibling of `serve_batch`): append the batch's
-    vectors to the persisted index under its FROZEN geometry
-    (kind-agnostic `append_index` — assigned and encoded with the
-    persisted centroids and the kind's own quantizer, SQ8 stats or PQ
-    books incl. the residual flag, exactly the nightly-shard
-    semantics s14 certifies; searches see the new vectors on the next
-    resolution). Factored out so the registered batch-shaped replay
-    (s40) and the streaming sink (`ingest_vector_stream`) run the
-    IDENTICAL per-batch body — the s15 pattern applied to the write
-    side. Empty batches are skipped (availableNow streams can emit
-    them; an empty append would still pay an assignment job). Takes
-    no session argument: `append_index` derives the session from
-    ``batch_df.sparkSession``, which inside foreachBatch is the
-    micro-batch's OWN session — passing the outer session would be
-    the misleading surface ADVICE r12 flagged."""
+    """ONE micro-batch of the streaming INDEX-INGEST path (the
+    write-side sibling of `serve_batch`): append the batch's vectors
+    to the persisted index under its FROZEN geometry (kind-agnostic
+    `append_index` — the persisted centroids and the kind's own
+    quantizer, exactly the nightly-shard semantics s14 certifies).
+    The registered replay (s40) and the streaming sink
+    (`ingest_vector_stream`) run this identical body. Empty batches
+    are skipped (an empty append would still pay an assignment job).
+    Takes no session argument: `append_index` derives the session
+    from ``batch_df.sparkSession``, which inside foreachBatch is the
+    micro-batch's OWN session."""
     from ..operators.ann_index import append_index
 
     if not batch_df.limit(1).count():
@@ -135,22 +139,53 @@ def ingest_vector_stream(
 ):
     """foreachBatch INGEST sink: per micro-batch, append the arriving
     vectors to the persisted index at ``index_path`` under its frozen
-    geometry — streaming ingest composes with the whole persisted
-    lifecycle (per-shard files accrete per cell; run `compact_index`
-    on the accretion schedule, rebuild on the drift schedule — s16's
-    monitor decides which). Returns the DataStreamWriter; caller
-    picks trigger/checkpoint and starts. Exactly-once note: appends
-    are idempotent per BATCH only if the caller's checkpoint prevents
-    batch replays (the standard foreachBatch contract); a replayed
-    batch would double-append its vectors — deployments that need
-    stronger guarantees stage batches through `upsert_parquet_sink`
-    (streaming/sinks) and append from the staged snapshot —
-    `ingest_vector_stream_staged` composes exactly that path."""
+    geometry (per-shard files accrete per cell; run `compact_index`
+    on the accretion schedule, rebuild on the drift schedule). Returns
+    the DataStreamWriter; caller picks trigger/checkpoint and starts.
+    At-least-once: a batch replayed after a checkpoint rollback
+    double-appends its vectors — deployments that need exactly-once
+    use `ingest_vector_stream_append_only` (staged batches + the
+    membership reconcile)."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch(index_path, batch_df, id_col=id_col, vec_col=vec_col)
 
     return stream_df.writeStream.foreachBatch(_ingest)
+
+
+def _reconcile(
+    spark: SparkSession, staged_dir: str, id_col: str, payload_col: str,
+    members: str, member_id: str, append: Callable[[DataFrame], None],
+    keep=None,
+) -> int:
+    """The exactly-once reconcile both index kinds run: the staged
+    snapshot deduped by id (ids are immutable content — the
+    append-path contract — so any staged copy is the same payload),
+    optionally filtered by ``keep``, anti-joined against the
+    artifact's OWN id column (``member_id`` of the parquet at
+    ``members`` — column-pruned, one id column per reconcile),
+    and the survivors handed to ``append``. The anti-join is
+    persisted across the count and the append's jobs (one staged scan
+    + one membership scan total) and released before return. Nothing
+    staged yet (no batch has landed, or every batch so far was empty)
+    appends nothing. Returns the number appended."""
+    from ..sources.fs import fs_exists
+
+    if not fs_exists(spark, staged_dir):
+        return 0
+    staged = spark.read.parquet(staged_dir).select(id_col, payload_col)
+    staged = staged.dropDuplicates([id_col])
+    if keep is not None:
+        staged = staged.filter(keep)
+    present = spark.read.parquet(members).select(F.col(member_id).alias(id_col))
+    fresh = staged.join(present.distinct(), id_col, "left_anti").persist()
+    try:
+        n = fresh.count()
+        if n:
+            append(fresh)
+    finally:
+        fresh.unpersist()
+    return n
 
 
 def reconcile_index_from_snapshot(
@@ -160,87 +195,50 @@ def reconcile_index_from_snapshot(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Append to the persisted index every staged vector the index
-    does not already hold — the RECONCILE half of the exactly-once
-    ingest (VERDICT r12 #3). Idempotent regardless of how many times
-    the staged rows were delivered OR how many times this reconcile
-    ran: membership is decided against the index's OWN codes (the
-    ``candidate_id`` column of the live generation, column-pruned
-    scan), so a replayed batch absorbed by the upsert staging, a
-    re-run after a crash, even a crash BETWEEN append jobs (appends
-    are job-committed: files appear only on commit) all converge to
-    each id encoded exactly once. Returns the number appended.
-
-    Contract: ids are immutable content (the append-path rule — a
-    persisted index never re-encodes an id; updates are rebuilds), so
-    "id already present" == "vector already encoded" — and ALSO why
-    the snapshot dedupe below may keep an arbitrary copy of an id
-    staged in several append-only batches: every copy is the same
-    vector. Scale: the membership anti-join reads one id column of
-    the index per reconcile — pair it with a nightly/accretion
-    schedule, not a per-row trigger, when the index is large."""
+    """Append to the persisted ANN index every staged vector it does
+    not already hold — the RECONCILE half of the exactly-once ingest.
+    Idempotent however many times the staged rows were delivered or
+    this reconcile ran: membership is decided against the index's own
+    codes (the ``candidate_id`` column of the live generation), so a
+    replayed batch, a re-run after a crash, even a crash between
+    append jobs (appends are job-committed) all converge to each id
+    encoded exactly once. Reads any parquet directory as the
+    snapshot. Scale: the membership anti-join reads one id column of
+    the index per reconcile — schedule it nightly/on accretion, not
+    per row, when the index is large. Returns the number appended."""
     from ..operators.ann_index import _codes_path, append_index
 
-    staged = (
-        spark.read.parquet(staged_dir)
-        .select(id_col, vec_col)
-        .dropDuplicates([id_col])
+    return _reconcile(
+        spark, staged_dir, id_col, vec_col,
+        _codes_path(spark, index_path), "candidate_id",
+        lambda fresh: append_index(fresh, index_path, id_col, vec_col),
     )
-    present = (
-        spark.read.parquet(_codes_path(spark, index_path))
-        .select(F.col("candidate_id").alias(id_col))
-        .distinct()
-    )
-    # Persist the anti-join across the two actions (round 13, guide
-    # §5): the count and the append's encode jobs otherwise EACH pay
-    # the staged scan + the index-membership scan — and the membership
-    # scan (one id column of the live generation) is the reconcile's
-    # dominant cost at scale. Batch-sized, released before return.
-    fresh = staged.join(present, id_col, "left_anti").persist()
-    try:
-        n = fresh.count()
-        if n:
-            append_index(fresh, index_path, id_col=id_col, vec_col=vec_col)
-    finally:
-        fresh.unpersist()
-    return n
 
 
-def ingest_batch_staged(
+def reconcile_bm25_from_snapshot(
+    spark: SparkSession,
     index_path: str,
     staged_dir: str,
-    batch_df: DataFrame,
-    batch_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> int:
-    """ONE micro-batch of the EXACTLY-ONCE index ingest (VERDICT r12
-    #3 — the stronger guarantee `ingest_vector_stream`'s docstring
-    stages): (1) upsert the batch into the keyed staging table
-    (`sinks.upsert_batch` — replay-idempotent by construction; the
-    batch_id is the version, so a re-delivered batch merges to the
-    byte-equal table), then (2) reconcile the index against the
-    staged snapshot (`reconcile_index_from_snapshot` — appends only
-    ids the index does not hold). A batch replayed by a restarted
-    stream therefore appends NOTHING the first delivery didn't —
-    where the plain `ingest_batch` would double-append. Factored as
-    the per-batch body (the s15/s40 pattern) so the streaming sink
-    and the registered batch-shaped replay (s41) run identical code.
-    Returns the number of vectors the reconcile appended."""
-    from .sinks import upsert_batch
+    """`reconcile_index_from_snapshot` pointed at the persisted BM25
+    index: membership is the postings' own doc_id set, survivors go
+    through the exact-merge `append_bm25_index`, so every document is
+    counted EXACTLY ONCE in tf/df/dl/(nn, Σdl) — where a naive
+    per-batch append would double-count a re-delivered shard's term
+    statistics (scores drift instead of rows duplicating). TOKENLESS
+    documents are dropped: they contribute no postings row, so
+    membership could never see them and every reconcile would
+    re-append them into (nn, Σdl). Returns the number appended."""
+    from ..functions.text import tokenize
+    from ..operators.bm25 import append_bm25_index
 
-    if not batch_df.limit(1).count():
-        return 0
-    upsert_batch(
-        batch_df.withColumn("__ver", F.lit(int(batch_id))),
-        staged_dir,
-        [id_col],
-        "__ver",
-        batch_id=batch_id,
-    )
-    return reconcile_index_from_snapshot(
-        batch_df.sparkSession, index_path, staged_dir,
-        id_col=id_col, vec_col=vec_col,
+    return _reconcile(
+        spark, staged_dir, id_col, text_col,
+        f"{index_path}/postings", "doc_id",
+        lambda fresh: append_bm25_index(fresh, index_path, text_col, id_col),
+        keep=F.size(tokenize(F.col(text_col))) > 0,
     )
 
 
@@ -251,27 +249,43 @@ def stage_batch_append_only(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """ONE micro-batch of the APPEND-ONLY staging path (round 13 —
-    the high-frequency sibling of `ingest_batch_staged`'s keyed
-    upsert, which rewrites the whole staged table per batch and so
-    fits nightly shards, not second-scale micro-batches): the batch
-    is written to its OWN parquet subdirectory
-    ``{staged_dir}/batch_id=<id>`` at O(batch) cost. Replay-
-    idempotent at the file level: a re-delivered batch OVERWRITES its
-    own subdirectory (same batch_id → same path), so the staged
-    snapshot holds each delivered batch exactly once regardless of
-    checkpoint rollbacks. Duplicate ids ACROSS batches are allowed
-    here and absorbed downstream: `reconcile_index_from_snapshot`
-    dedupes the snapshot by id before its membership anti-join (ids
-    are immutable content — the append-path contract — so any staged
-    copy is the same vector). Empty batches are skipped."""
+    """ONE micro-batch of the exactly-once ingest's staging layer:
+    the batch's (``id_col``, ``vec_col``) columns are written to their
+    OWN parquet subdirectory ``{staged_dir}/batch_id=<id>`` at
+    O(batch) cost — payload-agnostic (``vec_col`` is the text column
+    for document streams). Replay-idempotent at the file level: a
+    re-delivered batch OVERWRITES its own subdirectory, so the
+    snapshot holds each delivered batch once whatever the checkpoint
+    rollbacks. Duplicate ids ACROSS batches are absorbed by the
+    reconcile's dedupe. Empty batches are skipped."""
     if not batch_df.limit(1).count():
         return
     out = f"{staged_dir}/batch_id={int(batch_id)}"
     batch_df.select(id_col, vec_col).write.mode("overwrite").parquet(out)
     # the overwrite happened behind any same-session reader's file
-    # listing cache (the upsert_batch rule)
+    # listing cache
     batch_df.sparkSession.catalog.refreshByPath(staged_dir)
+
+
+def _append_only_sink(
+    reconcile, index_path: str, stream_df: DataFrame, staged_dir: str,
+    reconcile_every: int | None, id_col: str, payload_col: str,
+):
+    """The foreachBatch body both exactly-once sinks run: stage the
+    batch (`stage_batch_append_only`), then every ``reconcile_every``
+    batches run ``reconcile`` (`reconcile_index_from_snapshot` or
+    `reconcile_bm25_from_snapshot`) against the staged snapshot."""
+
+    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
+        stage_batch_append_only(
+            staged_dir, batch_df, batch_id, id_col=id_col, vec_col=payload_col
+        )
+        if reconcile_every and (int(batch_id) + 1) % reconcile_every == 0:
+            reconcile(
+                batch_df.sparkSession, index_path, staged_dir, id_col, payload_col
+            )
+
+    return stream_df.writeStream.foreachBatch(_ingest)
 
 
 def ingest_vector_stream_append_only(
@@ -282,113 +296,21 @@ def ingest_vector_stream_append_only(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """foreachBatch EXACTLY-ONCE ingest sink for HIGH-FREQUENCY
-    micro-batches (round 13 — the open item `ingest_batch_staged`
-    documents): each batch stages append-only into its own parquet
-    subdirectory (`stage_batch_append_only` — O(batch) write, no
-    O(table) rewrite), and the index reconciles against the staged
-    snapshot ON A SCHEDULE instead of per batch: every
-    ``reconcile_every`` batches when set, else never inline — the
-    deployment runs `reconcile_index_from_snapshot` on its own
-    nightly/accretion schedule (the reconcile reads ANY parquet dir
-    as the snapshot and is idempotent, so a tail of staged-but-not-
-    yet-reconciled batches is absorbed by the next scheduled run).
-    Exactly-once end to end: replayed batches overwrite their own
-    staged subdirectory, and the reconcile's membership anti-join
-    appends only ids the index's own codes don't hold. Returns the
-    DataStreamWriter; caller picks trigger/checkpoint and starts."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        stage_batch_append_only(
-            staged_dir, batch_df, batch_id, id_col=id_col, vec_col=vec_col
-        )
-        if reconcile_every and (int(batch_id) + 1) % reconcile_every == 0:
-            reconcile_index_from_snapshot(
-                batch_df.sparkSession, index_path, staged_dir,
-                id_col=id_col, vec_col=vec_col,
-            )
-
-    return stream_df.writeStream.foreachBatch(_ingest)
-
-
-def ingest_vector_stream_staged(
-    index_path: str,
-    stream_df: DataFrame,
-    staged_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """foreachBatch EXACTLY-ONCE ingest sink: each micro-batch runs
-    `ingest_batch_staged` — staged through the idempotent upsert
-    table, appended via the membership reconcile — so the end state
-    of the index is the same whether a batch is delivered once or
-    replayed after a checkpoint rollback. Returns the
-    DataStreamWriter; caller picks trigger/checkpoint and starts.
-    The plain `ingest_vector_stream` remains the cheaper choice when
-    the checkpoint alone is trusted to prevent replays."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch_staged(
-            index_path, staged_dir, batch_df, batch_id,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return stream_df.writeStream.foreachBatch(_ingest)
-
-
-def reconcile_bm25_from_snapshot(
-    spark: SparkSession,
-    index_path: str,
-    staged_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> int:
-    """Append to the persisted BM25 postings index every staged
-    document the index does not already hold — the exactly-once
-    reconcile (`reconcile_index_from_snapshot`'s contract) pointed at
-    the LEXICAL index (round 13): membership is decided against the
-    postings' own doc_id set (column-pruned distinct — one id column
-    of the index per reconcile, the same economics as the ANN
-    membership scan), so replayed batches, re-run reconciles, and
-    crash recovery all converge to each document counted EXACTLY ONCE
-    in tf/df/dl/(nn, Σdl) — where a naive per-batch
-    `append_bm25_index` would double-count a re-delivered shard's
-    term statistics (the lexical analogue of the double-append, and
-    quieter: scores drift instead of rows duplicating).
-
-    Contract notes: ids are immutable content (the append-path rule);
-    TOKENLESS documents are dropped here — they contribute no
-    postings row, so membership could never see them and every
-    reconcile would re-append them into (nn, Σdl). Returns the number
-    of documents appended."""
-    from ..functions.text import tokenize
-    from ..operators.bm25 import append_bm25_index
-
-    staged = (
-        spark.read.parquet(staged_dir)
-        .select(id_col, text_col)
-        .dropDuplicates([id_col])
-        .filter(F.size(tokenize(F.col(text_col))) > 0)
+    """foreachBatch EXACTLY-ONCE ingest sink for the persisted ANN
+    index: each micro-batch stages append-only into its own parquet
+    subdirectory (`stage_batch_append_only` — O(batch), no O(table)
+    rewrite), and the index reconciles against the staged snapshot
+    (`reconcile_index_from_snapshot`) every ``reconcile_every``
+    batches when set, else on the deployment's own schedule — the
+    reconcile is idempotent, so a tail of staged-but-unreconciled
+    batches is absorbed by the next run. Replayed batches overwrite
+    their own subdirectory and the membership anti-join appends only
+    ids the index does not hold. Returns the DataStreamWriter; caller
+    picks trigger/checkpoint and starts."""
+    return _append_only_sink(
+        reconcile_index_from_snapshot, index_path, stream_df, staged_dir,
+        reconcile_every, id_col, vec_col,
     )
-    present = (
-        spark.read.parquet(f"{index_path}/postings")
-        .select(F.col("doc_id").alias(id_col))
-        .distinct()
-    )
-    # Same §5 reuse as reconcile_index_from_snapshot: one staged scan
-    # + one postings-membership scan total, not one per action (the
-    # count and the append's tokenize/aggregate jobs both consume
-    # `fresh`). Batch-sized, released before return.
-    fresh = staged.join(present, id_col, "left_anti").persist()
-    try:
-        n = fresh.count()
-        if n:
-            append_bm25_index(
-                fresh, index_path, text_col=text_col, id_col=id_col
-            )
-    finally:
-        fresh.unpersist()
-    return n
 
 
 def ingest_document_stream_append_only(
@@ -399,24 +321,12 @@ def ingest_document_stream_append_only(
     id_col: str = "doc_id",
     text_col: str = "text",
 ):
-    """foreachBatch EXACTLY-ONCE ingest sink for a DOCUMENT stream
-    feeding the persisted BM25 index — `ingest_vector_stream_append_
-    only`'s shape on the lexical side: each micro-batch stages
-    append-only into its own parquet subdirectory (O(batch);
-    `stage_batch_append_only` is payload-agnostic — the staged column
-    here is the text), and the index reconciles on a schedule via
-    `reconcile_bm25_from_snapshot` (every ``reconcile_every`` batches
-    inline, else the deployment's nightly run). Returns the
-    DataStreamWriter; caller picks trigger/checkpoint and starts."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        stage_batch_append_only(
-            staged_dir, batch_df, batch_id, id_col=id_col, vec_col=text_col
-        )
-        if reconcile_every and (int(batch_id) + 1) % reconcile_every == 0:
-            reconcile_bm25_from_snapshot(
-                batch_df.sparkSession, index_path, staged_dir,
-                id_col=id_col, text_col=text_col,
-            )
-
-    return stream_df.writeStream.foreachBatch(_ingest)
+    """`ingest_vector_stream_append_only` for a DOCUMENT stream
+    feeding the persisted BM25 index: the staged column is the text
+    and the scheduled reconcile is `reconcile_bm25_from_snapshot`.
+    Returns the DataStreamWriter; caller picks trigger/checkpoint and
+    starts."""
+    return _append_only_sink(
+        reconcile_bm25_from_snapshot, index_path, stream_df, staged_dir,
+        reconcile_every, id_col, text_col,
+    )

@@ -30,12 +30,12 @@ def upsert_batch(
 ) -> None:
     """ONE micro-batch of the keyed upsert — IDEMPOTENT by
     construction: re-delivering the same batch merges the same rows
-    into the same keys and the table is byte-equal, which is what
-    makes this sink the staging layer of the exactly-once index
-    ingest (`streaming/serving.ingest_batch_staged` — VERDICT r12
-    #3). Factored out of `upsert_parquet_sink` (round 13, the
-    s15/s40 factoring) so the streaming sink and batch-shaped
-    replays run the IDENTICAL per-batch body.
+    into the same keys and the table is byte-equal. The per-batch
+    body of `upsert_parquet_sink`, callable on its own for
+    batch-shaped replays. Each batch rewrites the whole table
+    (O(table)), so this is the sink for keyed tables; index ingest
+    stages append-only instead (`streaming/serving.
+    stage_batch_append_only`, O(batch)).
 
     ``table_dir`` is any Hadoop path (bare, ``file://``, ``hdfs://``):
     existence and the commit go through the path's own FileSystem

@@ -4,6 +4,7 @@ must read ONLY the probed cells' partitions)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mergers_acquisitions_predictions_spark.operators.ann_index import (
@@ -1192,103 +1193,6 @@ def test_extra_meta_geometry_collision_is_loud(spark, tmp_path):
     assert search_index(spark, ok, q, k=3, n_probe=2).count() == 6
 
 
-def test_staged_ingest_exactly_once_through_real_stream(spark, tmp_path):
-    """Round 13 (VERDICT r12 #3): the EXACTLY-ONCE staged ingest.
-    (1) A real multi-batch availableNow stream through
-    `ingest_vector_stream_staged` must leave the index serving
-    bit-identically to the plain batch append of the same shard.
-    (2) The checkpoint-rollback failure mode — re-delivering an
-    already-processed micro-batch through the identical per-batch
-    body — must append NOTHING and leave the serve bit-identical,
-    where the plain `ingest_batch` path would double-append.
-    (3) A reconcile re-run (crash-recovery) is likewise a no-op."""
-    import json as _json
-
-    from mergers_acquisitions_predictions_spark.operators.ann_index import (
-        append_index,
-    )
-    from mergers_acquisitions_predictions_spark.streaming.serving import (
-        ingest_batch_staged,
-        ingest_vector_stream_staged,
-        reconcile_index_from_snapshot,
-    )
-
-    e = load_table(spark, SF, "embeddings")
-    even = e.filter(F.col("vec_id") % 2 == 0)
-    odd = e.filter(F.col("vec_id") % 2 == 1)
-    q = e.filter(F.col("vec_id") < 5)
-
-    stream_path = str(tmp_path / "idx_staged_stream")
-    batch_path = str(tmp_path / "idx_plain_batch")
-    build_ivfsq_index(even, stream_path, n_cells=16)
-    build_ivfsq_index(even, batch_path, n_cells=16)
-
-    vdir = tmp_path / "vstaged"
-    vdir.mkdir()
-    odd_rows = odd.collect()
-    for i, chunk in enumerate((odd_rows[::2], odd_rows[1::2])):
-        with open(vdir / f"shard{i}.jsonl", "w") as f:
-            for r in chunk:
-                f.write(
-                    _json.dumps(
-                        {
-                            "vec_id": r.vec_id,
-                            "embedding": [float(x) for x in r.embedding],
-                        }
-                    )
-                    + "\n"
-                )
-    staged = str(tmp_path / "staged_table")
-    stream = (
-        ingest_vector_stream_staged(
-            stream_path,
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(vdir)),
-            staged,
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt_staged"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination(180)
-
-    append_index(odd, batch_path)
-    want = sorted(
-        map(
-            tuple,
-            search_index(spark, batch_path, q, k=5, n_probe=2).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
-        )
-    )
-    assert got == want and len(want) == 25
-
-    # (2) rollback replay: re-deliver micro-batch 0 through the same
-    # per-batch body — must be absorbed end-to-end.
-    replay = spark.read.schema("vec_id long, embedding array<float>").json(
-        str(vdir / "shard0.jsonl")
-    )
-    assert (
-        ingest_batch_staged(stream_path, staged, replay, batch_id=0) == 0
-    )
-    # (3) reconcile re-run over the full staged snapshot: no-op.
-    assert (
-        reconcile_index_from_snapshot(spark, stream_path, staged) == 0
-    )
-    again = sorted(
-        map(
-            tuple,
-            search_index(spark, stream_path, q, k=5, n_probe=2).collect(),
-        )
-    )
-    assert again == want
-
-
 def test_sharded_fanout_serve(spark, tmp_path):
     """Round 13: `search_sharded_indexes` must equal the manual
     merge of the per-shard serves (same union, same global rank
@@ -1347,14 +1251,15 @@ def test_sharded_fanout_serve(spark, tmp_path):
         search_sharded_indexes(spark, [], q)
 
 
-def test_append_only_ingest_through_real_stream(spark, tmp_path):
-    """Round 13 (the open item `ingest_batch_staged` documents): the
-    APPEND-ONLY staged ingest for high-frequency micro-batches.
+@pytest.mark.parametrize("reconcile_every", [1, 2])
+def test_append_only_ingest_through_real_stream(spark, tmp_path, reconcile_every):
+    """The EXACTLY-ONCE ingest (append-only staging + membership
+    reconcile).
     (1) A real multi-batch availableNow stream through
-    `ingest_vector_stream_append_only(reconcile_every=2)` must leave
-    the index serving bit-identically to the plain batch append of
-    the same shard — the scheduled reconcile fires on the second
-    batch and absorbs both staged batches at once.
+    `ingest_vector_stream_append_only` must leave the index serving
+    bit-identically to the plain batch append of the same shard —
+    reconciled after every batch (``reconcile_every=1``), or on the
+    second batch absorbing both staged batches at once (``2``).
     (2) Each batch must land as its OWN parquet subdirectory (the
     O(batch) staging cost — no O(table) rewrite).
     (3) A replayed batch overwrites its own subdirectory and a
@@ -1405,7 +1310,7 @@ def test_append_only_ingest_through_real_stream(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(vdir)),
             staged,
-            reconcile_every=2,
+            reconcile_every=reconcile_every,
         )
         .option("checkpointLocation", str(tmp_path / "ckpt_ao"))
         .trigger(availableNow=True)
@@ -1520,6 +1425,39 @@ def test_reconcile_releases_its_persist(spark, tmp_path):
     assert storage_empty()  # append path released its handle
     assert reconcile_index_from_snapshot(spark, path, staged) == 0
     assert storage_empty()  # no-op path released its handle
+
+
+@pytest.mark.parametrize("kind", ["ann", "bm25"])
+def test_reconcile_with_nothing_staged_returns_zero(spark, tmp_path, kind):
+    """A reconcile that runs before the first batch lands — or after
+    only empty batches, which staging skips — finds no staged
+    directory: it appends nothing and returns 0, for both index
+    kinds, and the index still serves."""
+    from mergers_acquisitions_predictions_spark.functions.text import tokenize
+    from mergers_acquisitions_predictions_spark.operators.bm25 import (
+        build_bm25_index,
+        search_bm25_index,
+    )
+    from mergers_acquisitions_predictions_spark.streaming.serving import (
+        reconcile_bm25_from_snapshot,
+        reconcile_index_from_snapshot,
+    )
+
+    path = str(tmp_path / "idx")
+    missing = str(tmp_path / "never_staged")
+    if kind == "ann":
+        e = load_table(spark, SF, "embeddings")
+        build_ivfsq_index(e, path, n_cells=4)
+        assert reconcile_index_from_snapshot(spark, path, missing) == 0
+        served = search_index(spark, path, e.filter(F.col("vec_id") < 2), k=3)
+    else:
+        d = load_table(spark, SF, "documents")
+        build_bm25_index(d, path)
+        assert reconcile_bm25_from_snapshot(spark, path, missing) == 0
+        term = d.select(F.explode(tokenize(F.col("text")))).first()[0]
+        q = spark.createDataFrame([(0, term)], "query_id long, term string")
+        served = search_bm25_index(spark, path, q, k=3)
+    assert served.count() > 0
 
 
 def test_accretion_monitor_and_trigger(spark, tmp_path):
@@ -1665,7 +1603,8 @@ def test_staged_reconcile_is_kind_agnostic_pq_residual(spark, tmp_path):
         search_index,
     )
     from mergers_acquisitions_predictions_spark.streaming.serving import (
-        ingest_batch_staged,
+        reconcile_index_from_snapshot,
+        stage_batch_append_only,
     )
 
     e = load_table(spark, SF, "embeddings")
@@ -1679,8 +1618,11 @@ def test_staged_reconcile_is_kind_agnostic_pq_residual(spark, tmp_path):
             even, p, n_cells=16, n_subspaces=8, n_codes=16, residual=True
         )
     staged = str(tmp_path / "staged_tbl")
-    assert ingest_batch_staged(staged_path, staged, odd, batch_id=0) == odd.count()
-    assert ingest_batch_staged(staged_path, staged, odd, batch_id=0) == 0
+    delivered = []
+    for _ in range(2):  # first delivery, then the rollback replay
+        stage_batch_append_only(staged, odd, batch_id=0)
+        delivered.append(reconcile_index_from_snapshot(spark, staged_path, staged))
+    assert delivered == [odd.count(), 0]
     append_index(odd, batch_path)
     got = sorted(
         map(

@@ -448,8 +448,8 @@ def test_facade_serve_colbert_one_call(spark, tmp_path):
 
 
 def test_facade_exactly_once_ingest_and_accretion(spark, tmp_path):
-    """Round-13 facade surface: staged reconcile ingest + the
-    accretion-schedule compaction trigger."""
+    """Facade surface: append-only staging + the reconcile ingest,
+    and the accretion-schedule compaction trigger."""
     import pyspark.sql.functions as F
 
     from mergers_acquisitions_predictions_spark.sources.readers import load_table
@@ -460,12 +460,12 @@ def test_facade_exactly_once_ingest_and_accretion(spark, tmp_path):
     staged = str(tmp_path / "staged")
     eng.build_ann_index(e.filter(F.col("vec_id") % 2 == 0), path, n_cells=4)
     from mergers_acquisitions_predictions_spark.streaming.serving import (
-        ingest_batch_staged,
+        stage_batch_append_only,
     )
 
     odd = e.filter(F.col("vec_id") % 2 == 1)
-    n1 = ingest_batch_staged(path, staged, odd, batch_id=0)
-    assert n1 == odd.count()
+    stage_batch_append_only(staged, odd, batch_id=0)
+    assert eng.reconcile_ann_index(path, staged) == odd.count()
     # the facade reconcile is the idempotent recovery entry
     assert eng.reconcile_ann_index(path, staged) == 0
     fired, stats = eng.compact_ann_index_if_accreted(path, max_files_per_cell=1)

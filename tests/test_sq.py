@@ -52,6 +52,20 @@ def test_sq_stats_match_sequential_reference(spark):
         assert rngs[i] > 0  # this corpus has no constant dimension
 
 
+def test_sq_stats_over_bound_raises(spark, monkeypatch):
+    """`sq_stats` collects one row per dimension to the driver: past
+    `MAX_SQ_DIMS` it raises, naming the bound, instead of collecting
+    an unbounded row set."""
+    from mergers_acquisitions_predictions_spark.operators import sq
+
+    e = load_table(spark, SF, "embeddings")  # 64 dimensions
+    monkeypatch.setattr(sq, "MAX_SQ_DIMS", 63)
+    with pytest.raises(ValueError, match="MAX_SQ_DIMS=63"):
+        sq_stats(e)
+    monkeypatch.setattr(sq, "MAX_SQ_DIMS", 64)
+    assert len(sq_stats(e)[0]) == 64
+
+
 def test_sq_encode_matches_sequential_reference(spark):
     e = load_table(spark, SF, "embeddings")
     mns, rngs = sq_stats(e)
