@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -156,7 +156,7 @@ def ingest_vector_stream(
 def _reconcile(
     spark: SparkSession, staged_dir: str, id_col: str, payload_col: str,
     members: str, member_id: str, append: Callable[[DataFrame], None],
-    keep=None,
+    keep: Column | None = None,
 ) -> int:
     """The exactly-once reconcile both index kinds run: the staged
     snapshot deduped by id (ids are immutable content — the
