@@ -81,30 +81,23 @@ def _dl_of_toks() -> Column:
     ).cast("long")
 
 
-def _tf_with_dl(toks: DataFrame) -> DataFrame:
-    """(doc_id, term, c, dl) from the tokenized projection in ONE
-    corpus pass: dl (the FULL per-doc token count) is computed
-    map-side from the array and rides the exploded rows through the
-    (doc_id, term) aggregation — `min` is exact because dl is constant
-    per doc. Replaces the former separate dl pass AND its doc_id-keyed
-    join (two corpus shuffles gone)."""
+def _postings(toks: DataFrame) -> DataFrame:
+    """The postings rows of the tokenized projection in their on-disk
+    layout — the build and every append shard write this. One corpus
+    pass: dl (the FULL per-doc token count) is computed map-side from
+    the array and rides the exploded rows through the (doc_id, term)
+    aggregation (`min` is exact because dl is constant per doc). The
+    (term, doc_id, c, dl) rows are range-partitioned by (term, doc_id)
+    and sorted within partitions, so every parquet row group covers a
+    tight term interval (footer-level `term IN (...)` pruning) and a
+    hot term's rows split across partitions at doc_id boundaries."""
     tok = toks.select(
         "doc_id", _dl_of_toks().alias("dl"), F.explode("__toks").alias("term")
     )
-    return tok.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).alias("c"), F.min("dl").alias("dl")
-    )
-
-
-def _postings_layout(tf: DataFrame) -> DataFrame:
-    """The on-disk postings layout of (doc_id, term, c, dl) rows:
-    (term, doc_id, c, dl) range-partitioned by (term, doc_id) and
-    sorted within partitions, so every parquet row group covers a
-    tight term interval (footer-level `term IN (...)` pruning) and a
-    hot term's rows split across partitions at doc_id boundaries.
-    The build and every append shard write this layout."""
     return (
-        tf.repartitionByRange(POSTINGS_RANGE_PARTITIONS, "term", "doc_id")
+        tok.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("c"), F.min("dl").alias("dl"))
+        .repartitionByRange(POSTINGS_RANGE_PARTITIONS, "term", "doc_id")
         .select("term", "doc_id", "c", "dl")
         .sortWithinPartitions("term", "doc_id")
     )
@@ -276,7 +269,7 @@ def build_bm25_index(
     ann_index build (pay the corpus aggregation once, serve many):
 
     - ``{path}/postings``: one row per (term, doc) carrying
-      (term, doc_id, c, dl) in `_postings_layout`: a query's
+      (term, doc_id, c, dl) in the `_postings` layout: a query's
       `term IN (...)` predicate prunes at the footer level (the
       lexical analogue of the cell-partition pruning the ann serve
       relies on), and a HOT term's rows SPLIT across partitions at
@@ -321,7 +314,7 @@ def build_bm25_index(
 
     spark = docs.sparkSession
     toks = _tokenized(docs, id_col, text_col)
-    publish_parquet_atomic(_postings_layout(_tf_with_dl(toks)), f"{path}/postings")
+    publish_parquet_atomic(_postings(toks), f"{path}/postings")
     # sdl is kept as an exact integer so `append_bm25_index` can merge
     # corpus stats without float error; avgdl is derived at read time
     # from the same division the in-memory path performs. Σc over the
@@ -394,9 +387,7 @@ def append_bm25_index(
         (F.col("sdl") + F.col("sdl_add")).alias("sdl"),
     )
     publish_parquet_atomic(stats, f"{path}/stats")
-    _postings_layout(_tf_with_dl(toks)).write.mode("append").parquet(
-        f"{path}/postings"
-    )
+    _postings(toks).write.mode("append").parquet(f"{path}/postings")
     # File-listing staleness guard (the ann_index append's lesson): a
     # session that already served this path must not reuse a cached
     # listing missing the new shard's files.

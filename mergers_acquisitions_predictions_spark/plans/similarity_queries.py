@@ -2108,11 +2108,10 @@ def s41_stream_exactly_once_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     odd = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
     (batch,) = _wire_batches(f"{path}_vbatch_e1", [odd])
     staged = f"{path}_staged"
-    delivered = []
-    for _ in range(2):  # first delivery, then the rollback replay
-        stage_batch_append_only(staged, batch, batch_id=0)
-        delivered.append(reconcile_index_from_snapshot(spark, path, staged))
-    appended, replayed = delivered
+    stage_batch_append_only(staged, batch, batch_id=0)
+    appended = reconcile_index_from_snapshot(spark, path, staged)
+    stage_batch_append_only(staged, batch, batch_id=0)  # rollback replay
+    replayed = reconcile_index_from_snapshot(spark, path, staged)
     if replayed:  # the whole point: the replay must append nothing
         raise AssertionError(
             f"replayed batch appended {replayed} vectors (first "
