@@ -44,13 +44,6 @@ def remove_stopwords(tokens: Column, stopwords=STOPWORDS_EN) -> Column:
     return F.filter(tokens, lambda t: ~F.array_contains(stop, t))
 
 
-def merge_token_arrays(a: Column, b: Column) -> Column:
-    """Distinct union of two token arrays — the reference's
-    `mergeArrays` UDF (`(a ++ b).toSet.toSeq`, `acq_etl_code.scala:63-69`,
-    U1) as the builtin `array_union` (already distinct-producing)."""
-    return F.array_union(a, b)
-
-
 def word_ngrams(tokens: Column, n: int, sep: str = " ") -> Column:
     """Word-level n-grams (M2, `pyspark.ml.feature.NGram` semantics:
     ordered, overlapping, joined by spaces) as a pure expression:

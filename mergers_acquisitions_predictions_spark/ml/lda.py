@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from pyspark.ml.clustering import LDA
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def fit_lda(
@@ -28,22 +27,3 @@ def fit_lda(
         optimizer="online",
         seed=seed,
     ).fit(df)
-
-
-def topics_as_rows(model, vocabulary: list[str], top_n: int = 5) -> DataFrame:
-    """`describeTopics(5)` (`acq_etl_code.scala:112-117`) flattened to
-    (topic, term, weight) rows WITHOUT the reference's driver-side
-    vocabulary lookup loop (`:115-117` collects termIndices and
-    resolves them in driver memory): the vocabulary array is a literal
-    column and the lookup is `element_at` inside the plan."""
-    topics = model.describeTopics(top_n)
-    vocab = F.array(*[F.lit(v) for v in vocabulary])
-    pairs = F.arrays_zip("termIndices", "termWeights")
-    return (
-        topics.select("topic", F.explode(pairs).alias("tw"))
-        .select(
-            F.col("topic").cast("long").alias("topic"),
-            F.element_at(vocab, F.col("tw.termIndices") + 1).alias("term"),
-            F.round(F.col("tw.termWeights"), 6).alias("weight"),
-        )
-    )

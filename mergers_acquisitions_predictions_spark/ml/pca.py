@@ -68,21 +68,6 @@ def pca_whiten_weights(
     )
 
 
-def pca_whiten(
-    df: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
-) -> DataFrame:
-    """Project every vector onto the whitened principal axes:
-    (id, pc1..pck). One corpus pass for the fit (MLlib), then the
-    projection is k literal-array dot products — map-side, no
-    shuffle, no Python."""
-    weights, offsets, _ = pca_whiten_weights(df, k, vec_col)
-    return project_whitened(df, weights, offsets, id_col, vec_col, decimals)
-
-
 def project_whitened(
     df: DataFrame,
     weights: list[list[float]],

@@ -106,54 +106,6 @@ def sample_frames(
     return media_df.select("doc_id", "media").mapInPandas(_frames, schema=FRAME_SCHEMA)
 
 
-def resize_media(media_df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: payload in, payload + updated metadata out,
-    same row count. The resample itself is import-gated on PIL (absent
-    in this container); the fallback is a deterministic byte-level
-    tile/truncate to ``width*height`` bytes so the schema contract,
-    meta update, and batch dataflow stay fully testable."""
-    try:  # pragma: no cover - container has no PIL
-        from PIL import Image  # noqa: F401
-
-        raise NotImplementedError(
-            "PIL present: plug the real Image.resize path in here"
-        )
-    except ImportError:
-        pass
-
-    target = width * height
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("media", T.BinaryType()),
-            T.StructField("meta", MEDIA_META_SCHEMA),
-        ]
-    )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = pdf["media"].map(
-                lambda b: (b * (target // max(len(b), 1) + 1))[:target] if b else b"\0" * target
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": resized,
-                    "meta": [
-                        {
-                            "format": "fake/resized",
-                            "width": width,
-                            "height": height,
-                            "n_bytes": target,
-                        }
-                    ]
-                    * len(pdf),
-                }
-            )
-
-    return media_df.select("doc_id", "media").mapInPandas(_resize, schema=out_schema)
-
-
 def extract_features(media_df: DataFrame, batch_feature_dim: int = 8) -> DataFrame:
     """Feature extraction over binary payloads via `mapInPandas`:
     Arrow batches in, one feature row per payload out. The feature

@@ -12,21 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def grouped_stats(df: DataFrame, keys: list[str], value: str) -> DataFrame:
-    """count/sum/avg/min/max/count-distinct/approx-distinct in one
-    shuffle. `approx_count_distinct` (HLL) is the scale path for
-    distinct counts — constant memory per group."""
-    return df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.round(F.sum(value), 2).alias("sum_value"),
-        F.round(F.avg(value), 6).alias("avg_value"),
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
-        F.count_distinct(F.col(value)).alias("n_distinct"),
-        F.approx_count_distinct(value).alias("n_approx_distinct"),
-    )
-
-
 def confusion_matrix(df: DataFrame, label: str, prediction: str) -> DataFrame:
     """M10: the reference runs FOUR filtered counts (`lr.scala:50-54`);
     one groupBy computes the same matrix in a single shuffle."""

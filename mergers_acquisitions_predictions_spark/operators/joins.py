@@ -18,19 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """EXISTS — keeps left rows with a match, no fan-out (the dedup the
-    reference patches with `.distinct` ×3, `acq_etl_code.scala:96-100`,
-    is unnecessary under semi-join semantics)."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """NOT EXISTS — the declared form of the reference's hand-rolled
-    broadcast stop-word filter (J6, `acq_etl_code.scala:33-41`)."""
-    return left.join(right, on, "left_anti")
-
-
 def fuzzy_join_multipass(
     left: DataFrame,
     right: DataFrame,

@@ -86,8 +86,7 @@ from .handshake import handshake_path as _handshake_path  # noqa: E402
 
 _S05_CENT_PATH = _handshake_path("s05_cent")
 
-from .lsh_oracle import SQL_DOT as _SQL_DOT  # noqa: E402
-from .lsh_oracle import ivf_assign_sql as _ivf_assign  # noqa: E402
+from .lsh_oracle import ivf_topk_sql as _ivf_topk_sql  # noqa: E402
 
 #: The k-means FIT stays Spark-side; everything downstream of it —
 #: cosine cell assignment (rounded argmax, cell-id tiebreak), the
@@ -95,33 +94,7 @@ from .lsh_oracle import ivf_assign_sql as _ivf_assign  # noqa: E402
 #: the materialized centroid table (the m02 recipe applied to an
 #: index artifact: the oracle's `cent` CTE reads the parquet the
 #: query just wrote, exact doubles).
-_S05_ORACLE = f"""
-    WITH cent AS (
-        SELECT CAST(cell_id AS BIGINT) AS cell_id,
-               cent_vec AS cvec, cent_norm AS cnorm
-        FROM read_parquet('{_S05_CENT_PATH}/*.parquet')
-    ),
-    c_assign AS ({_ivf_assign("", "candidate_id", 1)}
-    ),
-    q_assign AS ({_ivf_assign("WHERE vec_id < 5", "query_id", 4)}
-    ),
-    scored AS (
-        SELECT query_id, candidate_id,
-               round({_SQL_DOT.format(a='q.vec', b='c.vec')}
-                     / (q.nrm * c.nrm), 6) AS cos_sim
-        FROM q_assign q JOIN c_assign c USING (cell_id)
-        WHERE query_id <> candidate_id
-    )
-    SELECT query_id, candidate_id, cos_sim, rank
-    FROM (
-        SELECT query_id, candidate_id, cos_sim,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos_sim DESC, candidate_id
-               ) AS BIGINT) AS rank
-        FROM scored
-    )
-    WHERE rank <= 5
-"""
+_S05_ORACLE = f"\n    WITH {_ivf_topk_sql(n_probe=4, centroids_parquet=_S05_CENT_PATH)}\n"
 
 
 @query("s05_ivf_kmeans_topk", oracle=_S05_ORACLE)
@@ -171,33 +144,7 @@ _S19_CENT_PATH = _handshake_path("s19_cent")
 #: artifact-replay recipe able to certify the SAMPLED fit, whose
 #: Lloyd centers are not bit-stable across partitionings (SCALE.md
 #: §7o) and therefore can never be regenerated cross-engine.
-_S19_ORACLE = f"""
-    WITH cent AS (
-        SELECT CAST(cell_id AS BIGINT) AS cell_id,
-               cent_vec AS cvec, cent_norm AS cnorm
-        FROM read_parquet('{_S19_CENT_PATH}/*.parquet')
-    ),
-    c_assign AS ({_ivf_assign("", "candidate_id", 1)}
-    ),
-    q_assign AS ({_ivf_assign("WHERE vec_id < 5", "query_id", 2)}
-    ),
-    scored AS (
-        SELECT query_id, candidate_id,
-               round({_SQL_DOT.format(a='q.vec', b='c.vec')}
-                     / (q.nrm * c.nrm), 6) AS cos_sim
-        FROM q_assign q JOIN c_assign c USING (cell_id)
-        WHERE query_id <> candidate_id
-    )
-    SELECT query_id, candidate_id, cos_sim, rank
-    FROM (
-        SELECT query_id, candidate_id, cos_sim,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos_sim DESC, candidate_id
-               ) AS BIGINT) AS rank
-        FROM scored
-    )
-    WHERE rank <= 5
-"""
+_S19_ORACLE = f"\n    WITH {_ivf_topk_sql(n_probe=2, centroids_parquet=_S19_CENT_PATH)}\n"
 
 
 @query("s19_sampled_kmeans_topk", oracle=_S19_ORACLE)

@@ -152,34 +152,10 @@ def s03_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .lsh_oracle import auto_ivf_cent_ctes_sql as _auto_cent  # noqa: E402
 from .lsh_oracle import ivf_assign_sql as _ivf_assign_sql  # noqa: E402
+from .lsh_oracle import ivf_topk_sql as _ivf_topk_sql  # noqa: E402
 
 
-@query(
-    "s04_ivf_ann_topk",
-    oracle=f"""
-    WITH {_auto_cent()},
-    c_assign AS ({_ivf_assign_sql("", "candidate_id", 1)}
-    ),
-    q_assign AS ({_ivf_assign_sql("WHERE vec_id < 5", "query_id", 2)}
-    ),
-    scored AS (
-        SELECT query_id, candidate_id,
-               round({SQL_DOT.format(a='q.vec', b='c.vec')}
-                     / (q.nrm * c.nrm), 6) AS cos_sim
-        FROM q_assign q JOIN c_assign c USING (cell_id)
-        WHERE query_id <> candidate_id
-    )
-    SELECT query_id, candidate_id, cos_sim, rank
-    FROM (
-        SELECT query_id, candidate_id, cos_sim,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id ORDER BY cos_sim DESC, candidate_id
-               ) AS BIGINT) AS rank
-        FROM scored
-    )
-    WHERE rank <= 5
-    """,
-)
+@query("s04_ivf_ann_topk", oracle=f"\n    WITH {_ivf_topk_sql(n_probe=2)}\n    ")
 def s04_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via an IVF index (√n cells via `auto_cells`,
     nprobe 2) — the cell-partitioned ANN scale path alongside sign-LSH
@@ -1467,7 +1443,7 @@ def s30_colbert_persisted_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked driver row.
 
     Oracle: `colbert_persisted_retrieval_sql` — the tokens CTE feeds
-    the SQ8 machinery (`_ivfsq_scored_ctes_sql(table="tokens")`:
+    the SQ8 codec of `lsh_oracle._scored_ctes_sql` (``table="tokens"``:
     stats, codes, cells, probe-join, QUANTIZED dots — exactly where
     this row differs from s28's exact-cosine first stage), then the
     parent mapping and the s24 maxsim tail. Reference analogue: none
@@ -1678,8 +1654,8 @@ def s33_colbert_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kind-sniffing dispatch inside a hash-checked row.
 
     Oracle: `colbert_persisted_pq_retrieval_sql` — the tokens CTE
-    through the factored PQ machinery
-    (`_ivfpq_scored_ctes_sql(table="tokens")`: anchor books,
+    through the PQ codec of `lsh_oracle._scored_ctes_sql`
+    (``table="tokens"``: anchor books,
     rounded-argmin encode, √(T·n) cells, ADC scan), then the parent
     mapping and the s24 maxsim tail. Reference analogue: none
     (SURVEY §7 Phase 4 surface)."""

@@ -157,7 +157,7 @@ def u04_lemmatize_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # local copy of the rules: a reference to module-level _lemma would
     # pickle by module path and break workers that can't import this
-    # package (see streaming/stateful.py for the same trap)
+    # package (cloudpickle serializes closures by value)
     def lemma(tok: str) -> str:
         if len(tok) > 4 and tok.endswith("ies"):
             return tok[:-3] + "y"

@@ -178,13 +178,3 @@ def read_jsonl(
     else:
         reader = spark.read.schema(schema)
     return reader.option("mode", mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar contract as the parquet reader
-    (predicate pushdown, column pruning, splittable stripes), for
-    corpora that arrive ORC-encoded (Hive-era lakes). Avro is NOT
-    offered: the `spark-avro` datasource jar isn't bundled in this
-    distribution — add it to `spark.jars.packages` and use
-    `spark.read.format("avro")` directly where available."""
-    return spark.read.orc(path)

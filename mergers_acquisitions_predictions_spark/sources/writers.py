@@ -159,18 +159,6 @@ def write_token_balanced_shards(
     )
 
 
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by=None
-) -> None:
-    """ORC sink — the columnar alternative for Hive-era consumers.
-    Same layout discipline as `write_parquet` (multi-part distributed
-    output; `partition_by` for pruned downstream scans)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def compact_parquet(
     spark,
     path: str,

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from mergers_acquisitions_predictions_spark.functions.text import (
     clean_text,
-    merge_token_arrays,
     remove_stopwords,
     tokenize,
     word_ngrams,
@@ -48,17 +47,6 @@ def test_word_ngrams_edges(spark):
     df = spark.createDataFrame([(["a", "b", "c"],), (["a"],), ([],)], ["t"])
     got = [r.g for r in df.select(word_ngrams(F.col("t"), 2).alias("g")).collect()]
     assert got == [["a b", "b c"], [], []]
-
-
-def test_merge_token_arrays_is_distinct_union(spark):
-    # U1 semantics: (a ++ b).toSet — order-insensitive distinct union
-    got = one(
-        spark,
-        F.array_sort(merge_token_arrays(F.col("a"), F.col("b"))),
-        a=["x", "y", "x"],
-        b=["y", "z"],
-    )
-    assert got == ["x", "y", "z"]
 
 
 def test_remove_stopwords_keeps_duplicates(spark):

@@ -81,7 +81,14 @@ def test_pca_whiten_properties(spark):
 
     from pyspark.sql import functions as F
 
-    from mergers_acquisitions_predictions_spark.ml.pca import pca_whiten
+    from mergers_acquisitions_predictions_spark.ml.pca import (
+        pca_whiten_weights,
+        project_whitened,
+    )
+
+    def pca_whiten(df, k, decimals):
+        weights, offsets, _ = pca_whiten_weights(df, k, "embedding")
+        return project_whitened(df, weights, offsets, decimals=decimals)
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     out = pca_whiten(e, k=3, decimals=9)
@@ -112,10 +119,7 @@ def test_m03_relational_topk_equals_describe_topics(spark):
     stands in for."""
     from pyspark.ml.feature import CountVectorizer, RegexTokenizer
 
-    from mergers_acquisitions_predictions_spark.ml.lda import (
-        fit_lda,
-        topics_as_rows,
-    )
+    from mergers_acquisitions_predictions_spark.ml.lda import fit_lda
     from mergers_acquisitions_predictions_spark.plans import QUERIES
 
     sf = "/root/testdata/sf0.01"
@@ -125,10 +129,14 @@ def test_m03_relational_topk_equals_describe_topics(spark):
     ).transform(docs)
     cv = CountVectorizer(inputCol="tokens", outputCol="tf", minDF=2.0).fit(tok)
     model = fit_lda(cv.transform(tok), "tf", k=5, max_iter=10, seed=42)
-    want = sorted(
-        (r.topic, r.term, r.weight)
-        for r in topics_as_rows(model, cv.vocabulary, top_n=5).collect()
+    vocab = F.array(*[F.lit(v) for v in cv.vocabulary])
+    tw = F.explode(F.arrays_zip("termIndices", "termWeights")).alias("tw")
+    described = model.describeTopics(5).select("topic", tw).select(
+        "topic",
+        F.element_at(vocab, F.col("tw.termIndices") + 1).alias("term"),
+        F.round("tw.termWeights", 6).alias("weight"),
     )
+    want = sorted((r.topic, r.term, r.weight) for r in described.collect())
     got = sorted(
         (r.topic, r.term, r.weight)
         for r in QUERIES["m03_lda_topics"](spark, sf).collect()

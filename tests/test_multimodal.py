@@ -58,17 +58,3 @@ def test_sample_frames_fanout_and_geometry(spark):
     assert sorted(by_doc[1]) == [(0, 256), (2, 188)]
     assert by_doc[2] == [(0, 100)]
     assert by_doc[3] == [(0, 256)]
-
-
-def test_resize_media_contract(spark):
-    from mergers_acquisitions_predictions_spark.multimodal.binary import (
-        attach_fake_payload,
-        resize_media,
-    )
-
-    docs = spark.createDataFrame([(1, "xy"), (2, "z" * 999)], ["doc_id", "text"])
-    out = resize_media(attach_fake_payload(docs), width=16, height=8).collect()
-    assert len(out) == 2
-    for r in out:
-        assert len(r.media) == 16 * 8
-        assert (r.meta.width, r.meta.height, r.meta.n_bytes) == (16, 8, 128)

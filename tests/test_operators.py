@@ -9,24 +9,10 @@ from pyspark.sql import functions as F
 from mergers_acquisitions_predictions_spark.operators.aggregates import (
     confusion_matrix,
     document_frequency,
-    grouped_stats,
 )
 from mergers_acquisitions_predictions_spark.operators.dedup import exact_dedup
-from mergers_acquisitions_predictions_spark.operators.joins import (
-    anti_join,
-    range_join_bucketed,
-    semi_join,
-)
+from mergers_acquisitions_predictions_spark.operators.joins import range_join_bucketed
 from mergers_acquisitions_predictions_spark.operators.topk import grouped_topk
-
-
-def test_semi_anti_partition_the_left(spark):
-    left = spark.createDataFrame([(i,) for i in range(10)], ["k"])
-    right = spark.createDataFrame([(i,) for i in range(0, 10, 2)], ["k"])
-    n_semi = semi_join(left, right, "k").count()
-    n_anti = anti_join(left, right, "k").count()
-    assert (n_semi, n_anti) == (5, 5)
-    assert n_semi + n_anti == left.count()
 
 
 def test_bounded_collect_is_one_job_and_raises_past_bound(spark, tmp_path):
@@ -88,16 +74,6 @@ def test_range_join_bucketed_matches_naive(spark):
             ).collect()
         }
         assert rebucketed == naive, bucket
-
-
-def test_grouped_stats_shapes(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 5.0)], ["g", "v"]
-    )
-    rows = {r.g: r for r in grouped_stats(df, ["g"], "v").collect()}
-    assert rows["a"].n_rows == 2 and rows["a"].sum_value == 4.0
-    assert rows["a"].min_value == 1.0 and rows["a"].max_value == 3.0
-    assert rows["b"].n_distinct == 1
 
 
 def test_confusion_matrix_single_shuffle_equivalence(spark):

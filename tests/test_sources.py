@@ -176,23 +176,6 @@ def test_token_balanced_shards(spark, tmp_path):
     assert dirs == {f"shard={s}" for s in set(shards)}
 
 
-def test_orc_roundtrip(spark, sf_dir, tmp_path):
-    from mergers_acquisitions_predictions_spark.sources.readers import read_orc
-    from mergers_acquisitions_predictions_spark.sources.writers import write_orc
-
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    path = str(tmp_path / "nation_orc")
-    write_orc(src, path, partition_by=["n_regionkey"])
-    back = read_orc(spark, path)
-    assert sorted(back.columns) == sorted(src.columns)
-    assert back.count() == src.count()
-    # partition pruning: the partition filter must not scan every file
-    pruned = back.filter(back.n_regionkey == 0)
-    assert pruned.count() == src.filter(src.n_regionkey == 0).count()
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "orc" in plan.lower()
-
-
 def test_compact_parquet_merges_small_files(spark, tmp_path):
     from mergers_acquisitions_predictions_spark.sources.writers import compact_parquet
 
