@@ -94,7 +94,7 @@ from .lsh_oracle import ivf_topk_sql as _ivf_topk_sql  # noqa: E402
 #: the materialized centroid table (the m02 recipe applied to an
 #: index artifact: the oracle's `cent` CTE reads the parquet the
 #: query just wrote, exact doubles).
-_S05_ORACLE = f"\n    WITH {_ivf_topk_sql(n_probe=4, centroids_parquet=_S05_CENT_PATH)}\n"
+_S05_ORACLE = "WITH " + _ivf_topk_sql(n_probe=4, centroids_parquet=_S05_CENT_PATH)
 
 
 @query("s05_ivf_kmeans_topk", oracle=_S05_ORACLE)
@@ -144,7 +144,7 @@ _S19_CENT_PATH = _handshake_path("s19_cent")
 #: artifact-replay recipe able to certify the SAMPLED fit, whose
 #: Lloyd centers are not bit-stable across partitionings (SCALE.md
 #: §7o) and therefore can never be regenerated cross-engine.
-_S19_ORACLE = f"\n    WITH {_ivf_topk_sql(n_probe=2, centroids_parquet=_S19_CENT_PATH)}\n"
+_S19_ORACLE = "WITH " + _ivf_topk_sql(n_probe=2, centroids_parquet=_S19_CENT_PATH)
 
 
 @query("s19_sampled_kmeans_topk", oracle=_S19_ORACLE)

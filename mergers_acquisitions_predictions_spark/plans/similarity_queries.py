@@ -155,6 +155,7 @@ from .lsh_oracle import ivf_assign_sql as _ivf_assign_sql  # noqa: E402
 from .lsh_oracle import ivf_topk_sql as _ivf_topk_sql  # noqa: E402
 
 
+# s11 embeds this text in parentheses, so its outer blanks are pinned
 @query("s04_ivf_ann_topk", oracle=f"\n    WITH {_ivf_topk_sql(n_probe=2)}\n    ")
 def s04_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via an IVF index (√n cells via `auto_cells`,
